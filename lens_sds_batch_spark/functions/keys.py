@@ -334,7 +334,18 @@ def uuid5_col(ns: Column | str, parts: list, on_null: str = "error") -> Column:
     # the optimizer; pre-encoding keeps literal namespaces out of the
     # expression tree entirely.  Byte-identical: same hex decode.
     if isinstance(ns, str):
-        ns_bytes = F.lit(bytes.fromhex(ns.replace("-", "")))
+        try:
+            ns_bytes = F.lit(bytes.fromhex(ns.replace("-", "")))
+        except ValueError as e:
+            # the fast path unhexes the same text to a NULL namespace,
+            # which its guard refuses at execution; say so at the call
+            # site instead of surfacing a bare fromhex error
+            raise ValueError(
+                f"uuid5_col: literal namespace {ns!r} is not uuid hex text "
+                f"({e}); it would hash as a NULL namespace and collapse "
+                "distinct ids to one degenerate value — pass the "
+                "namespace uuid, e.g. 6ba7b810-9dad-11d1-80b4-00c04fd430c8"
+            ) from e
     else:
         ns_bytes = F.unhex(F.regexp_replace(ns, "-", ""))
     payload = F.concat(ns_bytes, *[_to_bytes(p) for p in parts])

@@ -345,15 +345,20 @@ QUERIES.update({"entity_state_subjects": (entity_state_subjects, ENTITY_STATE_SQ
 
 
 def entity_state_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r11 bucketed portable merge (plans/merge.py ``merge_into``
-    with a ``__bucket=hash(keys)%N`` target layout) under the HARD
-    ORACLE GATE: three sequential micro-batches applied to an on-disk
-    bucketed entity table, final state read back and compared against a
-    closed-form DuckDB LWW over the unioned batches.
+    """The bucketed merge store (plans/merge.py ``merge_into`` with a
+    ``__bucket=hash(keys)%N`` manifest-commit layout) driven through its
+    DEFAULT arguments under the HARD ORACLE GATE: three sequential
+    micro-batches applied to an on-disk bucketed entity table, final
+    state read back and compared against a closed-form DuckDB LWW over
+    the unioned batches.  No call passes ``protocol`` — the first merge
+    materializes the manifest table from ``num_buckets`` alone and the
+    later ones auto-detect it; ``entity_state_manifest`` is the twin
+    that passes it explicitly and adds snapshots, the change feed and
+    maintenance.
 
     Batches (all derived deterministically from ``customer``):
       1. pri 0: even-custkey subjects at version v0 — materializes the
-         16-bucket layout (engine: parquet-swap + spec write);
+         16-bucket layout (seq 0 init + seq 1 data);
       2. pri 1: the subject-level command batch (insert/upsert → v1,
          remove → tombstone) — the FIRST pruned bucketed merge;
       3. pri 2: a second-day batch touching only custkey % 7 == 0 or
@@ -370,9 +375,9 @@ def entity_state_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly increasing and the tombstone contract deletes only via a
     newer matching source row — which is exactly what the oracle SQL
     states.  Equality of the READ-BACK state (not an in-memory frame)
-    gates the storage path itself: bucket routing, spec autodetection,
-    pruned reads, per-bucket swaps, tombstone drops, bucket emptying,
-    re-layout.
+    gates the storage path itself: bucket routing, layout
+    autodetection, pruned reads, per-bucket generation commits,
+    tombstone drops, bucket emptying, re-layout.
 
     Scratch dir: (sf, pid)-keyed under spark-warehouse like the XML
     render corpus (same GC), wiped at builder start so re-runs are
@@ -404,7 +409,7 @@ def entity_state_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(2).alias("priority"), F.lit("v2").alias("version"),
         (F.col("c_custkey") % 11 == 0).alias("is_remove"),
     )
-    engines = []
+    layouts = []
     for i, batch in enumerate((b1, b2, b3)):
         res = merge_into(
             spark, target, batch,
@@ -413,18 +418,19 @@ def entity_state_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             is_delete=F.col("is_remove"),
             num_buckets=16 if i == 0 else None,  # autodetected after layout
         )
-        engines.append(res["engine"])
+        layouts.append((res["engine"], res["num_buckets"]))
         if i == 1:  # day-2 growth: migrate the layout mid-sequence
             reb = rebucket(spark, target, 8)
-            if (reb["engine"], reb["num_buckets"]) != ("parquet-swap", 8):
+            if (reb["engine"], reb["num_buckets"]) != ("parquet-manifest", 8):
                 raise AssertionError(f"unexpected rebucket result: {reb}")
-    if engines != ["parquet-swap", "parquet-bucketed", "parquet-bucketed"]:
-        raise AssertionError(f"unexpected merge engines: {engines}")
+    want = [("parquet-manifest", 16)] * 2 + [("parquet-manifest", 8)]
+    if layouts != want:
+        raise AssertionError(f"unexpected merge layouts: {layouts}")
     # Empty-input totality (tests/test_empty_inputs.py): an all-empty
-    # corpus leaves a bucketed target with a spec but ZERO data files —
-    # legitimate merged state (it is also what deleting every key
-    # leaves), but parquet cannot infer a schema from it.  Degrade to
-    # the documented 0-row form instead of crashing.
+    # corpus leaves a manifest with NO live bucket — legitimate merged
+    # state (it is also what deleting every key leaves), which the
+    # resolver reads as None.  Degrade to the documented 0-row form
+    # instead of crashing.
     out = read_merged_table(spark, target)
     if out is None:
         out = spark.createDataFrame(
@@ -476,9 +482,9 @@ QUERIES.update(
 def _merge_scratch_target(query_name: str, sf_dir: str) -> str:
     """(sf, pid)-keyed scratch target under spark-warehouse with the
     same GC as the XML render corpus; wipes this pid's own leftovers
-    (merge rename-protocol siblings + the r12 writer lease — a crashed
+    (the merge staging sibling + the r12 writer lease — a crashed
     holder under a REUSED pid would otherwise refuse batch 1 as
-    'another writer' / resurrect stale state)."""
+    'another writer')."""
     import os
     import shutil
 
@@ -492,7 +498,7 @@ def _merge_scratch_target(query_name: str, sf_dir: str) -> str:
     root = os.path.join(base, query_name)
     _gc_stale_render_dirs(root)
     target = os.path.join(root, f"{sf_name}-{os.getpid()}")
-    for leftover in (target, target + ".__old", target + ".__tmp"):
+    for leftover in (target, target + ".__tmp"):
         shutil.rmtree(leftover, ignore_errors=True)
     try:
         os.remove(target + ".__lease")
@@ -502,12 +508,13 @@ def _merge_scratch_target(query_name: str, sf_dir: str) -> str:
 
 
 def entity_state_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r12 manifest-commit merge flavor (plans/merge.py
+    """The manifest-commit merge store (plans/merge.py
     ``protocol='manifest'`` — generation directories + one atomically
     renamed manifest file, the object-store-safe commit) under the HARD
-    ORACLE GATE, mirroring ``entity_state_bucketed``'s discipline for
-    the OTHER portable protocol: three micro-batches merged into a real
-    on-disk manifest table, the table rebucketed 16 → 8 mid-sequence
+    ORACLE GATE with its full lifecycle, beside
+    ``entity_state_bucketed`` (the same store through default
+    arguments): three micro-batches merged into a real on-disk
+    manifest table, the table rebucketed 16 → 8 mid-sequence
     (the manifest arm of the migration op), vacuumed at grace 0 (GC of
     every superseded generation must not change state), and the final
     state read back THROUGH THE MANIFEST RESOLVER
@@ -791,7 +798,7 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference semantics anchor: ``src/lens/broker.clj:28-51`` — the
     reference validates envelope shapes and delegates entity-schema
     change to its store; this is that operation for the portable
-    flavors."""
+    store."""
     from ..plans.merge import evolve_schema as evolve
     from ..plans.merge import merge_into, read_merged_table, vacuum_merged_table
 

@@ -442,12 +442,12 @@ def _gc_stale_render_dirs(render_root: str) -> None:
     except OSError:
         return
     for name in entries:
-        # merge_into's rename protocol leaves "<sf>-<pid>.__old" /
-        # ".__tmp" siblings when a run dies mid-swap (r11: the bucketed
-        # entity-state scratch) — strip those suffixes so their pid
-        # parses and dead processes' swap debris is GC'd too
+        # merge_into leaves "<sf>-<pid>.__tmp" / ".__lease" siblings
+        # when a run dies mid-merge (the entity-state scratch targets)
+        # — strip those suffixes so their pid parses and dead
+        # processes' merge debris is GC'd too
         base = name
-        for suf in (".__old", ".__tmp", ".__lease"):
+        for suf in (".__tmp", ".__lease"):
             if base.endswith(suf):
                 base = base[: -len(suf)]
         pid_s = base.rsplit("-", 1)[-1]

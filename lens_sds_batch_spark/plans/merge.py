@@ -18,59 +18,41 @@ import json
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Key-hash-bucketed target layout (r10 verdict #1): the partition
-# column every bucketed target is laid out by, and the underscore-
-# prefixed spec file (ignored by parquet partition discovery, like
-# Delta's _delta_log) that pins the bucket count + key set so every
-# later batch hashes keys into the SAME buckets.  The spec is written
-# INTO THE TMP DIR before the swap, so the single directory rename
-# that exposes the data exposes the spec with it — there is no crash
-# window in which a bucketed layout exists without its spec (r11
-# review: the earlier write-spec-after-swap ordering had one, and the
-# num_buckets-trusting self-heal it required could mis-pin N and
-# silently split keys across bucket spaces).
-BUCKET_COL = "__bucket"
-BUCKET_SPEC_FILE = "_bucket_spec.json"
-
-# Manifest-commit layout (r11 verdict #1 — the object-store-safe flavor
-# of the bucketed merge): live data is resolved through ONE small
-# manifest file instead of directory renames.  Touched buckets are
-# written as fresh generation directories ``__bucket=K/__gen=g<hex>/``
-# (non-live until committed — a crash strands only garbage a vacuum can
-# collect), then a single manifest ``_manifest/<seq>-<gen>.json`` pins
-# the live generation per bucket.  The commit point is one FILE rename
-# (atomic on local/HDFS; a single-object copy on S3A, where directory
-# renames — which the rename flavor depends on — are non-atomic
+# Manifest-commit layout — the one store behind merge_into.  Rows are
+# laid out by key hash as ``__bucket=K`` partition directories, and
+# live data is resolved through ONE small manifest file instead of
+# directory renames.  Touched buckets are written as fresh generation
+# directories ``__bucket=K/__gen=g<hex>/`` (non-live until committed —
+# a crash strands only garbage a vacuum can collect), then a single
+# manifest ``_manifest/<seq>.json`` pins the live generation per
+# bucket together with the bucket count, key set, key dtypes and full
+# schema, so every later batch hashes keys into the SAME buckets.  The
+# commit point is one FILE rename (atomic on local/HDFS; a
+# single-object copy on S3A, where directory renames are non-atomic
 # O(data) copy+delete).  Readers resolve paths through the latest
 # manifest (read_merged_table), so the table always reads as exactly
-# pre- or post-merge at every crash point.
+# pre- or post-commit at every crash point.
+BUCKET_COL = "__bucket"
 MANIFEST_DIR = "_manifest"
 GEN_COL = "__gen"
 
-# Writer fence (r11 verdict #2): the portable flavors assume a single
-# writer; the lease turns a second concurrent writer into a loud
-# refusal instead of silent rename-protocol interleaving.  The lease is
-# a sibling FILE (<target>.__lease) created with overwrite=False —
-# atomic create-exclusive on HDFS (check-then-create on the local
-# RawLocalFileSystem, good enough to catch operational mistakes; it is
-# NOT a Byzantine-proof lock).  A holder that dies leaves the lease
-# behind; a later writer takes over once it is older than
-# ``lease_stale_sec`` — size that above the longest expected merge, or
-# a slow merge can be taken over mid-flight.
+# Writer fence (r11 verdict #2): merges, maintenance and evolution of
+# one target take turns; the lease turns a second concurrent writer
+# into a loud refusal instead of two writers staging into one tmp dir.
+# The lease is a sibling FILE (<target>.__lease) created with
+# overwrite=False — atomic create-exclusive on HDFS (check-then-create
+# on the local RawLocalFileSystem, good enough to catch operational
+# mistakes; it is NOT a Byzantine-proof lock).  A holder that dies
+# leaves the lease behind; a later writer takes over once it is older
+# than ``lease_stale_sec`` — size that above the longest expected
+# merge, or a slow merge can be taken over mid-flight.
 LEASE_SUFFIX = ".__lease"
 LEASE_STALE_SEC = 3600.0
 
-# Marker written next to a bucket's aside when the bucket was
-# intentionally EMPTIED by deletes (ADVICE r11): without it, crash
-# recovery cannot distinguish "aside moved out, tmp rename pending"
-# (restore) from "aside moved out, nothing replaces it by design"
-# (do not restore — restoring would resurrect the deleted rows).
-EMPTIED_SUFFIX = ".__emptied"
-
 
 def _writer_lease(fs, jvm_path, target_path: str, stale_sec: float = LEASE_STALE_SEC):
-    """Context manager acquiring the single-writer lease for a portable
-    merge target (see LEASE_SUFFIX above).  Raises IOError when another
+    """Context manager acquiring the single-writer lease for a merge
+    target (see LEASE_SUFFIX above).  Raises IOError when another
     writer holds a non-stale lease; takes over a stale one (best-effort:
     two simultaneous takeovers can still race — the loser of the
     re-create dies loudly).  Released on success AND on exception (a
@@ -141,10 +123,9 @@ def _writer_lease(fs, jvm_path, target_path: str, stale_sec: float = LEASE_STALE
                 raise IOError(
                     f"merge_into: another writer holds the lease at "
                     f"{target_path.rstrip('/') + LEASE_SUFFIX} (age {age:.0f}s "
-                    f"<= stale threshold {stale_sec:.0f}s); concurrent merges "
-                    "into one portable target are not supported — wait for "
-                    "the holder, or use the Delta branch for concurrent "
-                    "writers"
+                    f"<= stale threshold {stale_sec:.0f}s); concurrent writes "
+                    "into one merge target take turns — wait for the holder "
+                    "and retry"
                 )
             fs.delete(lease, False)  # stale (holder died) or vanished
             try:
@@ -182,89 +163,11 @@ def bucket_expr(keys: list[str], num_buckets: int) -> Column:
 
     Raw typed columns feed the hash (xxhash64 is defined for every
     atomic Spark type); the expression must never change once a target
-    is laid out — the spec file exists precisely so re-derivation on a
-    later batch cannot drift."""
+    is laid out — the manifest pins N, the key set and the key dtypes
+    precisely so re-derivation on a later batch cannot drift."""
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)).cast(
         "int"
     )
-
-
-def _write_bucket_spec(
-    fs, jvm_path, dir_path: str, keys: list[str], num_buckets: int,
-    key_types: dict[str, str], columns: dict[str, str] | None = None,
-):
-    """Write the spec as ONE small file through the Hadoop FS API — a
-    single filesystem op, not a Spark job (r11 review: the old 1-row
-    DataFrame-write/read pair scheduled a full job per merge call,
-    pure latency on the per-micro-batch streaming-sink path).
-
-    ``key_types`` (r11 review): xxhash64 hashes the TYPED value —
-    CAST(1 AS INT) and CAST(1 AS BIGINT) route to different buckets —
-    so the spec pins key dtypes too, and every later batch is checked
-    against them; names alone would let silent schema drift split one
-    logical key across two bucket spaces.
-
-    ``columns`` (r12 schema pin): the FULL batch schema at layout time.
-    Value-column drift is as corrupting as key drift on a bucketed
-    layout — a batch with an extra/missing column that lands only in
-    EMPTY buckets writes a divergent per-bucket schema (unionByName
-    never sees the conflict), and a later read without mergeSchema
-    resolves whichever file's schema it lists first.  Every batch is
-    validated against the pin; evolution = an explicit rebuild."""
-    payload = json.dumps(
-        {
-            "num_buckets": int(num_buckets),
-            "keys": list(keys),
-            "key_types": dict(key_types),
-            **({"columns": dict(columns)} if columns is not None else {}),
-        }
-    ).encode("utf-8")
-    out = fs.create(jvm_path(dir_path.rstrip("/") + "/" + BUCKET_SPEC_FILE), True)
-    try:
-        out.write(bytearray(payload))
-    finally:
-        out.close()
-
-
-def _read_bucket_spec(spark, fs, jvm_path, target_path: str):
-    """Return ``(num_buckets, keys, key_types, columns)`` if the target
-    carries a bucket spec, else None — ``columns`` is the full-schema
-    pin, or None on a pre-r12 spec that never wrote one.  An
-    EXISTING-but-unreadable spec raises loudly: guessing 'unbucketed'
-    against a bucketed layout would route keys into the wrong bucket
-    space and silently duplicate them."""
-    spec_path = target_path.rstrip("/") + "/" + BUCKET_SPEC_FILE
-    if not fs.exists(jvm_path(spec_path)):
-        return None
-    try:
-        stm = fs.open(jvm_path(spec_path))
-        try:
-            raw = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stm))
-        finally:
-            stm.close()
-    except Exception as e:  # IO/checksum failure on an EXISTING spec:
-        # re-raise loudly (same refusal as unparseable content below)
-        raise ValueError(
-            f"merge_into: unreadable bucket spec at {spec_path} ({e})".split(
-                "\n"
-            )[0]
-            + "; refusing to guess the bucket layout — repair or remove "
-            "the table"
-        ) from e
-    try:
-        spec = json.loads(raw)
-        return (
-            int(spec["num_buckets"]),
-            list(spec["keys"]),
-            dict(spec["key_types"]),
-            dict(spec["columns"]) if "columns" in spec else None,
-        )
-    except (ValueError, KeyError, TypeError) as e:
-        raise ValueError(
-            f"merge_into: corrupt bucket spec at {spec_path} ({e!r}); "
-            "refusing to guess the bucket layout — repair or remove the "
-            "table"
-        ) from e
 
 
 def apply_lww(
@@ -294,11 +197,10 @@ def apply_lww(
 
 
 def _lww_union(current, upd_tagged, keys, order_exprs, row_hash):
-    """The ONE copy of the fallback merge semantics (r11 review: the
-    legacy and bucketed paths had drifted-prone twins of this block):
-    target rows outrank update rows on exact order-chain ties
-    (``__tgt_pri``), the shared row hash breaks within-batch ties, and
-    the tombstone flag is pre-computed on ``upd_tagged`` only."""
+    """The ONE copy of the merge semantics: target rows outrank update
+    rows on exact order-chain ties (``__tgt_pri``), the shared row hash
+    breaks within-batch ties, and the tombstone flag is pre-computed on
+    ``upd_tagged`` only."""
     if current is None:
         unioned = upd_tagged
     else:
@@ -325,160 +227,114 @@ def merge_into(
     commit_meta: dict | None = None,
     expect_seq: int | None = None,
 ) -> dict:
-    """Apply an update batch to a stored table: ``MERGE INTO`` when the
-    target is a Delta table and delta-spark is importable, else the
-    portable parquet path (read target → union → apply_lww → write-swap).
-    Both paths implement the SAME contract: latest row per key wins by
-    the ``order_cols`` DESC chain; a key disappears when its winner is
-    an UPDATE row satisfying ``is_delete``.
+    """Apply an update batch to a stored merge target: the latest row
+    per key wins by the ``order_cols`` DESC chain; a key disappears
+    when its winner is an UPDATE row satisfying ``is_delete``.
 
-    - BUCKETED LAYOUT (r10 verdict #1 — the 100 TB path of the portable
-      branch): pass ``num_buckets=N`` to lay the target out as
-      ``__bucket=hash(keys)%N`` partition directories (the bucket count
-      + key set are pinned in an underscore-hidden ``_bucket_spec``
-      sidecar, auto-detected on every later call — callers need not
-      re-pass N).  Each subsequent batch then collapses to its TOUCHED
-      buckets, reads only those directories (partition-pruned scan),
-      merges, and swaps only those directories — untouched buckets are
-      never read or rewritten (the read probes exactly the touched
-      bucket directories — O(touched) filesystem calls, no O(N)
-      partition-discovery listing), so per-batch cost is
-      O(touched-bucket bytes + batch), not O(table).  This mirrors the
-      Delta branch's file-level rewrite in the code path that actually
-      executes without Delta.  The first call on an EXISTING unbucketed
-      target is a one-time full-cost migration (read-all → write
-      bucketed); the first call on a missing target materializes
-      bucketed directly.  Crash contract (weaker than Delta's
-      transactional commit, stated honestly): the per-bucket
-      rename-aside sequence leaves every bucket individually readable
-      at every crash point — each bucket is either pre-merge or
-      post-merge state (buckets EMPTIED by deletes carry a marker so
-      recovery never resurrects the deleted rows, r12/ADVICE r11) —
-      and the merge is idempotent (LWW over a total order); the
-      recovery pass at the head of every bucketed merge restores
-      asides / clears stale ones first.  A FAILED multi-bucket merge
-      MUST be replayed (same batch) before any NEW batch: buckets may
-      be left mixed pre/post-merge across the table, and only the
-      idempotent replay converges them (streaming foreachBatch replays
-      by construction; ad-hoc callers own this).  SINGLE WRITER
-      enforced by a create-exclusive lease file (<target>.__lease,
-      r11 verdict #2): a second concurrent merge/rebucket raises
-      IOError instead of silently interleaving the rename protocol;
+    - STORE: the manifest-commit layout (see the header comment), the
+      only one.  The first call on a missing or empty path materializes
+      a manifest table at ``num_buckets`` key-hash buckets (None means
+      1); bucket count, keys, key dtypes and the full batch schema are
+      pinned in the manifest and auto-detected on every later call, so
+      callers need not re-pass them (a re-passed ``num_buckets`` must
+      match).  Each batch collapses to its TOUCHED buckets, reads only
+      their live generations, merges, writes fresh generations and
+      commits one manifest — O(touched-bucket bytes + batch) per call,
+      O(touched) filesystem calls, untouched buckets never read or
+      rewritten.  Crash contract: the table reads as EXACTLY pre-merge
+      until the manifest-file rename lands and exactly post-merge after
+      — no recovery pass, no replay-before-new-batch rule, safe on S3A.
+      Read state through :func:`read_merged_table` (a plain root read
+      would see every retained generation); collect superseded
+      generations with :func:`vacuum_merged_table`; re-layout with
+      :func:`rebucket`.  An existing path that is not a manifest table
+      is refused, never migrated in place.  ``protocol`` accepts None
+      or ``'manifest'`` (the same thing); ``'rename'`` named a removed
+      flavor and raises.
+    - SINGLE WRITER, enforced by a create-exclusive lease file
+      (<target>.__lease, r11 verdict #2): a second concurrent
+      merge/rebucket/compaction raises IOError instead of interleaving;
       a dead holder's lease is taken over after ``lease_stale_sec``.
-      When concurrent writers are a requirement, that is exactly what
-      the Delta branch's optimistic concurrency provides.
-      Tombstone/tie-break/NULL-order contracts below apply to the
-      bucketed path unchanged.
-
-    - MANIFEST PROTOCOL (r11 verdict #1 — the object-store-safe
-      flavor): pass ``protocol='manifest'`` (with ``num_buckets``) on
-      first materialization to commit through generation directories +
-      one manifest file instead of directory renames (see the
-      MANIFEST_DIR header comment for the layout).  Auto-detected on
-      every later call, same as the spec.  Strictly stronger crash
-      contract than the rename flavor: the table reads as EXACTLY
-      pre-merge until the single manifest-file rename lands and exactly
-      post-merge after — no recovery pass, no replay-before-new-batch
-      requirement, safe on S3A where directory renames are non-atomic.
-      The cost is read indirection (state must be read through
-      :func:`read_merged_table`) and explicit GC
-      (:func:`vacuum_merged_table`).  Requires a fresh target (no
-      in-place migration from an existing layout).  Re-layout to a new
-      bucket count for either flavor: :func:`rebucket`.
-
-    - COMMIT METADATA / CAS (r14, manifest flavor only): ``commit_meta``
-      is a JSON dict committed ATOMICALLY inside the same manifest
-      rename as the data — the transactional-offsets pattern: a
-      downstream consumer that records its source cursor here can never
-      observe data-without-cursor or cursor-without-data, so its replay
-      after any crash is exactly-once (plans/ivm.refresh_aggregate is
-      the first consumer).  The latest value is carried forward
-      UNCHANGED by every later commit (merges without commit_meta,
-      compaction, rebucket, evolve_schema) until the next commit_meta
-      merge replaces it; read it back with :func:`read_commit_meta`.
-      An explicit commit_meta with a batch that touches NO buckets
-      still commits (metadata-only, live map unchanged) so the cursor
-      can advance past a range that netted out to nothing.
-      ``expect_seq`` is optimistic concurrency: refuse to merge unless
-      the latest committed manifest seq still equals it — required by
+    - COMMIT METADATA / CAS (r14): ``commit_meta`` is a JSON dict
+      committed ATOMICALLY inside the same manifest rename as the data
+      — the transactional-offsets pattern: a downstream consumer that
+      records its source cursor here can never observe
+      data-without-cursor or cursor-without-data, so its replay after
+      any crash is exactly-once (plans/ivm.refresh_aggregate is the
+      first consumer).  The latest value is carried forward UNCHANGED
+      by every later commit (merges without commit_meta, compaction,
+      rebucket, evolve_schema) until the next commit_meta merge
+      replaces it; read it back with :func:`read_commit_meta`.  An
+      explicit commit_meta with a batch that touches NO buckets still
+      commits (metadata-only, live map unchanged) so the cursor can
+      advance past a range that netted out to nothing.  ``expect_seq``
+      is optimistic concurrency: refuse to merge unless the latest
+      committed manifest seq still equals it — required by
       read-modify-write planners (the IVM delta apply), whose updates
       are only correct against the exact state they were planned from;
       the writer lease serializes commits but cannot see plan-time
-      reads.  Both knobs are refused loudly on Delta / rename / plain
-      targets (Delta has its own txn/appIds mechanism; the swap flavors
-      keep no commit metadata).
+      reads.
     - TOMBSTONE CONTRACT (r8 continuation review): ``is_delete`` is
       evaluated on UPDATE rows ONLY, with NULL normalized to False —
       MERGE semantics, where only a newer matching source row can
-      delete a stored key.  Stored target rows are never re-evaluated
-      as tombstones (Delta's ``whenMatched*`` clauses physically
-      cannot delete a target row without a matching newer source row,
-      so a fallback that re-applied ``is_delete`` to target winners
-      would destroy data the Delta path preserves; and a NULL
-      ``__del`` would make BOTH matched clauses no-fire on Delta while
-      the fallback's ``where(~NULL)`` dropped the key).  This differs
-      deliberately from bare :func:`apply_lww`, whose single-frame
-      contract keeps its documented NULL-drops semantics.
-
-    - ``order_cols`` are COLUMN NAMES here (not expressions): the Delta
-      branch needs them on both merge sides to build the
-      lexicographic "source is newer" condition.
+      delete a stored key.  Stored rows are never re-evaluated as
+      tombstones, so a NULL or stale flag on stored data can never
+      destroy it.  This differs deliberately from bare
+      :func:`apply_lww`, whose single-frame contract keeps its
+      documented NULL-drops semantics.
+    - ``order_cols`` are COLUMN NAMES (not expressions): the contract
+      is stated over stored columns, so a ``MERGE INTO`` port can build
+      its lexicographic "source is newer" condition on both sides.
     - TIE-BREAK CONTRACT (total since r8): exact ties on the FULL
-      ``order_cols`` chain keep the TARGET row in BOTH branches.  The
-      Delta condition is strict "source newer than target" (tie ⇒ no
-      match fires ⇒ target kept); the parquet fallback appends a
-      target-priority column to the ordering so the union's
-      ``row_number`` agrees instead of picking an arbitrary winner.
-      Ties WITHIN the update batch resolve by ``xxhash64`` over the
-      full row in both branches (the Delta branch's source collapse
-      and the fallback's window share the tiebreak), so the two
-      engines agree row-for-row without the caller supplying a
-      sequence column.  NULL order values rank as the OLDEST in both
-      branches (the fallback's DESC sort is NULLS LAST; the Delta
-      condition is built null-safe with `<=>` ties and an explicit
-      non-NULL-beats-NULL term — a naive `>` would strand NULL-ordered
-      target rows forever on the Delta path only).  (A 64-bit hash
-      collision between two DISTINCT tied rows would re-open
-      arbitrariness; at that probability the caller's own sequence
-      column is the remedy.)
-    - The Delta branch first collapses ``updates`` to one winner per
-      key (MERGE requires unique source keys), then routes
-      delete/update/insert with the newer-than condition — a file-level
-      rewrite of only the touched files, the fast path at 100 TB.  The
-      sandbox has no delta-spark, so this branch is exercised only as
-      the dispatch seam; the fallback is the tested path
-      (tests/test_reference_scenarios.py::test_merge_into_fallback_equals_apply_lww).
-    - The parquet fallback writes the merged state to ``<target>.__tmp``
-      and swaps directories through the Hadoop FileSystem API — never
-      ``mode("overwrite")`` onto the path being read, which deletes
-      input files mid-scan.  ATOMICITY SCOPE (r11 review): the crash
-      contract holds on filesystems with atomic directory rename
-      (local, HDFS, ABFS).  S3A's "rename" is a non-atomic O(data)
-      copy+delete — a crash mid-rename there can leave a PARTIAL
-      directory that the recovery guard cannot distinguish from a
-      complete one; on S3 use the Delta branch (whose log commit is
-      atomic on S3) or ``protocol='manifest'`` (whose commit is one
-      single-object rename — see MANIFEST PROTOCOL above), not the
-      rename flavors.
+      ``order_cols`` chain keep the TARGET row (a target-priority
+      column joins the ordering) — what ``MERGE INTO`` with a strict
+      "source newer than target" condition does.  Ties WITHIN the
+      update batch resolve by ``xxhash64`` over the full row, so the
+      result is deterministic without the caller supplying a sequence
+      column.  NULL order values rank as the OLDEST (the DESC sort is
+      NULLS LAST); a ``MERGE INTO`` port must build its condition
+      null-safe (``<=>`` on the tie chain plus an explicit
+      non-NULL-beats-NULL term — a naive ``>`` strands NULL-ordered
+      target rows forever).  (A 64-bit hash collision between two
+      DISTINCT tied rows would re-open arbitrariness; at that
+      probability the caller's own sequence column is the remedy.)
+      tests/test_property_differential.py holds the executable model
+      of these contracts (``MERGE INTO`` semantics).
+    - DELTA: there is no Delta branch.  delta-spark is not part of this
+      engine's toolchain, so such a branch could never run or be
+      tested here.  A Delta-backed store would plug in as one dispatch
+      at the top of this function (Delta target → ``MERGE INTO``
+      honouring the three contracts above), leaving this path as the
+      portable default.
 
-    Returns ``{"engine": "parquet-swap", "rows": <merged count>}`` (the
-    count rides the write via ``Observation`` — free) or ``{"engine":
-    "delta", "rows": None, "metrics": <operationMetrics>}`` — the Delta
-    path deliberately does NOT count the merged table (a full scan per
-    micro-batch at 100 TB); the commit's operationMetrics carry the
-    touched-row counts instead.
+    Returns ``{"engine": "parquet-manifest", "rows": None,
+    "touched_rows", "touched_buckets", "num_buckets", "seq"}`` — no
+    full-table count (that scan is what the touched-bucket path
+    avoids); ``touched_rows`` is the merged row count of the touched
+    buckets, riding the write via ``Observation``.
     """
     if num_buckets is not None and num_buckets < 1:
         raise ValueError(f"merge_into: num_buckets must be >= 1, got {num_buckets}")
-    if protocol not in (None, "rename", "manifest"):
+    if protocol == "rename":
         raise ValueError(
-            f"merge_into: protocol must be None, 'rename', or 'manifest', "
-            f"got {protocol!r}"
+            "merge_into: protocol='rename' was removed — the manifest-commit "
+            "layout is the only merge_into store; drop the argument or pass "
+            "protocol='manifest'"
+        )
+    if protocol not in (None, "manifest"):
+        raise ValueError(
+            f"merge_into: protocol must be None or 'manifest', got {protocol!r}"
         )
     if not order_cols:
-        # an empty chain would be malformed SQL on the Delta branch and a
-        # silent target-always-wins no-op on the fallback — refuse loudly
+        # an empty chain would make the target win every comparison: a
+        # silent no-op merge — refuse loudly
         raise ValueError("merge_into: order_cols must be non-empty")
+    missing = [k for k in keys if k not in updates.columns]
+    if missing:
+        raise ValueError(
+            f"merge_into: key columns {missing} are not in the batch "
+            f"(columns: {updates.columns})"
+        )
     if commit_meta is not None:
         try:
             json.dumps(commit_meta)
@@ -492,9 +348,9 @@ def merge_into(
                 f"merge_into: commit_meta must be a dict, got "
                 f"{type(commit_meta).__name__}"
             )
-    # GEN_COL joined the set in r12: on a manifest target a data column
-    # named __gen would collide with the generation partition dirs at
-    # read (partition-vs-data column shadowing) and the resolver's
+    # GEN_COL joined the set in r12: a data column named __gen would
+    # collide with the generation partition dirs at read
+    # (partition-vs-data column shadowing) and the resolver's
     # drop(GEN_COL) would silently erase it from every result
     reserved = {BUCKET_COL, GEN_COL, "__del", "__tgt_pri", "__rk"} & set(
         updates.columns
@@ -504,103 +360,26 @@ def merge_into(
             f"merge_into: updates may not carry reserved columns {sorted(reserved)}"
         )
     order_exprs = [F.col(c) for c in order_cols]
-    # deterministic within-batch tiebreak, shared by both branches (see
-    # TIE-BREAK CONTRACT above): hash of the full payload row
+    # deterministic within-batch tiebreak (see TIE-BREAK CONTRACT above):
+    # hash of the full payload row
     row_hash = F.xxhash64(*[F.col(c) for c in updates.columns])
-    try:
-        from delta.tables import DeltaTable  # type: ignore
-
-        have_delta = DeltaTable.isDeltaTable(spark, target_path)
-    except Exception:  # delta-spark absent or path not a Delta table
-        have_delta = False
-
-    if have_delta:
-        from delta.tables import DeltaTable  # type: ignore
-
-        # Refuse-loudly convention (ADVICE r11, cf. the kafka path guard
-        # in streaming/pipeline.py): these knobs shape the PORTABLE
-        # layouts only — silently ignoring them on a Delta target would
-        # hand a user expecting a bucketed/manifest layout neither, with
-        # no error.
-        if num_buckets is not None:
-            raise ValueError(
-                f"merge_into: num_buckets={num_buckets} does not apply to a "
-                f"Delta target ({target_path}) — Delta manages its own file "
-                "layout (OPTIMIZE/ZORDER); drop the argument"
-            )
-        if protocol is not None:
-            raise ValueError(
-                f"merge_into: protocol={protocol!r} does not apply to a "
-                f"Delta target ({target_path}) — the Delta log IS the commit "
-                "protocol; drop the argument"
-            )
-        if commit_meta is not None or expect_seq is not None:
-            raise ValueError(
-                f"merge_into: commit_meta/expect_seq do not apply to a "
-                f"Delta target ({target_path}) — use Delta's own "
-                "transactional mechanisms (txnAppId/txnVersion for "
-                "exactly-once, its optimistic concurrency for CAS)"
-            )
-
-        src = apply_lww(
-            updates, keys, order_exprs + [row_hash], is_delete=F.lit(False)
-        ).withColumn("__del", F.coalesce(is_delete.cast("boolean"), F.lit(False)))
-        key_cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-        # Lexicographic "source strictly newer than target" over
-        # order_cols, NULL-SAFE with NULL = oldest (r8 review): a plain
-        # `s.c > t.c` is NULL when either side is NULL, so the clause
-        # would never fire and a NULL-ordered target could never be
-        # superseded — while the fallback's DESC sort (NULLS LAST =
-        # NULL sorts oldest) would supersede it.  Null-safe equality
-        # (`<=>`) on the tie chain plus an explicit
-        # "non-NULL beats NULL" strict term keeps the two branches on
-        # the SAME total order: NULL is the minimum order value
-        # everywhere.
-        newer_terms = []
-        for i, c in enumerate(order_cols):
-            ties = " AND ".join(f"s.`{o}` <=> t.`{o}`" for o in order_cols[:i])
-            term = (
-                f"(s.`{c}` > t.`{c}` OR (s.`{c}` IS NOT NULL AND t.`{c}` IS NULL))"
-            )
-            newer_terms.append(f"({ties} AND {term})" if ties else f"({term})")
-        newer = " OR ".join(newer_terms)
-        tgt = DeltaTable.forPath(spark, target_path)
-        (
-            tgt.alias("t")
-            .merge(src.alias("s"), key_cond)
-            .whenMatchedDelete(condition=f"s.__del AND ({newer})")
-            .whenMatchedUpdate(
-                condition=f"NOT s.__del AND ({newer})",
-                set={c: f"s.`{c}`" for c in updates.columns},
-            )
-            .whenNotMatchedInsert(
-                condition="NOT s.__del", values={c: f"s.`{c}`" for c in updates.columns}
-            )
-            .execute()
-        )
-        # NO full-table count here (r8 continuation review): re-scanning
-        # the whole Delta table per micro-batch would dwarf the
-        # file-level merge it follows at 100 TB.  The merge's own
-        # operationMetrics (rows inserted/updated/deleted) come free
-        # from the commit history; total table rows stay None.
-        metrics: dict = {}
-        try:
-            hist = tgt.history(1).select("operationMetrics").collect()
-            if hist:
-                metrics = dict(hist[0]["operationMetrics"] or {})
-        except Exception:  # history API unavailable: metrics stay empty
-            pass
-        return {"engine": "delta", "rows": None, "metrics": metrics}
-
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    # WRITER FENCE (r11 verdict #2): every portable flavor runs under
-    # the create-exclusive lease — a second concurrent writer raises
-    # instead of silently interleaving the swap protocol.
-    with _writer_lease(fs, jvm_path, target_path, lease_stale_sec):
-        return _portable_merge(
-            spark, fs, jvm_path, target_path, updates, keys,
-            order_exprs, row_hash, is_delete, num_buckets, protocol,
+    tgt = target_path.rstrip("/")
+    with _writer_lease(fs, jvm_path, tgt, lease_stale_sec):
+        man = _read_manifest(spark, fs, jvm_path, tgt)
+        if man is None:
+            man = _init_manifest_table(
+                fs, jvm_path, tgt, keys, num_buckets or 1, dict(updates.dtypes)
+            )
+        man_seq, _, m = man
+        _check_layout_compat(
+            tgt, keys, updates, m["keys"], m["key_types"],
+            num_buckets, int(m["num_buckets"]), spec_columns=m.get("columns"),
+        )
+        return _manifest_merge(
+            spark, fs, jvm_path, tgt, updates, keys,
+            order_exprs, row_hash, is_delete, man_seq, m,
             commit_meta=commit_meta, expect_seq=expect_seq,
         )
 
@@ -609,10 +388,10 @@ def _check_layout_compat(
     target_path, keys, updates, spec_keys, spec_types, num_buckets, spec_n,
     spec_columns=None,
 ):
-    """Shared key/bucket/dtype validation against a pinned layout (the
-    rename flavor's _bucket_spec or a manifest's equivalent fields).
-    ``spec_columns`` (r12): the full-schema pin; None on pre-pin layouts
-    (validation skipped — those tables predate the pin)."""
+    """Key/bucket/dtype validation of a batch against the manifest's
+    pinned layout.  ``spec_columns`` (r12): the full-schema pin; None
+    on pre-pin manifests (validation skipped — those tables predate
+    the pin)."""
     if list(keys) != list(spec_keys):
         raise ValueError(
             f"merge_into: target {target_path} is bucketed on keys "
@@ -631,22 +410,22 @@ def _check_layout_compat(
     }
     if drift:  # xxhash64 is type-sensitive: same value, other bucket
         raise ValueError(
-            f"merge_into: key dtype drift vs the bucket spec at "
-            f"{target_path}: {drift} (spec, batch) — the same logical "
+            f"merge_into: key dtype drift vs the manifest at "
+            f"{target_path}: {drift} (manifest, batch) — the same logical "
             "key would hash into a different bucket space; cast the "
-            "batch keys back to the spec types"
+            "batch keys back to the pinned types"
         )
     _check_schema_pin(target_path, spec_columns, upd_types)
 
 
 def _conform_to_pin(df, pinned):
-    """Project ``df`` to the pinned schema (r13, the evolve_schema read
-    seam): a column in the pin but missing from the files — which is
-    exactly what a METADATA-ONLY ``add`` leaves behind (the pin gains
-    the column, existing parquet files do not) — reads as a typed NULL;
-    non-pinned extras (the __bucket partition column) ride along
-    unchanged.  Identity when the layout carries no pin (pre-r12
-    tables)."""
+    """Project ``df`` to the pinned schema (r13; read_changes' mixed-
+    width reads across an evolution): a column in the pin but missing
+    from the files — which is exactly what a METADATA-ONLY ``add``
+    leaves behind (the pin gains the column, existing parquet files do
+    not) — reads as a typed NULL; non-pinned extras (the __bucket
+    partition column) ride along unchanged.  Identity when the layout
+    carries no pin (pre-r12 tables)."""
     if pinned is None:
         return df
     have = set(df.columns)
@@ -658,9 +437,18 @@ def _conform_to_pin(df, pinned):
     return df.select(*cols, *extras)
 
 
+def _gen_paths(tgt: str, live: dict) -> list[str]:
+    """Directories of the given ``{bucket: gen}`` generations, in
+    bucket order."""
+    return [
+        f"{tgt}/{BUCKET_COL}={b}/{GEN_COL}={g}"
+        for b, g in sorted(live.items(), key=lambda kv: int(kv[0]))
+    ]
+
+
 def _pinned_read(spark, paths: list, pinned, base_path: str | None = None):
-    """Read live generation/bucket dirs under the layout's schema pin
-    WITHOUT schema inference (r14-opt, guide §6 metadata-driven reads):
+    """Read live generation dirs under the layout's schema pin WITHOUT
+    schema inference (r14-opt, guide §6 metadata-driven reads):
     ``mergeSchema=true`` runs a distributed footer-union job on every
     call — at 100 TB that is a pass over every touched file's footer
     per merge/read, and at the gate scale it is a fixed extra job per
@@ -686,41 +474,14 @@ def _pinned_read(spark, paths: list, pinned, base_path: str | None = None):
     return r.schema(ddl).parquet(*paths)
 
 
-def _is_empty_read(e) -> bool:
-    """True iff an AnalysisException from a parquet read means "zero
-    data files" (UNABLE_TO_INFER_SCHEMA on an existing-but-empty dir)
-    or "no such path" (PATH_NOT_FOUND) — the only two conditions this
-    storage layer treats as an empty/absent table.  Anything else
-    (incompatible column types across pre-pin generations under
-    mergeSchema, a tampered footer, …) must raise loudly per the
-    layer's refusal conventions rather than read as an empty table
-    (r13 ADVICE: the blanket catch silently reported such failures as
-    'no data')."""
-    for attr in ("getCondition", "getErrorClass"):
-        fn = getattr(e, attr, None)
-        if fn is not None:
-            try:
-                cond = fn()
-            except Exception:
-                continue
-            if cond is not None:
-                return cond in ("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND")
-    # condition-less exception (non-classified): fall back to the
-    # stable message heads of the two empty cases
-    msg = str(e)
-    return "UNABLE_TO_INFER_SCHEMA" in msg or "PATH_NOT_FOUND" in msg
-
-
 def _check_schema_pin(target_path, pinned, upd_types) -> None:
     """Refuse a batch whose value schema drifts from ``pinned`` (the
-    layout's `columns` pin, or the live table schema on the plain
-    flavor).  ``pinned`` None (pre-r12 spec) skips.  Every flavor needs
-    this: on bucketed layouts a drifted batch landing in an EMPTY
-    bucket writes a divergent per-bucket schema that reads
-    non-deterministically; on the plain flavor unionByName catches
-    extra/missing names but a RETYPED column silently type-coerces —
-    numeric-looking strings migrate the stored column's type, anything
-    else explodes mid-job as a runtime cast error (r12 probe)."""
+    manifest's ``columns`` pin).  ``pinned`` None (pre-r12 manifest)
+    skips.  A drifted batch landing in an EMPTY bucket would write a
+    divergent per-bucket schema that reads non-deterministically
+    (unionByName never sees the conflict), and a RETYPED column would
+    silently type-coerce or explode mid-job as a runtime cast error
+    (r12 probe)."""
     if pinned is None or dict(upd_types) == dict(pinned):
         return
     pinned, upd_types = dict(pinned), dict(upd_types)
@@ -740,227 +501,6 @@ def _check_schema_pin(target_path, pinned, upd_types) -> None:
     )
 
 
-def _recover_whole_dir(fs, jvm_path, target_path: str) -> None:
-    """Legacy-flavor crash recovery (r6 review): a prior run that died
-    between the two swap renames left the only copy of the table at
-    __old and no target — restore it BEFORE any read, or the caller
-    would take the "first batch" path and later cleanup would delete
-    the sole surviving state."""
-    old = target_path.rstrip("/") + ".__old"
-    if not fs.exists(jvm_path(target_path)) and fs.exists(jvm_path(old)):
-        if not fs.rename(jvm_path(old), jvm_path(target_path)):
-            raise IOError(
-                f"merge_into: crash recovery rename {old} -> {target_path} failed"
-            )
-
-
-def _portable_merge(
-    spark, fs, jvm_path, target_path, updates, keys,
-    order_exprs, row_hash, is_delete, num_buckets, protocol,
-    commit_meta: dict | None = None, expect_seq: int | None = None,
-) -> dict:
-    """Layout dispatch + the legacy whole-dir flavor.  Runs UNDER the
-    writer lease (acquired by merge_into)."""
-    from pyspark.sql import Observation
-    from pyspark.sql.utils import AnalysisException
-
-    tmp = target_path.rstrip("/") + ".__tmp"
-    old = target_path.rstrip("/") + ".__old"
-
-    # ---- manifest-commit dispatch (see MANIFEST_DIR header) ----
-    man = _read_manifest(spark, fs, jvm_path, target_path)
-    if man is None and protocol == "manifest":
-        if num_buckets is None:
-            raise ValueError(
-                "merge_into: protocol='manifest' requires num_buckets on "
-                "first materialization"
-            )
-        if _read_bucket_spec(spark, fs, jvm_path, target_path) is not None:
-            raise ValueError(
-                f"merge_into: target {target_path} is rename-bucketed; "
-                "protocol='manifest' cannot apply to it — rebuild the table "
-                "to switch protocols"
-            )
-        _init_manifest_table(
-            fs, jvm_path, target_path, keys, num_buckets,
-            {k: dict(updates.dtypes)[k] for k in keys},
-            columns=dict(updates.dtypes),
-        )
-        man = _read_manifest(spark, fs, jvm_path, target_path)
-    if man is not None:
-        if protocol == "rename":
-            raise ValueError(
-                f"merge_into: target {target_path} is manifest-commit; "
-                "protocol='rename' cannot apply to it — rebuild the table "
-                "to switch protocols"
-            )
-        man_seq, _, m = man
-        _check_layout_compat(
-            target_path, keys, updates, m["keys"], m["key_types"],
-            num_buckets, int(m["num_buckets"]), spec_columns=m.get("columns"),
-        )
-        return _manifest_merge(
-            spark, fs, jvm_path, target_path, updates, keys,
-            order_exprs, row_hash, is_delete, man_seq, m,
-            commit_meta=commit_meta, expect_seq=expect_seq,
-        )
-
-    if commit_meta is not None or expect_seq is not None:
-        # refuse-loudly convention (cf. num_buckets/protocol on Delta):
-        # the swap flavors keep no commit metadata and no stable seq —
-        # silently dropping either knob would hand an exactly-once
-        # consumer neither its cursor nor its CAS
-        raise ValueError(
-            f"merge_into: commit_meta/expect_seq apply only to "
-            f"manifest-commit targets; {target_path} is not one — use "
-            "protocol='manifest' on first materialization"
-        )
-
-    _recover_whole_dir(fs, jvm_path, target_path)
-
-    # ---- bucketed-layout dispatch (see BUCKETED LAYOUT in docstring) ----
-    spec = _read_bucket_spec(spark, fs, jvm_path, target_path)
-    if spec is not None:
-        if protocol == "manifest":
-            raise ValueError(
-                f"merge_into: target {target_path} is rename-bucketed; "
-                "protocol='manifest' cannot apply to it — rebuild the table "
-                "to switch protocols"
-            )
-        spec_n, spec_keys, spec_types, spec_cols = spec
-        _check_layout_compat(
-            target_path, keys, updates, spec_keys, spec_types, num_buckets,
-            spec_n, spec_columns=spec_cols,
-        )
-        return _bucketed_merge(
-            spark, fs, jvm_path, target_path, updates, keys,
-            order_exprs, row_hash, is_delete, spec_n, spec_cols,
-        )
-    # No spec: a target that nevertheless carries __bucket= partition
-    # dirs is AMBIGUOUS (external tampering, or a table from a pre-spec
-    # build) — both the legacy path (unionByName would drag __bucket
-    # into the schema) and a guessed bucket count (could mis-route
-    # keys) are corruption paths, so refuse loudly.  Since the spec is
-    # written inside tmp before the swap, normal operation can never
-    # produce this state.
-    if fs.exists(jvm_path(target_path)) and _has_bucket_dirs(
-        fs, jvm_path, target_path
-    ):
-        raise ValueError(
-            f"merge_into: target {target_path} has {BUCKET_COL}= partition "
-            f"directories but no {BUCKET_SPEC_FILE}; refusing to guess the "
-            "bucket layout — restore the spec or rebuild the table"
-        )
-    if protocol == "manifest":
-        # _init_manifest_table would also refuse (non-fresh target), but
-        # the unbucketed-existing case deserves its own message
-        raise ValueError(
-            f"merge_into: protocol='manifest' requires a fresh target; "
-            f"{target_path} exists unbucketed — read it and merge into a "
-            "new manifest path instead (no in-place migration)"
-        )
-    as_buckets = None
-    if num_buckets is not None:
-        # first materialization on a missing target, or one-time
-        # migration of an unbucketed table: run the full legacy merge
-        # below but write the result bucket-partitioned, with the spec
-        # INSIDE tmp so the swap exposes data + spec atomically.
-        as_buckets = num_buckets
-
-    # ONLY the read sits in the try: a schema mismatch in unionByName
-    # must raise loudly — swallowing it as "no target yet" would
-    # replace the whole table with just the malformed batch.
-    try:
-        current = spark.read.parquet(target_path)
-    except AnalysisException as e:
-        if not _is_empty_read(e):
-            raise
-        current = None  # first batch: no target yet
-    if current is not None:
-        # plain flavor has no layout spec — the LIVE table schema is the
-        # pin (see _check_schema_pin: unionByName would catch the name
-        # drift below, but a retyped column silently type-coerces)
-        _check_schema_pin(target_path, dict(current.dtypes), dict(updates.dtypes))
-    # TOMBSTONE CONTRACT (see docstring): __del is computed on the
-    # UPDATE rows only, NULL-normalized; target rows carry False so a
-    # stored key can only disappear when a newer update row deletes it —
-    # exactly what Delta's whenMatchedDelete can and cannot do.
-    upd_tagged = updates.withColumn("__tgt_pri", F.lit(0)).withColumn(
-        "__del", F.coalesce(is_delete.cast("boolean"), F.lit(False))
-    )
-    merged = _lww_union(current, upd_tagged, keys, order_exprs, row_hash)
-    obs = Observation()
-    merged = merged.observe(obs, F.count(F.lit(1)).alias("n"))
-    if as_buckets is not None:
-        # stale-tmp delete (r11 review): under
-        # spark.sql.sources.partitionOverwriteMode=dynamic,
-        # mode("overwrite") replaces only the partitions the write
-        # PRODUCES — a crashed earlier run's leftover bucket dirs in tmp
-        # would survive and be swapped into the new table as ghost rows
-        fs.delete(jvm_path(tmp), True)
-        merged = merged.withColumn(BUCKET_COL, bucket_expr(keys, as_buckets))
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-        # spec rides in tmp: the swap below exposes data + spec in ONE
-        # rename, so no crash point leaves a spec-less bucketed layout
-        _write_bucket_spec(
-            fs, jvm_path, tmp, keys, as_buckets,
-            {k: dict(updates.dtypes)[k] for k in keys},
-            columns=dict(updates.dtypes),
-        )
-    else:
-        merged.write.mode("overwrite").parquet(tmp)
-    _swap_whole_dir(fs, jvm_path, target_path, tmp, old)
-    if as_buckets is not None:
-        return {
-            "engine": "parquet-swap",
-            "rows": obs.get["n"],
-            "num_buckets": as_buckets,
-        }
-    return {"engine": "parquet-swap", "rows": obs.get["n"]}
-
-
-def _swap_whole_dir(fs, jvm_path, target_path: str, tmp: str, old: str) -> None:
-    """Whole-directory rename-aside swap (the legacy flavor's commit;
-    also reused by rebucket's rename arm).  Swap via rename-aside, not
-    delete-then-rename: with _recover_whole_dir at every entry point,
-    every crash point leaves a readable state — the old table (crash
-    before the second rename; restored on next run) or the new one;
-    only the cleanup of __old can be lost, and a leftover __old while
-    the target EXISTS is provably stale."""
-    fs.delete(jvm_path(old), True)  # stale leftover (target exists here)
-    # Move aside whenever the PATH exists — not just when it was
-    # readable parquet (r6 review): a pre-created empty dir or junk
-    # leftovers read as "no target" (current=None), but renaming tmp
-    # onto an existing directory NESTS it on HDFS (silent data loss)
-    # or fails on local FS.  Aside-moving the junk too keeps the
-    # destination clear without destroying anything.
-    if fs.exists(jvm_path(target_path)) and not fs.rename(
-        jvm_path(target_path), jvm_path(old)
-    ):
-        raise IOError(f"merge_into: could not move {target_path} aside")
-    if not fs.rename(jvm_path(tmp), jvm_path(target_path)):
-        # Put back WHATEVER was moved aside — not only readable parquet
-        # (r7 review): when the pre-existing target was junk/empty
-        # (current is None) it still went to __old above, and skipping
-        # the restore would leave NO path at target for the rest of
-        # this process (next-call crash recovery only fires when __old
-        # exists AND target doesn't — which it would — but in-process
-        # readers meanwhile see a missing table).  Restoring uncondi-
-        # tionally leaves the path exactly in its pre-merge state.
-        if fs.exists(jvm_path(old)):
-            fs.rename(jvm_path(old), jvm_path(target_path))
-        raise IOError(f"merge_into: could not swap {tmp} -> {target_path}")
-    fs.delete(jvm_path(old), True)
-
-
-def _has_bucket_dirs(fs, jvm_path, target_path: str) -> bool:
-    prefix = BUCKET_COL + "="
-    for st in fs.listStatus(jvm_path(target_path)):
-        if st.getPath().getName().startswith(prefix):
-            return True
-    return False
-
-
 def _ckpt_with_touched(
     updates: DataFrame, keys: list[str], n_buckets: int, is_delete: Column
 ) -> tuple[DataFrame, list]:
@@ -969,13 +509,13 @@ def _ckpt_with_touched(
     the touched set rides the checkpoint materialization as an
     ``Observation`` (collect_set) instead of a second
     distinct-collect job over the checkpoint (r15 — the merge
-    protocols are per-action-latency-bound on micro-batches; this
+    protocol is per-action-latency-bound on micro-batches; this
     drops one driver round trip per merge).  The eager checkpoint
     stays load-bearing: the batch is consumed again by the LWW union,
     and a non-deterministic source re-evaluating between passes could
     otherwise emit rows into buckets missing from ``touched`` (rows
-    silently dropped at swap time).  The observed set is computed ON
-    the very materialization the union reads — the same rows by
+    silently dropped at staging time).  The observed set is computed
+    ON the very materialization the union reads — the same rows by
     construction."""
     from pyspark.sql import Observation
 
@@ -990,170 +530,33 @@ def _ckpt_with_touched(
     return upd_tagged, sorted(obs.get["touched"])
 
 
-def _bucketed_merge(
-    spark,
-    fs,
-    jvm_path,
-    target_path: str,
-    updates: DataFrame,
-    keys: list[str],
-    order_exprs: list[Column],
-    row_hash: Column,
-    is_delete: Column,
-    n_buckets: int,
-    spec_cols: dict | None = None,
-) -> dict:
-    """Incremental merge into a key-hash-bucketed parquet target: read,
-    merge, and swap ONLY the bucket directories the update batch
-    touches.  See merge_into's BUCKETED LAYOUT docstring section for
-    the layout, cost, and crash contracts.  ``spec_cols`` (r13): the
-    layout's schema pin — the touched-bucket read conforms to it so
-    files written BEFORE a metadata-only ``evolve_schema(add=...)``
-    contribute typed NULLs for the added columns."""
-    from pyspark.sql import Observation
-
-    tgt = target_path.rstrip("/")
-    tmp = tgt + ".__tmp"
-    old = tgt + ".__old"
-    prefix = BUCKET_COL + "="
-
-    _recover_buckets(fs, jvm_path, tgt)
-
-    # Eager checkpoint + touched-bucket set in one job (r15; see
-    # _ckpt_with_touched for the determinism contract the checkpoint
-    # carries).  The batch is micro-batch-sized, not table-sized.
-    upd_tagged, touched = _ckpt_with_touched(updates, keys, n_buckets, is_delete)
-    try:
-        if not touched:  # empty batch: nothing to read, write, or swap
-            return {
-                "engine": "parquet-bucketed",
-                "rows": None,
-                "touched_rows": 0,
-                "touched_buckets": [],
-                "num_buckets": n_buckets,
-            }
-
-        # Touched-path read (r11 review): reading the table ROOT would run
-        # partition discovery over every bucket directory — an O(N) listing
-        # per micro-batch on an object store even though the isin prunes the
-        # scan.  Instead probe exactly the touched bucket dirs (O(touched)
-        # filesystem calls) and read only those paths; basePath keeps the
-        # __bucket partition column in the schema.  A touched bucket with no
-        # dir (new keys / previously emptied) simply contributes no current
-        # rows.
-        existing = [
-            tgt + "/" + f"{prefix}{b}"
-            for b in touched
-            if fs.exists(jvm_path(tgt + "/" + f"{prefix}{b}"))
-        ]
-        if existing:
-            # pinned read (r14-opt; was mergeSchema + conform, r13):
-            # post-evolve, files written before a metadata-only add
-            # lack the added column — the pin is the deterministic
-            # union schema and the reader fills NULLs
-            current = _pinned_read(spark, existing, spec_cols, base_path=tgt)
-        else:
-            current = None
-        merged = _lww_union(current, upd_tagged, keys, order_exprs, row_hash)
-        obs = Observation()
-        merged = merged.observe(obs, F.count(F.lit(1)).alias("n"))
-        # stale-tmp delete: see the as_buckets write above (dynamic
-        # partitionOverwriteMode keeps crashed-run bucket dirs otherwise)
-        fs.delete(jvm_path(tmp), True)
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-
-        # Per-bucket rename-aside swap over ONLY the touched buckets.  A
-        # bucket emptied by deletes has no tmp dir — its aside is moved
-        # out, nothing replaces it, and the bucket disappears; the
-        # EMPTIED marker written BEFORE that aside-move lets recovery
-        # tell this apart from a crash between the two renames (ADVICE
-        # r11 — without it, recovery would resurrect the deleted rows).
-        fs.delete(jvm_path(old), True)
-        fs.mkdirs(jvm_path(old))
-        for b in touched:
-            name = f"{prefix}{b}"
-            t_b = jvm_path(tgt + "/" + name)
-            m_b = jvm_path(tmp + "/" + name)
-            o_b = jvm_path(old + "/" + name)
-            has_new = fs.exists(m_b)
-            if not has_new and fs.exists(t_b):
-                mk = fs.create(jvm_path(old + "/" + name + EMPTIED_SUFFIX), True)
-                mk.close()
-            if fs.exists(t_b) and not fs.rename(t_b, o_b):
-                raise IOError(f"merge_into: could not move {tgt}/{name} aside")
-            if has_new and not fs.rename(m_b, t_b):
-                if fs.exists(o_b):  # put the pre-merge bucket back
-                    fs.rename(o_b, t_b)
-                raise IOError(f"merge_into: could not swap {tmp}/{name} into place")
-        fs.delete(jvm_path(old), True)
-        fs.delete(jvm_path(tmp), True)
-        return {
-            "engine": "parquet-bucketed",
-            "rows": None,  # no full-table count — that scan is what this path avoids
-            "touched_rows": obs.get["n"],
-            "touched_buckets": touched,
-            "num_buckets": n_buckets,
-        }
-    finally:
-        _release_checkpoint(upd_tagged)
-
-
-def _recover_buckets(fs, jvm_path, tgt: str) -> None:
-    """Per-bucket crash recovery (mirrors the legacy whole-dir rule),
-    run at the head of every bucketed merge and of rebucket: an aside
-    bucket whose target slot is EMPTY is the sole surviving copy (crash
-    between the two renames) — restore it, UNLESS its EMPTIED marker is
-    present (the bucket was deleted down to nothing by design; restoring
-    would undo the deletes — ADVICE r11); an aside whose target slot is
-    occupied is provably stale (the tmp rename landed) — drop it.
-
-    NOTE a failed MULTI-bucket merge must be REPLAYED (same batch)
-    before applying any new batch: recovery leaves each bucket
-    individually consistent but possibly MIXED across buckets (some
-    pre-merge, some post-merge); replaying the idempotent LWW batch
-    converges every bucket to post-merge."""
-    old = tgt + ".__old"
-    prefix = BUCKET_COL + "="
-    if not fs.exists(jvm_path(old)):
-        return
-    entries = list(fs.listStatus(jvm_path(old)))
-    names = {st.getPath().getName() for st in entries}
-    for st in entries:
-        name = st.getPath().getName()
-        if not name.startswith(prefix) or name.endswith(EMPTIED_SUFFIX):
-            continue  # markers themselves go with the old-dir delete below
-        dest = jvm_path(tgt + "/" + name)
-        if fs.exists(dest) or (name + EMPTIED_SUFFIX) in names:
-            fs.delete(st.getPath(), True)
-        elif not fs.rename(st.getPath(), dest):
-            raise IOError(
-                f"merge_into: bucket crash-recovery rename "
-                f"{old}/{name} -> {tgt}/{name} failed"
-            )
-    fs.delete(jvm_path(old), True)
-
-
 # ---------------------------------------------------------------------------
-# Manifest-commit flavor (r11 verdict #1).  Layout:
+# Manifest commits (r11 verdict #1).  Layout:
 #
-#   <target>/_manifest/<seq:020d>-<gen>.json   committed manifests
+#   <target>/_manifest/<seq:020d>.json         committed manifests
 #   <target>/_manifest/.tmp-<gen>.json         in-flight commit (ignored)
 #   <target>/__bucket=K/__gen=<gen>/part-*.parquet
+#   <target>.__tmp/__bucket=K/                 staging area (non-live)
 #
-# The manifest pins {num_buckets, keys, key_types, buckets: {K: gen}}.
-# A bucket absent from `buckets` is empty.  Generation directories are
-# NON-LIVE until a manifest referencing them is committed, so every
-# write before the commit is crash-garbage at worst; the commit itself
-# is one single-FILE rename (atomic on local/HDFS; a single-object copy
-# on S3A — the destination appears complete or not at all, unlike the
-# rename flavor's non-atomic O(data) directory copy+delete).  Readers
-# resolve live paths through read_merged_table; superseded generations
-# and manifests are collected by vacuum_merged_table.
+# The manifest pins {num_buckets, keys, key_types, columns, buckets:
+# {K: gen}, seq, gen} plus the application's app_meta.  A bucket absent
+# from `buckets` is empty.  Generation directories are NON-LIVE until a
+# manifest referencing them is committed, so every write before the
+# commit is crash-garbage at worst; the commit itself is one
+# single-FILE rename (_commit_manifest).  Every writer — merge,
+# rebucket, widen, compaction, metadata-only commits — goes through
+# _commit_next.  Readers resolve live paths through read_merged_table;
+# superseded generations and manifests are collected by
+# vacuum_merged_table.
 # ---------------------------------------------------------------------------
 
 
 def _manifest_dir(tgt: str) -> str:
     return tgt.rstrip("/") + "/" + MANIFEST_DIR
+
+
+def _tmp_dir(tgt: str) -> str:
+    return tgt.rstrip("/") + ".__tmp"
 
 
 def _list_manifests(fs, jvm_path, tgt: str) -> list:
@@ -1174,12 +577,35 @@ def _list_manifests(fs, jvm_path, tgt: str) -> list:
     return sorted(out)
 
 
+def _refuse_foreign(fs, jvm_path, tgt: str, who: str) -> None:
+    """Raise when ``tgt`` (which has no committed manifest) holds
+    anything besides an uncommitted ``_manifest`` dir — data this store
+    did not write: a plain parquet table, or a layout from an older
+    build.  Guessing would either hide that data or overwrite it; the
+    migration is an explicit read + merge into a new path."""
+    if not fs.exists(jvm_path(tgt)):
+        return
+    foreign = sorted(
+        st.getPath().getName()
+        for st in fs.listStatus(jvm_path(tgt))
+        if st.getPath().getName() != MANIFEST_DIR
+    )
+    if foreign:
+        raise ValueError(
+            f"{who}: {tgt} is not a manifest-commit target (it holds "
+            f"{foreign[:5]}) — merge_into stores only the manifest layout "
+            "and needs a fresh target or one it wrote itself; read the "
+            "existing data and merge it into a new path (no in-place "
+            "migration)"
+        )
+
+
 def _read_manifest(spark, fs, jvm_path, target_path: str, as_of_seq: int | None = None):
     """Return (seq, filename, manifest_dict) for the LATEST committed
     manifest, or None when the target carries no manifest layout.  An
-    existing-but-unreadable latest manifest raises loudly (same refusal
-    convention as _read_bucket_spec): guessing would either read stale
-    generations or route keys into the wrong bucket space.
+    existing-but-unreadable latest manifest raises loudly: guessing
+    would either read stale generations or route keys into the wrong
+    bucket space.
 
     ``as_of_seq`` (r12 snapshot reads) selects the latest manifest with
     ``seq <= as_of_seq`` instead — Delta ``versionAsOf`` semantics.  A
@@ -1265,16 +691,6 @@ def _commit_manifest(fs, jvm_path, tgt: str, seq: int, gen: str, man: dict) -> N
 APP_META_KEY = "app_meta"
 
 
-def _carry_app_meta(man: dict) -> dict:
-    """The application-owned manifest field (``merge_into(commit_meta=)``)
-    rides EVERY later commit unchanged until the next commit_meta merge
-    replaces it.  Maintenance and evolve commits must never drop it: an
-    exactly-once consumer (plans/ivm.refresh_aggregate) keeps its source
-    cursor here, and a compaction that silently shed the cursor would
-    rewind the consumer into a double-apply."""
-    return {APP_META_KEY: man[APP_META_KEY]} if APP_META_KEY in man else {}
-
-
 def _new_gen() -> str:
     """Generation id: 'g' prefix guarantees the __gen partition value is
     inferred as STRING (an all-digit hex id would infer as int and make
@@ -1284,57 +700,116 @@ def _new_gen() -> str:
     return "g" + uuid.uuid4().hex[:12]
 
 
-def _init_manifest_table(
-    fs, jvm_path, target_path: str, keys, num_buckets: int, key_types: dict,
-    columns: dict | None = None,
-) -> None:
-    """Materialize an EMPTY manifest table (seq 0, no live buckets); the
-    first batch is then an ordinary manifest merge against empty state —
-    one code path for first and every later batch.  Idempotent across a
-    crash mid-init: re-init is allowed while the target holds nothing
-    but an uncommitted _manifest dir."""
-    tgt = target_path.rstrip("/")
-    if fs.exists(jvm_path(tgt)):
-        entries = [st.getPath().getName() for st in fs.listStatus(jvm_path(tgt))]
-        if any(e != MANIFEST_DIR for e in entries) or _list_manifests(
-            fs, jvm_path, tgt
-        ):
-            raise ValueError(
-                f"merge_into: protocol='manifest' requires a fresh target; "
-                f"{tgt} already holds {entries} — rebuild into a new path"
-            )
+def _commit_next(
+    fs, jvm_path, tgt: str, man_seq: int, man: dict, buckets, data=None,
+    **fields,
+) -> int:
+    """THE commit protocol — every writer of a manifest table commits
+    through here; returns the committed seq (``man_seq + 1``).
+
+    1. ``data`` (a frame carrying ``__bucket``), when given, is written
+       partitioned into the staging dir ``<target>.__tmp`` after any
+       crashed run's leftovers there are deleted (under dynamic
+       partitionOverwriteMode a stale bucket dir would survive the
+       overwrite and be staged as ghost rows).  Callers that need
+       another write shape (compaction's per-bucket coalesce) fill
+       ``<target>.__tmp/__bucket=K/`` themselves and pass no ``data``.
+    2. Stage: each staged bucket dir is renamed under its bucket as a
+       fresh ``__gen``.  These renames need not be atomic — nothing
+       resolves them until the commit — which is what makes the
+       protocol safe where directory renames are copy+delete (S3A).
+       ``buckets`` lists the bucket ids this commit rewrites against
+       the current live map: a listed bucket with no staged dir was
+       emptied by deletes and leaves the map; ``[]`` is a
+       metadata-only commit.  ``buckets=None`` means the write replaced
+       the whole table: the new live map is exactly the staged dirs.
+    3. Commit one manifest carrying the current one's layout, schema
+       pin and app_meta forward, overridden by ``fields``
+       (``num_buckets``, ``columns``, ``app_meta``).  app_meta must
+       ride EVERY commit: an exactly-once consumer
+       (plans/ivm.refresh_aggregate) keeps its source cursor there, and
+       a maintenance commit that shed it would rewind the consumer into
+       a double-apply.
+    4. Drop the staging dir (a lost cleanup is the next writer's stale
+       leftover, deleted in step 1)."""
+    tmp = _tmp_dir(tgt)
+    prefix = BUCKET_COL + "="
+    if data is not None:
+        fs.delete(jvm_path(tmp), True)
+        data.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
+    if buckets is None:
+        live = {}
+        buckets = [
+            st.getPath().getName()[len(prefix):]
+            for st in fs.listStatus(jvm_path(tmp))
+            if st.getPath().getName().startswith(prefix)
+        ]
+    else:
+        live = dict(man["buckets"])
     gen = _new_gen()
+    for b in buckets:
+        name = f"{prefix}{b}"
+        staged = jvm_path(f"{tmp}/{name}")
+        if fs.exists(staged):
+            fs.mkdirs(jvm_path(f"{tgt}/{name}"))
+            if not fs.rename(staged, jvm_path(f"{tgt}/{name}/{GEN_COL}={gen}")):
+                raise IOError(
+                    f"merge_into: could not stage generation "
+                    f"{tgt}/{name}/{GEN_COL}={gen}"
+                )
+            live[str(b)] = gen
+        else:  # bucket emptied by deletes: drop it from the live map
+            live.pop(str(b), None)
+    seq = man_seq + 1
+    carried = {
+        k: man[k]
+        for k in ("num_buckets", "keys", "key_types", "columns", APP_META_KEY)
+        if k in man
+    }
     _commit_manifest(
-        fs, jvm_path, tgt, 0, gen,
-        {
-            "num_buckets": int(num_buckets),
-            "keys": list(keys),
-            "key_types": dict(key_types),
-            **({"columns": dict(columns)} if columns is not None else {}),
-            "buckets": {},
-            "seq": 0,
-            "gen": gen,
-        },
+        fs, jvm_path, tgt, seq, gen,
+        {**carried, **fields, "buckets": live, "seq": seq, "gen": gen},
     )
+    if data is not None or buckets:
+        fs.delete(jvm_path(tmp), True)
+    return seq
+
+
+def _init_manifest_table(
+    fs, jvm_path, tgt: str, keys, num_buckets: int, columns: dict
+) -> tuple:
+    """Materialize an EMPTY manifest table (seq 0, no live buckets) and
+    return its ``(seq, name, manifest)``; the first batch is then an
+    ordinary manifest merge against empty state — one code path for
+    first and every later batch.  Idempotent across a crash mid-init:
+    re-init is allowed while the target holds nothing but an
+    uncommitted _manifest dir; anything else is refused."""
+    _refuse_foreign(fs, jvm_path, tgt, "merge_into")
+    layout = {
+        "num_buckets": int(num_buckets),
+        "keys": list(keys),
+        "key_types": {k: columns[k] for k in keys},
+        "columns": dict(columns),
+        "buckets": {},
+    }
+    seq = _commit_next(fs, jvm_path, tgt, -1, layout, [])
+    return seq, f"{seq:020d}.json", {**layout, "seq": seq}
 
 
 def _manifest_merge(
-    spark, fs, jvm_path, target_path: str, updates, keys,
+    spark, fs, jvm_path, tgt: str, updates, keys,
     order_exprs, row_hash, is_delete, man_seq: int, man: dict,
     commit_meta: dict | None = None, expect_seq: int | None = None,
 ) -> dict:
-    """Incremental merge under the manifest-commit protocol: read ONLY
-    the touched buckets' live generations, merge, write fresh (non-live)
-    generation dirs, then commit one manifest.  Crash contract: the
-    table reads as exactly pre-merge until the manifest rename lands and
-    exactly post-merge after — every earlier crash point strands only
-    unreferenced generation dirs / a .tmp manifest (vacuum fodder), and
-    the batch replay converges (LWW idempotence), with no recovery pass
-    needed at all.  Cost model matches the rename flavor: O(touched
-    bucket bytes + batch) per call, O(touched) filesystem calls."""
+    """Incremental merge: read ONLY the touched buckets' live
+    generations, merge, and commit fresh generations for them through
+    :func:`_commit_next`.  Crash contract: the table reads as exactly
+    pre-merge until the manifest rename lands and exactly post-merge
+    after — every earlier crash point strands only unreferenced
+    generation dirs / a .tmp manifest (vacuum fodder), and the batch
+    replay converges (LWW idempotence), with no recovery pass needed."""
     from pyspark.sql import Observation
 
-    tgt = target_path.rstrip("/")
     if expect_seq is not None and man_seq != expect_seq:
         # optimistic CAS (r14): a read-modify-write planner (e.g. the
         # IVM refresh, which adds deltas onto values it looked up at
@@ -1347,18 +822,21 @@ def _manifest_merge(
             "planned against has moved; re-plan from the current state and "
             "retry"
         )
-    meta_fields = (
-        {APP_META_KEY: commit_meta}
-        if commit_meta is not None
-        else _carry_app_meta(man)
-    )
-    tmp = tgt + ".__tmp"
-    prefix = BUCKET_COL + "="
+    meta = {APP_META_KEY: commit_meta} if commit_meta is not None else {}
     n_buckets = int(man["num_buckets"])
-    live = dict(man["buckets"])
+    live = man["buckets"]
+    result = {
+        "engine": "parquet-manifest",
+        "rows": None,  # no full-table count — that scan is what this path avoids
+        "touched_rows": 0,
+        "touched_buckets": [],
+        "num_buckets": n_buckets,
+        "seq": man_seq,
+    }
 
-    # Eager checkpoint + touched-bucket set in one job (r15) — same
-    # non-deterministic-source rationale as the rename flavor.
+    # Eager checkpoint + touched-bucket set in one job (r15; see
+    # _ckpt_with_touched for the determinism contract the checkpoint
+    # carries).  The batch is micro-batch-sized, not table-sized.
     upd_tagged, touched = _ckpt_with_touched(updates, keys, n_buckets, is_delete)
     try:
         if not touched:
@@ -1367,103 +845,30 @@ def _manifest_merge(
                 # rows: a METADATA-ONLY commit (live map unchanged) lets
                 # an exactly-once consumer advance its cursor past a
                 # range that netted out to nothing
-                gen = _new_gen()
-                _commit_manifest(
-                    fs, jvm_path, tgt, man_seq + 1, gen,
-                    {
-                        "num_buckets": n_buckets,
-                        "keys": list(man["keys"]),
-                        "key_types": dict(man["key_types"]),
-                        **({"columns": man["columns"]} if "columns" in man
-                           else {}),
-                        **meta_fields,
-                        "buckets": live,
-                        "seq": man_seq + 1,
-                        "gen": gen,
-                    },
+                result["seq"] = _commit_next(
+                    fs, jvm_path, tgt, man_seq, man, [], **meta
                 )
-                return {
-                    "engine": "parquet-manifest",
-                    "rows": None,
-                    "touched_rows": 0,
-                    "touched_buckets": [],
-                    "num_buckets": n_buckets,
-                    "seq": man_seq + 1,
-                }
-            return {
-                "engine": "parquet-manifest",
-                "rows": None,
-                "touched_rows": 0,
-                "touched_buckets": [],
-                "num_buckets": n_buckets,
-                "seq": man_seq,
-            }
-        existing = [
-            f"{tgt}/{prefix}{b}/{GEN_COL}={live[str(b)]}"
-            for b in touched
-            if str(b) in live
-        ]
+            return result
+        existing = {str(b): live[str(b)] for b in touched if str(b) in live}
+        current = None
         if existing:
             # pinned read (r14-opt; was mergeSchema + conform, r13): a
             # metadata-only evolve_schema(add=...) leaves older live
             # generations without the added column — the reader
             # null-fills from the pin, no footer-union job
             current = _pinned_read(
-                spark, existing, man.get("columns"), base_path=tgt
+                spark, _gen_paths(tgt, existing), man.get("columns"),
+                base_path=tgt,
             ).drop(GEN_COL)
-        else:
-            current = None
         merged = _lww_union(current, upd_tagged, keys, order_exprs, row_hash)
         obs = Observation()
         merged = merged.observe(obs, F.count(F.lit(1)).alias("n"))
-        # stale-tmp delete: dynamic partitionOverwriteMode would keep a
-        # crashed run's leftover bucket dirs in tmp otherwise
-        fs.delete(jvm_path(tmp), True)
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-
-        # Stage fresh generations (NON-LIVE until the manifest commit):
-        # rename each produced tmp bucket under its bucket dir as a new
-        # __gen.  These renames need not be atomic — nothing resolves
-        # them until the commit below — which is exactly what makes this
-        # flavor safe where directory renames are copy+delete (S3A).
-        gen = _new_gen()
-        new_live = dict(live)
-        for b in touched:
-            name = f"{prefix}{b}"
-            m_b = jvm_path(tmp + "/" + name)
-            if fs.exists(m_b):
-                fs.mkdirs(jvm_path(tgt + "/" + name))
-                dest = jvm_path(tgt + "/" + name + "/" + f"{GEN_COL}={gen}")
-                if not fs.rename(m_b, dest):
-                    raise IOError(
-                        f"merge_into: could not stage generation "
-                        f"{tgt}/{name}/{GEN_COL}={gen}"
-                    )
-                new_live[str(b)] = gen
-            else:  # bucket emptied by deletes: drop it from the live map
-                new_live.pop(str(b), None)
-        _commit_manifest(
-            fs, jvm_path, tgt, man_seq + 1, gen,
-            {
-                "num_buckets": n_buckets,
-                "keys": list(man["keys"]),
-                "key_types": dict(man["key_types"]),
-                **({"columns": man["columns"]} if "columns" in man else {}),
-                **meta_fields,
-                "buckets": new_live,
-                "seq": man_seq + 1,
-                "gen": gen,
-            },
+        result["seq"] = _commit_next(
+            fs, jvm_path, tgt, man_seq, man, touched, data=merged, **meta
         )
-        fs.delete(jvm_path(tmp), True)  # post-commit cleanup (loss = vacuum fodder)
-        return {
-            "engine": "parquet-manifest",
-            "rows": None,  # no full-table count — that scan is what this path avoids
-            "touched_rows": obs.get["n"],
-            "touched_buckets": touched,
-            "num_buckets": n_buckets,
-            "seq": man_seq + 1,
-        }
+        result["touched_rows"] = obs.get["n"]
+        result["touched_buckets"] = touched
+        return result
     finally:
         _release_checkpoint(upd_tagged)
 
@@ -1474,15 +879,15 @@ def read_merged_table(
     as_of_seq: int | None = None,
     as_of_ms: int | None = None,
 ):
-    """Read the merged state of a merge_into target under ANY portable
-    layout — manifest-commit (resolved through the latest manifest),
-    rename-bucketed, or plain parquet.  Returns None when the target
-    does not exist or holds no data files (the all-deleted / never-
-    written state).  Manifest targets MUST be read through this resolver
-    (or an equivalent manifest-aware reader): a plain root read would
-    see every retained generation at once and double-count rows.  The
-    __bucket partition column is exposed on bucketed layouts (both
-    flavors); __gen is resolved away.
+    """Read the merged state of a merge_into target, resolved through
+    its latest manifest.  Returns None when the target does not exist or
+    no bucket is live (the all-deleted / never-written state); raises on
+    an existing path that is not a manifest-commit target (a plain
+    parquet dir is not a merge target — read it with spark.read).
+    Merge targets MUST be read through this resolver (or an equivalent
+    manifest-aware reader): a plain root read would see every retained
+    generation at once and double-count rows.  The __bucket partition
+    column is exposed; __gen is resolved away.
 
     ``as_of_seq`` (r12): SNAPSHOT read — resolve through the latest
     manifest with ``seq <= as_of_seq`` (Delta ``versionAsOf``; the seq
@@ -1493,9 +898,7 @@ def read_merged_table(
     (raises here) or its generations are gone (spark.read raises
     PATH_NOT_FOUND at scan) — both loud, never a silently-wrong state;
     ``grace_sec`` shields snapshots resolved before the vacuum the same
-    way it shields latest-manifest readers.  Only manifest targets keep
-    history: passing ``as_of_seq`` for the rename/plain layouts raises
-    (their swap protocols destroy superseded state at commit).
+    way it shields latest-manifest readers.
 
     ``as_of_ms`` (Delta ``timestampAsOf`` analog): resolve the latest
     manifest COMMITTED at or before the given epoch-millis instant,
@@ -1506,8 +909,6 @@ def read_merged_table(
     form).  Mutually exclusive with ``as_of_seq``.  Both forms RAISE
     beyond the newest commit (a future seq / instant), matching
     Delta's versionAsOf/timestampAsOf — never a silent clamp."""
-    from pyspark.sql.utils import AnalysisException
-
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     tgt = target_path.rstrip("/")
@@ -1524,8 +925,7 @@ def read_merged_table(
             # instead of list_snapshots' internal message (ADVICE r12)
             raise ValueError(
                 f"read_merged_table: as_of_ms={as_of_ms} requested but {tgt} "
-                "is not a manifest-commit target — only the manifest layout "
-                "retains superseded state (rename/plain swaps destroy it)"
+                "is not a manifest-commit target"
             ) from e
         latest_ms = max(s["committed_ms"] for s in snaps)
         if as_of_ms > latest_ms:
@@ -1545,48 +945,25 @@ def read_merged_table(
             )
         as_of_seq = max(eligible)
     man = _read_manifest(spark, fs, jvm_path, tgt, as_of_seq=as_of_seq)
-    if man is None and as_of_seq is not None:
-        raise ValueError(
-            f"read_merged_table: as_of_seq={as_of_seq} requested but {tgt} "
-            "is not a manifest-commit target — only the manifest layout "
-            "retains superseded state (rename/plain swaps destroy it)"
-        )
-    if man is not None:
-        _, _, m = man
-        if not m["buckets"]:
-            return None
-        paths = [
-            f"{tgt}/{BUCKET_COL}={b}/{GEN_COL}={g}"
-            for b, g in sorted(m["buckets"].items(), key=lambda kv: int(kv[0]))
-        ]
-        # a listed-but-missing generation is corruption (vacuum bug /
-        # tampering): spark.read raises PATH_NOT_FOUND loudly — correct.
-        # pinned read (r14-opt): the manifest's own columns pin is the
-        # schema of its live generations (a PRE-pin table falls back to
-        # the deterministic mergeSchema union inside _pinned_read).
-        return _pinned_read(
-            spark, paths, m.get("columns"), base_path=tgt
-        ).drop(GEN_COL)
-    # rename-bucketed flavor: when the layout pins a schema, read the
-    # deterministic column union and conform (files written before a
-    # metadata-only evolve_schema add lack the added columns) — same
-    # seam as the manifest branch above
-    spec = _read_bucket_spec(spark, fs, jvm_path, tgt)
-    if spec is not None and spec[3] is not None:
-        try:
-            return _conform_to_pin(
-                spark.read.option("mergeSchema", "true").parquet(tgt), spec[3]
+    if man is None:
+        _refuse_foreign(fs, jvm_path, tgt, "read_merged_table")
+        if as_of_seq is not None:
+            raise ValueError(
+                f"read_merged_table: as_of_seq={as_of_seq} requested but "
+                f"{tgt} is not a manifest-commit target"
             )
-        except AnalysisException as e:
-            if _is_empty_read(e):  # spec'd but zero data files
-                return None
-            raise
-    try:
-        return spark.read.parquet(tgt)
-    except AnalysisException as e:
-        if _is_empty_read(e):  # no table at this path
-            return None
-        raise
+        return None
+    _, _, m = man
+    if not m["buckets"]:
+        return None
+    # a listed-but-missing generation is corruption (vacuum bug /
+    # tampering): spark.read raises PATH_NOT_FOUND loudly — correct.
+    # pinned read (r14-opt): the manifest's own columns pin is the
+    # schema of its live generations (a PRE-pin table falls back to
+    # the deterministic mergeSchema union inside _pinned_read).
+    return _pinned_read(
+        spark, _gen_paths(tgt, m["buckets"]), m.get("columns"), base_path=tgt
+    ).drop(GEN_COL)
 
 
 def list_snapshots(spark, target_path: str) -> list[dict]:
@@ -1595,8 +972,7 @@ def list_snapshots(spark, target_path: str) -> list[dict]:
     for ``read_merged_table(..., as_of_seq=seq)`` until a vacuum
     collects it (retention = the vacuum cadence and grace the operator
     chose; the protocol itself never deletes).  Pure filesystem stats,
-    no Spark job.  Raises on a non-manifest target — the other layouts
-    retain no history to list."""
+    no Spark job.  Raises on a path that is not a merge target."""
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     tgt = target_path.rstrip("/")
@@ -1622,9 +998,9 @@ def read_commit_meta(
 ) -> tuple[int, dict | None]:
     """``(seq, app_meta)`` of the latest (or as-of) committed manifest:
     the read side of ``merge_into(commit_meta=...)``.  ``app_meta`` is
-    None when no commit ever carried one.  Raises on a non-manifest
-    target (the swap flavors keep no commit metadata) with the same
-    seq-resolution refusals as :func:`read_merged_table`."""
+    None when no commit ever carried one.  Raises on a path that is not
+    a merge target, with the same seq-resolution refusals as
+    :func:`read_merged_table`."""
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     man = _read_manifest(spark, fs, jvm_path, target_path.rstrip("/"),
@@ -1632,8 +1008,7 @@ def read_commit_meta(
     if man is None:
         raise ValueError(
             f"read_commit_meta: {target_path} is not a manifest-commit "
-            "merge target — only the manifest flavor carries commit "
-            "metadata (merge_into(protocol='manifest', commit_meta=...))"
+            "merge target"
         )
     seq, _, m = man
     return seq, m.get(APP_META_KEY)
@@ -1699,9 +1074,9 @@ def read_changes(
     exactness), so a pre-widen pre-image compares in the TO type.
 
     Reads take no lease (same as every reader); retention is the
-    vacuum grace the operator chose.  Raises on a non-manifest target
-    (the rename/plain swap protocols destroy superseded state) and on
-    a table whose schema already carries ``_change_type``."""
+    vacuum grace the operator chose.  Raises on a path that is not a
+    merge target and on a table whose schema already carries
+    ``_change_type``."""
     from functools import reduce as _reduce
 
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
@@ -1723,9 +1098,7 @@ def read_changes(
     man_a = _resolve(from_seq, "from_seq")
     if man_a is None:
         raise ValueError(
-            f"read_changes: {tgt} is not a manifest-commit target — only "
-            "the manifest layout retains the superseded state a change "
-            "feed diffs (rename/plain swaps destroy it)"
+            f"read_changes: {tgt} is not a manifest-commit target"
         )
     seq_a, _, m_a = man_a
     seq_b, _, m_b = _resolve(to_seq, "to_seq")
@@ -1761,14 +1134,10 @@ def read_changes(
     def _side(sel: dict):
         if not sel:
             return None
-        paths = [
-            f"{tgt}/{BUCKET_COL}={b}/{GEN_COL}={g}"
-            for b, g in sorted(sel.items(), key=lambda kv: int(kv[0]))
-        ]
         df = _conform_to_pin(
             spark.read.option("basePath", tgt)
             .option("mergeSchema", "true")
-            .parquet(*paths)
+            .parquet(*_gen_paths(tgt, sel))
             .drop(GEN_COL),
             pin,
         ).drop(BUCKET_COL)
@@ -1886,86 +1255,67 @@ def lookup_merged_keys(spark, target_path: str, lookup: DataFrame) -> DataFrame:
     (semi-join semantics).  Missing keys are simply absent from the
     result — the caller left-joins if it needs misses marked.
 
-    Layouts: manifest — the touched buckets' LIVE generations are
-    resolved through the latest manifest and nothing else is listed or
-    read; rename-bucketed — a partition filter on ``__bucket`` prunes
-    at planning time; plain — no bucket space exists, full scan + the
-    same semi-join (correct, documented degradation).  The distinct
-    bucket-id collect is bounded by num_buckets, the same bound
-    merge_into's touched-bucket collect lives under.  The probe side
-    is BROADCAST (point lookups are small by use-case); for a probe
-    too big to broadcast, use read_merged_table + a shuffle semi-join
-    instead — at that size bucket pruning stops helping anyway."""
+    Only the looked-up buckets' LIVE generations are resolved through
+    the latest manifest; nothing else is listed or read.  Returns None
+    when the target does not exist; raises on an existing path that is
+    not a manifest-commit target.  The distinct bucket-id collect is
+    bounded by num_buckets, the same bound merge_into's touched-bucket
+    collect lives under.  The probe side is BROADCAST (point lookups
+    are small by use-case); for a probe too big to broadcast, use
+    read_merged_table + a shuffle semi-join instead — at that size
+    bucket pruning stops helping anyway."""
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     tgt = target_path.rstrip("/")
 
     man = _read_manifest(spark, fs, jvm_path, tgt)
-    if man is not None:
-        _, _, m = man
-        keys, key_types = list(m["keys"]), dict(m["key_types"])
-        n_buckets, pin = int(m["num_buckets"]), m.get("columns")
-    else:
-        spec = _read_bucket_spec(spark, fs, jvm_path, tgt)
-        if spec is not None:
-            n_buckets, keys, key_types, pin = spec
-        else:
-            keys = key_types = None  # plain flavor: no bucket space
-
-    if keys is not None:
-        if list(lookup.columns) != list(keys) and sorted(
-            lookup.columns
-        ) != sorted(keys):
-            raise ValueError(
-                f"lookup_merged_keys: the layout at {tgt} keys on "
-                f"{list(keys)}, the lookup frame carries "
-                f"{list(lookup.columns)} — pass exactly the key columns"
-            )
-        lk_types = dict(lookup.dtypes)
-        drift = {
-            k: (key_types.get(k), lk_types.get(k))
-            for k in keys
-            if key_types.get(k) != lk_types.get(k)
-        }
-        if drift:  # xxhash64 is type-sensitive: same value, other bucket
-            raise ValueError(
-                f"lookup_merged_keys: key dtype drift vs the layout at "
-                f"{tgt}: {drift} (layout, lookup) — the same logical key "
-                "would hash into a different bucket space; cast the lookup "
-                "keys back to the layout types"
-            )
-        tagged = lookup.select(
-            *keys, bucket_expr(keys, n_buckets).alias(BUCKET_COL)
-        )
-        # bounded by num_buckets — the merge path's touched-collect bound
-        wanted = sorted(
-            r[0] for r in tagged.select(BUCKET_COL).distinct().collect()
-        )
-
-    if man is not None:
-        live = m["buckets"]
-        paths = [
-            f"{tgt}/{BUCKET_COL}={b}/{GEN_COL}={live[str(b)]}"
-            for b in wanted
-            if str(b) in live
-        ]
-        if not paths:
-            # no looked-up bucket is live: the result is definitionally
-            # empty — type it from the pin when one exists
-            if pin is not None:
-                return spark.range(0).select(
-                    *[F.lit(None).cast(t).alias(c) for c, t in pin.items()]
-                )
-            return None
-        base = _pinned_read(spark, paths, pin, base_path=tgt).drop(GEN_COL)
-    else:
-        base = read_merged_table(spark, tgt)
-        if base is not None and keys is not None:
-            # rename flavor: partition pruning does the bucket skip
-            base = base.where(F.col(BUCKET_COL).isin([int(b) for b in wanted]))
-
-    if base is None:
+    if man is None:
+        _refuse_foreign(fs, jvm_path, tgt, "lookup_merged_keys")
         return None
+    _, _, m = man
+    keys, key_types = list(m["keys"]), dict(m["key_types"])
+    n_buckets, pin = int(m["num_buckets"]), m.get("columns")
+    if list(lookup.columns) != list(keys) and sorted(
+        lookup.columns
+    ) != sorted(keys):
+        raise ValueError(
+            f"lookup_merged_keys: the layout at {tgt} keys on "
+            f"{list(keys)}, the lookup frame carries "
+            f"{list(lookup.columns)} — pass exactly the key columns"
+        )
+    lk_types = dict(lookup.dtypes)
+    drift = {
+        k: (key_types.get(k), lk_types.get(k))
+        for k in keys
+        if key_types.get(k) != lk_types.get(k)
+    }
+    if drift:  # xxhash64 is type-sensitive: same value, other bucket
+        raise ValueError(
+            f"lookup_merged_keys: key dtype drift vs the layout at "
+            f"{tgt}: {drift} (layout, lookup) — the same logical key "
+            "would hash into a different bucket space; cast the lookup "
+            "keys back to the layout types"
+        )
+    tagged = lookup.select(
+        *keys, bucket_expr(keys, n_buckets).alias(BUCKET_COL)
+    )
+    # bounded by num_buckets — the merge path's touched-collect bound
+    wanted = sorted(
+        r[0] for r in tagged.select(BUCKET_COL).distinct().collect()
+    )
+    live = m["buckets"]
+    hit = {str(b): live[str(b)] for b in wanted if str(b) in live}
+    if not hit:
+        # no looked-up bucket is live: the result is definitionally
+        # empty — type it from the pin when one exists
+        if pin is not None:
+            return spark.range(0).select(
+                *[F.lit(None).cast(t).alias(c) for c, t in pin.items()]
+            )
+        return None
+    base = _pinned_read(spark, _gen_paths(tgt, hit), pin, base_path=tgt).drop(
+        GEN_COL
+    )
     probe = lookup.select(
         *[F.col(k).alias(f"__lk{i}") for i, k in enumerate(lookup.columns)]
     ).dropDuplicates()
@@ -2188,8 +1538,8 @@ def vacuum_merged_table(
     concurrent merge's staged-but-uncommitted generations — without the
     lease, grace_sec=0 could delete a generation between its staging
     rename and its manifest commit.  Returns {"gens_deleted",
-    "manifests_deleted"}.  Raises on a non-manifest target (the rename
-    flavor self-cleans at swap time)."""
+    "manifests_deleted"}.  Raises on a path that is not a merge
+    target."""
     import time as _time
 
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
@@ -2266,34 +1616,20 @@ def maintain_merged_table(
     window; when the layout fits and the files are sized, the whole
     call costs a few filesystem listings and no Spark job.  Returns
     ``{"rebucket": ..., "compact": ..., "vacuum": ...}`` (the three
-    steps' own result dicts).  Rename-flavor targets get the rebucket
-    advisor only (their per-swap rewrite self-compacts and self-GCs) —
-    compact/vacuum report ``None`` there."""
-    out: dict = {
+    steps' own result dicts)."""
+    return {
         "rebucket": maybe_rebucket(
             spark, target_path, target_bucket_bytes,
             lease_stale_sec=lease_stale_sec,
         ),
-        "compact": None,
-        "vacuum": None,
-    }
-    # Probe the flavor EXPLICITLY rather than string-matching the
-    # downstream refusal message (r13 ADVICE: a reworded error would
-    # silently flip rename-flavor targets from skip to propagate).
-    # Re-probe AFTER the rebucket step — a maybe_rebucket migration
-    # preserves the flavor, but the probe is one manifest listing and
-    # keeps this dispatch independent of that invariant.
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if _read_manifest(spark, fs, jvm_path, target_path.rstrip("/")) is not None:
-        out["compact"] = compact_merged_table(
+        "compact": compact_merged_table(
             spark, target_path, target_file_bytes,
             lease_stale_sec=lease_stale_sec,
-        )
-        out["vacuum"] = vacuum_merged_table(
+        ),
+        "vacuum": vacuum_merged_table(
             spark, target_path, grace_sec, lease_stale_sec=lease_stale_sec
-        )
-    return out
+        ),
+    }
 
 
 def compact_merged_table(
@@ -2320,12 +1656,7 @@ def compact_merged_table(
 
     One small Spark job per fat bucket (bounded by the touched set —
     this is a maintenance-window op like vacuum/rebucket; run it on the
-    same cadence).  Other flavors: the rename-bucketed layout rewrites
-    each touched bucket wholesale at every swap, so its file count
-    tracks the LAST batch's parallelism (compact by ``rebucket`` to the
-    same count if needed); the plain flavor rewrites the whole table
-    per merge and self-compacts.  Raises on both (nothing
-    generation-shaped to compact).
+    same cadence).  Raises on a path that is not a merge target.
 
     Returns ``{"engine", "seq", "compacted_buckets", "files_before",
     "files_after"}`` (seq unchanged and empty list when every
@@ -2335,28 +1666,28 @@ def compact_merged_table(
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     tgt = target_path.rstrip("/")
-    tmp = tgt + ".__tmp"
+    tmp = _tmp_dir(tgt)
     prefix = BUCKET_COL + "="
+
+    def _data_files(path):
+        return [
+            st.getLen()
+            for st in fs.listStatus(jvm_path(path))
+            if not st.getPath().getName().startswith(("_", "."))
+        ]
+
     with _writer_lease(fs, jvm_path, tgt, lease_stale_sec):
         man = _read_manifest(spark, fs, jvm_path, tgt)
         if man is None:
             raise ValueError(
-                f"compact_merged_table: {tgt} is not a manifest-commit "
-                "target — the rename flavor rewrites touched buckets "
-                "wholesale at every swap (rebucket to the same count to "
-                "compact), the plain flavor self-compacts per merge"
+                f"compact_merged_table: {tgt} is not a manifest-commit target"
             )
         seq, _, m = man
-        live = dict(m["buckets"])
-        todo = []  # (bucket, gen_dir_path, n_target, n_files)
+        todo = []  # (bucket, gen_dir_path, n_target)
         files_before = files_after = 0
-        for b, g in sorted(live.items(), key=lambda kv: int(kv[0])):
+        for b, g in sorted(m["buckets"].items(), key=lambda kv: int(kv[0])):
             gdir = f"{tgt}/{prefix}{b}/{GEN_COL}={g}"
-            sizes = [
-                st.getLen()
-                for st in fs.listStatus(jvm_path(gdir))
-                if not st.getPath().getName().startswith(("_", "."))
-            ]
+            sizes = _data_files(gdir)
             n_target = max(1, math.ceil(sum(sizes) / float(target_file_bytes)))
             files_before += len(sizes)
             if len(sizes) > n_target:
@@ -2369,40 +1700,19 @@ def compact_merged_table(
                 "compacted_buckets": [], "files_before": files_before,
                 "files_after": files_before,
             }
-        gen = _new_gen()
-        new_live = dict(live)
+        fs.delete(jvm_path(tmp), True)
         for b, gdir, n_target in todo:
             # a direct leaf read (no basePath) yields data columns only
             # — no partition-column inference, so the rewrite is
             # byte-faithful to the generation's own schema
-            fs.delete(jvm_path(tmp), True)
+            staged = f"{tmp}/{prefix}{b}"
             spark.read.parquet(gdir).coalesce(n_target).write.mode(
                 "overwrite"
-            ).parquet(tmp)
-            dest = jvm_path(f"{tgt}/{prefix}{b}/{GEN_COL}={gen}")
-            if not fs.rename(jvm_path(tmp), dest):
-                raise IOError(
-                    f"compact_merged_table: could not stage {tgt}/{prefix}{b}"
-                )
-            new_live[str(b)] = gen
-            files_after += sum(
-                1
-                for st in fs.listStatus(dest)
-                if not st.getPath().getName().startswith(("_", "."))
-            )
-        _commit_manifest(
-            fs, jvm_path, tgt, seq + 1, gen,
-            {
-                "num_buckets": int(m["num_buckets"]), "keys": list(m["keys"]),
-                "key_types": dict(m["key_types"]),
-                **({"columns": m["columns"]} if "columns" in m else {}),
-                **_carry_app_meta(m),
-                "buckets": new_live, "seq": seq + 1, "gen": gen,
-            },
-        )
-        fs.delete(jvm_path(tmp), True)
+            ).parquet(staged)
+            files_after += len(_data_files(staged))
+        seq = _commit_next(fs, jvm_path, tgt, seq, m, [b for b, _, _ in todo])
         return {
-            "engine": "parquet-manifest", "seq": seq + 1,
+            "engine": "parquet-manifest", "seq": seq,
             "compacted_buckets": [b for b, _, _ in todo],
             "files_before": files_before, "files_after": files_after,
         }
@@ -2414,21 +1724,19 @@ def rebucket(
     new_num_buckets: int,
     lease_stale_sec: float = LEASE_STALE_SEC,
 ) -> dict:
-    """Re-layout a bucketed merge_into target to a NEW bucket count
-    (r11 verdict #3): a table laid out at N buckets that grows 100x
-    keeps N ever-fatter buckets, eroding the O(touched/N) per-batch
-    advantage — this is the migration path.  One deliberate full-cost
-    pass: read all live state, re-hash every key into the new bucket
-    space, and install it under the target's OWN commit protocol (the
-    whole-dir rename swap for the rename flavor, a fresh all-bucket
-    generation + one manifest commit for the manifest flavor).  Holds
-    the writer lease for the duration, so a mid-flight merge and a
-    rebucket refuse each other.  Merged STATE is unchanged by
-    construction (pinned by tests and the gate query); only the layout
-    and the pinned num_buckets move.  Old manifest generations become
-    vacuum fodder; the rename flavor self-cleans at swap."""
+    """Re-layout a merge_into target to a NEW bucket count (r11 verdict
+    #3): a table laid out at N buckets that grows 100x keeps N
+    ever-fatter buckets, eroding the O(touched/N) per-batch advantage —
+    this is the migration path.  One deliberate full-cost pass: read
+    all live state, re-hash every key into the new bucket space, and
+    commit it as a fresh all-bucket generation in one manifest commit
+    (an empty table moves by a metadata-only commit).  Holds the writer
+    lease for the duration, so a mid-flight merge and a rebucket refuse
+    each other.  Merged STATE is unchanged by construction (pinned by
+    tests and the gate query); only the layout and the pinned
+    num_buckets move.  Old generations become vacuum fodder, and
+    pre-rebucket snapshots stay readable until vacuumed."""
     from pyspark.sql import Observation
-    from pyspark.sql.utils import AnalysisException
 
     if new_num_buckets < 1:
         raise ValueError(
@@ -2437,105 +1745,38 @@ def rebucket(
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     tgt = target_path.rstrip("/")
-    tmp = tgt + ".__tmp"
-    old = tgt + ".__old"
-    prefix = BUCKET_COL + "="
     with _writer_lease(fs, jvm_path, tgt, lease_stale_sec):
         man = _read_manifest(spark, fs, jvm_path, tgt)
-        if man is not None:
-            seq, _, m = man
-            keys, key_types = list(m["keys"]), dict(m["key_types"])
-            gen = _new_gen()
-            if not m["buckets"]:  # empty table: the layout move is pure metadata
-                # carry the schema pin (r14: the read_changes lifecycle
-                # property caught this path DROPPING it — losing the pin
-                # silently disarms _check_schema_pin for every later
-                # batch and un-types empty reads)
-                _commit_manifest(
-                    fs, jvm_path, tgt, seq + 1, gen,
-                    {"num_buckets": int(new_num_buckets), "keys": keys,
-                     "key_types": key_types,
-                     **({"columns": m["columns"]} if "columns" in m else {}),
-                     **_carry_app_meta(m),
-                     "buckets": {}, "seq": seq + 1,
-                     "gen": gen},
-                )
-                return {"engine": "parquet-manifest", "rows": 0,
-                        "num_buckets": new_num_buckets, "seq": seq + 1}
-            paths = [
-                f"{tgt}/{prefix}{b}/{GEN_COL}={g}"
-                for b, g in sorted(m["buckets"].items(), key=lambda kv: int(kv[0]))
-            ]
-            cur = (
-                _pinned_read(spark, paths, m.get("columns"), base_path=tgt)
-                .drop(GEN_COL).drop(BUCKET_COL)
-            )
-            rehashed = cur.withColumn(BUCKET_COL, bucket_expr(keys, new_num_buckets))
-            obs = Observation()
-            rehashed = rehashed.observe(obs, F.count(F.lit(1)).alias("n"))
-            fs.delete(jvm_path(tmp), True)
-            rehashed.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-            new_live = {}
-            for st in fs.listStatus(jvm_path(tmp)):
-                name = st.getPath().getName()
-                if not name.startswith(prefix):
-                    continue
-                fs.mkdirs(jvm_path(tgt + "/" + name))
-                dest = jvm_path(tgt + "/" + name + "/" + f"{GEN_COL}={gen}")
-                if not fs.rename(st.getPath(), dest):
-                    raise IOError(f"rebucket: could not stage {tgt}/{name}")
-                new_live[name.split("=", 1)[1]] = gen
-            _commit_manifest(
-                fs, jvm_path, tgt, seq + 1, gen,
-                {"num_buckets": int(new_num_buckets), "keys": keys,
-                 "key_types": key_types,
-                 **({"columns": m["columns"]} if "columns" in m else {}),
-                 **_carry_app_meta(m),
-                 "buckets": new_live, "seq": seq + 1,
-                 "gen": gen},
-            )
-            fs.delete(jvm_path(tmp), True)
-            return {"engine": "parquet-manifest", "rows": obs.get["n"],
-                    "num_buckets": new_num_buckets, "seq": seq + 1}
-
-        _recover_whole_dir(fs, jvm_path, tgt)
-        spec = _read_bucket_spec(spark, fs, jvm_path, tgt)
-        if spec is None:
+        if man is None:
             raise ValueError(
-                f"rebucket: {tgt} has no bucketed layout — lay one out first "
-                "via merge_into(num_buckets=...)"
+                f"rebucket: {tgt} has no bucketed layout (not a "
+                "manifest-commit target) — lay one out first via merge_into"
             )
-        _, keys, key_types, spec_cols = spec
-        # finish any crashed merge's per-bucket swap first: pending
-        # asides would read as missing buckets in the full scan below
-        _recover_buckets(fs, jvm_path, tgt)
-        try:
-            cur = spark.read.option("mergeSchema", "true").parquet(tgt)
-        except AnalysisException as e:
-            if not _is_empty_read(e):
-                raise
-            # spec'd but zero data files (all keys deleted): the layout
-            # move is pure metadata — rewrite the spec in place
-            _write_bucket_spec(
-                fs, jvm_path, tgt, keys, new_num_buckets, key_types,
-                columns=spec_cols,
+        seq, _, m = man
+        layout = {"num_buckets": int(new_num_buckets)}
+        if not m["buckets"]:  # empty table: the layout move is pure metadata
+            # the commit carries the schema pin (r14: the read_changes
+            # lifecycle property caught an earlier form DROPPING it —
+            # losing the pin silently disarms _check_schema_pin for
+            # every later batch and un-types empty reads)
+            seq = _commit_next(fs, jvm_path, tgt, seq, m, [], **layout)
+            return {"engine": "parquet-manifest", "rows": 0,
+                    "num_buckets": new_num_buckets, "seq": seq}
+        cur = (
+            _pinned_read(
+                spark, _gen_paths(tgt, m["buckets"]), m.get("columns"),
+                base_path=tgt,
             )
-            return {"engine": "parquet-swap", "rows": 0,
-                    "num_buckets": new_num_buckets}
-        rehashed = _conform_to_pin(cur, spec_cols).drop(BUCKET_COL).withColumn(
-            BUCKET_COL, bucket_expr(keys, new_num_buckets)
+            .drop(GEN_COL).drop(BUCKET_COL)
+        )
+        rehashed = cur.withColumn(
+            BUCKET_COL, bucket_expr(list(m["keys"]), new_num_buckets)
         )
         obs = Observation()
         rehashed = rehashed.observe(obs, F.count(F.lit(1)).alias("n"))
-        fs.delete(jvm_path(tmp), True)
-        rehashed.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-        _write_bucket_spec(
-            fs, jvm_path, tmp, keys, new_num_buckets, key_types,
-            columns=spec_cols,
-        )
-        _swap_whole_dir(fs, jvm_path, tgt, tmp, old)
-        return {"engine": "parquet-swap", "rows": obs.get["n"],
-                "num_buckets": new_num_buckets}
+        seq = _commit_next(fs, jvm_path, tgt, seq, m, None, data=rehashed, **layout)
+        return {"engine": "parquet-manifest", "rows": obs.get["n"],
+                "num_buckets": new_num_buckets, "seq": seq}
 
 
 _INT_DIGITS = {"tinyint": 3, "smallint": 5, "int": 10, "bigint": 19}
@@ -2565,15 +1806,6 @@ def _is_widening(src: str, dst: str) -> bool:
         if src in _INT_DIGITS:
             return p2 - s2 >= _INT_DIGITS[src]
     return False
-
-
-def _quote_ident(ident: str) -> str:
-    """Backtick-quote a SQL identifier (or a delta.`path`) with embedded
-    backticks doubled — the one escape Spark SQL honors inside backtick
-    quoting.  Without it a column or path containing a backtick would
-    break out of the ALTER TABLE statement the Delta delegation
-    assembles (r13 ADVICE)."""
-    return "`" + ident.replace("`", "``") + "`"
 
 
 def _validate_evolution(target_path, pinned, keys, add, widen) -> None:
@@ -2657,31 +1889,19 @@ def evolve_schema(
     #1 — the operation the schema-pin drift refusal points at).  Two
     primitives, the only two that are always safe:
 
-    - ``add={col: dtype}`` — append NULL-backed columns.  On the
-      MANIFEST flavor this is METADATA-ONLY: one manifest commit
-      updates the pinned ``columns``; no data file is touched, and
-      every reader/merger conforms older generations to the pin
-      (missing column -> typed NULL) via ``_conform_to_pin``.  On the
-      RENAME-BUCKETED flavor it is a single in-place ``_bucket_spec``
-      rewrite (one small file; a crash mid-write leaves a CORRUPT spec
-      that every later call refuses loudly — weaker than the manifest
-      commit but never silent).  On the PLAIN flavor there is no pin
-      file, so the add is a full rewrite under the whole-dir swap.
+    - ``add={col: dtype}`` — append NULL-backed columns.
+      METADATA-ONLY: one manifest commit updates the pinned
+      ``columns``; no data file is touched, and every reader/merger
+      conforms older generations to the pin (missing column -> typed
+      NULL).
     - ``widen={col: dtype}`` — lossless type widening (see
-      :func:`_is_widening`; on the BUCKETED flavors key columns are
-      refused — xxhash64 is type-sensitive and a key-type change would
-      re-route every bucket.  The PLAIN flavor stores no key list and
-      has no hash routing, so key widening is permitted there: the
-      merge keys are whatever the caller passes per-merge, and a
-      widened key still equi-joins losslessly.  This asymmetry is
-      deliberate — documented here rather than refused, because the
-      plain layout cannot know which columns are keys).
-      Always a full-cost rewrite pass under the layout's own commit
-      protocol (rebucket-style): fresh all-bucket generation + one
-      manifest commit, or tmp-write + whole-dir swap.  A crash at any
-      point leaves the table readable as exactly pre- or post-evolve
-      (manifest), or recoverable via the standard aside protocol
-      (rename/plain).
+      :func:`_is_widening`).  Key columns are refused — xxhash64 is
+      type-sensitive and a key-type change would re-route every
+      bucket.  A full-cost rewrite pass (rebucket-style): a fresh
+      all-bucket generation + one manifest commit.
+
+    Either way the table reads as exactly pre- or post-evolve at every
+    crash point (the commit is the manifest rename).
 
     Narrowing, renames, and drops are refused — they destroy data;
     rebuild into a new target if that is really the intent.
@@ -2693,21 +1913,17 @@ def evolve_schema(
     NULLs over stored data.
 
     Holds the writer lease for the duration (a concurrent merge and an
-    evolution refuse each other).  Delta targets: ``add`` delegates to
-    ``ALTER TABLE ... ADD COLUMNS`` (same NULL-backfill semantics);
-    ``widen`` is refused with a pointer at Delta's own type-widening
-    table feature, which this sandbox cannot exercise.
+    evolution refuse each other).
 
-    Returns ``{"engine", "added", "widened", "rewritten", ...}`` with
-    ``seq`` on manifest targets and ``rows`` when a rewrite ran.
+    Returns ``{"engine", "added", "widened", "rewritten", "seq"}``,
+    plus ``rows`` when a rewrite ran.
 
     Reference semantics anchor: the reference validates ENVELOPE
     shapes at runtime (``src/lens/broker.clj:28-51``) and delegates
     entity-schema change to its store — exactly the operation this op
-    supplies for the portable store flavors.
+    supplies for the portable store.
     """
     from pyspark.sql import Observation
-    from pyspark.sql.utils import AnalysisException
 
     if rename:
         # refused WITH the migration recipe (r13 NOTES candidate #4):
@@ -2755,205 +1971,61 @@ def evolve_schema(
                     "spellings, e.g. 'string', 'bigint', 'decimal(12,2)'"
                 ) from e
 
-    try:
-        from delta.tables import DeltaTable  # type: ignore
-
-        is_delta = DeltaTable.isDeltaTable(spark, target_path)
-    except Exception:
-        is_delta = False
-    if is_delta:
-        if widen:
-            raise ValueError(
-                "evolve_schema: type widening on a Delta target is Delta's "
-                "own typeWidening table feature (ALTER TABLE ... ALTER "
-                "COLUMN ... TYPE) — use it directly; this op only manages "
-                "the portable layouts' pins"
-            )
-        # Same refusal set as the portable flavors BEFORE delegating
-        # (r13 ADVICE): Delta refuses duplicate adds itself, but the
-        # reserved merge-protocol names (__bucket, __del, ...) would
-        # pass straight through and poison every later merge_into.
-        _validate_evolution(
-            target_path,
-            dict(spark.read.format("delta").load(target_path).dtypes),
-            None, add, {},
-        )
-        cols = ", ".join(f"{_quote_ident(c)} {t}" for c, t in add.items())
-        spark.sql(
-            f"ALTER TABLE delta.{_quote_ident(target_path)} "
-            f"ADD COLUMNS ({cols})"
-        )
-        return {
-            "engine": "delta", "added": sorted(add), "widened": {},
-            "rewritten": False,
-        }
-
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     tgt = target_path.rstrip("/")
-    tmp = tgt + ".__tmp"
-    old = tgt + ".__old"
-    prefix = BUCKET_COL + "="
     with _writer_lease(fs, jvm_path, tgt, lease_stale_sec):
         man = _read_manifest(spark, fs, jvm_path, tgt)
-        if man is not None:
-            man_seq, _, m = man
-            keys = list(m["keys"])
-            n_buckets = int(m["num_buckets"])
-            live = dict(m["buckets"])
-            pinned = m.get("columns")
-            if pinned is None:
-                # pre-pin layout: derive the pin from the live union
-                # schema so evolution also UPGRADES the table to pinned
-                if not live:
-                    raise ValueError(
-                        f"evolve_schema: {tgt} predates the schema pin and "
-                        "is empty — nothing to derive a schema from; "
-                        "rebuild the table"
-                    )
-                paths = [
-                    f"{tgt}/{prefix}{b}/{GEN_COL}={g}" for b, g in live.items()
-                ]
-                derived = (
-                    spark.read.option("basePath", tgt)
-                    .option("mergeSchema", "true").parquet(*paths)
-                    .drop(GEN_COL).drop(BUCKET_COL)
-                )
-                pinned = dict(derived.dtypes)
-            _validate_evolution(tgt, pinned, keys, add, widen)
-            new_pin = _evolved_pin(pinned, add, widen)
-            gen = _new_gen()
-            base = {
-                "num_buckets": n_buckets, "keys": keys,
-                "key_types": dict(m["key_types"]), "columns": new_pin,
-                **_carry_app_meta(m),
-            }
-            if not widen or not live:
-                # metadata-only: ONE atomic manifest commit (live
-                # generations untouched; readers conform to the pin)
-                _commit_manifest(
-                    fs, jvm_path, tgt, man_seq + 1, gen,
-                    {**base, "buckets": live, "seq": man_seq + 1, "gen": gen},
-                )
-                return {
-                    "engine": "parquet-manifest", "added": sorted(add),
-                    "widened": dict(widen), "rewritten": False,
-                    "seq": man_seq + 1,
-                }
-            # widen: full rewrite — fresh generation for every live
-            # bucket, then one commit (rebucket's protocol, same N)
-            paths = [
-                f"{tgt}/{prefix}{b}/{GEN_COL}={g}"
-                for b, g in sorted(live.items(), key=lambda kv: int(kv[0]))
-            ]
-            cur = _pinned_read(spark, paths, pinned, base_path=tgt).drop(
-                GEN_COL
-            )
-            out = _evolve_transform(cur, pinned, add, widen)
-            obs = Observation()
-            out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-            fs.delete(jvm_path(tmp), True)
-            out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-            new_live = {}
-            for st in fs.listStatus(jvm_path(tmp)):
-                name = st.getPath().getName()
-                if not name.startswith(prefix):
-                    continue
-                fs.mkdirs(jvm_path(tgt + "/" + name))
-                dest = jvm_path(tgt + "/" + name + "/" + f"{GEN_COL}={gen}")
-                if not fs.rename(st.getPath(), dest):
-                    raise IOError(f"evolve_schema: could not stage {tgt}/{name}")
-                new_live[name.split("=", 1)[1]] = gen
-            _commit_manifest(
-                fs, jvm_path, tgt, man_seq + 1, gen,
-                {**base, "buckets": new_live, "seq": man_seq + 1, "gen": gen},
-            )
-            fs.delete(jvm_path(tmp), True)
-            return {
-                "engine": "parquet-manifest", "added": sorted(add),
-                "widened": dict(widen), "rewritten": True,
-                "rows": obs.get["n"], "seq": man_seq + 1,
-            }
-
-        _recover_whole_dir(fs, jvm_path, tgt)
-        spec = _read_bucket_spec(spark, fs, jvm_path, tgt)
-        if spec is not None:
-            spec_n, keys, key_types, spec_cols = spec
-            _recover_buckets(fs, jvm_path, tgt)
-            pinned = spec_cols
-            cur = None
-            try:
-                cur = spark.read.option("mergeSchema", "true").parquet(tgt)
-            except AnalysisException as e:
-                if not _is_empty_read(e):
-                    raise  # spec'd but zero data files is the only pass
-            if pinned is None:
-                if cur is None:
-                    raise ValueError(
-                        f"evolve_schema: {tgt} predates the schema pin and "
-                        "is empty — nothing to derive a schema from; "
-                        "rebuild the table"
-                    )
-                pinned = {
-                    c: t for c, t in cur.dtypes if c != BUCKET_COL
-                }
-            _validate_evolution(tgt, pinned, keys, add, widen)
-            new_pin = _evolved_pin(pinned, add, widen)
-            if not widen or cur is None:
-                # metadata-only add: in-place spec rewrite — one small
-                # file; a crash mid-write leaves a corrupt spec every
-                # later call refuses LOUDLY (weaker than the manifest
-                # flavor's atomic commit, never silent)
-                _write_bucket_spec(
-                    fs, jvm_path, tgt, keys, spec_n, key_types,
-                    columns=new_pin,
-                )
-                return {
-                    "engine": "parquet-swap", "added": sorted(add),
-                    "widened": dict(widen), "rewritten": False,
-                }
-            out = _evolve_transform(_conform_to_pin(cur, pinned), pinned, add, widen)
-            obs = Observation()
-            out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-            fs.delete(jvm_path(tmp), True)
-            out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-            _write_bucket_spec(
-                fs, jvm_path, tmp, keys, spec_n, key_types, columns=new_pin
-            )
-            _swap_whole_dir(fs, jvm_path, tgt, tmp, old)
-            return {
-                "engine": "parquet-swap", "added": sorted(add),
-                "widened": dict(widen), "rewritten": True,
-                "rows": obs.get["n"],
-            }
-
-        # plain flavor: the live table schema is the pin; both add and
-        # widen are full rewrites under the whole-dir swap (parquet
-        # without a pin file cannot express a metadata-only change
-        # deterministically — mixed-schema files would read
-        # listing-order-dependently)
-        try:
-            cur = spark.read.parquet(tgt)
-        except AnalysisException as e:
-            if not _is_empty_read(e):
-                raise
+        if man is None:
+            _refuse_foreign(fs, jvm_path, tgt, "evolve_schema")
             raise ValueError(
                 f"evolve_schema: no table at {tgt} — the first merge "
                 "materializes the schema; evolution applies to existing "
                 "targets"
             )
-        pinned = dict(cur.dtypes)
-        _validate_evolution(tgt, pinned, None, add, widen)
-        out = _evolve_transform(cur, pinned, add, widen)
-        obs = Observation()
-        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-        fs.delete(jvm_path(tmp), True)
-        out.write.mode("overwrite").parquet(tmp)
-        _swap_whole_dir(fs, jvm_path, tgt, tmp, old)
-        return {
-            "engine": "parquet-swap", "added": sorted(add),
-            "widened": dict(widen), "rewritten": True, "rows": obs.get["n"],
+        man_seq, _, m = man
+        live = m["buckets"]
+        pinned = m.get("columns")
+        if pinned is None:
+            # pre-pin layout: derive the pin from the live union
+            # schema so evolution also UPGRADES the table to pinned
+            if not live:
+                raise ValueError(
+                    f"evolve_schema: {tgt} predates the schema pin and "
+                    "is empty — nothing to derive a schema from; "
+                    "rebuild the table"
+                )
+            derived = (
+                spark.read.option("basePath", tgt)
+                .option("mergeSchema", "true").parquet(*_gen_paths(tgt, live))
+                .drop(GEN_COL).drop(BUCKET_COL)
+            )
+            pinned = dict(derived.dtypes)
+        _validate_evolution(tgt, pinned, list(m["keys"]), add, widen)
+        new_pin = {"columns": _evolved_pin(pinned, add, widen)}
+        out = {
+            "engine": "parquet-manifest", "added": sorted(add),
+            "widened": dict(widen), "rewritten": False,
         }
+        if not widen or not live:
+            # metadata-only: ONE atomic manifest commit (live
+            # generations untouched; readers conform to the pin)
+            out["seq"] = _commit_next(fs, jvm_path, tgt, man_seq, m, [], **new_pin)
+            return out
+        # widen: full rewrite — fresh generation for every live
+        # bucket, then one commit (rebucket's protocol, same N)
+        cur = _pinned_read(
+            spark, _gen_paths(tgt, live), pinned, base_path=tgt
+        ).drop(GEN_COL)
+        obs = Observation()
+        data = _evolve_transform(cur, pinned, add, widen).observe(
+            obs, F.count(F.lit(1)).alias("n")
+        )
+        out["seq"] = _commit_next(
+            fs, jvm_path, tgt, man_seq, m, None, data=data, **new_pin
+        )
+        out.update(rewritten=True, rows=obs.get["n"])
+        return out
 
 
 def suggest_num_buckets(
@@ -2962,17 +2034,18 @@ def suggest_num_buckets(
     target_bucket_bytes: int = 256 * 1024 * 1024,
 ) -> dict:
     """Rebucket advisor (r12, completing the migration story): report
-    whether a bucketed target's layout still fits its size.  The
+    whether a merge target's layout still fits its size.  The
     O(touched/N) per-batch advantage decays as buckets fatten — a table
     laid out at N=16 that grew 100x rewrites ~6% of a now-huge table
     per touched bucket.  Pure filesystem stats (no Spark job): sums the
-    LIVE data bytes (manifest-resolved generations, or the bucket dirs
-    for the rename flavor), divides by ``target_bucket_bytes`` (default
+    LIVE data bytes (the manifest-resolved generations — superseded
+    ones do not count), divides by ``target_bucket_bytes`` (default
     256 MB — a few parquet row groups; size to taste), rounds to the
     nearest power of two, and recommends a rebucket only past 2x
     hysteresis in either direction (re-layouts are full-cost; don't
     thrash).  Returns {"num_buckets", "live_bytes", "suggested",
-    "rebucket_recommended"}; raises on an unbucketed target.
+    "rebucket_recommended"}; raises on a path that is not a merge
+    target.
 
     Scheduling the migration stays with the caller (run
     :func:`rebucket` in a maintenance window — it takes the writer
@@ -2981,7 +2054,6 @@ def suggest_num_buckets(
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     tgt = target_path.rstrip("/")
-    prefix = BUCKET_COL + "="
 
     def _du(path) -> int:
         total = 0
@@ -2995,26 +2067,18 @@ def suggest_num_buckets(
         return total
 
     man = _read_manifest(spark, fs, jvm_path, tgt)
-    if man is not None:
-        _, _, m = man
-        cur_n = int(m["num_buckets"])
-        live = sum(
-            _du(jvm_path(f"{tgt}/{prefix}{b}/{GEN_COL}={g}"))
-            for b, g in m["buckets"].items()
-            if fs.exists(jvm_path(f"{tgt}/{prefix}{b}/{GEN_COL}={g}"))
+    if man is None:
+        raise ValueError(
+            f"suggest_num_buckets: {tgt} has no bucketed layout (not a "
+            "manifest-commit target)"
         )
-    else:
-        spec = _read_bucket_spec(spark, fs, jvm_path, tgt)
-        if spec is None:
-            raise ValueError(
-                f"suggest_num_buckets: {tgt} has no bucketed layout"
-            )
-        cur_n = spec[0]
-        live = sum(
-            _du(st.getPath())
-            for st in fs.listStatus(jvm_path(tgt))
-            if st.getPath().getName().startswith(prefix)
-        )
+    _, _, m = man
+    cur_n = int(m["num_buckets"])
+    live = sum(
+        _du(jvm_path(p))
+        for p in _gen_paths(tgt, m["buckets"])
+        if fs.exists(jvm_path(p))
+    )
     raw = max(1.0, live / float(target_bucket_bytes))
     suggested = 1 << max(0, round(__import__("math").log2(raw)))
     return {

@@ -19,8 +19,9 @@ import os
 from pyspark.sql import SparkSession
 
 
-# apps whose one-time warm-up already ran (get_spark is re-entrant:
-# getOrCreate returns the live session, the warm-up must not re-run)
+# apps whose one-time warm-up already ran or failed (get_spark is
+# re-entrant: getOrCreate returns the live session, the warm-up must not
+# re-run)
 _WARMED: set[str] = set()
 
 
@@ -53,8 +54,11 @@ def _warm_session(spark: SparkSession) -> None:
         ).write.format("noop").mode("overwrite").save()
     except Exception:
         # warm-up must never break session construction (e.g. a
-        # pandas-less environment); the costs just land where they did
-        _WARMED.discard(app_id)
+        # pandas-less environment); the costs just land where they did.
+        # The failure is terminal for this application: app_id stays in
+        # _WARMED, so later get_spark calls do not pay the doomed
+        # attempt (a failed job) again.
+        pass
 
 
 def get_spark(app_name: str = "lens-sds-batch-spark", cpus: int | None = None) -> SparkSession:

@@ -62,9 +62,14 @@ def ensure_engine_confs(spark: SparkSession) -> None:
 # deployment pattern.  This is metadata/plan reuse only: the returned
 # DataFrame is an immutable lazy plan over the (read-only) testdata —
 # no rows are cached, every action still scans parquet.  Keyed by
-# applicationId so a restarted session never sees a stale relation;
-# entries of dead sessions are pruned on miss.
-_RELATION_MEMO: dict[tuple[str, str], DataFrame] = {}
+# (applicationId, session identity, path): the applicationId so a
+# restarted context never sees a stale relation (entries of dead
+# applications are pruned on miss), the session identity because
+# SparkSession.newSession() shares the applicationId — keyed by the app
+# alone, two sibling sessions would evict each other's entry on every
+# alternating call.  A dropped sibling's entries stay until the
+# application ends (one lazy plan per table).
+_RELATION_MEMO: dict[tuple[str, int, str], DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -91,18 +96,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         return spark.read.parquet(f"{sf_dir}/{name}.parquet")
     app_id = spark.sparkContext.applicationId
-    key = (app_id, f"{sf_dir}/{name}.parquet")
+    key = (app_id, id(spark), f"{sf_dir}/{name}.parquet")
     df = _RELATION_MEMO.get(key)
-    # sibling-session guard (ADVICE r14): SparkSession.newSession()
-    # shares the applicationId — a relation memoized under one session
-    # must not leak into another (temp views would land in the wrong
-    # catalog), so verify the cached frame's owning session on hit.
+    # owning-session check on hit (ADVICE r14): a relation memoized
+    # under one session must never be served to another (temp views
+    # would land in the wrong catalog).  The identity key already
+    # separates live sessions (each entry keeps its session alive, so
+    # its id() cannot be reused); the check states that invariant.
     if df is None or df.sparkSession is not spark:
         for k in [k for k in list(_RELATION_MEMO) if k[0] != app_id]:
             # pop, not del: two driver threads can race the prune after
             # a context restart (ADVICE r14)
             _RELATION_MEMO.pop(k, None)
-        df = spark.read.parquet(key[1])
+        df = spark.read.parquet(key[2])
         _RELATION_MEMO[key] = df
     return df
 

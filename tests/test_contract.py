@@ -82,7 +82,7 @@ def test_load_table_memoizes_source_tables_only(spark, tmp_path):
     a = load_table_mod.load_table(spark, str(tmp_path), "scratch")
     b = load_table_mod.load_table(spark, str(tmp_path), "scratch")
     assert a is not b
-    assert all(k[1] != str(p) for k in load_table_mod._RELATION_MEMO)
+    assert all(k[-1] != str(p) for k in load_table_mod._RELATION_MEMO)
     # and a rewrite of the path is visible to the next load (the exact
     # stale-listing hazard the contract closes)
     spark.range(5).write.mode("overwrite").parquet(str(p))
@@ -91,8 +91,44 @@ def test_load_table_memoizes_source_tables_only(spark, tmp_path):
     load_table_mod.load_table(spark, SF_SMOKE, "orders")
     table_paths = {f"{t}.parquet" for t in load_table_mod.TABLES}
     assert load_table_mod._RELATION_MEMO  # orders is in it
-    for _, path in load_table_mod._RELATION_MEMO:
+    for *_, path in load_table_mod._RELATION_MEMO:
         assert path.rsplit("/", 1)[-1] in table_paths, path
+    # 3) sibling sessions (newSession shares the applicationId) keep
+    #    their own entries: alternating loads are memo hits for both,
+    #    and each is served a relation of its own session
+    sib = spark.newSession()
+    o1 = load_table_mod.load_table(spark, SF_SMOKE, "orders")
+    s1 = load_table_mod.load_table(sib, SF_SMOKE, "orders")
+    o2 = load_table_mod.load_table(spark, SF_SMOKE, "orders")
+    s2 = load_table_mod.load_table(sib, SF_SMOKE, "orders")
+    assert o1 is o2 and s1 is s2 and o1 is not s1
+    assert o1.sparkSession is spark and s1.sparkSession is sib
+
+
+def test_failed_warm_up_is_not_retried(spark, monkeypatch):
+    """A warm-up that fails (e.g. no pandas for the Python-worker
+    preform) is terminal for the application: the next get_spark
+    returns the live session without paying the doomed attempt again."""
+    from pyspark.sql import SparkSession
+
+    from lens_sds_batch_spark import session as session_mod
+
+    attempts = []
+    real_sql = SparkSession.sql
+
+    def failing_warm_up(self, query, *a, **kw):
+        if "Warm" in query:  # the warm-up's ICU probe
+            attempts.append(query)
+            raise RuntimeError("injected warm-up failure")
+        return real_sql(self, query, *a, **kw)
+
+    monkeypatch.setattr(session_mod, "_WARMED", set())  # as if never warmed
+    monkeypatch.setattr(SparkSession, "sql", failing_warm_up)
+    first = session_mod.get_spark("lens-sds-batch-spark-tests", cpus=8)
+    second = session_mod.get_spark("lens-sds-batch-spark-tests", cpus=8)
+    assert first is spark and second is spark
+    assert len(attempts) == 1
+    assert spark.sparkContext.applicationId in session_mod._WARMED
 
 
 def test_events_ts_physical_type(spark):

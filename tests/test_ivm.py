@@ -723,17 +723,22 @@ def test_target_and_drift_refusals(spark, tmp_path):
 
 
 def test_commit_meta_refused_off_the_manifest_flavor(spark, tmp_path):
-    # rename-bucketed target
+    # a plain parquet dir is not a merge target: refused, untouched
     t1 = str(tmp_path / "t1")
-    _merge(spark, t1, [("k1", "a", 1, 1, False)], num_buckets=2)
-    with pytest.raises(ValueError, match="apply only to"):
-        _merge(spark, t1, [("k2", "a", 1, 2, False)],
-               commit_meta={"x": 1})
-    # plain target
+    spark.createDataFrame([("k1", "a", 1, 1, False)], SCHEMA).write.parquet(t1)
+    for kw in ({"commit_meta": {"x": 1}}, {"expect_seq": 0}):
+        with pytest.raises(ValueError, match="not a manifest-commit target"):
+            _merge(spark, t1, [("k2", "a", 1, 2, False)], **kw)
+    assert spark.read.parquet(t1).count() == 1
+    # a target laid out without protocol= is the same manifest table:
+    # both knobs apply there
     t2 = str(tmp_path / "t2")
-    _merge(spark, t2, [("k1", "a", 1, 1, False)])
-    with pytest.raises(ValueError, match="apply only to"):
-        _merge(spark, t2, [("k2", "a", 1, 2, False)], expect_seq=0)
+    _merge(spark, t2, [("k1", "a", 1, 1, False)], num_buckets=2)
+    r = _merge(spark, t2, [("k2", "a", 1, 2, False)], commit_meta={"x": 1},
+               expect_seq=1)
+    assert read_commit_meta(spark, t2) == (r["seq"], {"x": 1})
+    with pytest.raises(ValueError, match="expect_seq=1 but"):
+        _merge(spark, t2, [("k3", "a", 1, 3, False)], expect_seq=1)
     # non-JSON meta
     t3 = str(tmp_path / "t3")
     with pytest.raises(ValueError, match="JSON-serializable"):

@@ -325,3 +325,22 @@ def test_null_guard_does_not_change_nullability_or_goldens(spark):
     row = df.collect()[0]
     assert row["u3"] == uuid3_str_py(NIL_UUID, ["S1"])
     assert row["u5"] == uuid5_py(NIL_UUID, ["S1"])
+
+
+@pytest.mark.parametrize(
+    "bad_ns",
+    [
+        "0000000g-0000-0000-0000-000000000000",  # non-hex digit
+        "000-0000-0000-0000-000000000000",  # odd hex length
+    ],
+)
+def test_uuid5_malformed_literal_namespace_refused_at_call_site(spark, bad_ns):
+    """A malformed literal namespace on the composed-Column path is
+    refused where uuid5_col is called, naming the function and the bad
+    value — not as a bare bytes.fromhex error."""
+    part = F.concat(F.lit("x"), F.lit(""))  # non-bare part: composed path
+    with pytest.raises(ValueError, match="uuid5_col: literal namespace") as ei:
+        uuid5_col(bad_ns, [part])
+    assert repr(bad_ns) in str(ei.value)
+    # a well-formed namespace on the same path still builds
+    uuid5_col(NIL_UUID, [part])

@@ -4,9 +4,8 @@ bucketed store's cost model: writes O(touched buckets), change feed
 O(changed buckets), point reads O(looked-up buckets).
 
 Correctness oracle: lookup == read_merged_table semi-joined on the
-same keys, for every layout.  The scale claim — only the looked-up
-buckets' live generations are read on the manifest flavor — is pinned
-through inputFiles().
+same keys.  The scale claim — only the looked-up buckets' live
+generations are read — is pinned through inputFiles().
 """
 
 from __future__ import annotations
@@ -54,10 +53,8 @@ CORPUS = [(f"k{i}", 1, f"v{i}", False) for i in range(40)] + [
     "kw",
     [
         {"num_buckets": 8, "protocol": "manifest"},
-        {"num_buckets": 8},
-        {},
     ],
-    ids=["manifest", "rename", "plain"],
+    ids=["manifest"],
 )
 def test_lookup_matches_semi_join_all_layouts(spark, tmp_path, kw):
     tgt = str(tmp_path / "t")

@@ -1,12 +1,10 @@
-"""Round-12 merge hardening: writer lease (r11 verdict #2), the
-emptied-bucket marker (ADVICE r11 — deletes must not be resurrected by
-crash recovery), the manifest-commit flavor (r11 verdict #1 — kill-point
-tested: the table reads as exactly pre- or post-merge at every write
-step), stale-generation vacuum, and the rebucket migration op (r11
-verdict #3).
+"""Merge-store hardening: writer lease (r11 verdict #2), the
+manifest-commit protocol (r11 verdict #1 — kill-point tested: the table
+reads as exactly pre- or post-merge at every write step; it is the only
+merge_into store), stale-generation vacuum, and the rebucket migration
+op (r11 verdict #3).
 
-Crash states are constructed by hand with direct filesystem moves, the
-same discipline as test_reference_scenarios' rename-protocol crash pins.
+Crash states are constructed by hand with direct filesystem moves.
 Reference semantics anchor: import_clinical_data.clj:239-263 (the store
 the commands mutate must never half-apply a batch).
 """
@@ -90,7 +88,7 @@ def test_lease_refuses_second_writer_and_stale_takeover(spark, tmp_path):
     # a DEAD holder (mtime past the stale threshold): takeover succeeds
     os.utime(lease, (time.time() - 7200, time.time() - 7200))
     res = _merge(spark, target, [("k2", 1, "b", False)], lease_stale_sec=3600)
-    assert res["engine"] == "parquet-bucketed"
+    assert res["engine"] == "parquet-manifest"
     assert not os.path.exists(lease)
     assert _state(spark, target) == {"k1": (1, "a"), "k2": (1, "b")}
 
@@ -121,65 +119,20 @@ def test_rebucket_refused_while_lease_held(spark, tmp_path):
     os.remove(target + ".__lease")
 
 
-# ---------------------------------------------------------------------------
-# emptied-bucket marker (ADVICE r11: the delete-undo recovery hole)
-# ---------------------------------------------------------------------------
-
-
-def test_emptied_marker_blocks_delete_resurrection(spark, tmp_path):
-    """Crash state: a bucket's aside was moved out because the batch
-    DELETED every key in it (no tmp dir replaces it), and the process
-    died before the final old-dir cleanup.  Without the marker, the
-    recovery pass sees 'aside present, target slot empty' and restores
-    the aside — silently undoing the deletes.  With the marker it must
-    drop the aside instead."""
-    target = str(tmp_path / "t")
-    rows = [(f"k{i}", 1, "v", False) for i in range(40)]
-    _merge(spark, target, rows, num_buckets=4)
-    bucket = next(d for d in os.listdir(target) if d.startswith(BUCKET_COL + "="))
-    doomed = {
-        r["k"] for r in spark.read.parquet(os.path.join(target, bucket)).collect()
-    }
-    assert doomed  # the bucket holds some keys
-
-    # hand-build the post-aside-move crash state, marker included —
-    # exactly what _bucketed_merge leaves between the aside-move and
-    # the (absent) tmp rename for an emptied bucket
-    old = target + ".__old"
-    os.makedirs(old)
-    open(os.path.join(old, bucket + ".__emptied"), "w").close()
-    shutil.move(os.path.join(target, bucket), os.path.join(old, bucket))
-
-    _merge(spark, target, [("zz_new", 1, "n", False)])  # recovery runs first
-    assert not os.path.exists(old)
-    survivors = set(_state(spark, target))
-    assert doomed.isdisjoint(survivors)  # deleted keys stay deleted
-    assert "zz_new" in survivors
-
-    # counter-case: the SAME state WITHOUT the marker is a mid-swap
-    # crash and must restore (pins that the marker is load-bearing)
-    bucket2 = next(
-        d for d in os.listdir(target) if d.startswith(BUCKET_COL + "=")
-    )
-    saved = {
-        r["k"] for r in spark.read.parquet(os.path.join(target, bucket2)).collect()
-    }
-    os.makedirs(old)
-    shutil.move(os.path.join(target, bucket2), os.path.join(old, bucket2))
-    _merge(spark, target, [("zz_new2", 1, "n", False)])
-    assert saved <= set(_state(spark, target))
-
-
 def test_end_to_end_delete_to_empty_bucket(spark, tmp_path):
-    """The non-crash path of the same scenario: deleting every key of a
-    bucket removes its directory and the rows stay gone across further
-    merges (the marker never leaks into the target dir)."""
+    """Deleting every key of a bucket drops it from the live map, the
+    rows stay gone across further merges, and nothing but bucket dirs
+    and the manifest dir ever lands in the target dir."""
     target = str(tmp_path / "t")
     rows = [(f"k{i}", 1, "v", False) for i in range(12)]
     _merge(spark, target, rows, num_buckets=1)  # one bucket holds all keys
     _merge(spark, target, [(f"k{i}", 2, "v", True) for i in range(12)])
     assert _state(spark, target) == {}
-    assert not any(n.endswith(".__emptied") for n in os.listdir(target))
+    assert read_merged_table(spark, target) is None
+    assert all(
+        n == MANIFEST_DIR or n.startswith(BUCKET_COL + "=")
+        for n in os.listdir(target)
+    )
     _merge(spark, target, [("k1", 3, "back", False)])
     assert _state(spark, target) == {"k1": (3, "back")}
 
@@ -212,23 +165,21 @@ def test_manifest_merge_end_to_end(spark, tmp_path):
 
 
 def test_manifest_guards(spark, tmp_path):
+    # no num_buckets on a fresh target: one bucket
     t1 = str(tmp_path / "no_n")
-    with pytest.raises(ValueError, match="requires num_buckets"):
-        _merge(spark, t1, [("k1", 1, "a", False)], protocol="manifest")
+    r1 = _merge(spark, t1, [("k1", 1, "a", False)], protocol="manifest")
+    assert (r1["engine"], r1["num_buckets"], r1["seq"]) == ("parquet-manifest", 1, 1)
+    assert _gens(t1).keys() == {f"{BUCKET_COL}=0"}
 
     t2 = str(tmp_path / "existing_plain")
     _df(spark, [("k1", 1, "a", False)]).write.parquet(t2)
-    with pytest.raises(ValueError, match="fresh target"):
-        _merge(spark, t2, [("k2", 1, "b", False)], protocol="manifest", num_buckets=4)
-
-    t3 = str(tmp_path / "rename_flavor")
-    _merge(spark, t3, [("k1", 1, "a", False)], num_buckets=4)
-    with pytest.raises(ValueError, match="rename-bucketed"):
-        _merge(spark, t3, [("k2", 1, "b", False)], protocol="manifest", num_buckets=4)
+    for kw in ({"protocol": "manifest", "num_buckets": 4}, {}):
+        with pytest.raises(ValueError, match="fresh target"):
+            _merge(spark, t2, [("k2", 1, "b", False)], **kw)
 
     t4 = str(tmp_path / "manifest_flavor")
     _merge(spark, t4, [("k1", 1, "a", False)], num_buckets=4, protocol="manifest")
-    with pytest.raises(ValueError, match="manifest-commit"):
+    with pytest.raises(ValueError, match="protocol='rename' was removed"):
         _merge(spark, t4, [("k2", 1, "b", False)], protocol="rename")
     with pytest.raises(ValueError, match="has 4 buckets"):
         _merge(spark, t4, [("k2", 1, "b", False)], num_buckets=8)
@@ -316,8 +267,8 @@ def test_manifest_vacuum_keeps_live_generations(spark, tmp_path):
     gc2 = vacuum_merged_table(spark, target, grace_sec=3600.0)
     assert gc2 == {"gens_deleted": 0, "manifests_deleted": 0}
 
-    t2 = str(tmp_path / "rename_flavor")
-    _merge(spark, t2, [("k1", 1, "a", False)], num_buckets=2)
+    t2 = str(tmp_path / "plain_parquet")
+    _df(spark, [("k1", 1, "a", False)]).write.parquet(t2)
     with pytest.raises(ValueError, match="not a manifest-commit target"):
         vacuum_merged_table(spark, t2)
 
@@ -337,37 +288,6 @@ def test_manifest_delete_to_empty_and_reinsert(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_rebucket_rename_flavor(spark, tmp_path):
-    target = str(tmp_path / "t")
-    rows = [(f"k{i}", 1, "v", False) for i in range(50)]
-    _merge(spark, target, rows, num_buckets=4)
-    _merge(spark, target, [("k1", 2, "w", False), ("k2", 2, "d", True)])
-    before = _state(spark, target)
-
-    res = rebucket(spark, target, 8)
-    assert res["engine"] == "parquet-swap" and res["num_buckets"] == 8
-    assert res["rows"] == len(before)
-    with open(os.path.join(target, "_bucket_spec.json")) as f:
-        assert json.load(f)["num_buckets"] == 8
-    assert _state(spark, target) == before  # state unchanged by re-layout
-    assert not os.path.exists(target + ".__lease")
-
-    # post-migration merges autodetect the new space and still prune
-    r = _merge(spark, target, [("k1", 3, "x", False)])
-    assert r["engine"] == "parquet-bucketed"
-    assert len(r["touched_buckets"]) == 1 and r["touched_buckets"][0] < 8
-    assert _state(spark, target)["k1"] == (3, "x")
-
-    # caller-passed num_buckets now validates against the NEW spec
-    with pytest.raises(ValueError, match="has 8 buckets"):
-        _merge(spark, target, [("k1", 4, "y", False)], num_buckets=4)
-
-    with pytest.raises(ValueError, match="no bucketed layout"):
-        rebucket(spark, str(tmp_path / "missing"), 8)
-    with pytest.raises(ValueError, match=">= 1"):
-        rebucket(spark, target, 0)
-
-
 def test_rebucket_manifest_flavor(spark, tmp_path):
     target = str(tmp_path / "t")
     rows = [(f"k{i}", 1, "v", False) for i in range(50)]
@@ -379,31 +299,36 @@ def test_rebucket_manifest_flavor(spark, tmp_path):
     assert res["rows"] == len(before)
     assert _state(spark, target) == before
 
+    assert not os.path.exists(target + ".__lease")
+
+    # post-migration merges autodetect the new space and still prune
     r = _merge(spark, target, [("k1", 2, "x", False)])
     assert r["engine"] == "parquet-manifest" and r["num_buckets"] == 8
+    assert len(r["touched_buckets"]) == 1 and r["touched_buckets"][0] < 8
     assert _state(spark, target)["k1"] == (2, "x")
     # the pre-rebucket generations are unreferenced now: vacuum them
     gc = vacuum_merged_table(spark, target, grace_sec=0.0)
     assert gc["gens_deleted"] >= 1
     assert _state(spark, target)["k1"] == (2, "x")
 
+    # caller-passed num_buckets now validates against the NEW layout
+    with pytest.raises(ValueError, match="has 8 buckets"):
+        _merge(spark, target, [("k1", 4, "y", False)], num_buckets=4)
+
+    with pytest.raises(ValueError, match="no bucketed layout"):
+        rebucket(spark, str(tmp_path / "missing"), 8)
+    with pytest.raises(ValueError, match=">= 1"):
+        rebucket(spark, target, 0)
+
 
 def test_rebucket_empty_tables(spark, tmp_path):
-    # rename flavor: spec'd but zero data files (everything deleted)
-    t1 = str(tmp_path / "t1")
-    _merge(spark, t1, [("k1", 1, "a", False)], num_buckets=4)
-    _merge(spark, t1, [("k1", 2, "a", True)])
-    res = rebucket(spark, t1, 2)
-    assert res == {"engine": "parquet-swap", "rows": 0, "num_buckets": 2}
-    r = _merge(spark, t1, [("k1", 3, "b", False)])
-    assert r["engine"] == "parquet-bucketed" and _state(spark, t1) == {"k1": (3, "b")}
-
-    # manifest flavor: empty live map — the move is pure metadata
+    # empty live map (everything deleted) — the move is pure metadata
     t2 = str(tmp_path / "t2")
     _merge(spark, t2, [("k1", 1, "a", False)], num_buckets=4, protocol="manifest")
     _merge(spark, t2, [("k1", 2, "a", True)])
     res2 = rebucket(spark, t2, 2)
-    assert res2["engine"] == "parquet-manifest" and res2["num_buckets"] == 2
+    assert res2 == {"engine": "parquet-manifest", "rows": 0, "num_buckets": 2,
+                    "seq": 3}
     # r14 regression (found by the read_changes lifecycle property):
     # the empty-table metadata commit must CARRY the schema pin — a
     # drifted batch must still be refused after the rebucket, not
@@ -424,17 +349,26 @@ def test_rebucket_empty_tables(spark, tmp_path):
 
 
 def test_read_merged_table_all_layouts(spark, tmp_path):
+    """The resolver over every path shape it can meet: missing and
+    empty paths read as None; a directory that is not a manifest table
+    (a plain parquet write, or bucket dirs without a manifest) is
+    refused loudly by the resolver and by merge_into alike, never read
+    or overwritten as if it were merged state."""
     assert read_merged_table(spark, str(tmp_path / "missing")) is None
+    os.makedirs(str(tmp_path / "empty"))
+    assert read_merged_table(spark, str(tmp_path / "empty")) is None
 
     plain = str(tmp_path / "plain")
     _df(spark, [("k1", 1, "a", False)]).write.parquet(plain)
-    assert _state(spark, plain) == {"k1": (1, "a")}
-
-    ren = str(tmp_path / "ren")
-    _merge(spark, ren, [("k1", 1, "a", False)], num_buckets=2)
-    df = read_merged_table(spark, ren)
-    assert BUCKET_COL in df.columns  # bucketed layouts expose __bucket
-    assert _state(spark, ren) == {"k1": (1, "a")}
+    bare = str(tmp_path / "bare_buckets")
+    _df(spark, [("k1", 1, "a", False)]).write.parquet(f"{bare}/{BUCKET_COL}=0")
+    for path in (plain, bare):
+        with pytest.raises(ValueError, match="not a manifest-commit target"):
+            read_merged_table(spark, path)
+        with pytest.raises(ValueError, match="not a manifest-commit target"):
+            _merge(spark, path, [("k2", 1, "b", False)], num_buckets=2)
+    # the refused data is untouched
+    assert spark.read.parquet(plain).count() == 1
 
     man = str(tmp_path / "man")
     _merge(spark, man, [("k1", 1, "a", False)], num_buckets=2, protocol="manifest")
@@ -517,12 +451,14 @@ def test_manifest_sink_with_interleaved_vacuum(spark, tmp_path):
 
 def test_suggest_num_buckets_both_flavors(spark, tmp_path):
     """The rebucket advisor: live-bytes / target-bucket-size rounded to
-    a power of two, with 2x hysteresis; manifest tables count ONLY the
-    live generations (superseded gens must not inflate the estimate)."""
+    a power of two, with 2x hysteresis, counting ONLY the live
+    generations (superseded gens must not inflate the estimate) — on a
+    target laid out from num_buckets alone and on one that also passed
+    protocol='manifest'."""
     from lens_sds_batch_spark.plans.merge import suggest_num_buckets
 
     rows = [(f"k{i}", 1, "v" * 50, False) for i in range(400)]
-    t1 = str(tmp_path / "ren")
+    t1 = str(tmp_path / "default")
     _merge(spark, t1, rows, num_buckets=4)
     s = suggest_num_buckets(spark, t1, target_bucket_bytes=1)
     # tiny target size -> suggested far above 4 -> recommended
@@ -542,6 +478,10 @@ def test_suggest_num_buckets_both_flavors(spark, tmp_path):
 
     with pytest.raises(ValueError, match="no bucketed layout"):
         suggest_num_buckets(spark, str(tmp_path / "missing"))
+    plain = str(tmp_path / "plain")
+    _df(spark, rows[:1]).write.parquet(plain)
+    with pytest.raises(ValueError, match="no bucketed layout"):
+        suggest_num_buckets(spark, plain)
 
 
 # ---------------------------------------------------------------------------
@@ -577,9 +517,10 @@ def test_snapshot_reads_time_travel(spark, tmp_path):
     with pytest.raises(ValueError, match="predates"):
         read_merged_table(spark, target, as_of_seq=-1)
 
-    # non-manifest layouts retain no history — both surfaces refuse
-    t2 = str(tmp_path / "renamed")
-    _merge(spark, t2, [("k1", 1, "a", False)], num_buckets=4)
+    # a path that is not a merge target has no history — both surfaces
+    # refuse
+    t2 = str(tmp_path / "plain")
+    _df(spark, [("k1", 1, "a", False)]).write.parquet(t2)
     with pytest.raises(ValueError, match="not a manifest-commit target"):
         read_merged_table(spark, t2, as_of_seq=1)
     with pytest.raises(ValueError, match="not a manifest-commit target"):
@@ -659,9 +600,9 @@ def test_compact_merged_table(spark, tmp_path):
     _merge(spark, target, [("k1", 2, "upd", False)])
     assert _state(spark, target)["k1"] == (2, "upd")
 
-    # other flavors refuse — nothing generation-shaped to compact
-    t2 = str(tmp_path / "ren")
-    _merge(spark, t2, rows[:10], num_buckets=2)
+    # a path that is not a merge target is refused
+    t2 = str(tmp_path / "plain")
+    _df(spark, rows[:10]).write.parquet(t2)
     with pytest.raises(ValueError, match="not a manifest-commit target"):
         compact_merged_table(spark, t2)
 
@@ -693,7 +634,7 @@ def test_maintain_merged_table_composition(spark, tmp_path):
     """r13: the one-call maintenance window — advisor-gated rebucket,
     sized compaction, then vacuum; state unchanged throughout; a
     fitting+sized+clean manifest table costs no Spark job (all three
-    steps report no-ops); rename-flavor targets get the advisor only."""
+    steps report no-ops)."""
     from lens_sds_batch_spark.plans.merge import maintain_merged_table
 
     target = str(tmp_path / "t")
@@ -720,28 +661,31 @@ def test_maintain_merged_table_composition(spark, tmp_path):
     assert res2["vacuum"] == {"gens_deleted": 0, "manifests_deleted": 0}
     assert _state(spark, target) == before
 
-    # rename flavor: advisor only (N=1 already fits any size — no
-    # migration), compact/vacuum None
-    t2 = str(tmp_path / "ren")
-    _merge(spark, t2, [("k1", 1, "a", False)], num_buckets=1)
+    # a default (one-bucket) target runs every phase too: N=1 already
+    # fits any size (no migration), one file needs no compaction, and
+    # the young superseded manifest is shielded by the default grace
+    t2 = str(tmp_path / "one_bucket")
+    _merge(spark, t2, [("k1", 1, "a", False)])
     r3 = maintain_merged_table(spark, t2, target_bucket_bytes=1 << 40)
     assert r3["rebucket"]["rebucketed"] is False
-    assert r3["compact"] is None and r3["vacuum"] is None
+    assert r3["compact"]["compacted_buckets"] == []
+    assert r3["vacuum"] == {"gens_deleted": 0, "manifests_deleted": 0}
     assert _state(spark, t2) == {"k1": (1, "a")}
+
+    # a path that is not a merge target is refused by the window
+    t3 = str(tmp_path / "plain")
+    _df(spark, [("k1", 1, "a", False)]).write.parquet(t3)
+    with pytest.raises(ValueError, match="no bucketed layout"):
+        maintain_merged_table(spark, t3)
 
 
 def test_read_raises_on_tampered_table_instead_of_empty(spark, tmp_path):
-    """r14 (ADVICE r13 #1): the rename-flavor pinned read previously
-    swallowed EVERY AnalysisException as 'no data' — but that read can
-    also fail for non-empty reasons, which must raise loudly per the
-    layer's refusal conventions.  Craft the failure: a spec'd bucketed
-    table with a TAMPERED extra file whose column type conflicts under
-    mergeSchema (v: string in the real data, double in the intruder —
-    Spark surfaces CANNOT_MERGE_SCHEMAS as a Py4J-wrapped
-    SparkException on this path).  The narrowed handler
-    (_is_empty_read) lets only UNABLE_TO_INFER_SCHEMA / PATH_NOT_FOUND
-    read as an empty table; every other failure class must reach the
-    caller."""
+    """r14 (ADVICE r13 #1): a read that fails for a non-empty reason
+    must raise loudly, never read as an empty table.  Craft the
+    failure: a TAMPERED extra file in a live generation whose column
+    type conflicts with the pinned schema (v: string in the pin, double
+    in the intruder).  Only a manifest with no live bucket reads as
+    None."""
     import os
 
     import pytest
@@ -750,10 +694,8 @@ def test_read_raises_on_tampered_table_instead_of_empty(spark, tmp_path):
 
     target = str(tmp_path / "t")
     _merge(spark, target, [("k1", 1, "a", False)], num_buckets=1)
-    # drop a conflicting-typed parquet file into the bucket dir
-    bucket_dir = next(
-        f"{target}/{d}" for d in os.listdir(target) if d.startswith("__bucket=")
-    )
+    bucket = f"{BUCKET_COL}=0"
+    gen_dir = os.path.join(target, bucket, _gens(target)[bucket][0])
     spark.createDataFrame(
         [("kX", 9, 1.5)], "k string, pri int, v double"
     ).coalesce(1).write.mode("append").parquet(str(tmp_path / "intruder"))
@@ -761,15 +703,17 @@ def test_read_raises_on_tampered_table_instead_of_empty(spark, tmp_path):
         f for f in os.listdir(str(tmp_path / "intruder")) if f.endswith(".parquet")
     )
     os.rename(
-        str(tmp_path / "intruder" / part), f"{bucket_dir}/tampered.parquet"
+        str(tmp_path / "intruder" / part), f"{gen_dir}/tampered.parquet"
     )
-    with pytest.raises((AnalysisException, Py4JJavaError), match="MERGE|SCHEMA"):
+    with pytest.raises(
+        (AnalysisException, Py4JJavaError), match="MISMATCH|SCHEMA|MERGE"
+    ):
         df = read_merged_table(spark, target)
         assert df is not None, "tampered table silently read as empty"
         df.collect()  # analysis may be lazy — force it
 
-    # the genuinely-empty case still reads as None: a spec'd table whose
-    # only data files were tombstoned away
+    # the genuinely-empty case still reads as None: a table whose only
+    # key was tombstoned away
     t2 = str(tmp_path / "empty")
     _merge(spark, t2, [("k1", 1, "a", False)], num_buckets=1)
     _merge(spark, t2, [("k1", 2, "a", True)])  # delete the only key
@@ -906,11 +850,11 @@ def _merge_df(spark, target, df, **kw):
     )
 
 
-@pytest.mark.parametrize("protocol", [None, "manifest"])
+@pytest.mark.parametrize("protocol", ["manifest"])
 def test_value_schema_drift_refused(spark, tmp_path, protocol):
     target = str(tmp_path / "t")
-    kw = {"protocol": protocol} if protocol else {}
-    _merge(spark, target, [("k1", 1, "a", False)], num_buckets=4, **kw)
+    _merge(spark, target, [("k1", 1, "a", False)], num_buckets=4,
+           protocol=protocol)
 
     wide = spark.createDataFrame(
         [("k_empty_bucket", 2, "b", "extra", False)],
@@ -937,22 +881,20 @@ def test_value_schema_drift_refused(spark, tmp_path, protocol):
 
 
 def test_schema_pin_survives_rebucket(spark, tmp_path):
-    for proto in (None, "manifest"):
-        target = str(tmp_path / f"t_{proto}")
-        kw = {"protocol": proto} if proto else {}
-        _merge(spark, target, [("k1", 1, "a", False)], num_buckets=4, **kw)
-        rebucket(spark, target, 8)
-        wide = spark.createDataFrame(
-            [("k2", 2, "b", "extra", False)],
-            "k string, pri int, v string, v2 string, dead boolean",
-        )
-        with pytest.raises(ValueError, match="schema drift"):
-            _merge_df(spark, target, wide)
-        _merge(spark, target, [("k2", 2, "b", False)])  # conforming: ok
-        assert _state(spark, target) == {"k1": (1, "a"), "k2": (2, "b")}
+    target = str(tmp_path / "t")
+    _merge(spark, target, [("k1", 1, "a", False)], num_buckets=4)
+    rebucket(spark, target, 8)
+    wide = spark.createDataFrame(
+        [("k2", 2, "b", "extra", False)],
+        "k string, pri int, v string, v2 string, dead boolean",
+    )
+    with pytest.raises(ValueError, match="schema drift"):
+        _merge_df(spark, target, wide)
+    _merge(spark, target, [("k2", 2, "b", False)])  # conforming: ok
+    assert _state(spark, target) == {"k1": (1, "a"), "k2": (2, "b")}
 
 
-@pytest.mark.parametrize("protocol", [None, "manifest"])
+@pytest.mark.parametrize("protocol", ["manifest"])
 def test_null_key_routes_consistently(spark, tmp_path, protocol):
     """NULL-keyed rows on a bucketed layout: xxhash64 ignores NULL
     inputs (constant seed hash), so every NULL key routes to ONE stable
@@ -960,9 +902,8 @@ def test_null_key_routes_consistently(spark, tmp_path, protocol):
     NULL-keyed entity updates and deletes like any other.  Probe-pinned
     r12 (correct from the start; this guards the routing invariant)."""
     target = str(tmp_path / "t")
-    kw = {"protocol": protocol} if protocol else {}
     _merge(spark, target, [(None, 1, "n1", False), ("k1", 1, "a", False)],
-           num_buckets=4, **kw)
+           num_buckets=4, protocol=protocol)
     _merge(spark, target, [(None, 2, "n2", False)])
     assert _state(spark, target) == {None: (2, "n2"), "k1": (1, "a")}
     _merge(spark, target, [(None, 3, "x", True)])
@@ -1001,8 +942,8 @@ def test_snapshot_read_by_timestamp(spark, tmp_path):
         read_merged_table(spark, target, as_of_seq=1, as_of_ms=snaps[1])
     # as_of_ms on a non-manifest target gets the SAME read_merged_table-
     # prefixed diagnostic the as_of_seq path gives (ADVICE r12)
-    t2 = str(tmp_path / "renamed")
-    _merge(spark, t2, [("k1", 1, "a", False)], num_buckets=4)
+    t2 = str(tmp_path / "plain")
+    _df(spark, [("k1", 1, "a", False)]).write.parquet(t2)
     with pytest.raises(
         ValueError,
         match="read_merged_table: as_of_ms=.* is not a manifest-commit",
@@ -1037,13 +978,12 @@ def test_snapshot_survives_rebucket(spark, tmp_path):
 
 
 def test_plain_flavor_refuses_retyped_column(spark, tmp_path):
-    """The plain (unbucketed) flavor has no layout spec, so the LIVE
-    table schema is the pin: a retyped value column used to pass
-    analysis and either silently type-coerce (numeric-looking strings)
-    or explode mid-job as a runtime cast error (r12 probe).  All three
-    flavors now refuse schema drift identically."""
+    """A target materialized with no layout arguments at all (one
+    bucket, the default) pins its schema like any other: a retyped
+    value column would otherwise silently type-coerce (numeric-looking
+    strings) or explode mid-job as a runtime cast error (r12 probe)."""
     target = str(tmp_path / "t")
-    _merge(spark, target, [("k1", 1, "a", False)])  # plain: no num_buckets
+    _merge(spark, target, [("k1", 1, "a", False)])  # no layout arguments
     retyped = spark.createDataFrame(
         [("k2", 2, 7, False)], "k string, pri int, v int, dead boolean"
     )

@@ -220,8 +220,9 @@ def test_apply_lww_matches_python_reference(spark, rows):
     ),
 )
 def test_merge_into_matches_delta_semantics_model(spark, target, updates):
-    """Differential property (r8): merge_into's parquet fallback vs a
-    pure-Python model of the Delta MERGE contract — collapse the source
+    """Differential property (r8): merge_into vs a pure-Python model of
+    the Delta MERGE contract (the reference semantics a MERGE INTO port
+    must keep) — collapse the source
     to its per-key winner by the order chain, then strict
     'source newer than target' decides update/keep, exact ties keep
     the TARGET, tombstone winners delete, unmatched non-tombstones
@@ -258,6 +259,8 @@ def test_merge_into_matches_delta_semantics_model(spark, target, updates):
         if k not in tgt_keys and not dead:
             expected.add((k, val))                # whenNotMatchedInsert
 
+    from lens_sds_batch_spark.plans.merge import read_merged_table
+
     d = tempfile.mkdtemp(prefix="merge_prop_")
     tgt_df = (
         spark.createDataFrame(
@@ -269,59 +272,32 @@ def test_merge_into_matches_delta_semantics_model(spark, target, updates):
     )
     upd = spark.createDataFrame(updates, "k string, pri int, v string, dead boolean")
 
+    def _got(path):
+        df = read_merged_table(spark, path)
+        return set() if df is None else {(r["k"], r["v"]) for r in df.collect()}
+
+    # Default layout (no layout arguments: one bucket).  The stored
+    # state is materialized as the FIRST batch (keys are unique and
+    # non-tombstone, so LWW(target) == target), then the update batch
+    # merges against it.
     tgt_path = d + "/state"
     if tgt_df is not None:
-        tgt_df.write.parquet(tgt_path)
+        merge_into(spark, tgt_path, tgt_df, keys=["k"], order_cols=["pri"],
+                   is_delete=F.lit(False))
     merge_into(spark, tgt_path, upd, keys=["k"], order_cols=["pri"], is_delete=F.col("dead"))
-    got = {(r["k"], r["v"]) for r in spark.read.parquet(tgt_path).collect()}
-    assert got == expected
+    assert _got(tgt_path) == expected
 
-    # Same model, BUCKETED layout (r11): migrate the stored state into a
-    # bucketed target, then merge — the pruned per-bucket path must land
-    # on the identical Delta-contract result.  The bucket count varies
-    # per example, including the degenerate N=1 (every key in one
-    # bucket — the protocol must still route, swap, and empty it).
+    # Same model, explicitly BUCKETED manifest layout (r11/r12): the
+    # pruned per-bucket path and the one-file commit must land on the
+    # identical Delta-contract result.  The bucket count varies per
+    # example, including the degenerate N=1 (every key in one bucket —
+    # the protocol must still route, stage, and empty it).  Snapshot
+    # differential rides along: after the merge, the PRE-merge seq must
+    # still read as exactly the pre-merge state — time travel pinned
+    # across the same random examples.
     n_buckets = 1 + (len(updates) + len(target)) % 4  # 1..4, example-derived
-    btgt = d + "/state_bucketed"
-    if tgt_df is not None:
-        # lay out via a no-op-batch migration so the merge below takes
-        # the incremental bucketed path, not the migration path
-        tgt_df.write.parquet(btgt)
-        merge_into(
-            spark, btgt, tgt_df, keys=["k"], order_cols=["pri"],
-            is_delete=F.lit(False), num_buckets=n_buckets,
-        )
-        res = merge_into(
-            spark, btgt, upd, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
-        )
-        assert res["engine"] == "parquet-bucketed"
-    else:
-        merge_into(
-            spark, btgt, upd, keys=["k"], order_cols=["pri"],
-            is_delete=F.col("dead"), num_buckets=n_buckets,
-        )
-    from pyspark.errors import AnalysisException
-
-    try:
-        bgot = {(r["k"], r["v"]) for r in spark.read.parquet(btgt).collect()}
-    except AnalysisException:  # every key deleted: no data dirs remain
-        bgot = set()  # (narrow catch — any other failure must surface)
-    assert bgot == expected
-
-    # Same model, MANIFEST layout (r12): generation dirs + one atomic
-    # manifest commit must land on the identical Delta-contract result,
-    # read back THROUGH the resolver (the only valid read of a manifest
-    # table).  Snapshot differential rides along: after the merge, the
-    # PRE-merge seq must still read as exactly the pre-merge state —
-    # time travel pinned across the same random examples.
-    from lens_sds_batch_spark.plans.merge import read_merged_table
-
     mtgt = d + "/state_manifest"
     if tgt_df is not None:
-        # the manifest protocol refuses in-place migration of an existing
-        # plain table (documented contract) — materialize the stored state
-        # as the FIRST manifest batch instead (keys are unique and
-        # non-tombstone, so LWW(target) == target)
         pre = merge_into(
             spark, mtgt, tgt_df, keys=["k"], order_cols=["pri"],
             is_delete=F.lit(False), num_buckets=n_buckets, protocol="manifest",
@@ -341,18 +317,17 @@ def test_merge_into_matches_delta_semantics_model(spark, target, updates):
             spark, mtgt, upd, keys=["k"], order_cols=["pri"],
             is_delete=F.col("dead"), num_buckets=n_buckets, protocol="manifest",
         )
-    mdf = read_merged_table(spark, mtgt)
-    mgot = set() if mdf is None else {(r["k"], r["v"]) for r in mdf.collect()}
-    assert mgot == expected
+    assert _got(mtgt) == expected
 
 
 # ---------------------------------------------------------------------------
 # r13: randomized merge+evolution lifecycle vs a Python model — the
 # schema-evolution analog of the Delta-semantics property above.  A
 # random interleaving of LWW merge batches, NULL-backed column adds,
-# and one int->bigint widen must land every flavor on the state a
-# plain dict model predicts, with pre-add rows reading typed NULLs and
-# post-widen dtypes visible in the resolver read.
+# and one int->bigint widen must land both the default and an explicit
+# bucketed layout on the state a plain dict model predicts, with pre-add
+# rows reading typed NULLs and post-widen dtypes visible in the resolver
+# read.
 # ---------------------------------------------------------------------------
 
 _EVO_KEYS = ["k1", "k2", "k3"]
@@ -382,11 +357,13 @@ _EVO_STEP = st.one_of(
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(
-    flavor=st.sampled_from(["plain", "bucketed", "manifest"]),
+    layout=st.sampled_from(
+        [{}, {"num_buckets": 2, "protocol": "manifest"}]
+    ),
     first=_EVO_BATCH,
     steps=st.lists(_EVO_STEP, min_size=1, max_size=5),
 )
-def test_merge_evolve_lifecycle_matches_model(spark, flavor, first, steps):
+def test_merge_evolve_lifecycle_matches_model(spark, layout, first, steps):
     import tempfile
 
     from pyspark.sql import functions as F
@@ -435,11 +412,6 @@ def test_merge_evolve_lifecycle_matches_model(spark, flavor, first, steps):
             keys=["k"], order_cols=["pri"], is_delete=F.col("dead"), **kw,
         )
 
-    layout = (
-        {"num_buckets": 2} if flavor == "bucketed"
-        else {"num_buckets": 2, "protocol": "manifest"} if flavor == "manifest"
-        else {}
-    )
     spark_merge(first, **layout)
     model_merge(first)
 
@@ -454,7 +426,7 @@ def test_merge_evolve_lifecycle_matches_model(spark, flavor, first, steps):
         elif op == "widen" and not widened:
             evolve_schema(spark, tgt, widen={"pri": "bigint"})
             widened = True
-        elif op == "maintain" and flavor == "manifest":
+        elif op == "maintain":
             from lens_sds_batch_spark.plans.merge import maintain_merged_table
 
             maintain_merged_table(spark, tgt, grace_sec=0.0)

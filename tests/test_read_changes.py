@@ -702,9 +702,9 @@ def test_replicate_concurrent_with_live_writer(spark, tmp_path):
 
 
 def test_refusals(spark, tmp_path):
-    # non-manifest target
+    # a plain parquet dir is not a merge target
     plain = str(tmp_path / "plain")
-    _merge(spark, plain, [("a", 1, "x", False)])
+    spark.createDataFrame([("a", 1, "x", False)], SCHEMA).write.parquet(plain)
     with pytest.raises(ValueError, match="not a manifest-commit target"):
         read_changes(spark, plain, from_seq=0)
 

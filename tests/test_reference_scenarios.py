@@ -372,8 +372,8 @@ def test_null_cmd_id_guard_fires_on_malformed_uuid_param(spark):
 
 
 def test_merge_into_fallback_equals_apply_lww(spark, tmp_path):
-    """VERDICT r5 #7: merge_into's portable parquet path must equal the
-    pure apply_lww semantics on the entity_state_subjects scenario —
+    """VERDICT r5 #7: merge_into's stored result must equal the pure
+    apply_lww semantics on the entity_state_subjects scenario —
     same current state (even-custkey v0 subjects), same incoming command
     batch (insert/upsert -> v1, remove -> tombstone).  Runs the merge
     TWICE to also pin idempotency (replaying the same batch against the
@@ -381,7 +381,11 @@ def test_merge_into_fallback_equals_apply_lww(spark, tmp_path):
     argument applied at the storage seam)."""
     from pyspark.sql import functions as F
 
-    from lens_sds_batch_spark.plans.merge import apply_lww, merge_into
+    from lens_sds_batch_spark.plans.merge import (
+        apply_lww,
+        merge_into,
+        read_merged_table,
+    )
     from lens_sds_batch_spark.plans.odm import derive_odm_resolved
 
     from .conftest import SF_SMOKE
@@ -408,7 +412,12 @@ def test_merge_into_fallback_equals_apply_lww(spark, tmp_path):
         )
     )
     target = str(tmp_path / "entity_state")
-    current.write.parquet(target)
+    merge_into(  # stored state: the first batch
+        spark, target, current,
+        keys=["study_oid", "subject_key"],
+        order_cols=["priority"],
+        is_delete=F.col("is_remove"),
+    )
 
     res = merge_into(
         spark, target, updates,
@@ -416,7 +425,7 @@ def test_merge_into_fallback_equals_apply_lww(spark, tmp_path):
         order_cols=["priority"],
         is_delete=F.col("is_remove"),
     )
-    assert res["engine"] == "parquet-swap"  # no delta-spark in sandbox
+    assert res["engine"] == "parquet-manifest"
 
     expected = apply_lww(
         current.unionByName(updates),
@@ -424,36 +433,40 @@ def test_merge_into_fallback_equals_apply_lww(spark, tmp_path):
         order_cols=[F.col("priority")],
         is_delete=F.col("is_remove"),
     ).select("study_oid", "subject_key", "version")
-    got = spark.read.parquet(target).select("study_oid", "subject_key", "version")
-    assert res["rows"] == expected.count()
-    assert got.count() == expected.count()
-    assert got.exceptAll(expected).isEmpty() and expected.exceptAll(got).isEmpty()
+
+    def got():
+        return read_merged_table(spark, target).select(
+            "study_oid", "subject_key", "version"
+        )
+
+    n = got().count()
+    assert n == expected.count()
+    assert got().exceptAll(expected).isEmpty() and expected.exceptAll(got()).isEmpty()
 
     # replay the same batch: LWW over deterministic keys -> no change
-    res2 = merge_into(
+    merge_into(
         spark, target, updates,
         keys=["study_oid", "subject_key"],
         order_cols=["priority"],
         is_delete=F.col("is_remove"),
     )
-    assert res2["rows"] == res["rows"]
-    got2 = spark.read.parquet(target).select("study_oid", "subject_key", "version")
-    assert got2.exceptAll(expected).isEmpty() and expected.exceptAll(got2).isEmpty()
+    assert got().count() == n
+    assert got().exceptAll(expected).isEmpty() and expected.exceptAll(got()).isEmpty()
 
 
 def test_merge_into_bucketed_prunes_untouched_buckets(spark, tmp_path):
     """VERDICT r10 #1: the portable merge's 100 TB path — a key-hash-
     bucketed target layout where a batch rewrites ONLY the buckets it
     touches.  Pins, in order: (a) first materialization lays out
-    __bucket= partition dirs + the _bucket_spec sidecar; (b) a later
-    batch auto-detects the layout (no num_buckets re-passed), reports
-    exactly the touched buckets, and produces the same table apply_lww
-    would; (c) every file in every UNTOUCHED bucket is byte- and
+    __bucket= partition dirs + the _manifest dir; (b) a later batch
+    auto-detects the layout (no num_buckets re-passed), reports exactly
+    the touched buckets, and produces the same table apply_lww would;
+    (c) every file in every UNTOUCHED bucket is byte- and
     mtime-identical after the merge — the scale claim itself; (d) a
-    bucket whose keys are all deleted disappears; (e) replaying the
-    same batch is a no-op on table state and still leaves untouched
-    buckets alone; (f) the touched-bucket read is partition-pruned at
-    the scan (PartitionFilters)."""
+    bucket whose keys are all deleted leaves the live map; (e)
+    replaying the same batch is a no-op on table state and still
+    leaves untouched buckets alone; (f) a bucket filter on the resolved
+    read is partition-pruned at the scan (PartitionFilters)."""
     import hashlib
     import os
 
@@ -461,9 +474,11 @@ def test_merge_into_bucketed_prunes_untouched_buckets(spark, tmp_path):
 
     from lens_sds_batch_spark.plans.merge import (
         BUCKET_COL,
+        MANIFEST_DIR,
         apply_lww,
         bucket_expr,
         merge_into,
+        read_merged_table,
     )
 
     N = 8
@@ -476,9 +491,9 @@ def test_merge_into_bucketed_prunes_untouched_buckets(spark, tmp_path):
         spark, target, current, keys=["k"], order_cols=["pri"],
         is_delete=F.col("dead"), num_buckets=N,
     )
-    assert res0["engine"] == "parquet-swap" and res0["num_buckets"] == N
+    assert res0["engine"] == "parquet-manifest" and res0["num_buckets"] == N
     layout = {d for d in os.listdir(target) if d.startswith(BUCKET_COL + "=")}
-    assert layout and os.path.isfile(os.path.join(target, "_bucket_spec.json"))
+    assert layout and os.path.isdir(os.path.join(target, MANIFEST_DIR))
 
     # derive each key's bucket with the SAME expression the merge uses
     bucket_of = {
@@ -521,9 +536,9 @@ def test_merge_into_bucketed_prunes_untouched_buckets(spark, tmp_path):
     before = file_state()
     res = merge_into(
         spark, target, updates, keys=["k"], order_cols=["pri"],
-        is_delete=F.col("dead"),  # num_buckets NOT passed: spec auto-detects
+        is_delete=F.col("dead"),  # num_buckets NOT passed: auto-detected
     )
-    assert res["engine"] == "parquet-bucketed"
+    assert res["engine"] == "parquet-manifest"
     assert res["touched_buckets"] == sorted({b_upd, b_kill})
     assert res["num_buckets"] == N and res["rows"] is None
 
@@ -533,7 +548,7 @@ def test_merge_into_bucketed_prunes_untouched_buckets(spark, tmp_path):
         order_cols=[F.col("pri")],
         is_delete=F.col("dead"),
     ).select("k", "pri", "v")
-    got = spark.read.parquet(target).select("k", "pri", "v")
+    got = read_merged_table(spark, target).select("k", "pri", "v")
     assert got.exceptAll(expected).isEmpty() and expected.exceptAll(got).isEmpty()
     # touched_rows = ALL survivors in the touched buckets: every key
     # already living in b_upd plus the new one; b_kill fully emptied.
@@ -553,10 +568,10 @@ def test_merge_into_bucketed_prunes_untouched_buckets(spark, tmp_path):
         if p.startswith(BUCKET_COL + "=") and not p.startswith(touched_prefixes)
     }
     assert untouched_before and untouched_before == untouched_after  # (c)
-    assert not os.path.isdir(os.path.join(target, f"{BUCKET_COL}={b_kill}"))  # (d)
-    assert not os.path.exists(target + ".__old") and not os.path.exists(
-        target + ".__tmp"
-    )
+    assert read_merged_table(spark, target).where(  # (d)
+        F.col(BUCKET_COL) == b_kill
+    ).isEmpty()
+    assert not os.path.exists(target + ".__tmp")
 
     # (e) replay: no state change, untouched buckets still byte-identical
     res2 = merge_into(
@@ -564,7 +579,7 @@ def test_merge_into_bucketed_prunes_untouched_buckets(spark, tmp_path):
         is_delete=F.col("dead"),
     )
     assert res2["touched_buckets"] == res["touched_buckets"]
-    got2 = spark.read.parquet(target).select("k", "pri", "v")
+    got2 = read_merged_table(spark, target).select("k", "pri", "v")
     assert got2.exceptAll(expected).isEmpty() and expected.exceptAll(got2).isEmpty()
     replay_after = file_state()
     assert {
@@ -572,9 +587,9 @@ def test_merge_into_bucketed_prunes_untouched_buckets(spark, tmp_path):
         if p.startswith(BUCKET_COL + "=") and not p.startswith(touched_prefixes)
     } == untouched_before
 
-    # (f) the touched-bucket read prunes at the scan
+    # (f) a bucket filter on the resolved read prunes at the scan
     plan = (
-        spark.read.parquet(target)
+        read_merged_table(spark, target)
         .where(F.col(BUCKET_COL).isin([b_upd]))
         ._jdf.queryExecution()
         .executedPlan()
@@ -585,128 +600,11 @@ def test_merge_into_bucketed_prunes_untouched_buckets(spark, tmp_path):
     )[1][:200]
 
 
-def test_merge_into_bucketed_migration_and_crash_recovery(spark, tmp_path):
-    """Companions to the bucketed-pruning pin: (a) passing num_buckets
-    on an EXISTING unbucketed target is a one-time migration — the
-    merged result lands bucketed + spec'd and the next batch takes the
-    pruned path; (b) the per-bucket crash protocol: an aside bucket
-    whose target slot is empty (crash between the two renames) is
-    restored by the next merge's recovery pass, an aside whose slot is
-    occupied (crash after the tmp rename) is dropped as stale; (c) a
-    key-set mismatch against the spec raises instead of mis-bucketing."""
-    import os
-    import shutil
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from lens_sds_batch_spark.plans.merge import BUCKET_COL, merge_into
-
-    target = str(tmp_path / "mig_state")
-    current = spark.createDataFrame(
-        [(f"k{i}", 0, "v0", False) for i in range(60)],
-        "k string, pri int, v string, dead boolean",
-    )
-    current.write.parquet(target)  # plain, unbucketed table
-
-    upd1 = spark.createDataFrame(
-        [("k1", 1, "v1", False)], "k string, pri int, v string, dead boolean"
-    )
-    res1 = merge_into(
-        spark, target, upd1, keys=["k"], order_cols=["pri"],
-        is_delete=F.col("dead"), num_buckets=4,
-    )
-    assert res1["engine"] == "parquet-swap" and res1["num_buckets"] == 4  # migration
-    assert os.path.isfile(os.path.join(target, "_bucket_spec.json"))
-    assert {d for d in os.listdir(target) if d.startswith(BUCKET_COL + "=")}
-
-    upd2 = spark.createDataFrame(
-        [("k2", 1, "v2", False)], "k string, pri int, v string, dead boolean"
-    )
-    res2 = merge_into(
-        spark, target, upd2, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
-    )
-    assert res2["engine"] == "parquet-bucketed"  # post-migration: pruned path
-    assert spark.read.parquet(target).where("k = 'k2'").count() == 1
-
-    # (b) crash simulation — restore case: move one bucket to the aside
-    # dir exactly as a death between the two renames would leave it.
-    some_bucket = next(
-        d for d in os.listdir(target) if d.startswith(BUCKET_COL + "=")
-    )
-    old_dir = target + ".__old"
-    os.makedirs(old_dir)
-    shutil.move(os.path.join(target, some_bucket), os.path.join(old_dir, some_bucket))
-    total = spark.read.parquet(target).count()  # some rows now missing
-    res3 = merge_into(  # recovery pass runs before the merge proper
-        spark, target, upd2, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
-    )
-    assert res3["engine"] == "parquet-bucketed"
-    assert not os.path.exists(old_dir)
-    assert spark.read.parquet(target).count() > total  # bucket restored
-
-    # stale case: aside exists AND the target slot is occupied
-    os.makedirs(old_dir)
-    shutil.copytree(
-        os.path.join(target, some_bucket), os.path.join(old_dir, some_bucket)
-    )
-    n_before = spark.read.parquet(target).count()
-    merge_into(
-        spark, target, upd2, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
-    )
-    assert not os.path.exists(old_dir)  # stale aside dropped, not restored
-    assert spark.read.parquet(target).count() == n_before
-
-    # (c) key mismatch against the pinned spec must refuse loudly
-    with pytest.raises(ValueError, match="bucketed on keys"):
-        merge_into(
-            spark, target, upd2.withColumnRenamed("k", "kk"),
-            keys=["kk"], order_cols=["pri"], is_delete=F.col("dead"),
-        )
-
-    # (d) r11 review hardening: a CORRUPT spec must refuse loudly —
-    # guessing "unbucketed" against a bucketed layout would route keys
-    # into the wrong bucket space and silently duplicate them
-    spec_path = os.path.join(target, "_bucket_spec.json")
-    crc_path = os.path.join(target, "._bucket_spec.json.crc")
-    orig = open(spec_path, "rb").read()
-    open(spec_path, "w").write("{not json")
-    # Hadoop's LocalFileSystem keeps a .crc sidecar; python-level
-    # tampering leaves it stale, so the read surfaces as EITHER a
-    # checksum failure ("unreadable") or, without the sidecar, a JSON
-    # failure ("corrupt") — both must be the same loud refusal
-    with pytest.raises(ValueError, match="bucket spec"):
-        merge_into(
-            spark, target, upd2, keys=["k"], order_cols=["pri"],
-            is_delete=F.col("dead"),
-        )
-    # (e) and a SPEC-LESS target that still has __bucket= dirs is
-    # ambiguous (tampering / pre-spec build): refuse with or without
-    # num_buckets rather than guess a layout or drag __bucket into a
-    # legacy unionByName.  (Normal operation cannot produce this state:
-    # the spec is written INSIDE tmp before the swap, so the rename
-    # that exposes the data exposes the spec with it.)
-    os.remove(spec_path)
-    for kwargs in ({}, {"num_buckets": 4}):
-        with pytest.raises(ValueError, match="no _bucket_spec"):
-            merge_into(
-                spark, target, upd2, keys=["k"], order_cols=["pri"],
-                is_delete=F.col("dead"), **kwargs,
-            )
-    open(spec_path, "wb").write(orig)  # restore: merges work again
-    if os.path.exists(crc_path):
-        os.remove(crc_path)  # drop the stale checksum sidecar
-    res5 = merge_into(
-        spark, target, upd2, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
-    )
-    assert res5["engine"] == "parquet-bucketed"
-
-
 def test_merge_into_input_guards(spark, tmp_path):
     """r11 review hardening — malformed inputs refuse loudly instead of
     silently corrupting: num_buckets < 1 (pmod-by-zero NULL buckets),
-    empty order_cols (malformed Delta SQL / silent target-always-wins
-    fallback), reserved internal column names (__del/__tgt_pri/__rk/
+    empty order_cols (a silent target-always-wins no-op), key columns
+    the batch does not carry, reserved internal column names (__del/__tgt_pri/__rk/
     __bucket would be overwritten then dropped), key DTYPE drift vs the
     pinned spec (xxhash64 is type-sensitive: the same logical key would
     hash into a different bucket space), and apply_lww's __rk."""
@@ -724,6 +622,9 @@ def test_merge_into_input_guards(spark, tmp_path):
                    is_delete=F.col("dead"), num_buckets=0)
     with pytest.raises(ValueError, match="order_cols must be non-empty"):
         merge_into(spark, t, upd, keys=["k"], order_cols=[],
+                   is_delete=F.col("dead"))
+    with pytest.raises(ValueError, match=r"key columns \['kk'\] are not in the batch"):
+        merge_into(spark, t, upd, keys=["kk"], order_cols=["pri"],
                    is_delete=F.col("dead"))
     with pytest.raises(ValueError, match="reserved columns"):
         merge_into(spark, t, upd.withColumn("__del", F.lit(1)),
@@ -746,10 +647,10 @@ def test_merge_into_input_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="dtype drift"):
         merge_into(spark, t, drifted, keys=["k"], order_cols=["pri"],
                    is_delete=F.col("dead"))
-    # cast back to the spec type: accepted
+    # cast back to the pinned type: accepted
     res = merge_into(spark, t, drifted.withColumn("k", F.col("k").cast("int")),
                      keys=["k"], order_cols=["pri"], is_delete=F.col("dead"))
-    assert res["engine"] == "parquet-bucketed"
+    assert res["engine"] == "parquet-manifest"
 
 
 def test_merge_into_creates_target_on_first_batch(spark, tmp_path):
@@ -757,7 +658,7 @@ def test_merge_into_creates_target_on_first_batch(spark, tmp_path):
     non-tombstone winners land."""
     from pyspark.sql import functions as F
 
-    from lens_sds_batch_spark.plans.merge import merge_into
+    from lens_sds_batch_spark.plans.merge import merge_into, read_merged_table
 
     updates = spark.createDataFrame(
         [("k1", 1, "a", False), ("k1", 2, "b", False), ("k2", 1, "x", True)],
@@ -767,30 +668,35 @@ def test_merge_into_creates_target_on_first_batch(spark, tmp_path):
     res = merge_into(
         spark, target, updates, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
     )
-    rows = {(r["k"], r["v"]) for r in spark.read.parquet(target).collect()}
-    assert rows == {("k1", "b")} and res["rows"] == 1
+    got = read_merged_table(spark, target)
+    rows = {(r["k"], r["v"]) for r in got.collect()}
+    assert rows == {("k1", "b")} and got.count() == 1
+    assert (res["num_buckets"], res["touched_rows"]) == (1, 1)
 
 
 def test_merge_tie_break_total_ordering(spark, tmp_path):
-    """VERDICT r7 #4: exact order-chain ties must resolve IDENTICALLY
-    in the two merge engines.  Crafted ties:
+    """VERDICT r7 #4: exact order-chain ties must resolve exactly as
+    Delta's MERGE INTO would.  Crafted ties:
 
     - k1: an update exactly ties the stored target row on the full
-      order chain → Delta's strict source-newer condition keeps the
-      TARGET; the parquet fallback must agree (target-priority
-      tiebreak), not pick an arbitrary union row.
-    - k2: two update rows tie each other (no target row) → both the
-      Delta branch's source collapse and the fallback resolve by the
-      SAME xxhash64 row hash, so the simulated-Delta winner and the
-      fallback winner coincide.
-    - k3/k4: NULL order values (r8 review) — NULL ranks OLDEST in both
-      branches, so a non-NULL source supersedes a NULL-ordered target
-      (k3) and a NULL-vs-NULL tie keeps the target (k4); a naive
-      `s.pri > t.pri` Delta condition would strand both.
+      order chain → MERGE's strict source-newer condition keeps the
+      TARGET; merge_into must agree (target-priority tiebreak), not
+      pick an arbitrary union row.
+    - k2: two update rows tie each other (no target row) → the source
+      collapse of the simulated MERGE and merge_into resolve by the
+      SAME xxhash64 row hash, so the two winners coincide.
+    - k3/k4: NULL order values (r8 review) — NULL ranks OLDEST, so a
+      non-NULL source supersedes a NULL-ordered target (k3) and a
+      NULL-vs-NULL tie keeps the target (k4); a naive `s.pri > t.pri`
+      MERGE condition would strand both.
     """
     from pyspark.sql import functions as F
 
-    from lens_sds_batch_spark.plans.merge import apply_lww, merge_into
+    from lens_sds_batch_spark.plans.merge import (
+        apply_lww,
+        merge_into,
+        read_merged_table,
+    )
 
     current = spark.createDataFrame(
         [("k1", 5, "tgt", False), ("k3", None, "tgt3", False), ("k4", None, "tgt4", False)],
@@ -802,14 +708,16 @@ def test_merge_tie_break_total_ordering(spark, tmp_path):
         "k string, pri int, v string, dead boolean",
     )
     target = str(tmp_path / "ties")
-    current.write.parquet(target)
+    merge_into(  # stored state: the first batch
+        spark, target, current, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
+    )
     res = merge_into(
         spark, target, updates, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
     )
-    assert res["engine"] == "parquet-swap"
-    got = {(r["k"], r["v"]) for r in spark.read.parquet(target).collect()}
+    assert res["engine"] == "parquet-manifest"
+    got = {(r["k"], r["v"]) for r in read_merged_table(spark, target).collect()}
 
-    # Delta-branch simulation with the same condition logic: collapse
+    # MERGE INTO simulation with the null-safe condition logic: collapse
     # the source with the shared row-hash tiebreak, then apply the
     # strict "source newer than target" rule per key.
     row_hash = F.xxhash64(*[F.col(c) for c in updates.columns])
@@ -839,25 +747,31 @@ def test_merge_tie_break_total_ordering(spark, tmp_path):
 
 
 def test_merge_tombstone_contract_source_only_null_safe(spark, tmp_path):
-    """r8 continuation review: the two merge engines must agree on (a) a
-    NULL is_delete on the winning update row — Delta's matched clauses
-    both no-fire on NULL (row kept/updated per coalesce-False), while a
-    naive fallback's where(~NULL) would DROP the key; and (b) a stored
-    row that happens to satisfy is_delete — Delta physically cannot
-    delete a target row without a newer matching source row, so the
-    fallback must not re-evaluate the tombstone predicate on target
-    winners.  Both shapes here would have diverged before the fix."""
+    """r8 continuation review: merge_into must agree with Delta's MERGE
+    INTO on (a) a NULL is_delete on the winning update row — MERGE's
+    matched clauses both no-fire on NULL (row kept/updated per
+    coalesce-False), while a naive where(~NULL) would DROP the key; and
+    (b) a stored row that happens to satisfy is_delete — MERGE
+    physically cannot delete a target row without a newer matching
+    source row, so the tombstone predicate must not be re-evaluated on
+    target winners.  Both shapes here would have diverged before the
+    fix."""
     from pyspark.sql import functions as F
 
-    from lens_sds_batch_spark.plans.merge import merge_into
+    from lens_sds_batch_spark.plans.merge import merge_into, read_merged_table
 
     target = str(tmp_path / "state")
-    # stored state: k1 normal; k2 PHYSICALLY carries dead=True (written
-    # by another tool / a prior schema era) — a target-side tombstone
-    spark.createDataFrame(
-        [("k1", 1, "a", False), ("k2", 5, "x", True)],
-        "k string, pri int, v string, dead boolean",
-    ).write.parquet(target)
+    # stored state: k1 normal; k2 PHYSICALLY carries dead=True (stored
+    # by a batch whose tombstone predicate was a different one) — a
+    # target-side tombstone
+    merge_into(
+        spark, target,
+        spark.createDataFrame(
+            [("k1", 1, "a", False), ("k2", 5, "x", True)],
+            "k string, pri int, v string, dead boolean",
+        ),
+        keys=["k"], order_cols=["pri"], is_delete=F.lit(False),
+    )
     updates = spark.createDataFrame(
         [
             ("k1", 2, "b", None),   # strictly newer, NULL dead -> UPDATE, not delete
@@ -866,7 +780,7 @@ def test_merge_tombstone_contract_source_only_null_safe(spark, tmp_path):
         "k string, pri int, v string, dead boolean",
     )
     merge_into(spark, target, updates, keys=["k"], order_cols=["pri"], is_delete=F.col("dead"))
-    got = {(r["k"], r["v"]) for r in spark.read.parquet(target).collect()}
+    got = {(r["k"], r["v"]) for r in read_merged_table(spark, target).collect()}
     # k1 updated (NULL coalesced to keep); k2's stored row survives even
     # though its own dead flag is True — only a newer source row deletes
     assert got == {("k1", "b"), ("k2", "x")}
@@ -878,13 +792,15 @@ def test_merge_into_schema_mismatch_raises_loudly(spark, tmp_path):
     replace the whole table with just the bad batch."""
     from pyspark.sql import functions as F
 
-    from lens_sds_batch_spark.plans.merge import merge_into
+    from lens_sds_batch_spark.plans.merge import merge_into, read_merged_table
 
     target = str(tmp_path / "t")
     good = spark.createDataFrame(
         [("k1", 1, "a", False)], "k string, pri int, v string, dead boolean"
     )
-    good.write.parquet(target)
+    merge_into(
+        spark, target, good, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
+    )
     bad = spark.createDataFrame(
         [("k1", 2, "b", False)], "k string, pri int, WRONG string, dead boolean"
     )
@@ -893,55 +809,21 @@ def test_merge_into_schema_mismatch_raises_loudly(spark, tmp_path):
             spark, target, bad, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
         )
     # the existing table survived untouched
-    rows = spark.read.parquet(target).collect()
+    rows = read_merged_table(spark, target).collect()
     assert [(r["k"], r["v"]) for r in rows] == [("k1", "a")]
 
 
-def test_merge_into_recovers_from_crash_between_renames(spark, tmp_path):
-    """r6 high-effort review: simulate a crash between the two swap
-    renames (target moved to __old, tmp never installed).  The next
-    merge_into must RESTORE __old before reading — not treat the
-    missing target as a first batch and delete the sole surviving
-    state."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from lens_sds_batch_spark.plans.merge import merge_into
-
-    target = str(tmp_path / "t")
-    spark.createDataFrame(
-        [("k1", 1, "a", False)], "k string, pri int, v string, dead boolean"
-    ).write.parquet(target)
-    # crash simulation: target renamed aside, nothing installed
-    shutil.move(target, target + ".__old")
-
-    updates = spark.createDataFrame(
-        [("k2", 2, "b", False)], "k string, pri int, v string, dead boolean"
-    )
-    res = merge_into(
-        spark, target, updates, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
-    )
-    rows = {(r["k"], r["v"]) for r in spark.read.parquet(target).collect()}
-    # BOTH the recovered old state and the new batch survive
-    assert rows == {("k1", "a"), ("k2", "b")} and res["rows"] == 2
-
-
 def test_merge_into_replaces_empty_target_dir(spark, tmp_path):
-    """r6 review / ADVICE r7: a pre-existing target path that is not
-    readable parquet but still EXISTS (the empty-directory leftover)
-    reads as current=None, yet occupies the rename destination.
-    merge_into must move it aside and install the merged state —
-    renaming onto an existing directory nests on HDFS (silent data
-    loss) or fails on local FS.  (A directory holding actual non-
-    parquet FILES is different: schema inference raises a read error,
-    which merge_into deliberately propagates — failing loudly beats
-    aside-moving data it cannot identify.)"""
+    """r6 review / ADVICE r7: a pre-existing target path that holds
+    nothing (the empty-directory leftover) is a fresh target: the first
+    merge materializes the manifest table inside it.  (A directory
+    holding anything else is different: merge_into refuses it loudly —
+    failing beats overwriting data it cannot identify.)"""
     import os
 
     from pyspark.sql import functions as F
 
-    from lens_sds_batch_spark.plans.merge import merge_into
+    from lens_sds_batch_spark.plans.merge import merge_into, read_merged_table
 
     target = str(tmp_path / "t")
     os.makedirs(target)  # empty dir: current=None but path exists
@@ -952,10 +834,12 @@ def test_merge_into_replaces_empty_target_dir(spark, tmp_path):
     res = merge_into(
         spark, target, updates, keys=["k"], order_cols=["pri"], is_delete=F.col("dead")
     )
-    rows = {(r["k"], r["v"]) for r in spark.read.parquet(target).collect()}
-    assert rows == {("k1", "a")} and res["rows"] == 1
-    # the empty dir went aside and was cleaned up afterwards
-    assert not os.path.exists(target + ".__old")
+    got = read_merged_table(spark, target)
+    rows = {(r["k"], r["v"]) for r in got.collect()}
+    assert rows == {("k1", "a")} and got.count() == 1
+    assert res["seq"] == 1
+    # the staging sibling was cleaned up afterwards
+    assert not os.path.exists(target + ".__tmp")
 
 
 def test_dispatch_commands_open_multimethod(spark):

@@ -1,14 +1,14 @@
 """Round-13 explicit schema evolution (r12 verdict #1): the operation
 the schema-pin drift refusal points at.  add = NULL-backed column
-append (metadata-only where the layout allows); widen = lossless type
-growth as a full rewrite under the layout's own commit protocol.
+append (a metadata-only manifest commit); widen = lossless type growth
+as a full rewrite committed through the same manifest protocol.
 
 Crash states are constructed by monkeypatching the commit seam, the
 same discipline as test_merge_protocols' kill-point pins.  Reference
 semantics anchor: src/lens/broker.clj:28-51 (the reference validates
 envelope shapes at runtime and delegates entity-schema change to its
 store — evolve_schema supplies that operation for the portable
-flavors).
+store).
 """
 
 from __future__ import annotations
@@ -52,8 +52,6 @@ def _rows(spark, target, **kw):
 
 
 FLAVORS = [
-    pytest.param({}, id="plain"),
-    pytest.param({"num_buckets": 4}, id="bucketed"),
     pytest.param({"num_buckets": 4, "protocol": "manifest"}, id="manifest"),
 ]
 
@@ -67,8 +65,7 @@ def test_add_column_roundtrip_all_flavors(spark, tmp_path, kw):
     _merge(spark, target, [("k1", 1, "a", False), ("k2", 1, "b", False)], **kw)
     res = evolve_schema(spark, target, add={"extra": "string"})
     assert res["added"] == ["extra"] and res["widened"] == {}
-    if kw.get("protocol") == "manifest":
-        assert res["rewritten"] is False  # metadata-only commit
+    assert res["rewritten"] is False  # metadata-only commit
     # pre-evolve rows read the added column as typed NULL
     assert _rows(spark, target) == {
         "k1": (1, "a", None), "k2": (1, "b", None),
@@ -233,32 +230,6 @@ def test_kill_point_metadata_add_manifest(spark, tmp_path, monkeypatch):
     assert _rows(spark, target) == {"k1": (1, "a", None)}
 
 
-def test_kill_point_widen_rename_flavor(spark, tmp_path, monkeypatch):
-    """Crash at the whole-dir swap of a rename-flavor widen: the target
-    is untouched (tmp holds the orphaned rewrite), the replayed
-    evolution's stale-tmp delete clears it, and the replay converges."""
-    target = str(tmp_path / "t")
-    _merge(spark, target, [("k1", 1, "a", False), ("k2", 2, "b", False)],
-           num_buckets=4)
-    before = _rows(spark, target)
-
-    def boom(*a, **kw):
-        raise RuntimeError("kill-point: died before the swap")
-
-    monkeypatch.setattr(merge_mod, "_swap_whole_dir", boom)
-    with pytest.raises(RuntimeError, match="kill-point"):
-        evolve_schema(spark, target, widen={"pri": "bigint"})
-    monkeypatch.undo()
-    assert _rows(spark, target) == before
-    assert dict(read_merged_table(spark, target).dtypes)["pri"] == "int"
-    evolve_schema(spark, target, widen={"pri": "bigint"})
-    assert _rows(spark, target) == before
-    assert dict(read_merged_table(spark, target).dtypes)["pri"] == "bigint"
-    _merge(spark, target, [("k1", 5, "a2", False)],
-           schema="k string, pri bigint, v string, dead boolean")
-    assert _rows(spark, target)["k1"] == (5, "a2")
-
-
 def test_kill_point_compaction_commit(spark, tmp_path, monkeypatch):
     """Crash at the compaction's manifest commit: the table still reads
     the pre-compaction generations, the staged compacted generations
@@ -335,22 +306,25 @@ def test_rebucket_after_metadata_add_conforms(spark, tmp_path):
     """A rebucket between a metadata-only add and the first physical
     write of the new column must conform the old files to the pin (the
     read inside rebucket), not union mixed schemas listing-order-
-    dependently — both flavors."""
-    for kw in ({"num_buckets": 4}, {"num_buckets": 4, "protocol": "manifest"}):
-        target = str(
-            tmp_path / ("m" if kw.get("protocol") else "r")
-        )
-        _merge(spark, target, [("k1", 1, "a", False), ("k2", 1, "b", False)], **kw)
-        evolve_schema(spark, target, add={"extra": "string"})
-        rebucket(spark, target, 2)
-        assert _rows(spark, target) == {"k1": (1, "a", None), "k2": (1, "b", None)}
-        _merge(spark, target, [("k3", 2, "c", False, "z")], schema=SCHEMA_EXT)
-        assert _rows(spark, target)["k3"] == (2, "c", "z")
+    dependently."""
+    target = str(tmp_path / "t")
+    _merge(spark, target, [("k1", 1, "a", False), ("k2", 1, "b", False)],
+           num_buckets=4)
+    evolve_schema(spark, target, add={"extra": "string"})
+    rebucket(spark, target, 2)
+    assert _rows(spark, target) == {"k1": (1, "a", None), "k2": (1, "b", None)}
+    _merge(spark, target, [("k3", 2, "c", False, "z")], schema=SCHEMA_EXT)
+    assert _rows(spark, target)["k3"] == (2, "c", "z")
 
 
 def test_no_table_plain_refuses(spark, tmp_path):
     with pytest.raises(ValueError, match="no table at"):
         evolve_schema(spark, str(tmp_path / "missing"), add={"x": "int"})
+    # a plain parquet dir is not a merge target: refused, never rewritten
+    plain = str(tmp_path / "plain")
+    spark.createDataFrame([("k1", 1, "a", False)], SCHEMA).write.parquet(plain)
+    with pytest.raises(ValueError, match="not a manifest-commit target"):
+        evolve_schema(spark, plain, add={"x": "int"})
 
 
 def test_add_complex_typed_column(spark, tmp_path):

@@ -1349,53 +1349,15 @@ def test_requeue_loop_replayed_epoch_counts_once(spark, tmp_path):
     assert metrics.get("requeued", 0) == 0
 
 
-def test_foreach_batch_bucketed_merge_into(spark, stream_dir, tmp_path):
-    """r11: the bucketed merge_into as a streaming foreachBatch sink —
-    the designed 100 TB command-sink shape (each micro-batch rewrites
-    only its touched bucket dirs instead of the whole state table).
-    Semantics pinned against a single batch apply_lww over the full
-    source: LWW per user_id by (ts, event_id), at-least-once
-    redelivery collapsed by the deterministic ordering."""
-    from lens_sds_batch_spark.plans.merge import apply_lww, merge_into
-
-    target = str(tmp_path / "bucketed_entity_state")
-    engines = []
-
-    def sink(batch_df, _epoch):
-        res = merge_into(
-            spark, target, batch_df,
-            keys=["user_id"],
-            order_cols=["ts", "event_id"],
-            is_delete=F.lit(False),
-            num_buckets=8,
-        )
-        engines.append(res["engine"])
-
-    stream = read_event_stream(spark, stream_dir, max_files_per_trigger=1)
-    q = stream.writeStream.foreachBatch(sink).start()
-    q.processAllAvailable()
-    q.stop()
-
-    # first micro-batch materializes the layout; later ones are pruned
-    assert engines[0] == "parquet-swap"
-    assert len(engines) >= 2 and all(e == "parquet-bucketed" for e in engines[1:])
-
-    got = spark.read.parquet(target).select("user_id", "event_id", "ts")
-    want = apply_lww(
-        spark.read.parquet(stream_dir),
-        keys=["user_id"],
-        order_cols=[F.col("ts"), F.col("event_id")],
-        is_delete=F.lit(False),
-    ).select("user_id", "event_id", "ts")
-    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
-
-
 def test_foreach_batch_manifest_merge_into(spark, stream_dir, tmp_path):
-    """r12 twin of the bucketed sink test for the manifest-commit
-    protocol — the object-store-safe command-sink shape.  Every
-    micro-batch (including the first) reports parquet-manifest, the
-    sequence advances once per data-bearing trigger, and the resolved
-    state equals the single-batch apply_lww over the full source."""
+    """The bucketed merge_into as a streaming foreachBatch sink — the
+    designed 100 TB, object-store-safe command-sink shape (each
+    micro-batch rewrites only its touched buckets and commits one
+    manifest).  Every micro-batch (including the first) reports
+    parquet-manifest, the sequence advances once per data-bearing
+    trigger, and the resolved state equals the single-batch apply_lww
+    over the full source: LWW per user_id by (ts, event_id), at-least-
+    once redelivery collapsed by the deterministic ordering."""
     from lens_sds_batch_spark.plans.merge import (
         apply_lww,
         merge_into,
