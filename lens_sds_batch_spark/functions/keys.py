@@ -21,9 +21,13 @@ whole-stage-codegen friendly — NO Python UDF in the hot path):
   payload (``hex(ns) || name-string``), used by every oracle-checked
   query because the DuckDB in this environment (v1.0.0) has ``md5`` but
   no ``sha1`` and its ``md5`` only accepts VARCHAR.  Same layout
-  (version nibble ``3``, RFC variant), same determinism contract.
-  :func:`duck_uuid3_sql` emits the equivalent DuckDB SQL snippet so the
-  oracle computes the *identical* string.
+  (version nibble ``3``, RFC variant), same determinism contract.  The
+  DuckDB oracle computes the *identical* string with
+  ``oracle.duck_uuid3`` / ``oracle.duck_fmt``.
+
+:func:`keyfn` maps a flavor name to its column builder.  Command ids
+(A18) are these same builders applied to a hash payload built by
+``plans/commands._payload``.
 
 Name-byte encoding (mirrors clj-uuid + the reference's extension):
 keywords encode as their ``str`` form *including the leading colon*;
@@ -90,7 +94,7 @@ def uuid5_py(ns: str, parts: Iterable) -> str:
 
 def uuid3_str_py(ns: str, parts: Iterable[str]) -> str:
     """md5 string-payload flavor — must match :func:`uuid3_str_col` and
-    :func:`duck_uuid3_sql` exactly."""
+    the oracle's ``duck_uuid3`` exactly."""
     payload = uuid.UUID(ns).hex + "".join(str(p) for p in parts)
     h = hashlib.md5(payload.encode("utf-8")).hexdigest()
     variant = _VARIANT_MAP[int(h[16], 16)]
@@ -389,48 +393,9 @@ def uuid3_str_col(ns: Column | str, parts: list, on_null: str = "error") -> Colu
     return _fmt_uuid(F.md5(payload.cast("binary")), "3")
 
 
-# ---------------------------------------------------------------------------
-# DuckDB SQL emitters (oracle parity)
-# ---------------------------------------------------------------------------
-
-def duck_uuid3_sql(ns_sql: str, part_sqls: list[str]) -> str:
-    """DuckDB SQL expression computing the same string as
-    :func:`uuid3_str_col`. ``ns_sql``/``part_sqls`` are SQL fragments."""
-    payload = " || ".join(
-        [f"lower(replace(({ns_sql}), '-', ''))"] + [f"CAST(({p}) AS VARCHAR)" for p in part_sqls]
-    )
-    h = f"md5({payload})"
-    return (
-        f"(substr({h},1,8) || '-' || substr({h},9,4) || '-3' || substr({h},14,3)"
-        f" || '-' || translate(substr({h},17,1), '{_HEX}', '{_VARIANT_MAP}')"
-        f" || substr({h},18,3) || '-' || substr({h},21,12))"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Command-id hashing (A18): id = hash(batch_cmd_id, name ++ flatten(sorted params))
-# ---------------------------------------------------------------------------
-
-def cmd_id_col(batch_cmd_id: Column | str, name: str, params: dict) -> Column:
-    """Deterministic command id, oracle flavor (uuid3_str).
-
-    ``name`` is the keyword-style command name (e.g.
-    ``odm-import/insert-subject``); ``params`` maps param name ->
-    Column/str.  Params are flattened in sorted-key order with the name
-    prepended — exactly the reference's ``gen-cmd-id``
-    (``import_clinical_data.clj:288-289``).
-    """
-    parts: list = [":" + name]
-    for k in sorted(params):
-        parts.append(":" + k)
-        parts.append(params[k])
-    return uuid3_str_col(batch_cmd_id, parts)
-
-
-def duck_cmd_id_sql(batch_cmd_id_sql: str, name: str, params: dict[str, str]) -> str:
-    """DuckDB twin of :func:`cmd_id_col` (param values are SQL frags)."""
-    parts = [f"':{name}'"]
-    for k in sorted(params):
-        parts.append(f"':{k}'")
-        parts.append(params[k])
-    return duck_uuid3_sql(batch_cmd_id_sql, parts)
+def keyfn(flavor: str):
+    """The uuid column builder of an id flavor — the one flavor map the
+    command generators and the fused derivation share: ``'md5'`` =
+    oracle-checkable :func:`uuid3_str_col`, ``'sha1'`` = RFC-4122
+    UUIDv5 :func:`uuid5_col` with reference byte-parity."""
+    return {"md5": uuid3_str_col, "sha1": uuid5_col}[flavor]

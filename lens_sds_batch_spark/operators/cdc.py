@@ -276,16 +276,16 @@ def entity_state_subjects(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Level pushdown: only subject-level commands feed this merge, and
     subject commands are independent of descendant levels (cascade
-    gating flows parent→child, never back) — so the fused derivation
-    emits JUST the subjects level: a customer scan + per-row tx
-    resolution, no lineitem join, no command-id hashing (ids aren't
-    merge inputs).  The round-1 form regenerated the full 5-level
+    gating flows parent→child, never back) — so this reads JUST the
+    derived subjects level (``odm.resolved_subjects``): a customer
+    scan + per-row tx resolution, no lineitem join, no command-id
+    hashing (ids aren't merge inputs).  The round-1 form regenerated the full 5-level
     command stream and filtered it (29 shuffles for a 1-level answer).
     The oracle has always taken this shape (SUBJECT_TX over customer).
     """
-    from ..plans.odm import derive_odm_resolved
+    from ..plans.odm import resolved_subjects
 
-    subj = derive_odm_resolved(spark, sf_dir).subjects
+    subj = resolved_subjects(spark, sf_dir)
     subj_cmds = subj.where(F.col("rtx").isin("insert", "upsert", "remove")).select(
         "study_oid",
         "subject_key",
@@ -386,7 +386,7 @@ def entity_state_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain applied to the store).
     """
     from ..plans.merge import merge_into, read_merged_table, rebucket
-    from ..plans.odm import derive_odm_resolved
+    from ..plans.odm import resolved_subjects
 
     target = _merge_scratch_target("entity_state_bucketed", sf_dir)
     cust = load_table(spark, sf_dir, "customer")
@@ -397,7 +397,7 @@ def entity_state_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("priority"), F.lit("v0").alias("version"),
         F.lit(False).alias("is_remove"),
     )
-    b2 = derive_odm_resolved(spark, sf_dir).subjects.where(
+    b2 = resolved_subjects(spark, sf_dir).where(
         F.col("rtx").isin("insert", "upsert", "remove")
     ).select(
         "study_oid", "subject_key",
@@ -627,7 +627,7 @@ def entity_state_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty-input totality (the empty-corpus pytest drives every
         # query on zero-row tables): nothing to reconstruct, but the
         # feed must agree that nothing changed
-        if ch is not None and ch.count() != 0:
+        if ch.count() != 0:
             raise AssertionError(
                 "change feed non-empty on an empty table (witness)"
             )

@@ -30,9 +30,9 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.keys import NIL_UUID, guard_payload, uuid3_str_col, uuid5_col
+from ..functions.keys import NIL_UUID, guard_payload, keyfn
 from ..session import local_ckpt
-from .odm import OdmTables
+from .odm import IG_OID, OdmTables
 
 
 # sentinel for generate_commands(batch_cmd_id=...): derive the batch
@@ -85,7 +85,8 @@ def per_file_batch_cmd_id(flavor: str = "md5") -> Column:
     commands namespaced under its own deterministic batch id — a pure
     projection, no join, so the multi-file path costs nothing extra at
     scale."""
-    return _keyfn(flavor)(NIL_UUID, [F.lit("batch-cmd"), F.col("file_oid")])
+    return keyfn(flavor)(NIL_UUID, [F.lit("batch-cmd"), F.col("file_oid")])
+
 
 COMMAND_COLUMNS = (
     "cmd_id",
@@ -104,6 +105,8 @@ COMMAND_COLUMNS = (
     "item_id",
 )
 
+# each level's OID path: its commands' path columns, and the join keys
+# of its child level's tx resolution
 _PATH = {
     "subjects": ["file_oid", "study_oid", "subject_key"],
     "study_events": ["file_oid", "study_oid", "subject_key", "study_event_oid"],
@@ -111,65 +114,46 @@ _PATH = {
     "item_groups": [
         "file_oid", "study_oid", "subject_key", "study_event_oid", "form_oid", "item_group_oid",
     ],
+    "items": [
+        "file_oid", "study_oid", "subject_key", "study_event_oid", "form_oid", "item_group_oid",
+        "item_oid",
+    ],
 }
 
-
-def resolve_tx(odm: OdmTables) -> OdmTables:
-    """Add ``rtx`` (resolved tx-type) per level; prune descendants of
-    removed/ nodes (they are never visited — A14)."""
-    subjects = odm.subjects.withColumn("rtx", F.coalesce(F.col("tx_type"), F.lit("insert")))
-
-    def child_resolve(child: DataFrame, parent: DataFrame, keys: list[str]) -> DataFrame:
-        p = parent.where(F.col("rtx") != "remove").select(*keys, F.col("rtx").alias("parent_rtx"))
-        return (
-            child.join(p, keys, "inner")
-            .withColumn("rtx", F.coalesce(F.col("tx_type"), F.col("parent_rtx")))
-            .drop("parent_rtx")
-        )
-
-    study_events = child_resolve(odm.study_events, subjects, _PATH["subjects"])
-    forms = child_resolve(odm.forms, study_events, _PATH["study_events"])
-    item_groups = child_resolve(odm.item_groups, forms, _PATH["forms"])
-    items = child_resolve(odm.items, item_groups, _PATH["item_groups"])
-    return OdmTables(odm.files, subjects, study_events, forms, item_groups, items)
-
-
-def _keyfn(flavor: str):
-    """'md5' = oracle-checkable uuid3 string flavor; 'sha1' = RFC-4122
-    UUIDv5 with reference byte-parity (functions/keys.py)."""
-    return {"md5": uuid3_str_col, "sha1": uuid5_col}[flavor]
-
-
-def with_entity_ids(df: DataFrame, upto: str, flavor: str = "md5") -> DataFrame:
-    """Chain of deterministic ids down the OID path (SURVEY.md §1.1).
-
-    Built stepwise with withColumn so Catalyst keeps one hash per level
-    (CollapseProject won't inline non-cheap exprs referenced 6x)."""
-    key = _keyfn(flavor)
-    df = df.withColumn("study_id", key(NIL_UUID, [F.col("study_oid")]))
-    levels = [
-        ("subject_id", "study_id", "subject_key"),
-        ("study_event_id", "subject_id", "study_event_oid"),
-        ("form_id", "study_event_id", "form_oid"),
-        ("item_group_id", "form_id", "item_group_oid"),
-        ("item_id", "item_group_id", "item_oid"),
-    ]
-    stop = {
-        "subjects": "subject_id",
-        "study_events": "study_event_id",
-        "forms": "form_id",
-        "item_groups": "item_group_id",
-        "items": "item_id",
-    }[upto]
-    for out, ns, part in levels:
-        df = df.withColumn(out, key(F.col(ns), [F.col(part)]))
-        if out == stop:
-            break
-    return df
+# The one command rule per level (the reference's per-node constructors,
+# import_clinical_data.clj:24-69): entity, hashed params (param -> source
+# column; every level also hashes file-oid) and the parent id column.
+# Items hash a per-verb payload instead (_item_rule).
+_LEVELS = {
+    "subjects": ("subject", {"study-id": "study_id", "subject-key": "subject_key"}, "study_id"),
+    "study_events": (
+        "study-event",
+        {"subject-id": "subject_id", "study-event-oid": "study_event_oid"},
+        "subject_id",
+    ),
+    "forms": ("form", {"study-event-id": "study_event_id", "form-oid": "form_oid"}, "study_event_id"),
+    "item_groups": (
+        "item-group", {"form-id": "form_id", "item-group-oid": "item_group_oid"}, "form_id",
+    ),
+    "items": ("item", None, "item_group_id"),
+}
 
 
 def _null(name):
     return F.lit(None).cast("string").alias(name)
+
+
+def _col_or_lit(v: str | Column) -> Column:
+    return v if isinstance(v, Column) else F.lit(v)
+
+
+def _namespace(batch_cmd_id: str | Column, flavor: str) -> Column:
+    """The cmd-id namespace column of a ``batch_cmd_id`` argument (see
+    :func:`generate_commands`); :data:`PER_FILE` resolves here, once,
+    with the command-hash flavor."""
+    if isinstance(batch_cmd_id, str) and batch_cmd_id == PER_FILE:
+        return per_file_batch_cmd_id(flavor)
+    return _col_or_lit(batch_cmd_id)
 
 
 # params whose values are entity uuids — clj-uuid encodes these as their
@@ -225,88 +209,107 @@ def _payload(name_col, params: dict, flavor: str = "md5"):
     return F.concat(*parts)
 
 
-def _level_commands(df, batch_cmd_id, sub, entity, params, out, item_level=False, flavor="md5"):
-    """ONE projection per hierarchy level: the verb is resolved per-row
-    (CASE on rtx) instead of fanning out per-verb branches — a single
-    scan of the level instead of three, which is what survives a 100x
-    scale-up."""
-    name = F.concat(F.lit("odm-import/"), F.col("rtx"), F.lit(f"-{entity}"))
-    hp = dict(params)
+def _name(entity: str, rtx: Column) -> Column:
+    """The command name, its verb resolved per row from ``rtx``."""
+    return F.concat(F.lit("odm-import/"), rtx, F.lit(f"-{entity}"))
+
+
+def _level_payload(level: str, name: Column, flavor: str, **cols: Column) -> Column:
+    """Hash payload of an interior level's command: the level's params
+    (a source column, unless ``cols`` overrides it, e.g. with a literal
+    OID) plus file-oid."""
+    _, params, _ = _LEVELS[level]
+    hp = {k: cols.get(c, F.col(c)) for k, c in params.items()}
     hp["file-oid"] = F.col("file_oid")
-    if not item_level:
-        df = df.where(F.col("rtx") != "update")  # interior update: cascade only
-        payload = _payload(name, hp, flavor)
-    else:
-        # items: insert/upsert carry {item-group-id,item-oid,data-type,value};
-        # update targets {item-id,data-type,value}; remove drops the value
-        ins = _payload(name, hp, flavor)
-        upd = _payload(
-            name,
-            {
-                "data-type": F.col("data_type"),
-                "file-oid": F.col("file_oid"),
-                "item-id": F.col("item_id"),
-                "value": F.col("value_canon"),
-            },
-            flavor,
-        )
-        rem = _payload(
-            name,
-            {
-                "file-oid": F.col("file_oid"),
-                "item-group-id": F.col("item_group_id"),
-                "item-oid": F.col("item_oid"),
-            },
-            flavor,
-        )
-        payload = (
-            F.when(F.col("rtx") == "update", upd)
-            .when(F.col("rtx") == "remove", rem)
-            .otherwise(ins)
-        )
-    batch_ns = batch_cmd_id if isinstance(batch_cmd_id, Column) else F.lit(batch_cmd_id)
-    sub_col = sub if isinstance(sub, Column) else F.lit(sub)
-    # NULL-payload guard (ADVICE r4; shared helper since r6): a
-    # malformed non-hex uuid param nulls the sha1 payload — without a
-    # guard the uuid formatter folds that into one shared degenerate id
-    # (empty string), silently breaking the A18 idempotency/dedupe
-    # contract.  See functions/keys.guard_payload for the
-    # payload-not-uuid placement rationale.
-    guarded_payload = guard_payload(
+    return _payload(name, hp, flavor)
+
+
+def _item_rule(name, rtx, flavor, item_group_id, item_oid, data_type, value, item_id):
+    """The item command rule: insert/upsert hash {item-group-id,
+    item-oid, data-type, value}; update targets {item-id, data-type,
+    value}; remove drops the value; every verb also hashes file-oid.
+    Returns the per-row payload and the item-only output columns."""
+    fo = F.col("file_oid")
+    ins = _payload(
+        name,
+        {"data-type": data_type, "item-group-id": item_group_id, "item-oid": item_oid,
+         "value": value, "file-oid": fo},
+        flavor,
+    )
+    upd = _payload(
+        name, {"data-type": data_type, "file-oid": fo, "item-id": item_id, "value": value}, flavor
+    )
+    rem = _payload(
+        name, {"file-oid": fo, "item-group-id": item_group_id, "item-oid": item_oid}, flavor
+    )
+    payload = F.when(rtx == "update", upd).when(rtx == "remove", rem).otherwise(ins)
+    out = {
+        "data_type": F.when(rtx != "remove", data_type),
+        "value_canon": F.when(rtx != "remove", value),
+        "item_id": F.when(rtx == "update", item_id),
+    }
+    return payload, out
+
+
+def _cmd_id(payload: Column, ns: Column, flavor: str, entity: str | None = None) -> Column:
+    """The command id (A18): ``payload`` hashed into the namespace
+    ``ns`` with the flavor's uuid builder.
+
+    NULL-payload guard (ADVICE r4; shared helper since r6): a malformed
+    non-hex uuid param nulls the sha1 payload — without a guard the uuid
+    formatter folds that into one shared degenerate id (empty string),
+    silently breaking the A18 idempotency/dedupe contract.  The guard
+    raises with the level (when known) and file_oid; see
+    functions/keys.guard_payload for the payload-not-uuid placement
+    rationale.  ``on_null="empty"`` because this contextual guard makes
+    the formatter's generic one redundant."""
+    at = f" at {entity} level" if entity else ""
+    guarded = guard_payload(
         payload,
         F.concat(
-            F.lit(f"generate_commands: NULL cmd-id payload at {entity} level "
-                  "(malformed uuid param?) file_oid="),
+            F.lit(f"generate_commands: NULL cmd-id payload{at} (malformed uuid param?) file_oid="),
             F.coalesce(F.col("file_oid"), F.lit("<NULL>")),
         ),
         cast_type="binary" if flavor == "sha1" else "string",
     )
-    cols = [
-        # on_null="empty": guarded_payload above already raises with a
-        # CONTEXTUAL message (entity level + file_oid); the formatter's
-        # default generic guard would be a redundant second coalesce.
-        _keyfn(flavor)(batch_ns, [guarded_payload], on_null="empty").alias("cmd_id"),
-        name.alias("name"),
-        sub_col.alias("sub"),
-    ]
-    for c in COMMAND_COLUMNS[3:]:
-        if c not in out:
-            cols.append(_null(c))
-        elif item_level and c == "item_id":
-            cols.append(F.when(F.col("rtx") == "update", F.col("item_id")).alias(c))
-        elif item_level and c in ("data_type", "value_canon"):
-            cols.append(F.when(F.col("rtx") != "remove", F.col(out[c])).alias(c))
-        else:
-            cols.append(F.col(out[c]).alias(c))
+    return keyfn(flavor)(ns, [guarded], on_null="empty")
+
+
+def _level_commands(df: DataFrame, level: str, ns: Column, sub: Column, flavor: str) -> DataFrame:
+    """ONE projection per hierarchy level: the verb is resolved per-row
+    (CASE on rtx) instead of fanning out per-verb branches — a single
+    scan of the level instead of three, which is what survives a 100x
+    scale-up."""
+    entity, params, parent = _LEVELS[level]
+    rtx = F.col("rtx")
+    name = _name(entity, rtx)
+    out = {c: F.col(c) for c in _PATH[level]}
+    out["parent_id"] = F.col(parent)
+    if params is None:
+        payload, item_out = _item_rule(
+            name, rtx, flavor, F.col("item_group_id"), F.col("item_oid"),
+            F.col("data_type"), F.col("value_canon"), F.col("item_id"),
+        )
+        out.update(item_out)
+    else:
+        df = df.where(rtx != "update")  # interior update: cascade only
+        payload = _level_payload(level, name, flavor)
+    cols = [_cmd_id(payload, ns, flavor, entity).alias("cmd_id"), name.alias("name"), sub.alias("sub")]
+    cols += [out[c].alias(c) if c in out else _null(c) for c in COMMAND_COLUMNS[3:]]
     return df.select(*cols)
 
 
 def resolve_and_identify(odm: OdmTables, flavor: str = "md5") -> OdmTables:
-    """resolve_tx + entity ids in one top-down pass: each level's
-    resolve join carries the PARENT's id down, so a level computes only
-    its own hash (items: 1 chain hash instead of 6 — the id chain is
-    evaluated once per ancestor row, not once per descendant row)."""
-    key = _keyfn(flavor)
+    """tx resolution + entity ids in one top-down pass (A10, A14, A17).
+
+    Each level joins its parent on the OID path: ``rtx =
+    coalesce(tx_type, parent rtx)`` (subjects default to insert), and
+    the children of a removed node are pruned by the inner join against
+    the parent's non-remove rows (remove does not cascade).  The join
+    carries the PARENT's id down, so a level computes only its own hash
+    (items: 1 chain hash instead of 6 — the id chain is evaluated once
+    per ancestor row, not once per descendant row)."""
+    key = keyfn(flavor)
     subjects = (
         odm.subjects.withColumn("rtx", F.coalesce(F.col("tx_type"), F.lit("insert")))
         .withColumn("study_id", key(NIL_UUID, [F.col("study_oid")]))
@@ -338,7 +341,9 @@ def generate_commands(
     persist: bool = True,
     flavor: str = "md5",
 ) -> DataFrame:
-    """The full per-level command set as one flat DataFrame.
+    """The full per-level command set of NORMALIZED levels as one flat
+    DataFrame (:func:`resolve_and_identify`, then one projection per
+    level).
 
     ``batch_cmd_id`` is the id-namespace: a scalar uuid string (single
     batch command), the :data:`PER_FILE` sentinel (multi-file batch —
@@ -360,78 +365,13 @@ def generate_commands(
     canonical string form, where the reference hands clj-uuid the typed
     Long/Double/DateTime object — so real-world cmd ids for
     integer/float/datetime item values may differ.  Not DuckDB-checkable
-    (this DuckDB lacks sha1); pinned in tests instead.
-
-    Pre-resolved input (levels already carrying ``rtx`` + entity ids,
-    e.g. from ``odm.derive_odm_resolved``'s join-free fused path) is
-    detected and used as-is — no resolve joins, no level persists."""
-    if isinstance(batch_cmd_id, str) and batch_cmd_id == PER_FILE:
-        batch_cmd_id = per_file_batch_cmd_id(flavor)
-    if "rtx" in odm.subjects.columns:
-        r = odm  # fused/denormalized path: already resolved + identified
-        persist = False
-    else:
-        r = resolve_and_identify(odm, flavor)
-    subj, se, form, ig, item = r.subjects, r.study_events, r.forms, r.item_groups, r.items
+    (this DuckDB lacks sha1); pinned in tests instead."""
+    r = resolve_and_identify(odm, flavor)
     if persist:
-        for df in (subj, se, form, ig):
+        for df in (r.subjects, r.study_events, r.forms, r.item_groups):
             df.persist()
-
-    out = [
-        _level_commands(
-            subj, batch_cmd_id, sub, "subject",
-            {"study-id": F.col("study_id"), "subject-key": F.col("subject_key")},
-            {"file_oid": "file_oid", "study_oid": "study_oid", "subject_key": "subject_key", "parent_id": "study_id"},
-            flavor=flavor,
-        ),
-        _level_commands(
-            se, batch_cmd_id, sub, "study-event",
-            {"subject-id": F.col("subject_id"), "study-event-oid": F.col("study_event_oid")},
-            {
-                "file_oid": "file_oid", "study_oid": "study_oid", "subject_key": "subject_key",
-                "study_event_oid": "study_event_oid", "parent_id": "subject_id",
-            },
-            flavor=flavor,
-        ),
-        _level_commands(
-            form, batch_cmd_id, sub, "form",
-            {"study-event-id": F.col("study_event_id"), "form-oid": F.col("form_oid")},
-            {
-                "file_oid": "file_oid", "study_oid": "study_oid", "subject_key": "subject_key",
-                "study_event_oid": "study_event_oid", "form_oid": "form_oid",
-                "parent_id": "study_event_id",
-            },
-            flavor=flavor,
-        ),
-        _level_commands(
-            ig, batch_cmd_id, sub, "item-group",
-            {"form-id": F.col("form_id"), "item-group-oid": F.col("item_group_oid")},
-            {
-                "file_oid": "file_oid", "study_oid": "study_oid", "subject_key": "subject_key",
-                "study_event_oid": "study_event_oid", "form_oid": "form_oid",
-                "item_group_oid": "item_group_oid", "parent_id": "form_id",
-            },
-            flavor=flavor,
-        ),
-        _level_commands(
-            item, batch_cmd_id, sub, "item",
-            {
-                "data-type": F.col("data_type"),
-                "item-group-id": F.col("item_group_id"),
-                "item-oid": F.col("item_oid"),
-                "value": F.col("value_canon"),
-            },
-            {
-                "file_oid": "file_oid", "study_oid": "study_oid", "subject_key": "subject_key",
-                "study_event_oid": "study_event_oid", "form_oid": "form_oid",
-                "item_group_oid": "item_group_oid", "item_oid": "item_oid",
-                "data_type": "data_type", "value_canon": "value_canon",
-                "parent_id": "item_group_id", "item_id": "item_id",
-            },
-            item_level=True,
-            flavor=flavor,
-        ),
-    ]
+    ns, sub = _namespace(batch_cmd_id, flavor), _col_or_lit(sub)
+    out = [_level_commands(getattr(r, level), level, ns, sub, flavor) for level in _LEVELS]
     return reduce(lambda a, b: a.unionByName(b), out)
 
 
@@ -442,27 +382,26 @@ def generate_commands_single_pass(
     batch_cmd_id: str | Column,
     sub: str | Column,
     item_attrs: list[tuple[str, str]],
-    ig_oid: str = "IG1",
     flavor: str = "md5",
 ) -> DataFrame:
-    """``generate_commands`` for a DENORMALIZED form-grain source, with
-    the forms / item-groups / items arms fused into ONE pass (r15 —
-    guide §2.4/§5): the generic fused path reads a persisted form-grain
-    frontier three times (cache build + 3 InMemoryTableScan consumers,
-    ~9 AQE jobs at sf0.1); here each form-grain row emits its form,
-    item-group and item command structs in a single projection
-    (array → filter(keep) → inline), so the window+join frontier is
-    computed exactly once with no cache materialization and no
-    multi-job union fan.  Row-identical to
-    ``generate_commands(derive_odm_resolved(...))`` — pinned by
+    """:func:`generate_commands` for a DENORMALIZED form-grain source,
+    with the forms / item-groups / items arms fused into ONE pass (r15 —
+    guide §2.4/§5): each form-grain row emits its form, item-group and
+    item command structs in a single projection (array → filter(keep)
+    → inline), so the window+join frontier is computed exactly once
+    with no cache materialization and no multi-job union fan.  The
+    subject and study-event arms are the generic per-level projections.
+    Row- and schema-identical to ``generate_commands`` over the
+    normalized tree (``odm.derive_odm_from_tpch``) — pinned by
     tests/test_odm_commands.py::test_fused_equals_generic.
 
-    ``denorm`` columns: the five path cols, ``form_tx``/``form_rtx``
-    (resolved), ``study_event_id``/``form_id``, and one ``val_<OID>``
-    canonical-value column per ``(OID, data_type)`` in ``item_attrs``.
-    The derivation contract baked in (same as ``derive_odm_resolved``):
-    one item group ``ig_oid`` per form and neither item groups nor
-    items carry their own tx (both inherit ``form_rtx``).
+    ``subjects`` / ``study_events`` carry ``rtx`` and their entity ids;
+    ``denorm`` columns: the five path cols, ``form_rtx`` (resolved),
+    ``study_event_id``/``form_id``, and one ``val_<OID>`` canonical-value
+    column per ``(OID, data_type)`` in ``item_attrs``.  The derivation
+    contract baked in: one item group :data:`odm.IG_OID` per form and
+    neither item groups nor items carry their own tx (both inherit
+    ``form_rtx``).
 
     Hash volume is unchanged vs the generic path: one cmd-id hash per
     SURVIVING command row (hashed after the keep-filter), the
@@ -471,32 +410,15 @@ def generate_commands_single_pass(
     in its own projection (CollapseProject keeps a non-cheap alias
     referenced 12x) so the CASE branches reference a column, not a
     re-evaluated md5 (the r8 ivf_knn CSE lesson)."""
-    if isinstance(batch_cmd_id, str) and batch_cmd_id == PER_FILE:
-        batch_cmd_id = per_file_batch_cmd_id(flavor)
-    key = _keyfn(flavor)
+    ns, sub = _namespace(batch_cmd_id, flavor), _col_or_lit(sub)
+    key = keyfn(flavor)
 
-    subj_arm = _level_commands(
-        subjects, batch_cmd_id, sub, "subject",
-        {"study-id": F.col("study_id"), "subject-key": F.col("subject_key")},
-        {"file_oid": "file_oid", "study_oid": "study_oid", "subject_key": "subject_key", "parent_id": "study_id"},
-        flavor=flavor,
-    )
-    se_arm = _level_commands(
-        study_events, batch_cmd_id, sub, "study-event",
-        {"subject-id": F.col("subject_id"), "study-event-oid": F.col("study_event_oid")},
-        {
-            "file_oid": "file_oid", "study_oid": "study_oid", "subject_key": "subject_key",
-            "study_event_oid": "study_event_oid", "parent_id": "subject_id",
-        },
-        flavor=flavor,
-    )
+    subj_arm = _level_commands(subjects, "subjects", ns, sub, flavor)
+    se_arm = _level_commands(study_events, "study_events", ns, sub, flavor)
 
     rtx = F.col("form_rtx")
-    path = {c: F.col(c) for c in ("file_oid", "study_oid", "subject_key", "study_event_oid", "form_oid")}
+    path = {c: F.col(c) for c in _PATH["forms"]}
     nulls = {c: _null(c) for c in COMMAND_COLUMNS[3:]}
-
-    def name_of(entity: str) -> Column:
-        return F.concat(F.lit("odm-import/"), rtx, F.lit(f"-{entity}"))
 
     def cmd_struct(keep: Column, name: Column, payload: Column, **out: Column) -> Column:
         fields = [keep.alias("keep"), name.alias("name"), payload.alias("payload")]
@@ -504,75 +426,47 @@ def generate_commands_single_pass(
             fields.append((out.get(c) if c in out else nulls[c]).alias(c))
         return F.struct(*fields)
 
-    form_name = name_of("form")
+    form_name = _name("form", rtx)
     form_struct = cmd_struct(
         rtx != "update",
         form_name,
-        _payload(
-            form_name,
-            {"study-event-id": F.col("study_event_id"), "form-oid": F.col("form_oid"),
-             "file-oid": F.col("file_oid")},
-            flavor,
-        ),
+        _level_payload("forms", form_name, flavor),
         **path,
         parent_id=F.col("study_event_id"),
     )
 
-    ig_name = name_of("item-group")
+    ig_name = _name("item-group", rtx)
     ig_struct = cmd_struct(
         (rtx != "remove") & (rtx != "update"),
         ig_name,
-        _payload(
-            ig_name,
-            {"form-id": F.col("form_id"), "item-group-oid": F.lit(ig_oid),
-             "file-oid": F.col("file_oid")},
-            flavor,
-        ),
+        _level_payload("item_groups", ig_name, flavor, item_group_oid=F.lit(IG_OID)),
         **path,
-        item_group_oid=F.lit(ig_oid),
+        item_group_oid=F.lit(IG_OID),
         parent_id=F.col("form_id"),
     )
 
-    item_name = name_of("item")
+    item_name = _name("item", rtx)
     item_structs = []
     for oid, dtype in item_attrs:
-        iid = key(F.col("item_group_id"), [F.lit(oid)])
-        value = F.col(f"val_{oid}")
-        ins = _payload(
-            item_name,
-            {"data-type": F.lit(dtype), "item-group-id": F.col("item_group_id"),
-             "item-oid": F.lit(oid), "value": value, "file-oid": F.col("file_oid")},
-            flavor,
-        )
-        upd = _payload(
-            item_name,
-            {"data-type": F.lit(dtype), "file-oid": F.col("file_oid"),
-             "item-id": iid, "value": value},
-            flavor,
-        )
-        rem = _payload(
-            item_name,
-            {"file-oid": F.col("file_oid"), "item-group-id": F.col("item_group_id"),
-             "item-oid": F.lit(oid)},
-            flavor,
+        payload, item_out = _item_rule(
+            item_name, rtx, flavor, F.col("item_group_id"), F.lit(oid), F.lit(dtype),
+            F.col(f"val_{oid}"), key(F.col("item_group_id"), [F.lit(oid)]),
         )
         item_structs.append(
             cmd_struct(
                 rtx != "remove",
                 item_name,
-                F.when(rtx == "update", upd).when(rtx == "remove", rem).otherwise(ins),
+                payload,
                 **path,
-                item_group_oid=F.lit(ig_oid),
+                item_group_oid=F.lit(IG_OID),
                 item_oid=F.lit(oid),
-                data_type=F.when(rtx != "remove", F.lit(dtype)),
-                value_canon=F.when(rtx != "remove", value),
                 parent_id=F.col("item_group_id"),
-                item_id=F.when(rtx == "update", iid),
+                **item_out,
             )
         )
 
     exploded = (
-        denorm.withColumn("item_group_id", key(F.col("form_id"), [F.lit(ig_oid)]))
+        denorm.withColumn("item_group_id", key(F.col("form_id"), [F.lit(IG_OID)]))
         .select(
             F.inline(
                 F.filter(
@@ -582,22 +476,10 @@ def generate_commands_single_pass(
             )
         )
     )
-
-    batch_ns = batch_cmd_id if isinstance(batch_cmd_id, Column) else F.lit(batch_cmd_id)
-    sub_col = sub if isinstance(sub, Column) else F.lit(sub)
-    guarded_payload = guard_payload(
-        F.col("payload"),
-        F.concat(
-            F.lit("generate_commands: NULL cmd-id payload "
-                  "(malformed uuid param?) file_oid="),
-            F.coalesce(F.col("file_oid"), F.lit("<NULL>")),
-        ),
-        cast_type="binary" if flavor == "sha1" else "string",
-    )
     denorm_arm = exploded.select(
-        _keyfn(flavor)(batch_ns, [guarded_payload], on_null="empty").alias("cmd_id"),
+        _cmd_id(F.col("payload"), ns, flavor).alias("cmd_id"),
         F.col("name"),
-        sub_col.alias("sub"),
+        sub.alias("sub"),
         *[F.col(c) for c in COMMAND_COLUMNS[3:]],
     )
     return subj_arm.unionByName(se_arm).unionByName(denorm_arm)

@@ -382,23 +382,19 @@ def refresh_aggregate(
             **_canon_spec(src, group_keys, aggs), "src_seq": latest,
         }
     }
-    if feed is None:
-        deltas = None
-        n_deltas = 0
-    else:
-        # the emptiness guard rides the checkpoint materialization as an
-        # Observation (r15) — one job instead of checkpoint + take(1)
-        from pyspark.sql import Observation
+    # the emptiness guard rides the checkpoint materialization as an
+    # Observation (r15) — one job instead of checkpoint + take(1)
+    from pyspark.sql import Observation
 
-        obs_d = Observation()
-        deltas = (
-            _delta_aggregate(feed, group_keys, aggs)
-            .observe(obs_d, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_deltas = int(obs_d.get["n"])
+    obs_d = Observation()
+    deltas = (
+        _delta_aggregate(feed, group_keys, aggs)
+        .observe(obs_d, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    n_deltas = int(obs_d.get["n"])
     try:
-        if deltas is None or n_deltas == 0:
+        if n_deltas == 0:
             # metadata commits only (or all deltas netted to zero):
             # advance the cursor with a metadata-only commit — an empty
             # typed batch keeps one code path through merge_into
@@ -437,8 +433,6 @@ def refresh_aggregate(
             ).cast(pin[n]).alias(n)
             for n in aggs
         ]
-        from pyspark.sql import Observation
-
         obs_u = Observation()
         updates = d.join(c, cond, "left").select(
             *[F.col(f"d.`{k}`") for k in group_keys],
@@ -486,8 +480,7 @@ def refresh_aggregate(
             "groups_deleted": int(n_deleted), "dst_seq": res["seq"],
         }
     finally:
-        if deltas is not None:
-            _release_checkpoint(deltas)
+        _release_checkpoint(deltas)
 
 
 def ivm_status(spark, source_path: str, target_path: str) -> dict:
@@ -551,11 +544,11 @@ def _typed_empty_from_pin(spark, target_path: str) -> DataFrame:
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     man = _read_manifest(spark, fs, jvm_path, target_path.rstrip("/"))
-    if man is None or man[2].get("columns") is None:
+    if man is None:
         raise ValueError(
-            f"refresh_aggregate: {target_path} holds no data and no schema "
-            "pin — nothing to type the aggregate from; merge at least one "
-            "schema-pinned commit first"
+            f"refresh_aggregate: {target_path} holds no manifest table — "
+            "nothing to type the aggregate from; merge at least one "
+            "commit first"
         )
     return spark.range(0).select(
         *[F.lit(None).cast(t).alias(c) for c, t in man[2]["columns"].items()]

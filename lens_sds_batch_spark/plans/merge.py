@@ -375,7 +375,7 @@ def merge_into(
         man_seq, _, m = man
         _check_layout_compat(
             tgt, keys, updates, m["keys"], m["key_types"],
-            num_buckets, int(m["num_buckets"]), spec_columns=m.get("columns"),
+            num_buckets, int(m["num_buckets"]), spec_columns=m["columns"],
         )
         return _manifest_merge(
             spark, fs, jvm_path, tgt, updates, keys,
@@ -386,12 +386,10 @@ def merge_into(
 
 def _check_layout_compat(
     target_path, keys, updates, spec_keys, spec_types, num_buckets, spec_n,
-    spec_columns=None,
+    spec_columns,
 ):
     """Key/bucket/dtype validation of a batch against the manifest's
-    pinned layout.  ``spec_columns`` (r12): the full-schema pin; None
-    on pre-pin manifests (validation skipped — those tables predate
-    the pin)."""
+    pinned layout.  ``spec_columns`` (r12): the full-schema pin."""
     if list(keys) != list(spec_keys):
         raise ValueError(
             f"merge_into: target {target_path} is bucketed on keys "
@@ -418,25 +416,6 @@ def _check_layout_compat(
     _check_schema_pin(target_path, spec_columns, upd_types)
 
 
-def _conform_to_pin(df, pinned):
-    """Project ``df`` to the pinned schema (r13; read_changes' mixed-
-    width reads across an evolution): a column in the pin but missing
-    from the files — which is exactly what a METADATA-ONLY ``add``
-    leaves behind (the pin gains the column, existing parquet files do
-    not) — reads as a typed NULL; non-pinned extras (the __bucket
-    partition column) ride along unchanged.  Identity when the layout
-    carries no pin (pre-r12 tables)."""
-    if pinned is None:
-        return df
-    have = set(df.columns)
-    cols = [
-        F.col(c) if c in have else F.lit(None).cast(t).alias(c)
-        for c, t in pinned.items()
-    ]
-    extras = [F.col(c) for c in df.columns if c not in pinned]
-    return df.select(*cols, *extras)
-
-
 def _gen_paths(tgt: str, live: dict) -> list[str]:
     """Directories of the given ``{bucket: gen}`` generations, in
     bucket order."""
@@ -457,17 +436,13 @@ def _pinned_read(spark, paths: list, pinned, base_path: str | None = None):
     pin, the pin IS the schema: live generations always match it
     exactly except for columns a METADATA-ONLY add left behind, which
     the parquet reader null-fills — byte-identical to the previous
-    ``mergeSchema`` + ``_conform_to_pin`` pair (probe: same schema
+    ``mergeSchema`` + conform-to-pin pair (probe: same schema
     incl. the appended partition columns, same rows).  Sites that can
     legitimately see mixed-width files (the widen rewrite's own
-    pre-widen read, read_changes' FROM side) keep ``mergeSchema``.
-    ``pinned=None`` (pre-r12 tables) falls back to the deterministic
-    ``mergeSchema`` union + identity conform, unchanged."""
+    pre-widen read, read_changes' FROM side) keep ``mergeSchema``."""
     r = spark.read
     if base_path is not None:
         r = r.option("basePath", base_path)
-    if pinned is None:
-        return r.option("mergeSchema", "true").parquet(*paths)
     ddl = ", ".join(
         "`" + c.replace("`", "``") + "` " + t for c, t in pinned.items()
     )
@@ -476,13 +451,12 @@ def _pinned_read(spark, paths: list, pinned, base_path: str | None = None):
 
 def _check_schema_pin(target_path, pinned, upd_types) -> None:
     """Refuse a batch whose value schema drifts from ``pinned`` (the
-    manifest's ``columns`` pin).  ``pinned`` None (pre-r12 manifest)
-    skips.  A drifted batch landing in an EMPTY bucket would write a
-    divergent per-bucket schema that reads non-deterministically
-    (unionByName never sees the conflict), and a RETYPED column would
-    silently type-coerce or explode mid-job as a runtime cast error
-    (r12 probe)."""
-    if pinned is None or dict(upd_types) == dict(pinned):
+    manifest's ``columns`` pin).  A drifted batch landing in an EMPTY
+    bucket would write a divergent per-bucket schema that reads
+    non-deterministically (unionByName never sees the conflict), and a
+    RETYPED column would silently type-coerce or explode mid-job as a
+    runtime cast error (r12 probe)."""
+    if dict(upd_types) == dict(pinned):
         return
     pinned, upd_types = dict(pinned), dict(upd_types)
     extra = sorted(set(upd_types) - set(pinned))
@@ -605,7 +579,9 @@ def _read_manifest(spark, fs, jvm_path, target_path: str, as_of_seq: int | None 
     manifest, or None when the target carries no manifest layout.  An
     existing-but-unreadable latest manifest raises loudly: guessing
     would either read stale generations or route keys into the wrong
-    bucket space.
+    bucket space.  So does a manifest without the ``columns`` schema
+    pin: every commit since r12 carries it, and no reader or writer
+    has a pin-less path.
 
     ``as_of_seq`` (r12 snapshot reads) selects the latest manifest with
     ``seq <= as_of_seq`` instead — Delta ``versionAsOf`` semantics.  A
@@ -646,12 +622,20 @@ def _read_manifest(spark, fs, jvm_path, target_path: str, as_of_seq: int | None 
         for field in ("num_buckets", "keys", "key_types", "buckets"):
             if field not in man:
                 raise KeyError(field)
-        return seq, name, man
     except Exception as e:
         raise ValueError(
             f"merge_into: unreadable/corrupt manifest at {path} ({e!r}); "
             "refusing to guess the table state — repair or remove the table"
         ) from e
+    if "columns" not in man:
+        raise ValueError(
+            f"merge_into: manifest {path} carries no schema pin "
+            "('columns'): the table predates the schema pin, which every "
+            "reader and writer requires — read its live generation "
+            "directories with spark.read.parquet and re-merge the rows "
+            "into a new path"
+        )
+    return seq, name, man
 
 
 def _commit_manifest(fs, jvm_path, tgt: str, seq: int, gen: str, man: dict) -> None:
@@ -857,7 +841,7 @@ def _manifest_merge(
             # generations without the added column — the reader
             # null-fills from the pin, no footer-union job
             current = _pinned_read(
-                spark, _gen_paths(tgt, existing), man.get("columns"),
+                spark, _gen_paths(tgt, existing), man["columns"],
                 base_path=tgt,
             ).drop(GEN_COL)
         merged = _lww_union(current, upd_tagged, keys, order_exprs, row_hash)
@@ -959,10 +943,9 @@ def read_merged_table(
     # a listed-but-missing generation is corruption (vacuum bug /
     # tampering): spark.read raises PATH_NOT_FOUND loudly — correct.
     # pinned read (r14-opt): the manifest's own columns pin is the
-    # schema of its live generations (a PRE-pin table falls back to
-    # the deterministic mergeSchema union inside _pinned_read).
+    # schema of its live generations.
     return _pinned_read(
-        spark, _gen_paths(tgt, m["buckets"]), m.get("columns"), base_path=tgt
+        spark, _gen_paths(tgt, m["buckets"]), m["columns"], base_path=tgt
     ).drop(GEN_COL)
 
 
@@ -1022,7 +1005,7 @@ def read_changes(
     target_path: str,
     from_seq: int,
     to_seq: int | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """NET change feed between two committed snapshots of a
     manifest-commit merge target — the Delta Change Data Feed /
     Iceberg incremental-read analog, derived from the protocol's
@@ -1052,9 +1035,8 @@ def read_changes(
     Both seqs use as-of resolution (latest manifest ≤ seq, the
     read_merged_table convention); a seq beyond the newest commit or
     below the vacuum horizon raises there.  ``to_seq=None`` reads the
-    latest commit.  Equal resolved seqs → an EMPTY frame (or None when
-    the target retains neither a schema pin nor any live data to type
-    one — the read_merged_table None-for-empty convention).
+    latest commit.  Equal resolved seqs → an EMPTY frame typed from the
+    TO snapshot's schema pin.
 
     Scale: generation directories are immutable, so a bucket whose
     live generation is the SAME in both manifests provably holds
@@ -1107,8 +1089,8 @@ def read_changes(
             f"read_changes: from_seq resolved to {seq_a}, after to_seq's "
             f"{seq_b} — the feed runs forward; swap the bounds"
         )
-    pin = m_b.get("columns")
-    if pin is not None and CHANGE_TYPE_COL in pin:
+    pin = m_b["columns"]
+    if CHANGE_TYPE_COL in pin:
         raise ValueError(
             f"read_changes: the table schema at {tgt} already carries "
             f"the reserved output column {CHANGE_TYPE_COL!r}"
@@ -1134,53 +1116,33 @@ def read_changes(
     def _side(sel: dict):
         if not sel:
             return None
-        df = _conform_to_pin(
+        df = (
             spark.read.option("basePath", tgt)
             .option("mergeSchema", "true")
             .parquet(*_gen_paths(tgt, sel))
-            .drop(GEN_COL),
-            pin,
-        ).drop(BUCKET_COL)
-        if pin is not None:
-            # pre-widen FROM-side files carry the narrow type; the
-            # widen lattice is lossless-only, so casting up is exact
-            df = df.select(
-                *[F.col(c).cast(t).alias(c) for c, t in pin.items()]
-            )
-        return df
+        )
+        have = set(df.columns)
+        # project to the pin (r13, mixed-width reads across an
+        # evolution): a column a METADATA-ONLY add left out of older
+        # files reads as a typed NULL, and pre-widen FROM-side files
+        # carry the narrow type — the widen lattice is lossless-only,
+        # so casting up is exact
+        return df.select(*[
+            (F.col(c) if c in have else F.lit(None)).cast(t).alias(c)
+            for c, t in pin.items()
+        ])
 
     a_state, b_state = _side(sel_a), _side(sel_b)
     if a_state is None and b_state is None:
-        if pin is not None:
-            return spark.range(0).select(
-                *[F.lit(None).cast(t).alias(c) for c, t in pin.items()],
-                F.lit(None).cast("string").alias(CHANGE_TYPE_COL),
-            )
-        full = read_merged_table(spark, tgt, as_of_seq=seq_b)
-        if full is None:
-            full = read_merged_table(spark, tgt, as_of_seq=seq_a)
-        if full is None:
-            return None  # no pin, no live data on either side
-        return full.drop(BUCKET_COL).limit(0).withColumn(
-            CHANGE_TYPE_COL, F.lit(None).cast("string")
+        return spark.range(0).select(
+            *[F.lit(None).cast(t).alias(c) for c, t in pin.items()],
+            F.lit(None).cast("string").alias(CHANGE_TYPE_COL),
         )
     if a_state is None:
         a_state = b_state.limit(0)
     elif b_state is None:
         b_state = a_state.limit(0)
-    if pin is None and set(a_state.columns) != set(b_state.columns):
-        raise ValueError(
-            f"read_changes: pre-pin generations of {tgt} diverge in "
-            f"columns between seq {seq_a} ({sorted(a_state.columns)}) and "
-            f"seq {seq_b} ({sorted(b_state.columns)}); evolve the table "
-            "explicitly (plans.merge.evolve_schema) to pin one schema"
-        )
-    cols = list(pin) if pin is not None else list(b_state.columns)
-    if CHANGE_TYPE_COL in cols:
-        raise ValueError(
-            f"read_changes: the table schema at {tgt} already carries "
-            f"the reserved output column {CHANGE_TYPE_COL!r}"
-        )
+    cols = list(pin)
     val_cols = [c for c in cols if c not in keys]
 
     def _tagged(df, prefix):
@@ -1274,7 +1236,7 @@ def lookup_merged_keys(spark, target_path: str, lookup: DataFrame) -> DataFrame:
         return None
     _, _, m = man
     keys, key_types = list(m["keys"]), dict(m["key_types"])
-    n_buckets, pin = int(m["num_buckets"]), m.get("columns")
+    n_buckets, pin = int(m["num_buckets"]), m["columns"]
     if list(lookup.columns) != list(keys) and sorted(
         lookup.columns
     ) != sorted(keys):
@@ -1307,12 +1269,10 @@ def lookup_merged_keys(spark, target_path: str, lookup: DataFrame) -> DataFrame:
     hit = {str(b): live[str(b)] for b in wanted if str(b) in live}
     if not hit:
         # no looked-up bucket is live: the result is definitionally
-        # empty — type it from the pin when one exists
-        if pin is not None:
-            return spark.range(0).select(
-                *[F.lit(None).cast(t).alias(c) for c, t in pin.items()]
-            )
-        return None
+        # empty — type it from the pin
+        return spark.range(0).select(
+            *[F.lit(None).cast(t).alias(c) for c, t in pin.items()]
+        )
     base = _pinned_read(spark, _gen_paths(tgt, hit), pin, base_path=tgt).drop(
         GEN_COL
     )
@@ -1764,7 +1724,7 @@ def rebucket(
                     "num_buckets": new_num_buckets, "seq": seq}
         cur = (
             _pinned_read(
-                spark, _gen_paths(tgt, m["buckets"]), m.get("columns"),
+                spark, _gen_paths(tgt, m["buckets"]), m["columns"],
                 base_path=tgt,
             )
             .drop(GEN_COL).drop(BUCKET_COL)
@@ -1985,22 +1945,7 @@ def evolve_schema(
             )
         man_seq, _, m = man
         live = m["buckets"]
-        pinned = m.get("columns")
-        if pinned is None:
-            # pre-pin layout: derive the pin from the live union
-            # schema so evolution also UPGRADES the table to pinned
-            if not live:
-                raise ValueError(
-                    f"evolve_schema: {tgt} predates the schema pin and "
-                    "is empty — nothing to derive a schema from; "
-                    "rebuild the table"
-                )
-            derived = (
-                spark.read.option("basePath", tgt)
-                .option("mergeSchema", "true").parquet(*_gen_paths(tgt, live))
-                .drop(GEN_COL).drop(BUCKET_COL)
-            )
-            pinned = dict(derived.dtypes)
+        pinned = m["columns"]
         _validate_evolution(tgt, pinned, list(m["keys"]), add, widen)
         new_pin = {"columns": _evolved_pin(pinned, add, widen)}
         out = {

@@ -17,6 +17,12 @@ tables, :func:`derive_odm_from_tpch` derives a deterministic ODM tree
 column-unpivot→EAV items) so the flagship pipeline is end-to-end
 DuckDB-checkable.  The same derivation is mirrored in
 ``lens_sds_batch_spark/oracle.py``.
+
+:func:`fused_commands` is the flagship's denormalized path over the
+same tree: tx resolution and id chains computed per row at the
+coarsest grain (no parent-child joins) and fed to the single-pass
+command generator.  :func:`resolved_subjects` is its subject level,
+shared with the subject-level entity-store queries.
 """
 
 from __future__ import annotations
@@ -26,13 +32,15 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.keys import NIL_UUID, uuid3_str_py
+from ..functions.keys import NIL_UUID, keyfn, uuid3_str_py
 from ..session import local_df
-from ..sources.parquet import load_table
+from ..sources.parquet import fan_out, load_table
 
 # Fixed identifiers of the single derived "ODM file".
 FILE_OID = "F-0001"
 SUB = "importer-1"
+# the one item group per derived form
+IG_OID = "IG1"
 # batch command id: itself derived deterministically (stable literal both sides)
 BATCH_CMD_ID = uuid3_str_py(NIL_UUID, ["batch-cmd", FILE_OID])
 
@@ -189,7 +197,7 @@ def derive_odm_from_tpch(spark: SparkSession, sf_dir: str) -> OdmTables:
 
     item_groups = li.select(
         *form_cols,
-        F.lit("IG1").alias("item_group_oid"),
+        F.lit(IG_OID).alias("item_group_oid"),
         F.lit(None).cast("string").alias("tx_type"),
     )
 
@@ -208,7 +216,7 @@ def derive_odm_from_tpch(spark: SparkSession, sf_dir: str) -> OdmTables:
     ]
     items = li.select(
         *form_cols,
-        F.lit("IG1").alias("item_group_oid"),
+        F.lit(IG_OID).alias("item_group_oid"),
         F.lit(None).cast("string").alias("tx_type"),
         F.inline(F.array(*attr_structs)),
     ).select(
@@ -223,15 +231,40 @@ def derive_odm_from_tpch(spark: SparkSession, sf_dir: str) -> OdmTables:
 # Fused derivation (denormalized fast path)
 # ---------------------------------------------------------------------------
 
-def _derive_fused_parts(
-    spark: SparkSession, sf_dir: str, flavor: str = "md5"
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Shared core of the join-free fused derivation: ``(files,
-    subjects, study_events, li)`` where ``li`` is the NARROW form-grain
-    frontier (path + ids + tx state + the five EAV source columns).
-    ``derive_odm_resolved`` fans it into the three leaf levels;
-    ``fused_commands`` instead feeds it to the single-pass command
-    generator (r15) so the frontier is computed exactly once.
+def _subj_rtx(custkey):
+    return F.coalesce(_subject_tx(custkey), F.lit("insert"))
+
+
+def resolved_subjects(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The derived tree's subject level with its resolved tx (``rtx``):
+    one customer-grain projection, no join and no id hash.  The fused
+    command derivation adds the id chain on top; the subject-level
+    entity-store queries (``operators/cdc.py``) read only
+    ``study_oid``/``subject_key``/``rtx``."""
+    ck = F.col("c_custkey")
+    return load_table(spark, sf_dir, "customer").select(
+        F.lit(FILE_OID).alias("file_oid"),
+        study_oid_col(ck).alias("study_oid"),
+        subject_key_col(ck).alias("subject_key"),
+        _subject_tx(ck).alias("tx_type"),
+        _subj_rtx(ck).alias("rtx"),
+    )
+
+
+def fused_commands(
+    spark: SparkSession,
+    sf_dir: str,
+    batch_cmd_id: str,
+    sub: str,
+    flavor: str = "md5",
+) -> DataFrame:
+    """The flagship command set: the derived tree resolved, identified
+    and turned into commands WITHOUT parent-child resolve joins, fed to
+    the single-pass generator (``commands.generate_commands_single_pass``,
+    r15) so the form-grain frontier is computed exactly once.  Same rows
+    and schema as ``generate_commands(derive_odm_from_tpch(...))`` —
+    pinned by tests/test_odm_commands.py::test_fused_equals_generic and
+    the driver oracle.
 
     The generic pipeline (``commands.resolve_and_identify``) joins each
     level to its parent to inherit tx-type and carry the parent's id
@@ -243,44 +276,23 @@ def _derive_fused_parts(
     - tx inheritance  = a per-row coalesce chain (no join)
     - remove-pruning  = a per-row filter on ancestor rtx (no join)
     - id chains       = computed once at the COARSEST grain: the
-      study→…→item_group chain hashes happen on the ~N lineitem rows
-      *before* the 5-way EAV ``inline()`` explode, so items pay only
-      their own item_id + cmd_id hashes (the round-1 plan recomputed
-      nothing per level but paid a 6-string-key join at item grain).
+      study→…→form chain hashes happen on the ~N lineitem rows
+      *before* the per-row item emission, so items pay only their own
+      item_id + cmd_id hashes.
 
     At 100 TB: the only wide operations left are the natural-key
     lineitem⋈orders equi-join and the form_seq window, both on
-    l_orderkey — everything else is a projection.  Output is
-    row-identical to the generic path (pinned by
-    tests/test_odm_commands.py::test_fused_equals_generic and the
-    unchanged driver oracle).
+    l_orderkey — everything else is a projection.
     """
-    from ..functions.keys import uuid3_str_col, uuid5_col
+    from .commands import generate_commands_single_pass
 
-    key = {"md5": uuid3_str_col, "sha1": uuid5_col}[flavor]
-    customer = load_table(spark, sf_dir, "customer")
+    key = keyfn(flavor)
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
 
-    files = local_df(
-        spark,
-        [(FILE_OID, "transactional", BATCH_CMD_ID, SUB)],
-        "file_oid string, file_type string, batch_cmd_id string, sub string",
-    )
-
-    def _subj_rtx(custkey):
-        return F.coalesce(_subject_tx(custkey), F.lit("insert"))
-
     # --- subjects (customer grain): 2 chain hashes x |customer| ---
-    ck = F.col("c_custkey")
     subjects = (
-        customer.select(
-            F.lit(FILE_OID).alias("file_oid"),
-            study_oid_col(ck).alias("study_oid"),
-            subject_key_col(ck).alias("subject_key"),
-            _subject_tx(ck).alias("tx_type"),
-            _subj_rtx(ck).alias("rtx"),
-        )
+        resolved_subjects(spark, sf_dir)
         .withColumn("study_id", key(NIL_UUID, [F.col("study_oid")]))
         .withColumn("subject_id", key(F.col("study_id"), [F.col("subject_key")]))
     )
@@ -296,8 +308,6 @@ def _derive_fused_parts(
     # flagship's critical path (it feeds the broadcast build AND the
     # study-event union arm).  Gated: inert once the scan has >= session
     # parallelism partitions (any real-scale table).
-    from ..sources.parquet import fan_out
-
     se_base = (
         fan_out(
             orders.select(
@@ -324,8 +334,7 @@ def _derive_fused_parts(
     # window.  The ancestor path, rtx, and the study→…→study_event id
     # chain ride in FROM THE ORDERS SIDE of the join (150k-grain, r5 —
     # previously the 3 chain hashes re-ran per 600k lineitem row), so
-    # the lineitem grain pays only its own form hash — all BEFORE the
-    # EAV explode ---
+    # the lineitem grain pays only its own form hash ---
     from pyspark.sql import Window
 
     w = Window.partitionBy("l_orderkey").orderBy(
@@ -350,112 +359,18 @@ def _derive_fused_parts(
         "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus",
         "l_shipdate",
     ).withColumn("form_seq", F.row_number().over(w))
-    li = (
+    # the NARROW form-grain frontier: path + ids + resolved tx + one
+    # canonical value column per EAV attribute
+    denorm = (
         li_seq.join(se_keep, li_seq.l_orderkey == se_keep.o_orderkey)
-        .withColumn("form_tx", _form_tx(lk, ln))
-        .withColumn("form_rtx", F.coalesce(F.col("form_tx"), F.col("se_rtx")))
+        .withColumn("form_rtx", F.coalesce(_form_tx(lk, ln), F.col("se_rtx")))
         .withColumn("form_oid", form_oid_col(F.col("form_seq")))
         .withColumn("form_id", key(F.col("study_event_id"), [F.col("form_oid")]))
-    )
-    path_cols = ["file_oid", "study_oid", "subject_key", "study_event_oid", "form_oid"]
-    # persist the NARROW frontier only: path + ids + tx state + the five
-    # EAV source columns — not the full lineitem row (halves the cached
-    # bytes; the cache feeds the forms/item_groups/items branches)
-    li = li.select(
-        *path_cols,
-        "form_tx",
-        "form_rtx",
-        "study_event_id",
-        "form_id",
-        *sorted({src for _, _, src in ITEM_ATTRS}),
-    )
-    return files, subjects, se, li
-
-
-def derive_odm_resolved(
-    spark: SparkSession, sf_dir: str, flavor: str = "md5", persist: bool = True
-) -> OdmTables:
-    """``derive_odm_from_tpch`` + tx resolution + entity-id chains in
-    one pass per level, with ZERO parent-child resolve joins (see
-    :func:`_derive_fused_parts` for the algebra and the 100 TB story).
-    ``persist`` caches the narrow form-grain frontier, which feeds the
-    forms / item_groups / items levels."""
-    files, subjects, se, li = _derive_fused_parts(spark, sf_dir, flavor)
-    if persist:
-        li = li.persist()
-    path_cols = ["file_oid", "study_oid", "subject_key", "study_event_oid", "form_oid"]
-    from ..functions.keys import uuid3_str_col, uuid5_col
-
-    key = {"md5": uuid3_str_col, "sha1": uuid5_col}[flavor]
-
-    forms = li.select(
-        *path_cols,
-        F.col("form_tx").alias("tx_type"),
-        F.col("form_rtx").alias("rtx"),
-        "study_event_id",
-        "form_id",
-    )
-
-    # item_groups / items: parents with rtx='remove' are pruned (A14) —
-    # IG1 has no own tx, so ig rtx == form rtx and both levels share
-    # the same non-remove filter.
-    li_ig = li.where(F.col("form_rtx") != "remove").withColumn(
-        "item_group_id", key(F.col("form_id"), [F.lit("IG1")])
-    )
-
-    item_groups = li_ig.select(
-        *path_cols,
-        F.lit("IG1").alias("item_group_oid"),
-        F.lit(None).cast("string").alias("tx_type"),
-        F.col("form_rtx").alias("rtx"),
-        "form_id",
-        "item_group_id",
-    )
-
-    attr_structs = [
-        F.struct(
-            F.lit(oid).alias("item_oid"),
-            F.lit(dtype).alias("data_type"),
-            canon_col(src, dtype).alias("value_canon"),
+        .select(
+            "file_oid", "study_oid", "subject_key", "study_event_oid", "form_oid",
+            "form_rtx", "study_event_id", "form_id",
+            *[canon_col(src, dtype).alias(f"val_{oid}") for oid, dtype, src in ITEM_ATTRS],
         )
-        for oid, dtype, src in ITEM_ATTRS
-    ]
-    items = (
-        li_ig.select(
-            *path_cols,
-            F.lit("IG1").alias("item_group_oid"),
-            F.col("form_rtx").alias("rtx"),
-            "item_group_id",
-            F.inline(F.array(*attr_structs)),
-        )
-        .withColumn("tx_type", F.lit(None).cast("string"))
-        .withColumn("item_id", key(F.col("item_group_id"), [F.col("item_oid")]))
-    )
-
-    return OdmTables(files, subjects, se, forms, item_groups, items)
-
-
-def fused_commands(
-    spark: SparkSession,
-    sf_dir: str,
-    batch_cmd_id: str,
-    sub: str,
-    flavor: str = "md5",
-) -> DataFrame:
-    """The flagship command set via the SINGLE-PASS generator (r15):
-    same rows as ``generate_commands(derive_odm_resolved(...))`` but the
-    form-grain frontier is consumed once (forms + item-groups + items
-    emitted per row via array→filter→inline) instead of persisted and
-    read by a 3-consumer union fan — no cache materialization, one job
-    where the fan needed several.  Row-identity pinned by
-    tests/test_odm_commands.py::test_fused_equals_generic."""
-    from .commands import generate_commands_single_pass
-
-    _files, subjects, se, li = _derive_fused_parts(spark, sf_dir, flavor)
-    denorm = li.select(
-        "file_oid", "study_oid", "subject_key", "study_event_oid", "form_oid",
-        "form_tx", "form_rtx", "study_event_id", "form_id",
-        *[canon_col(src, dtype).alias(f"val_{oid}") for oid, dtype, src in ITEM_ATTRS],
     )
     return generate_commands_single_pass(
         subjects, se, denorm, batch_cmd_id, sub,

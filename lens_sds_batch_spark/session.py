@@ -14,15 +14,30 @@ sane on a 1000-executor cluster reading ~100 TB:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
+_log = logging.getLogger(__name__)
 
 # apps whose one-time warm-up already ran or failed (get_spark is
 # re-entrant: getOrCreate returns the live session, the warm-up must not
 # re-run)
 _WARMED: set[str] = set()
+
+# degraded paths already reported by this process
+_WARNED: set[str] = set()
+
+
+def _warn_once(path: str, msg: str, *args) -> None:
+    """Log a silent degraded path ONCE per process, with the traceback
+    of the exception being handled: the run keeps going (slower, or on
+    a fallback), and the log says so without repeating on every call."""
+    if path in _WARNED:
+        return
+    _WARNED.add(path)
+    _log.warning(msg, *args, exc_info=True)
 
 
 def _warm_session(spark: SparkSession) -> None:
@@ -52,13 +67,18 @@ def _warm_session(spark: SparkSession) -> None:
         spark.range(n, numPartitions=n).mapInPandas(
             lambda batches: batches, "id long"
         ).write.format("noop").mode("overwrite").save()
-    except Exception:
+    except Exception as e:
         # warm-up must never break session construction (e.g. a
         # pandas-less environment); the costs just land where they did.
         # The failure is terminal for this application: app_id stays in
         # _WARMED, so later get_spark calls do not pay the doomed
         # attempt (a failed job) again.
-        pass
+        _warn_once(
+            "warm_session",
+            "session warm-up failed (%s: %s); the one-time ICU and "
+            "Python-worker costs land on the first query that needs them",
+            type(e).__name__, e,
+        )
 
 
 def get_spark(app_name: str = "lens-sds-batch-spark", cpus: int | None = None) -> SparkSession:
@@ -122,7 +142,13 @@ def local_df(spark: SparkSession, rows, schema: str):
         names = [f.name for f in StructType.fromDDL(schema).fields]
         pdf = pd.DataFrame.from_records(rows, columns=names)
         return spark.createDataFrame(pdf, schema)
-    except Exception:
+    except Exception as e:
+        _warn_once(
+            "local_df",
+            "local_df: the pandas/Arrow path failed (%s: %s); falling back "
+            "to pickled rows, which run a Python-worker task per partition",
+            type(e).__name__, e,
+        )
         return spark.createDataFrame(rows, schema)
 
 

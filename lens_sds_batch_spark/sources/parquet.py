@@ -113,7 +113,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition of an UNDER-PARALLEL scan whose
     downstream work is CPU-bound (per-row hashing, word explodes,
     array set ops, Arrow batches) — the guide §2.5 "input skew" fix
@@ -135,7 +135,7 @@ def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     Deterministic under retries: keyless repartition sorts within
     input partitions first (`spark.sql.execution.sortBeforeRepartition`,
     on by default — SPARK-23207)."""
-    n = parallelism or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)

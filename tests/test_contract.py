@@ -105,10 +105,13 @@ def test_load_table_memoizes_source_tables_only(spark, tmp_path):
     assert o1.sparkSession is spark and s1.sparkSession is sib
 
 
-def test_failed_warm_up_is_not_retried(spark, monkeypatch):
+def test_failed_warm_up_is_not_retried(spark, monkeypatch, caplog):
     """A warm-up that fails (e.g. no pandas for the Python-worker
     preform) is terminal for the application: the next get_spark
-    returns the live session without paying the doomed attempt again."""
+    returns the live session without paying the doomed attempt again,
+    and the degraded path is logged exactly once."""
+    import logging
+
     from pyspark.sql import SparkSession
 
     from lens_sds_batch_spark import session as session_mod
@@ -123,12 +126,48 @@ def test_failed_warm_up_is_not_retried(spark, monkeypatch):
         return real_sql(self, query, *a, **kw)
 
     monkeypatch.setattr(session_mod, "_WARMED", set())  # as if never warmed
+    monkeypatch.setattr(session_mod, "_WARNED", set())
     monkeypatch.setattr(SparkSession, "sql", failing_warm_up)
+    caplog.set_level(logging.WARNING, logger=session_mod.__name__)
     first = session_mod.get_spark("lens-sds-batch-spark-tests", cpus=8)
     second = session_mod.get_spark("lens-sds-batch-spark-tests", cpus=8)
     assert first is spark and second is spark
     assert len(attempts) == 1
     assert spark.sparkContext.applicationId in session_mod._WARMED
+    warnings = [r for r in caplog.records if r.name == session_mod.__name__]
+    assert len(warnings) == 1
+    assert "warm-up failed" in warnings[0].getMessage()
+    assert "injected warm-up failure" in warnings[0].getMessage()
+
+
+def test_local_df_fallback_logged_once(spark, monkeypatch, caplog):
+    """local_df's pandas→pickled-rows fallback is a degraded path: it
+    logs one warning per process, however often it fires, and still
+    returns the rows.  The deliberate None-row path is not a
+    degradation and logs nothing."""
+    import logging
+
+    import pandas as pd
+
+    from lens_sds_batch_spark import session as session_mod
+
+    schema = "a string, b bigint"
+    monkeypatch.setattr(session_mod, "_WARNED", set())
+    caplog.set_level(logging.WARNING, logger=session_mod.__name__)
+    assert session_mod.local_df(spark, [("x", None)], schema).collect()[0]["b"] is None
+    assert not [r for r in caplog.records if r.name == session_mod.__name__]
+
+    def broken(*a, **kw):
+        raise RuntimeError("injected pandas failure")
+
+    monkeypatch.setattr(pd.DataFrame, "from_records", broken)
+    for rows in ([("x", 1)], [("y", 2), ("z", 3)]):
+        got = session_mod.local_df(spark, rows, schema).collect()
+        assert [tuple(r) for r in got] == rows
+    warnings = [r for r in caplog.records if r.name == session_mod.__name__]
+    assert len(warnings) == 1
+    assert "local_df" in warnings[0].getMessage()
+    assert "injected pandas failure" in warnings[0].getMessage()
 
 
 def test_events_ts_physical_type(spark):

@@ -18,9 +18,6 @@ from lens_sds_batch_spark.functions import keys
 from lens_sds_batch_spark.functions.keys import (
     NIL_UUID,
     Kw,
-    cmd_id_col,
-    duck_cmd_id_sql,
-    duck_uuid3_sql,
     java_uuid_from_string,
     uuid3_str_col,
     uuid3_str_py,
@@ -67,7 +64,10 @@ def test_uuid5_is_valid_rfc4122(spark):
 
 
 def test_uuid3_spark_python_duckdb_agree(spark):
-    """The oracle flavor must agree across all three runtimes."""
+    """The oracle flavor must agree across all three runtimes; the
+    DuckDB side is the emitter the oracle gate itself uses."""
+    from lens_sds_batch_spark.oracle import duck_uuid3, ns_hex
+
     parts = [":odm-import/insert-subject", ":study-id", "S1"]
     py = uuid3_str_py(NIL_UUID, parts)
     sp = (
@@ -75,30 +75,33 @@ def test_uuid3_spark_python_duckdb_agree(spark):
         .select(uuid3_str_col(NIL_UUID, [F.lit(p) for p in parts]).alias("id"))
         .collect()[0]["id"]
     )
-    duck_expr = duck_uuid3_sql(f"'{NIL_UUID}'", [f"'{p}'" for p in parts])
-    dk = duckdb.sql(f"SELECT {duck_expr} AS id").fetchone()[0]
+    duck_expr = duck_uuid3(ns_hex(f"'{NIL_UUID}'"), [f"'{p}'" for p in parts], "h", "id")
+    dk = duckdb.sql(f"SELECT {duck_expr}").fetchone()[1]
     assert py == sp == dk
 
 
 def test_cmd_id_order_insensitive(spark):
     """Params sorted by key ⇒ insertion order irrelevant (reference
-    ``gen-cmd-id-test`` order testing)."""
-    a = cmd_id_col(NIL_UUID, "foo", {"a": F.lit("1"), "b": F.lit("2")})
-    b = cmd_id_col(NIL_UUID, "foo", {"b": F.lit("2"), "a": F.lit("1")})
-    row = spark.range(1).select(a.alias("a"), b.alias("b")).collect()[0]
-    assert row["a"] == row["b"]
+    ``gen-cmd-id-test`` order testing), on the engine's own cmd-id
+    path (``_payload`` + ``_cmd_id``) in both flavors."""
+    from lens_sds_batch_spark.plans.commands import _cmd_id, _payload
 
-
-def test_cmd_id_duckdb_parity(spark):
-    sp = (
-        spark.range(1)
-        .select(cmd_id_col(NIL_UUID, "foo", {"a": F.lit("1"), "b": F.lit("2")}).alias("id"))
-        .collect()[0]["id"]
-    )
-    dk = duckdb.sql(
-        "SELECT " + duck_cmd_id_sql(f"'{NIL_UUID}'", "foo", {"a": "'1'", "b": "'2'"}) + " AS id"
-    ).fetchone()[0]
-    assert sp == dk
+    name = F.lit("foo")
+    ns = F.lit(NIL_UUID)
+    cols = []
+    for flavor in ("md5", "sha1"):
+        a = _payload(name, {"a": F.lit("1"), "b": F.lit("2")}, flavor)
+        b = _payload(name, {"b": F.lit("2"), "a": F.lit("1")}, flavor)
+        cols += [
+            _cmd_id(a, ns, flavor).alias(f"{flavor}_a"),
+            _cmd_id(b, ns, flavor).alias(f"{flavor}_b"),
+        ]
+    row = spark.range(1).select(F.lit("F-1").alias("file_oid")).select(*cols).collect()[0]
+    assert row["md5_a"] == row["md5_b"]
+    assert row["sha1_a"] == row["sha1_b"]
+    # the payload is exactly gen-cmd-id's: name, then sorted key/value pairs
+    assert row["md5_a"] == uuid3_str_py(NIL_UUID, [":foo", ":a", "1", ":b", "2"])
+    assert row["sha1_a"] == uuid5_py(NIL_UUID, [Kw("foo"), Kw("a"), "1", Kw("b"), "2"])
 
 
 @settings(max_examples=200, deadline=None)

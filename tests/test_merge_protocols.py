@@ -192,6 +192,38 @@ def test_manifest_guards(spark, tmp_path):
         _merge(spark, t4, [("k2", 1, "b", False)], protocol="bogus")
 
 
+def test_pinless_manifest_refused(spark, tmp_path):
+    """A committed manifest without its ``columns`` schema pin is
+    refused by every reader and writer, naming the missing pin — there
+    is no pin-less fallback to guess the schema from the files."""
+    from lens_sds_batch_spark.plans.merge import evolve_schema, read_changes
+
+    target = str(tmp_path / "t")
+    _merge(spark, target, [("k1", 1, "a", False)], num_buckets=2, protocol="manifest")
+    _merge(spark, target, [("k2", 1, "b", False)])
+    for name in _manifests(target):
+        path = os.path.join(target, MANIFEST_DIR, name)
+        with open(path) as f:
+            man = json.load(f)
+        del man["columns"]
+        with open(path, "w") as f:
+            json.dump(man, f)
+        # the local FS checksums what it wrote; drop the stale sidecar
+        crc = os.path.join(target, MANIFEST_DIR, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+    refused = "no schema pin \\('columns'\\): the table predates the schema pin"
+    with pytest.raises(ValueError, match=refused):
+        _merge(spark, target, [("k3", 1, "c", False)])
+    with pytest.raises(ValueError, match=refused):
+        read_merged_table(spark, target)
+    with pytest.raises(ValueError, match=refused):
+        read_changes(spark, target, from_seq=1)
+    with pytest.raises(ValueError, match=refused):
+        evolve_schema(spark, target, add={"extra": "string"})
+
+
 def test_manifest_kill_points(spark, tmp_path):
     """Walk every write step of a manifest merge as a hand-built crash
     state and pin: the table reads as EXACTLY pre-merge before the

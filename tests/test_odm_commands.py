@@ -8,12 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from lens_sds_batch_spark.oracle import odm_commands_sql
-from lens_sds_batch_spark.plans.commands import generate_commands, resolve_tx
+from lens_sds_batch_spark.plans.commands import generate_commands, resolve_and_identify
 from lens_sds_batch_spark.plans.odm import (
     BATCH_CMD_ID,
     SUB,
     derive_odm_from_tpch,
-    derive_odm_resolved,
     fused_commands,
     nest,
     normalize,
@@ -29,7 +28,7 @@ def odm(spark):
 
 
 def test_tx_resolution_semantics(spark, odm):
-    r = resolve_tx(odm)
+    r = resolve_and_identify(odm)
     # children of removed subjects are pruned (remove does not cascade)
     removed = r.subjects.where(F.col("rtx") == "remove").select("subject_key")
     leaked = r.study_events.join(removed, "subject_key", "inner")
@@ -70,28 +69,18 @@ def test_command_generation_idempotent(spark, odm):
 
 @pytest.mark.parametrize("flavor", ["md5", "sha1"])
 def test_fused_equals_generic(spark, odm, flavor):
-    """The join-free fused derivation (``derive_odm_resolved``: per-row
-    tx resolution + chain hashes at lineitem grain before the EAV
-    explode) must be row-identical to the generic normalized path
-    (``resolve_and_identify``'s parent joins), and the r15 SINGLE-PASS
-    generator (``fused_commands``: forms/item-groups/items emitted in
-    one array→filter→inline scan of the form-grain frontier) must be
-    row- AND schema-identical to both — this is what licenses the
-    flagship to use the single-pass plan."""
+    """The flagship path (``fused_commands``: join-free per-row tx
+    resolution and chain hashes at lineitem grain, then the SINGLE-PASS
+    generator emitting forms/item-groups/items in one
+    array→filter→inline scan of the form-grain frontier) must be row-
+    AND schema-identical to the generic normalized path
+    (``resolve_and_identify``'s parent joins) — this is what licenses
+    the flagship to use the single-pass plan."""
     generic = generate_commands(odm, BATCH_CMD_ID, SUB, persist=False, flavor=flavor)
-    fused = generate_commands(
-        derive_odm_resolved(spark, SF_SMOKE, flavor=flavor, persist=False),
-        BATCH_CMD_ID,
-        SUB,
-        flavor=flavor,
-    )
     single_pass = fused_commands(spark, SF_SMOKE, BATCH_CMD_ID, SUB, flavor=flavor)
-    assert generic.schema == fused.schema
     assert generic.schema == single_pass.schema
     # equal multiset sizes + empty one-way multiset difference ⇒ equal
     n = generic.count()
-    assert n == fused.count()
-    assert generic.exceptAll(fused).count() == 0
     assert n == single_pass.count()
     assert generic.exceptAll(single_pass).count() == 0
 

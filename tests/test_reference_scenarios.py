@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lens_sds_batch_spark.functions.keys import NIL_UUID, uuid3_str_py
-from lens_sds_batch_spark.plans.commands import generate_commands, resolve_tx
+from lens_sds_batch_spark.plans.commands import generate_commands, resolve_and_identify
 from lens_sds_batch_spark.plans.correlate import correlate, first_event_per_cid, success_set
 from lens_sds_batch_spark.plans.odm import OdmTables
 
@@ -141,7 +141,7 @@ def test_tx_inheritance_and_default(spark):
         [(FILE, "S1", "SK01", None), (FILE, "S1", "SK02", "upsert")],
         ses=[(FILE, "S1", "SK01", "SE1", None), (FILE, "S1", "SK02", "SE2", None)],
     )
-    r = resolve_tx(odm)
+    r = resolve_and_identify(odm)
     got = {r["subject_key"]: r["rtx"] for r in r.subjects.collect()}
     assert got == {"SK01": "insert", "SK02": "upsert"}
     se = {r["study_event_oid"]: r["rtx"] for r in r.study_events.collect()}
@@ -349,26 +349,27 @@ def test_null_cmd_id_guard_fires_on_malformed_uuid_param(spark):
     guard makes that state actually detected: generation fails loudly
     instead of propagating a NULL id into the idempotency contract."""
     # craft a pre-resolved (fused-path) subjects level whose study_id is
-    # a malformed uuid string: unhex() -> NULL -> NULL payload
+    # a malformed uuid string: unhex() -> NULL -> NULL payload.  The
+    # fused path's generator takes resolved levels as they are; its
+    # subject arm is the same per-level projection generate_commands uses
+    from lens_sds_batch_spark.plans.commands import generate_commands_single_pass
+
     subjects = spark.createDataFrame(
         [(FILE, "S1", "SK01", "insert", "insert", "not-a-hex-uuid", "also-bad")],
         S_COLS + ", rtx string, study_id string, subject_id string",
     )
-    odm = OdmTables(
-        files=spark.createDataFrame(
-            [(FILE, "transactional", BATCH, SUB)],
-            "file_oid string, file_type string, batch_cmd_id string, sub string",
-        ),
-        subjects=subjects,
-        study_events=spark.createDataFrame([], SE_COLS + ", rtx string, study_event_id string, subject_id string"),
-        forms=spark.createDataFrame([], FM_COLS + ", rtx string, form_id string, study_event_id string"),
-        item_groups=spark.createDataFrame([], IG_COLS + ", rtx string, item_group_id string, form_id string"),
-        items=spark.createDataFrame(
-            [], IT_COLS + ", rtx string, item_id string, item_group_id string"
-        ),
+    study_events = spark.createDataFrame(
+        [], SE_COLS + ", rtx string, study_event_id string, subject_id string"
+    )
+    denorm = spark.createDataFrame(
+        [],
+        "file_oid string, study_oid string, subject_key string, study_event_oid string, "
+        "form_oid string, form_rtx string, study_event_id string, form_id string",
     )
     with pytest.raises(Exception, match="NULL cmd-id payload at subject level"):
-        generate_commands(odm, BATCH, SUB, persist=False, flavor="sha1").collect()
+        generate_commands_single_pass(
+            subjects, study_events, denorm, BATCH, SUB, item_attrs=[], flavor="sha1"
+        ).collect()
 
 
 def test_merge_into_fallback_equals_apply_lww(spark, tmp_path):
@@ -386,11 +387,11 @@ def test_merge_into_fallback_equals_apply_lww(spark, tmp_path):
         merge_into,
         read_merged_table,
     )
-    from lens_sds_batch_spark.plans.odm import derive_odm_resolved
+    from lens_sds_batch_spark.plans.odm import resolved_subjects
 
     from .conftest import SF_SMOKE
 
-    subj = derive_odm_resolved(spark, SF_SMOKE).subjects
+    subj = resolved_subjects(spark, SF_SMOKE)
     updates = subj.where(F.col("rtx").isin("insert", "upsert", "remove")).select(
         "study_oid",
         "subject_key",
