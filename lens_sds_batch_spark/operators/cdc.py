@@ -13,8 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.keys import NIL_UUID, uuid3_str_col
-from ..oracle import duck_fmt, ns_hex
-from ..plans.correlate import correlate, first_event_name_agg, first_event_per_cid
+from ..oracle import duck_fmt
+from ..plans.correlate import correlate, first_event_name_agg
 from ..plans.merge import apply_lww
 from ..sources.parquet import fan_out, load_events, load_table
 
@@ -80,10 +80,8 @@ def correlate_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived command id), first event by (t, tiebreaks) wins; orders
     with no lineitems -> 'timeout'.
 
-    Uses the min(struct) agg form: fresh-process A/B at sf0.1 showed it
-    equal to the packed-string form cold (~1.8s, both I/O-bound) and
-    simpler — see correlate.first_event_name_packed for the warm-path
-    tradeoff."""
+    Uses the map-side-combinable min(struct) agg form
+    (``first_event_name_agg``); the oracle ranks with the window form."""
     cmds = _orders_commands(spark, sf_dir)
     evs = _lineitem_events(spark, sf_dir)
     first = first_event_name_agg(evs, ["t", "l_partkey", "l_suppkey", "l_extendedprice"])
@@ -92,11 +90,6 @@ def correlate_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     # command/join side — measured 3.2s -> 2.5s warm, 7.1s -> 2.5s cold
     # at sf0.1
     return correlate(cmds, first).select("cmd_id", "o_orderkey", "status")
-
-
-def _duck_cmd_uuid(part_sql: str) -> str:
-    payload = f"'{NIL_HEX}' || CAST('CMD' AS VARCHAR) || CAST({part_sql} AS VARCHAR)"
-    return f"(SELECT {duck_fmt('h')} FROM (SELECT md5({payload}) AS h))"
 
 
 CORRELATE_SQL = f"""

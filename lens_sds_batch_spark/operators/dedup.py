@@ -584,13 +584,6 @@ def _sh_expr():
     return sh.cast("bigint")
 
 
-def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id -> 64-bit simhash bit string (human-readable projection of
-    the integer form; kept for tests/the fingerprint API)."""
-    ints = simhash_fingerprint_ints(spark, sf_dir)
-    return ints.select("doc_id", F.lpad(F.bin(F.col("sh")), SIMHASH_BITS, "0").alias("simhash"))
-
-
 def _duck_simhash_cte() -> str:
     def charset(b):
         return ",".join(f"'{c}'" for c in (_HEX_BIT0 if b % 2 == 0 else _HEX_BIT1))
@@ -612,12 +605,8 @@ sums AS (
   FROM (SELECT doc_id, md5(unnest(list_distinct(string_split(text, ' ')))) AS h FROM documents)
   GROUP BY doc_id
 ),
-fps_int AS (SELECT doc_id, CAST({sh} AS BIGINT) AS sh FROM sums),
-fps AS (SELECT doc_id, lpad(bin(sh), {SIMHASH_BITS}, '0') AS simhash FROM fps_int)
+fps_int AS (SELECT doc_id, CAST({sh} AS BIGINT) AS sh FROM sums)
 """
-
-
-SIMHASH_SQL = "WITH " + _duck_simhash_cte() + "SELECT doc_id, simhash FROM fps ORDER BY doc_id"
 
 
 SIMHASH_BLOCK_CAP = 100  # skew guard: drop blocks larger than this
@@ -728,10 +717,9 @@ ORDER BY doc_a, doc_b
     )
 
 
-# simhash_fingerprints is not registered standalone: simhash_dup_pairs
-# exercises the identical fingerprint derivation end-to-end (its oracle
-# embeds _duck_simhash_cte), and the registry must stay <= 50 entries
-# for full driver CORRECTNESS coverage.  SIMHASH_SQL remains for tests.
+# The fingerprints have no query of their own: simhash_dup_pairs runs
+# the derivation (simhash_fingerprint_ints) end-to-end and its oracle
+# embeds _duck_simhash_cte.
 QUERIES.update({"simhash_dup_pairs": (simhash_dup_pairs, _duck_simhash_pairs_sql())})
 
 

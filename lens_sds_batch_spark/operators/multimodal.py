@@ -7,7 +7,8 @@ Spark-side plumbing is real and tested: schema, Arrow batch shape,
 ``mapInPandas`` signature, partition behavior.
 
 ``multimodal_meta`` is oracle-checkable (byte-level metadata via
-built-ins); ``media_decode_stub`` is registered rows-only (sql=None).
+built-ins); ``media_decode_stub`` runs the ``mapInPandas`` stage
+(``extract_media_features``) against a DuckDB twin of the stub codec.
 """
 
 from __future__ import annotations
@@ -128,26 +129,6 @@ def _fake_decode(payload: bytes, media_type: str) -> tuple[int, int, int, str]:
     if kind == "audio":
         return (0, 0, n % 1000 + 1, "wav")
     return (n % 1920 + 1, n % 1080 + 1, n % 240 + 1, "mp4")
-
-
-def decode_media(media: DataFrame) -> DataFrame:
-    """mapInPandas decode: Arrow-batched, per-partition, no shuffle."""
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [_fake_decode(p, m) for p, m in zip(pdf["payload"], pdf["media_type"])]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "n_frames": [d[2] for d in decoded],
-                    "format": [d[3] for d in decoded],
-                }
-            )
-
-    return media.mapInPandas(decode_batches, DECODED_SCHEMA)
 
 
 def extract_media_features(media: DataFrame) -> DataFrame:

@@ -24,6 +24,8 @@ joining where possible, no driver-side collects).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -276,32 +278,6 @@ SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
   FROM orders
 ) WHERE rk <= 3
 ORDER BY o_custkey, rk
-"""
-
-
-def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running per-customer spend (exact decimal accumulation)."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.unix_timestamp("o_orderdate").alias("o_orderdate_epoch"),
-        F.sum(_dec("o_totalprice")).over(w).cast("double").alias("running_spend"),
-    )
-
-
-WINDOW_RUNNING_SQL = """
-SELECT o_custkey, o_orderkey, CAST(epoch(o_orderdate) AS BIGINT) AS o_orderdate_epoch,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-         PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
-FROM orders
-ORDER BY o_custkey, o_orderkey
 """
 
 
@@ -788,58 +764,6 @@ ORDER BY c_mktsegment ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST
 """
 
 
-def window_funcs_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rank / dense_rank / lag / lead / first_value over one window."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.lag("o_orderkey").over(w).alias("prev_key"),
-        F.lead("o_orderkey").over(w).alias("next_key"),
-        F.first_value("o_orderkey").over(w).alias("top_key"),
-    )
-
-
-WINDOW_FUNCS_SQL = """
-SELECT o_custkey, o_orderkey,
-       rank() OVER w AS rnk,
-       dense_rank() OVER w AS drnk,
-       lag(o_orderkey) OVER w AS prev_key,
-       lead(o_orderkey) OVER w AS next_key,
-       first_value(o_orderkey) OVER w AS top_key
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
-ORDER BY o_custkey, rnk, o_orderkey
-"""
-
-
-def date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar decomposition.  Day-of-week via integer epoch math so
-    both engines share one definition (0=Sunday; 1970-01-01=Thursday)."""
-    orders = load_table(spark, sf_dir, "orders")
-    epoch_day = F.expr("unix_timestamp(o_orderdate) div 86400")
-    return orders.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("y"),
-        F.month("o_orderdate").alias("m"),
-        F.dayofmonth("o_orderdate").alias("d"),
-        F.quarter("o_orderdate").alias("q"),
-        ((epoch_day + 4) % 7).alias("dow"),
-    )
-
-
-DATE_PARTS_SQL = """
-SELECT o_orderkey,
-       year(o_orderdate) AS y, month(o_orderdate) AS m,
-       day(o_orderdate) AS d, quarter(o_orderdate) AS q,
-       ((CAST(epoch(o_orderdate) AS BIGINT) // 86400) + 4) % 7 AS dow
-FROM orders ORDER BY o_orderkey
-"""
-
-
 def percentile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated median per priority (rounded to absorb the
     engines' interpolation-rounding freedom)."""
@@ -879,27 +803,6 @@ SELECT ((epoch_ns(ts) // 3600000000000) - k) * 3600 AS window_start, event_type,
        count(*) AS n
 FROM events CROSS JOIN (SELECT unnest([0, 1]) AS k)
 GROUP BY 1, 2 ORDER BY window_start, event_type
-"""
-
-
-def string_funcs2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.select(
-        "o_orderkey",
-        F.regexp_extract("o_orderpriority", "^[0-9]+", 0).alias("prio_num"),
-        F.lpad("o_orderstatus", 3, "_").alias("status_pad"),
-        F.reverse("o_orderpriority").alias("prio_rev"),
-        F.translate("o_orderstatus", "OFP", "ofp").alias("status_lc"),
-    )
-
-
-STRING_FUNCS2_SQL = """
-SELECT o_orderkey,
-       regexp_extract(o_orderpriority, '^[0-9]+', 0) AS prio_num,
-       lpad(o_orderstatus, 3, '_') AS status_pad,
-       reverse(o_orderpriority) AS prio_rev,
-       translate(o_orderstatus, 'OFP', 'ofp') AS status_lc
-FROM orders ORDER BY o_orderkey
 """
 
 
@@ -2266,36 +2169,6 @@ GROUP BY 1, 2, 3
 """
 
 
-def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE frame: per customer, rolling 30-day spend (range over
-    epoch seconds — value-based frames, not row-based)."""
-    orders = load_table(spark, sf_dir, "orders").withColumn(
-        "od_epoch", F.unix_timestamp("o_orderdate")
-    )
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("od_epoch")
-        .rangeBetween(-30 * 86400, 0)
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.col("od_epoch").alias("o_orderdate_epoch"),
-        F.sum(_dec("o_totalprice")).over(w).cast("double").alias("spend_30d"),
-    )
-
-
-WINDOW_RANGE_SQL = """
-SELECT o_custkey, o_orderkey,
-       CAST(epoch(o_orderdate) AS BIGINT) AS o_orderdate_epoch,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-         PARTITION BY o_custkey ORDER BY CAST(epoch(o_orderdate) AS BIGINT)
-         RANGE BETWEEN 2592000 PRECEDING AND CURRENT ROW) AS DOUBLE) AS spend_30d
-FROM orders
-ORDER BY o_custkey, o_orderdate_epoch, o_orderkey
-"""
-
-
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention over the event stream: users grouped by
     first-seen day, tracked across subsequent activity days.  Two aggs
@@ -2350,16 +2223,27 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 # ---------------------------------------------------------------------------
 # Packs — the driver hash-checks only the first 50 registry entries, so
 # the micro-query inventory above is folded into union-harmonized packs
-# (one CORRECTNESS row each) while every underlying operator keeps its
-# own function + pytest coverage.  Each arm is the unchanged original
-# computation, cast onto a shared (kind, keys..., values...) schema in
-# BOTH engines; the driver's column-sorted multiset hash is unaffected
-# by the union because values and types are preserved per arm.
+# (one CORRECTNESS row each).  An arm lives once, in the pack that runs
+# it: each arm is the unchanged original computation, cast onto the
+# pack's shared (kind, keys..., values...) schema in BOTH engines, and a
+# fold of two packs is one longer arm list, never a union of packs.  The
+# driver's column-sorted multiset hash is unaffected by the union because
+# values and types are preserved per arm.
 # ---------------------------------------------------------------------------
 
 
 def _nl(dtype: str, name: str):
     return F.lit(None).cast(dtype).alias(name)
+
+
+def _union(arms: list[DataFrame]) -> DataFrame:
+    """A pack's arms as one frame: left-deep ``unionByName`` in list order."""
+    return reduce(DataFrame.unionByName, arms)
+
+
+def _nulls(dtype: str, *names: str) -> str:
+    """DuckDB twin of ``_nl`` over several columns: typed NULL pads."""
+    return ", ".join(f"CAST(NULL AS {dtype}) AS {n}" for n in names)
 
 
 def joins_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2409,10 +2293,7 @@ def joins_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             _nl("bigint", "v2"),
         ),
     ]
-    out = arms[0]
-    for a in arms[1:]:
-        out = out.unionByName(a)
-    return out
+    return _union(arms)
 
 
 def _arm(kind: str, inner_sql: str, cols: str) -> str:
@@ -2441,9 +2322,8 @@ def window_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions (rank / dense_rank / ntile / percent_rank / cume_dist),
     offset+positional functions (lag / lead / first_value / nth_value),
     a RANGE frame, and a whole-partition frame — five windows over one
-    orders pass (window_running_sum + window_funcs_pack +
-    window_range_frame merged; one shuffle on o_custkey serves all
-    window specs that share the partition key).
+    orders pass (one shuffle on o_custkey serves all window specs that
+    share the partition key).
 
     Cross-engine exactness of the r14 arms: w_rank is a TOTAL order
     (o_orderkey tiebreak), so ntile's bucket formula, nth_value's
@@ -2509,10 +2389,11 @@ ORDER BY o_custkey, o_orderkey
 """
 
 
-def agg_multi_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B4 grouping-variants pack: distinct aggregates, CUBE, and
-    explicit GROUPING SETS (agg_distinct + agg_cube + agg_grouping_sets
-    merged, arms unchanged)."""
+def agg_percentile_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B4 aggregate pack: distinct aggregates, CUBE and explicit
+    GROUPING SETS (counts in v1-v3), then the exact quantiles —
+    a single median by priority and quartiles by status (group in k1,
+    quantiles in p25-p75).  Each arm NULLs the other family's columns."""
     arms = [
         agg_distinct(spark, sf_dir).select(
             F.lit("distinct").alias("kind"),
@@ -2521,116 +2402,73 @@ def agg_multi_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_supp").cast("bigint").alias("v1"),
             F.col("n_part").cast("bigint").alias("v2"),
             F.col("n_rows").cast("bigint").alias("v3"),
+            _nl("double", "p25"), _nl("double", "p50"), _nl("double", "p75"),
         ),
         agg_cube(spark, sf_dir).select(
             F.lit("cube").alias("kind"),
             F.col("c_mktsegment").alias("k1"),
             F.col("o_orderstatus").alias("k2"),
             F.col("n").cast("bigint").alias("v1"),
-            _nl("bigint", "v2"),
-            _nl("bigint", "v3"),
+            _nl("bigint", "v2"), _nl("bigint", "v3"),
+            _nl("double", "p25"), _nl("double", "p50"), _nl("double", "p75"),
         ),
         agg_grouping_sets(spark, sf_dir).select(
             F.lit("gsets").alias("kind"),
             F.col("c_mktsegment").alias("k1"),
             F.col("o_orderstatus").alias("k2"),
             F.col("n").cast("bigint").alias("v1"),
-            _nl("bigint", "v2"),
-            _nl("bigint", "v3"),
+            _nl("bigint", "v2"), _nl("bigint", "v3"),
+            _nl("double", "p25"), _nl("double", "p50"), _nl("double", "p75"),
+        ),
+        percentile_exact(spark, sf_dir).select(
+            F.lit("by_priority").alias("kind"),
+            F.col("o_orderpriority").alias("k1"),
+            _nl("string", "k2"),
+            _nl("bigint", "v1"), _nl("bigint", "v2"), _nl("bigint", "v3"),
+            _nl("double", "p25"),
+            F.col("median_price").cast("double").alias("p50"),
+            _nl("double", "p75"),
+        ),
+        percentile_multi(spark, sf_dir).select(
+            F.lit("by_status").alias("kind"),
+            F.col("o_orderstatus").alias("k1"),
+            _nl("string", "k2"),
+            _nl("bigint", "v1"), _nl("bigint", "v2"), _nl("bigint", "v3"),
+            F.col("p25").cast("double").alias("p25"),
+            F.col("p50").cast("double").alias("p50"),
+            F.col("p75").cast("double").alias("p75"),
         ),
     ]
-    out = arms[0]
-    for a in arms[1:]:
-        out = out.unionByName(a)
-    return out
+    return _union(arms)
 
 
-AGG_MULTI_SQL = f"""
-{_arm('distinct', AGG_DISTINCT_SQL, "l_returnflag AS k1, CAST(NULL AS VARCHAR) AS k2, CAST(n_supp AS BIGINT) AS v1, CAST(n_part AS BIGINT) AS v2, CAST(n_rows AS BIGINT) AS v3")}
+_NO_PCT = _nulls("DOUBLE", "p25", "p50", "p75")
+_NO_COUNTS = _nulls("BIGINT", "v1", "v2", "v3")
+
+AGG_PERCENTILE_SQL = f"""
+{_arm('distinct', AGG_DISTINCT_SQL, f"l_returnflag AS k1, CAST(NULL AS VARCHAR) AS k2, CAST(n_supp AS BIGINT) AS v1, CAST(n_part AS BIGINT) AS v2, CAST(n_rows AS BIGINT) AS v3, {_NO_PCT}")}
 UNION ALL
-{_arm('cube', AGG_CUBE_SQL, "c_mktsegment AS k1, o_orderstatus AS k2, CAST(n AS BIGINT) AS v1, CAST(NULL AS BIGINT) AS v2, CAST(NULL AS BIGINT) AS v3")}
+{_arm('cube', AGG_CUBE_SQL, f"c_mktsegment AS k1, o_orderstatus AS k2, CAST(n AS BIGINT) AS v1, {_nulls('BIGINT', 'v2', 'v3')}, {_NO_PCT}")}
 UNION ALL
-{_arm('gsets', AGG_GROUPING_SETS_SQL, "c_mktsegment AS k1, o_orderstatus AS k2, CAST(n AS BIGINT) AS v1, CAST(NULL AS BIGINT) AS v2, CAST(NULL AS BIGINT) AS v3")}
+{_arm('gsets', AGG_GROUPING_SETS_SQL, f"c_mktsegment AS k1, o_orderstatus AS k2, CAST(n AS BIGINT) AS v1, {_nulls('BIGINT', 'v2', 'v3')}, {_NO_PCT}")}
+UNION ALL
+{_arm('by_priority', PERCENTILE_SQL, f"o_orderpriority AS k1, CAST(NULL AS VARCHAR) AS k2, {_NO_COUNTS}, CAST(NULL AS DOUBLE) AS p25, CAST(median_price AS DOUBLE) AS p50, CAST(NULL AS DOUBLE) AS p75")}
+UNION ALL
+{_arm('by_status', PERCENTILE_MULTI_SQL, f"o_orderstatus AS k1, CAST(NULL AS VARCHAR) AS k2, {_NO_COUNTS}, CAST(p25 AS DOUBLE) AS p25, CAST(p50 AS DOUBLE) AS p50, CAST(p75 AS DOUBLE) AS p75")}
 ORDER BY kind, k1, k2
 """
 
 
-def set_ops_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B7 pack: INTERSECT / EXCEPT / EXCEPT ALL (set_intersect +
-    set_except + set_except_all merged, arms unchanged)."""
-    arms = [
-        set_intersect(spark, sf_dir).select(
-            F.lit("intersect").alias("kind"),
-            F.col("o_custkey").cast("bigint").alias("k1"),
-            _nl("bigint", "v1"),
-        ),
-        set_except(spark, sf_dir).select(
-            F.lit("except").alias("kind"),
-            F.col("o_custkey").cast("bigint").alias("k1"),
-            _nl("bigint", "v1"),
-        ),
-        set_except_all(spark, sf_dir).select(
-            F.lit("except_all").alias("kind"),
-            F.col("o_custkey").cast("bigint").alias("k1"),
-            F.col("n").cast("bigint").alias("v1"),
-        ),
-    ]
-    out = arms[0]
-    for a in arms[1:]:
-        out = out.unionByName(a)
-    return out
-
-
-SET_OPS_SQL = f"""
-{_arm('intersect', SET_INTERSECT_SQL, "CAST(o_custkey AS BIGINT) AS k1, CAST(NULL AS BIGINT) AS v1")}
-UNION ALL
-{_arm('except', SET_EXCEPT_SQL, "CAST(o_custkey AS BIGINT) AS k1, CAST(NULL AS BIGINT) AS v1")}
-UNION ALL
-{_arm('except_all', SET_EXCEPT_ALL_SQL, "CAST(o_custkey AS BIGINT) AS k1, CAST(n AS BIGINT) AS v1")}
-ORDER BY kind, k1
-"""
-
-
-def row_funcs_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B8 per-row pack over one orders scan: regex/pad/reverse/translate
-    string functions + calendar decomposition (string_funcs2 +
-    date_parts merged — same grain, one scan instead of two)."""
-    orders = load_table(spark, sf_dir, "orders")
+def row_scalar_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B8 per-row function pack under one (kind, id, s1-s4, v1-v5)
+    schema: string/math over part (the part arm fills s4/v3-v5 with
+    levenshtein, bit algebra, greatest/least and split_part), array
+    algebra over documents, JSON extract/rebuild over events, and
+    regex/pad/reverse/translate plus calendar parts over orders.  Arms
+    without a value for a slot NULL-pad it.  The orders arm's
+    day-of-week is integer epoch math so both engines share one
+    definition (0=Sunday; 1970-01-01 was a Thursday)."""
     epoch_day = F.expr("unix_timestamp(o_orderdate) div 86400")
-    return orders.select(
-        "o_orderkey",
-        F.regexp_extract("o_orderpriority", "^[0-9]+", 0).alias("prio_num"),
-        F.lpad("o_orderstatus", 3, "_").alias("status_pad"),
-        F.reverse("o_orderpriority").alias("prio_rev"),
-        F.translate("o_orderstatus", "OFP", "ofp").alias("status_lc"),
-        F.year("o_orderdate").alias("y"),
-        F.month("o_orderdate").alias("m"),
-        F.dayofmonth("o_orderdate").alias("d"),
-        F.quarter("o_orderdate").alias("q"),
-        ((epoch_day + 4) % 7).alias("dow"),
-    )
-
-
-ROW_FUNCS_SQL = """
-SELECT o_orderkey,
-       regexp_extract(o_orderpriority, '^[0-9]+', 0) AS prio_num,
-       lpad(o_orderstatus, 3, '_') AS status_pad,
-       reverse(o_orderpriority) AS prio_rev,
-       translate(o_orderstatus, 'OFP', 'ofp') AS status_lc,
-       year(o_orderdate) AS y, month(o_orderdate) AS m,
-       day(o_orderdate) AS d, quarter(o_orderdate) AS q,
-       ((CAST(epoch(o_orderdate) AS BIGINT) // 86400) + 4) % 7 AS dow
-FROM orders ORDER BY o_orderkey
-"""
-
-
-def scalar_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B8 heterogeneous-scalar pack: string/math over part, array
-    algebra over documents, JSON extract/rebuild over events
-    (scalar_funcs + array_funcs_pack + json_funcs_pack merged).
-    r14: the part arm carries scalar_funcs' widened outputs in
-    s4/v3-v5 (levenshtein, bit algebra, greatest/least, split_part);
-    the other arms NULL-pad those slots."""
     arms = [
         scalar_funcs(spark, sf_dir).select(
             F.lit("part").alias("kind"),
@@ -2660,170 +2498,94 @@ def scalar_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("ev_json").alias("kind"),
             F.col("event_id").cast("bigint").alias("id"),
             F.col("rebuilt").alias("s1"),
-            _nl("string", "s2"),
-            _nl("string", "s3"),
-            _nl("string", "s4"),
+            _nl("string", "s2"), _nl("string", "s3"), _nl("string", "s4"),
             F.col("k").cast("bigint").alias("v1"),
             F.col("k_mod").cast("bigint").alias("v2"),
             _nl("bigint", "v3"), _nl("bigint", "v4"), _nl("bigint", "v5"),
         ),
+        load_table(spark, sf_dir, "orders").select(
+            F.lit("ord_row").alias("kind"),
+            F.col("o_orderkey").cast("bigint").alias("id"),
+            F.regexp_extract("o_orderpriority", "^[0-9]+", 0).alias("s1"),
+            F.lpad("o_orderstatus", 3, "_").alias("s2"),
+            F.reverse("o_orderpriority").alias("s3"),
+            F.translate("o_orderstatus", "OFP", "ofp").alias("s4"),
+            F.year("o_orderdate").cast("bigint").alias("v1"),
+            F.month("o_orderdate").cast("bigint").alias("v2"),
+            F.dayofmonth("o_orderdate").cast("bigint").alias("v3"),
+            F.quarter("o_orderdate").cast("bigint").alias("v4"),
+            ((epoch_day + 4) % 7).cast("bigint").alias("v5"),
+        ),
     ]
-    out = arms[0]
-    for a in arms[1:]:
-        out = out.unionByName(a)
-    return out
+    return _union(arms)
 
 
-_PAD_345 = ("CAST(NULL AS BIGINT) AS v3, CAST(NULL AS BIGINT) AS v4, "
-            "CAST(NULL AS BIGINT) AS v5")
+_NO_V345 = _nulls("BIGINT", "v3", "v4", "v5")
 
-SCALAR_PACK_SQL = f"""
+ROW_SCALAR_PACK_SQL = f"""
 {_arm('part', SCALAR_FUNCS_SQL, "CAST(p_partkey AS BIGINT) AS id, brand_u AS s1, type5 AS s2, brand_size AS s3, type_tail AS s4, CAST(name_len AS BIGINT) AS v1, CAST(size2 AS BIGINT) AS v2, CAST(lev AS BIGINT) AS v3, CAST(bits AS BIGINT) AS v4, CAST(gl AS BIGINT) AS v5")}
 UNION ALL
-{_arm('doc_array', ARRAY_FUNCS_SQL, f"CAST(doc_id AS BIGINT) AS id, first_sorted AS s1, last_sorted AS s2, first3 AS s3, CAST(NULL AS VARCHAR) AS s4, CAST(n AS BIGINT) AS v1, CAST(has_data AS BIGINT) AS v2, {_PAD_345}")}
+{_arm('doc_array', ARRAY_FUNCS_SQL, f"CAST(doc_id AS BIGINT) AS id, first_sorted AS s1, last_sorted AS s2, first3 AS s3, CAST(NULL AS VARCHAR) AS s4, CAST(n AS BIGINT) AS v1, CAST(has_data AS BIGINT) AS v2, {_NO_V345}")}
 UNION ALL
-{_arm('ev_json', JSON_FUNCS_SQL, f"CAST(event_id AS BIGINT) AS id, rebuilt AS s1, CAST(NULL AS VARCHAR) AS s2, CAST(NULL AS VARCHAR) AS s3, CAST(NULL AS VARCHAR) AS s4, CAST(k AS BIGINT) AS v1, CAST(k_mod AS BIGINT) AS v2, {_PAD_345}")}
+{_arm('ev_json', JSON_FUNCS_SQL, f"CAST(event_id AS BIGINT) AS id, rebuilt AS s1, {_nulls('VARCHAR', 's2', 's3', 's4')}, CAST(k AS BIGINT) AS v1, CAST(k_mod AS BIGINT) AS v2, {_NO_V345}")}
+UNION ALL
+SELECT 'ord_row' AS kind, CAST(o_orderkey AS BIGINT) AS id,
+       regexp_extract(o_orderpriority, '^[0-9]+', 0) AS s1,
+       lpad(o_orderstatus, 3, '_') AS s2,
+       reverse(o_orderpriority) AS s3,
+       translate(o_orderstatus, 'OFP', 'ofp') AS s4,
+       CAST(year(o_orderdate) AS BIGINT) AS v1, CAST(month(o_orderdate) AS BIGINT) AS v2,
+       CAST(day(o_orderdate) AS BIGINT) AS v3, CAST(quarter(o_orderdate) AS BIGINT) AS v4,
+       CAST(((CAST(epoch(o_orderdate) AS BIGINT) // 86400) + 4) % 7 AS BIGINT) AS v5
+FROM orders
 ORDER BY kind, id
 """
 
 
-def row_scalar_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r12 fold of ``scalar_pack`` + ``row_funcs_pack`` (COVERAGE.md's
-    named fold candidate — both are B8 per-row function packs), banking
-    a registry slot for ``entity_state_manifest``.  Both constituent
-    packs stay independently callable and BYTE-UNCHANGED; this pack
-    unions them under a NULL-padded common schema (the established fold
-    discipline, cf. textops.text_pack): the scalar arms carry
-    kind/id/s1-s4/v1-v5 (the r14 scalar widening fills the part arm's
-    s4/v3-v5; the other scalar arms NULL-pad them); the orders
-    row-funcs arm carries kind='ord_row' with its four string outputs
-    in s1-s4 and five calendar ints in v1-v5."""
-    sc = scalar_pack(spark, sf_dir)
-    rf = row_funcs_pack(spark, sf_dir)
-    sc_p = sc.select(
-        "kind", "id", "s1", "s2", "s3", "s4",
-        "v1", "v2", "v3", "v4", "v5",
-    )
-    rf_p = rf.select(
-        F.lit("ord_row").alias("kind"),
-        F.col("o_orderkey").cast("bigint").alias("id"),
-        F.col("prio_num").alias("s1"),
-        F.col("status_pad").alias("s2"),
-        F.col("prio_rev").alias("s3"),
-        F.col("status_lc").alias("s4"),
-        F.col("y").cast("bigint").alias("v1"),
-        F.col("m").cast("bigint").alias("v2"),
-        F.col("d").cast("bigint").alias("v3"),
-        F.col("q").cast("bigint").alias("v4"),
-        F.col("dow").cast("bigint").alias("v5"),
-    )
-    return sc_p.unionByName(rf_p)
-
-
-ROW_SCALAR_PACK_SQL = f"""
-SELECT kind, id, s1, s2, s3, s4, v1, v2, v3, v4, v5
-FROM ({SCALAR_PACK_SQL.strip().rstrip(';')})
-UNION ALL
-SELECT 'ord_row' AS kind, CAST(o_orderkey AS BIGINT) AS id,
-       prio_num AS s1, status_pad AS s2, prio_rev AS s3, status_lc AS s4,
-       CAST(y AS BIGINT) AS v1, CAST(m AS BIGINT) AS v2,
-       CAST(d AS BIGINT) AS v3, CAST(q AS BIGINT) AS v4,
-       CAST(dow AS BIGINT) AS v5
-FROM ({ROW_FUNCS_SQL.strip().rstrip(';')})
-"""
-
-
-def percentile_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B4 exact-quantile pack: single median by priority + quartiles by
-    status (percentile_exact + percentile_multi merged)."""
+def shape_ops_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B2 reshape + B7 set-ops pack under one (kind, key, attr, v_cnt,
+    v_num) schema: the status×priority pivot (re-stacked to long form),
+    the part unpivot, and INTERSECT / EXCEPT / EXCEPT ALL over order
+    customers (custkey in key, except-all multiplicity in v_cnt)."""
     arms = [
-        percentile_exact(spark, sf_dir).select(
-            F.lit("by_priority").alias("kind"),
-            F.col("o_orderpriority").alias("grp"),
-            _nl("double", "p25"),
-            F.col("median_price").cast("double").alias("p50"),
-            _nl("double", "p75"),
+        pivot_status_priority(spark, sf_dir).select(
+            F.lit("pivot").alias("kind"),
+            F.col("o_orderstatus").alias("key"),
+            F.expr(
+                "stack(5, 'urgent', urgent, 'high', high, 'medium', medium, "
+                "'not_specified', not_specified, 'low', low) AS (attr, v_cnt)"
+            ),
+            _nl("double", "v_num"),
         ),
-        percentile_multi(spark, sf_dir).select(
-            F.lit("by_status").alias("kind"),
-            F.col("o_orderstatus").alias("grp"),
-            F.col("p25").cast("double").alias("p25"),
-            F.col("p50").cast("double").alias("p50"),
-            F.col("p75").cast("double").alias("p75"),
+        unpivot_part(spark, sf_dir).select(
+            F.lit("unpivot").alias("kind"),
+            F.col("p_partkey").cast("string").alias("key"),
+            F.col("attr"),
+            _nl("bigint", "v_cnt"),
+            F.col("val").cast("double").alias("v_num"),
+        ),
+        set_intersect(spark, sf_dir).select(
+            F.lit("intersect").alias("kind"),
+            F.col("o_custkey").cast("string").alias("key"),
+            _nl("string", "attr"), _nl("bigint", "v_cnt"), _nl("double", "v_num"),
+        ),
+        set_except(spark, sf_dir).select(
+            F.lit("except").alias("kind"),
+            F.col("o_custkey").cast("string").alias("key"),
+            _nl("string", "attr"), _nl("bigint", "v_cnt"), _nl("double", "v_num"),
+        ),
+        set_except_all(spark, sf_dir).select(
+            F.lit("except_all").alias("kind"),
+            F.col("o_custkey").cast("string").alias("key"),
+            _nl("string", "attr"),
+            F.col("n").cast("bigint").alias("v_cnt"),
+            _nl("double", "v_num"),
         ),
     ]
-    return arms[0].unionByName(arms[1])
+    return _union(arms)
 
 
-PERCENTILE_PACK_SQL = f"""
-{_arm('by_priority', PERCENTILE_SQL, "o_orderpriority AS grp, CAST(NULL AS DOUBLE) AS p25, CAST(median_price AS DOUBLE) AS p50, CAST(NULL AS DOUBLE) AS p75")}
-UNION ALL
-{_arm('by_status', PERCENTILE_MULTI_SQL, "o_orderstatus AS grp, CAST(p25 AS DOUBLE) AS p25, CAST(p50 AS DOUBLE) AS p50, CAST(p75 AS DOUBLE) AS p75")}
-ORDER BY kind, grp
-"""
-
-
-def agg_percentile_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 fold of ``agg_multi_pack`` + ``percentile_pack``
-    (COVERAGE.md's named fold candidate — both are orders-grain B4
-    aggregate surfaces), banking a registry slot for
-    ``schema_evolution``.  Both constituent packs stay independently
-    callable and BYTE-UNCHANGED; this pack unions them under a
-    NULL-padded common schema (the established fold discipline, cf.
-    row_scalar_pack): the grouping-variant arms keep kind/k1/k2/v1-v3
-    and NULL the quantile columns; the quantile arms carry grp in k1
-    with NULL counts."""
-    am = agg_multi_pack(spark, sf_dir).select(
-        "kind", "k1", "k2", "v1", "v2", "v3",
-        _nl("double", "p25"), _nl("double", "p50"), _nl("double", "p75"),
-    )
-    pp = percentile_pack(spark, sf_dir).select(
-        "kind",
-        F.col("grp").alias("k1"),
-        _nl("string", "k2"),
-        _nl("bigint", "v1"), _nl("bigint", "v2"), _nl("bigint", "v3"),
-        "p25", "p50", "p75",
-    )
-    return am.unionByName(pp)
-
-
-AGG_PERCENTILE_SQL = f"""
-SELECT kind, k1, k2, v1, v2, v3,
-       CAST(NULL AS DOUBLE) AS p25, CAST(NULL AS DOUBLE) AS p50,
-       CAST(NULL AS DOUBLE) AS p75
-FROM ({AGG_MULTI_SQL.strip().rstrip(';')})
-UNION ALL
-SELECT kind, grp AS k1, CAST(NULL AS VARCHAR) AS k2,
-       CAST(NULL AS BIGINT) AS v1, CAST(NULL AS BIGINT) AS v2,
-       CAST(NULL AS BIGINT) AS v3, p25, p50, p75
-FROM ({PERCENTILE_PACK_SQL.strip().rstrip(';')})
-"""
-
-
-def reshape_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B2 reshape pack: the status×priority pivot (re-stacked to long
-    form for union) + the part unpivot (pivot_status_priority +
-    unpivot_part merged)."""
-    piv = pivot_status_priority(spark, sf_dir).select(
-        F.lit("pivot").alias("kind"),
-        F.col("o_orderstatus").alias("key"),
-        F.expr(
-            "stack(5, 'urgent', urgent, 'high', high, 'medium', medium, "
-            "'not_specified', not_specified, 'low', low) AS (attr, v_cnt)"
-        ),
-        _nl("double", "v_num"),
-    )
-    unp = unpivot_part(spark, sf_dir).select(
-        F.lit("unpivot").alias("kind"),
-        F.col("p_partkey").cast("string").alias("key"),
-        F.col("attr"),
-        _nl("bigint", "v_cnt"),
-        F.col("val").cast("double").alias("v_num"),
-    )
-    return piv.unionByName(unp)
-
-
-RESHAPE_PACK_SQL = f"""
+SHAPE_OPS_SQL = f"""
 SELECT 'pivot' AS kind, o_orderstatus AS key, attr, v_cnt, CAST(NULL AS DOUBLE) AS v_num
 FROM (
   SELECT o_orderstatus, unnest(['urgent', 'high', 'medium', 'not_specified', 'low']) AS attr,
@@ -2832,38 +2594,13 @@ FROM (
 )
 UNION ALL
 {_arm('unpivot', UNPIVOT_SQL, "CAST(p_partkey AS VARCHAR) AS key, attr, CAST(NULL AS BIGINT) AS v_cnt, CAST(val AS DOUBLE) AS v_num")}
-ORDER BY kind, key, attr
-"""
-
-
-def shape_ops_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r14 fold of ``reshape_pack`` + ``set_ops_pack`` (COVERAGE.md's
-    named fold candidate — both are small orders-grain shape surfaces),
-    banking a registry slot for ``dedup_coverage``.  Both constituent
-    packs stay independently callable and BYTE-UNCHANGED; this pack
-    unions them under a NULL-padded common schema (the established fold
-    discipline, cf. row_scalar_pack / agg_percentile_pack): the reshape
-    arms keep kind/key/attr/v_cnt/v_num; the set-ops arms carry their
-    custkey in key (cast to string) with a NULL attr and their
-    except-all multiplicity in v_cnt."""
-    rp = reshape_pack(spark, sf_dir)
-    so = set_ops_pack(spark, sf_dir).select(
-        "kind",
-        F.col("k1").cast("string").alias("key"),
-        _nl("string", "attr"),
-        F.col("v1").alias("v_cnt"),
-        _nl("double", "v_num"),
-    )
-    return rp.unionByName(so)
-
-
-SHAPE_OPS_SQL = f"""
-SELECT kind, key, attr, v_cnt, v_num
-FROM ({RESHAPE_PACK_SQL.strip().rstrip(';')})
 UNION ALL
-SELECT kind, CAST(k1 AS VARCHAR) AS key, CAST(NULL AS VARCHAR) AS attr,
-       v1 AS v_cnt, CAST(NULL AS DOUBLE) AS v_num
-FROM ({SET_OPS_SQL.strip().rstrip(';')})
+{_arm('intersect', SET_INTERSECT_SQL, "CAST(o_custkey AS VARCHAR) AS key, CAST(NULL AS VARCHAR) AS attr, CAST(NULL AS BIGINT) AS v_cnt, CAST(NULL AS DOUBLE) AS v_num")}
+UNION ALL
+{_arm('except', SET_EXCEPT_SQL, "CAST(o_custkey AS VARCHAR) AS key, CAST(NULL AS VARCHAR) AS attr, CAST(NULL AS BIGINT) AS v_cnt, CAST(NULL AS DOUBLE) AS v_num")}
+UNION ALL
+{_arm('except_all', SET_EXCEPT_ALL_SQL, "CAST(o_custkey AS VARCHAR) AS key, CAST(NULL AS VARCHAR) AS attr, CAST(n AS BIGINT) AS v_cnt, CAST(NULL AS DOUBLE) AS v_num")}
+ORDER BY kind, key, attr
 """
 
 
@@ -3069,10 +2806,7 @@ def tpch_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             _nl("double", "v2"),
         ),
     ]
-    out = arms[0]
-    for a in arms[1:]:
-        out = out.unionByName(a)
-    return out
+    return _union(arms)
 
 
 TPCH_PACK_SQL = f"""
@@ -3138,7 +2872,7 @@ def time_aggs_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_active").cast("bigint").alias("v1"),
         ),
     ]
-    return arms[0].unionByName(arms[1])
+    return _union(arms)
 
 
 TIME_AGGS_SQL = f"""
@@ -3152,8 +2886,8 @@ ORDER BY kind, k1, s1, k2
 # ---------------------------------------------------------------------------
 # Registry: the 9 bench-headline queries stand alone (bench.py compares
 # them per-round against BASELINE.md), the rest of Table B rides in the
-# 10 packs above, + 1 rows-only sketch op.  See COVERAGE.md for the
-# pack → operator map.
+# 7 packs above, + skew_salted_join and the approx_sketches op.  See
+# COVERAGE.md for the pack → operator map.
 # ---------------------------------------------------------------------------
 
 QUERIES: dict[str, tuple] = {
@@ -3170,17 +2904,11 @@ QUERIES: dict[str, tuple] = {
     "skew_salted_join": (skew_salted_join, SKEW_SALTED_JOIN_SQL),
     "joins_pack": (joins_pack, JOINS_PACK_SQL),
     "window_pack": (window_pack, WINDOW_PACK_SQL),
-    # r13: agg_multi_pack + percentile_pack folded into
-    # agg_percentile_pack (slot banked for schema_evolution, cdc.py);
-    # all arms unchanged + independently callable.
+    # three former pack pairs, each folded into one arm list to bank a
+    # slot: schema_evolution (cdc.py), entity_state_manifest, and
+    # dedup_coverage (dedup.py)
     "agg_percentile_pack": (agg_percentile_pack, AGG_PERCENTILE_SQL),
-    # r12: scalar_pack + row_funcs_pack folded into row_scalar_pack
-    # (slot banked for entity_state_manifest); all arms unchanged +
-    # independently callable.
     "row_scalar_pack": (row_scalar_pack, ROW_SCALAR_PACK_SQL),
-    # r14: reshape_pack + set_ops_pack folded into shape_ops_pack
-    # (slot banked for dedup_coverage, dedup.py); all arms unchanged +
-    # independently callable.
     "shape_ops_pack": (shape_ops_pack, SHAPE_OPS_SQL),
     "tpch_pack": (tpch_pack, TPCH_PACK_SQL),
     "time_aggs_pack": (time_aggs_pack, TIME_AGGS_SQL),

@@ -54,8 +54,9 @@ def _hits(toks, words: tuple[str, ...]):
 
 
 def _quality_cols() -> list:
-    """text_quality's column expressions over a ``text`` column —
-    shared by the standalone arm and textstats_pack."""
+    """Per-doc quality metrics over a ``text`` column: token counts,
+    type-token ratio, stopword ratio, mean token length (textstats_pack;
+    DuckDB twin TEXT_QUALITY_SQL)."""
     toks = _tokens(F.col("text"))
     n_tok = F.size(toks)
     n_distinct = F.size(F.array_distinct(toks))
@@ -68,13 +69,6 @@ def _quality_cols() -> list:
         (n_stop.cast("double") / n_tok.cast("double")).alias("stopword_ratio"),
         ((F.length("text") - (n_tok - 1)).cast("double") / n_tok.cast("double")).alias("mean_token_len"),
     ]
-
-
-def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc quality metrics: token counts, type-token ratio,
-    stopword ratio, mean token length."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", *_quality_cols())
 
 
 _SW_EN = "', '".join(LANG_STOPWORDS["en"])
@@ -148,17 +142,12 @@ FROM scored ORDER BY doc_id
 
 
 def _token_count_cols() -> list:
-    """token_counts' column expressions — shared with textstats_pack."""
+    """Whitespace tokens vs a BPE-ish regex token estimate
+    (textstats_pack; DuckDB twin TOKEN_COUNTS_SQL)."""
     return [
         F.size(_tokens(F.col("text"))).alias("ws_tokens"),
         F.regexp_count(F.col("text"), F.lit(BPE_ISH)).alias("bpe_tokens"),
     ]
-
-
-def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace tokens vs a BPE-ish regex token estimate."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", *_token_count_cols())
 
 
 TOKEN_COUNTS_SQL = f"""
@@ -282,13 +271,11 @@ GROUP BY bigram ORDER BY n DESC, bigram LIMIT {BIGRAM_TOP}
 
 
 def term_stats_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r10 fold of ``tfidf_top_terms`` + ``bigram_topk`` (COVERAGE.md's
-    named candidate — same table, different grain) into one registry
-    slot, banking a slot for the skew-join query.  Both arms stay
-    independently callable and BYTE-UNCHANGED; this pack only unions
-    them under a NULL-padded common schema (the agg_multi_pack
-    discipline): per-doc tf-idf rows carry (doc_id, tfidf, rk), the
-    global bigram rows carry (n); each arm NULLs the other's columns."""
+    """Term-grain half of ``text_pack``: ``tfidf_top_terms`` +
+    ``bigram_topk`` (same table, different grain) unioned under a
+    NULL-padded common schema: per-doc tf-idf rows carry (doc_id, tfidf,
+    rk), the global bigram rows carry (n); each arm NULLs the other's
+    columns."""
     tfidf = tfidf_top_terms(spark, sf_dir).select(
         F.lit("tfidf").alias("kind"),
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -366,9 +353,12 @@ FH_BUCKETS = 8
 
 
 def _rhash_col():
-    """rolling_hash's fold expression over a ``text`` column — shared
-    by the standalone arm and ``textstats_pack`` (r7 fold), so the two
-    cannot drift."""
+    """Token-granular polynomial rolling hash over a ``text`` column
+    (textstats_pack; DuckDB twin ROLLING_HASH_SQL):
+    h_i = (h_{i-1} * B + v_i) mod M with v = len(token)*31 + ascii(first
+    char).  Pure integer fold — order-sensitive (unlike md5-of-whole),
+    so shifted/reordered near-dups hash differently, and incremental
+    recompute over a sliding token window is O(1) at scale."""
     tokens = _tokens(F.col("text"))
     v = lambda t: (F.length(t) * 31 + F.ascii(F.substring(t, 1, 1))) % RH_MOD  # noqa: E731
     return F.aggregate(
@@ -376,16 +366,6 @@ def _rhash_col():
         F.lit(0).cast("bigint"),
         lambda acc, t: (acc * RH_BASE + v(t)) % RH_MOD,
     )
-
-
-def rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-granular polynomial rolling hash:
-    h_i = (h_{i-1} * B + v_i) mod M with v = len(token)*31 + ascii(first
-    char).  Pure integer fold — order-sensitive (unlike md5-of-whole),
-    so shifted/reordered near-dups hash differently, and incremental
-    recompute over a sliding token window is O(1) at scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", _rhash_col().alias("rhash"))
 
 
 ROLLING_HASH_SQL = f"""
@@ -1094,13 +1074,6 @@ def _pii_cols():
     ]
 
 
-def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone PII-redaction arm (independently callable per the
-    registry-headroom contract; gated inside ``textstats_pack``)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", *_pii_cols())
-
-
 _PII_AUG_SQL = (
     "text || CASE WHEN doc_id % 3 = 0"
     " THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@mail.example.com now'"
@@ -1125,12 +1098,11 @@ FROM aug ORDER BY doc_id
 
 
 def textstats_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``text_quality`` + ``token_counts`` + ``rolling_hash`` +
-    ``pii_scrub`` as ONE wide zero-shuffle projection (r6 fold;
-    rolling_hash folded r7, pii_scrub r8 —
-    same table, same doc grain; all arms stay independently callable
-    and share the same expression builders, so the pack cannot drift
-    from them).  All arms are pure per-row projections over the same
+    """Doc-grain text statistics as ONE wide zero-shuffle projection:
+    quality metrics (``_quality_cols``), token counts
+    (``_token_count_cols``), the rolling hash (``_rhash_col``) and PII
+    redaction (``_pii_cols``).  The DuckDB twin joins the four per-arm
+    SQLs on doc_id.  All arms are pure per-row projections over the same
     scan, so a doc-grain join here would have ADDED an exchange no arm
     has — at 100 TB a doc-grain broadcast is impossible and the join
     would become a sort-merge with two shuffles (r6 review finding);

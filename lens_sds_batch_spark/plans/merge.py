@@ -44,13 +44,13 @@ GEN_COL = "__gen"
 # on the local RawLocalFileSystem, good enough to catch operational
 # mistakes; it is NOT a Byzantine-proof lock).  A holder that dies
 # leaves the lease behind; a later writer takes over once it is older
-# than ``lease_stale_sec`` — size that above the longest expected
+# than ``LEASE_STALE_SEC`` — size that above the longest expected
 # merge, or a slow merge can be taken over mid-flight.
 LEASE_SUFFIX = ".__lease"
 LEASE_STALE_SEC = 3600.0
 
 
-def _writer_lease(fs, jvm_path, target_path: str, stale_sec: float = LEASE_STALE_SEC):
+def _writer_lease(fs, jvm_path, target_path: str):
     """Context manager acquiring the single-writer lease for a merge
     target (see LEASE_SUFFIX above).  Raises IOError when another
     writer holds a non-stale lease; takes over a stale one (best-effort:
@@ -119,11 +119,11 @@ def _writer_lease(fs, jvm_path, target_path: str, stale_sec: float = LEASE_STALE
                 age = _time.time() - st.getModificationTime() / 1000.0
             except Exception:  # holder released between create-fail and stat
                 pass
-            if age is not None and age <= stale_sec:
+            if age is not None and age <= LEASE_STALE_SEC:
                 raise IOError(
                     f"merge_into: another writer holds the lease at "
                     f"{target_path.rstrip('/') + LEASE_SUFFIX} (age {age:.0f}s "
-                    f"<= stale threshold {stale_sec:.0f}s); concurrent writes "
+                    f"<= stale threshold {LEASE_STALE_SEC:.0f}s); concurrent writes "
                     "into one merge target take turns — wait for the holder "
                     "and retry"
                 )
@@ -223,7 +223,6 @@ def merge_into(
     is_delete: Column,
     num_buckets: int | None = None,
     protocol: str | None = None,
-    lease_stale_sec: float = LEASE_STALE_SEC,
     commit_meta: dict | None = None,
     expect_seq: int | None = None,
 ) -> dict:
@@ -254,7 +253,7 @@ def merge_into(
     - SINGLE WRITER, enforced by a create-exclusive lease file
       (<target>.__lease, r11 verdict #2): a second concurrent
       merge/rebucket/compaction raises IOError instead of interleaving;
-      a dead holder's lease is taken over after ``lease_stale_sec``.
+      a dead holder's lease is taken over after ``LEASE_STALE_SEC``.
     - COMMIT METADATA / CAS (r14): ``commit_meta`` is a JSON dict
       committed ATOMICALLY inside the same manifest rename as the data
       — the transactional-offsets pattern: a downstream consumer that
@@ -366,7 +365,7 @@ def merge_into(
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     tgt = target_path.rstrip("/")
-    with _writer_lease(fs, jvm_path, tgt, lease_stale_sec):
+    with _writer_lease(fs, jvm_path, tgt):
         man = _read_manifest(spark, fs, jvm_path, tgt)
         if man is None:
             man = _init_manifest_table(
@@ -1486,7 +1485,6 @@ def vacuum_merged_table(
     spark,
     target_path: str,
     grace_sec: float = 3600.0,
-    lease_stale_sec: float = LEASE_STALE_SEC,
 ) -> dict:
     """GC a manifest-commit target: delete generation directories not
     referenced by the LATEST manifest, superseded manifests, and .tmp
@@ -1505,7 +1503,7 @@ def vacuum_merged_table(
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     tgt = target_path.rstrip("/")
-    with _writer_lease(fs, jvm_path, tgt, lease_stale_sec):
+    with _writer_lease(fs, jvm_path, tgt):
         man = _read_manifest(spark, fs, jvm_path, tgt)
         if man is None:
             raise ValueError(
@@ -1562,7 +1560,6 @@ def maintain_merged_table(
     target_bucket_bytes: int = 256 * 1024 * 1024,
     target_file_bytes: int = 128 * 1024 * 1024,
     grace_sec: float = 3600.0,
-    lease_stale_sec: float = LEASE_STALE_SEC,
 ) -> dict:
     """ONE maintenance-window entry point for a manifest merge target
     (r13): run the detect→migrate rebucket composition
@@ -1578,17 +1575,9 @@ def maintain_merged_table(
     ``{"rebucket": ..., "compact": ..., "vacuum": ...}`` (the three
     steps' own result dicts)."""
     return {
-        "rebucket": maybe_rebucket(
-            spark, target_path, target_bucket_bytes,
-            lease_stale_sec=lease_stale_sec,
-        ),
-        "compact": compact_merged_table(
-            spark, target_path, target_file_bytes,
-            lease_stale_sec=lease_stale_sec,
-        ),
-        "vacuum": vacuum_merged_table(
-            spark, target_path, grace_sec, lease_stale_sec=lease_stale_sec
-        ),
+        "rebucket": maybe_rebucket(spark, target_path, target_bucket_bytes),
+        "compact": compact_merged_table(spark, target_path, target_file_bytes),
+        "vacuum": vacuum_merged_table(spark, target_path, grace_sec),
     }
 
 
@@ -1596,7 +1585,6 @@ def compact_merged_table(
     spark,
     target_path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    lease_stale_sec: float = LEASE_STALE_SEC,
 ) -> dict:
     """Within-generation compaction for the MANIFEST flavor (r12
     verdict #4): a touched bucket's generation inherits the writing
@@ -1636,7 +1624,7 @@ def compact_merged_table(
             if not st.getPath().getName().startswith(("_", "."))
         ]
 
-    with _writer_lease(fs, jvm_path, tgt, lease_stale_sec):
+    with _writer_lease(fs, jvm_path, tgt):
         man = _read_manifest(spark, fs, jvm_path, tgt)
         if man is None:
             raise ValueError(
@@ -1682,7 +1670,6 @@ def rebucket(
     spark,
     target_path: str,
     new_num_buckets: int,
-    lease_stale_sec: float = LEASE_STALE_SEC,
 ) -> dict:
     """Re-layout a merge_into target to a NEW bucket count (r11 verdict
     #3): a table laid out at N buckets that grows 100x keeps N
@@ -1705,7 +1692,7 @@ def rebucket(
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     tgt = target_path.rstrip("/")
-    with _writer_lease(fs, jvm_path, tgt, lease_stale_sec):
+    with _writer_lease(fs, jvm_path, tgt):
         man = _read_manifest(spark, fs, jvm_path, tgt)
         if man is None:
             raise ValueError(
@@ -1843,7 +1830,6 @@ def evolve_schema(
     add: dict | None = None,
     widen: dict | None = None,
     rename: dict | None = None,
-    lease_stale_sec: float = LEASE_STALE_SEC,
 ) -> dict:
     """Explicit schema evolution for a merge_into target (r12 verdict
     #1 — the operation the schema-pin drift refusal points at).  Two
@@ -1934,7 +1920,7 @@ def evolve_schema(
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
     tgt = target_path.rstrip("/")
-    with _writer_lease(fs, jvm_path, tgt, lease_stale_sec):
+    with _writer_lease(fs, jvm_path, tgt):
         man = _read_manifest(spark, fs, jvm_path, tgt)
         if man is None:
             _refuse_foreign(fs, jvm_path, tgt, "evolve_schema")
@@ -2038,7 +2024,6 @@ def maybe_rebucket(
     spark,
     target_path: str,
     target_bucket_bytes: int = 256 * 1024 * 1024,
-    lease_stale_sec: float = LEASE_STALE_SEC,
 ) -> dict:
     """The detect→migrate composition (r12): run the advisor and, ONLY
     if it recommends (2x hysteresis in either direction), execute the
@@ -2053,7 +2038,5 @@ def maybe_rebucket(
     advice = suggest_num_buckets(spark, target_path, target_bucket_bytes)
     if not advice["rebucket_recommended"]:
         return {**advice, "rebucketed": False}
-    migration = rebucket(
-        spark, target_path, advice["suggested"], lease_stale_sec=lease_stale_sec
-    )
+    migration = rebucket(spark, target_path, advice["suggested"])
     return {**advice, "rebucketed": True, "migration": migration}

@@ -81,37 +81,51 @@ def _warm_session(spark: SparkSession) -> None:
         )
 
 
-def get_spark(app_name: str = "lens-sds-batch-spark", cpus: int | None = None) -> SparkSession:
+# The engine's session confs, kept once: get_spark builds from them,
+# tools/stage_profile.py reuses them with the UI on, and
+# sources.parquet.ensure_engine_confs re-asserts the runtime SQL subset
+# on sessions the engine did not build.
+ENGINE_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Per-DataFrame-API-call Python stack inspection for error
+    # call-site context costs ~15% of plan-construction wall-clock
+    # (measured r6: 0.55s of a 2.9s flagship build in
+    # errors.utils._capture_call_site); errors still carry the full
+    # JVM context. Production-off is the documented intent of the
+    # knob.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # uuid fast-path literal escaping assumes the default parser
+    # mode (see sources/parquet.ensure_engine_confs)
+    "spark.sql.parser.escapedStringLiterals": "false",
+    # defensive: if events.parquet ever carries TIMESTAMP(NANOS)
+    # again (r1-2 testdata), read it as int64 instead of erroring;
+    # no-op on the current TIMESTAMP(MICROS) files
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.files.maxPartitionBytes": "134217728",
+    "spark.ui.enabled": "false",
+}
+
+
+def session_confs(cpus: int | None = None) -> dict[str, str]:
+    """ENGINE_CONFS plus the launch-sized ones for ``local[cpus]``
+    (default: $SPARK_GRAFT_CPUS, else every core): master, one shuffle
+    partition per core, driver memory from $SPARK_DRIVER_MEMORY."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Per-DataFrame-API-call Python stack inspection for error
-        # call-site context costs ~15% of plan-construction wall-clock
-        # (measured r6: 0.55s of a 2.9s flagship build in
-        # errors.utils._capture_call_site); errors still carry the full
-        # JVM context. Production-off is the documented intent of the
-        # knob.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # uuid fast-path literal escaping assumes the default parser
-        # mode (see sources/parquet.ensure_engine_confs)
-        .config("spark.sql.parser.escapedStringLiterals", "false")
-        # defensive: if events.parquet ever carries TIMESTAMP(NANOS)
-        # again (r1-2 testdata), read it as int64 instead of erroring;
-        # no-op on the current TIMESTAMP(MICROS) files
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    return {
+        "spark.master": f"local[{cpus}]",
+        "spark.sql.shuffle.partitions": str(cpus),
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        **ENGINE_CONFS,
+    }
+
+
+def get_spark(app_name: str = "lens-sds-batch-spark", cpus: int | None = None) -> SparkSession:
+    spark = SparkSession.builder.appName(app_name).config(map=session_confs(cpus)).getOrCreate()
     _warm_session(spark)
     return spark
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import ENGINE_CONFS
+
 TABLES = (
     "region",
     "nation",
@@ -25,10 +27,20 @@ TABLES = (
 )
 
 
+# the runtime-settable SQL subset of session.ENGINE_CONFS the engine
+# depends on (master and memory cannot change on a live session)
+_RUNTIME_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.adaptive.enabled",
+    "spark.sql.parser.escapedStringLiterals",
+)
+
+
 def ensure_engine_confs(spark: SparkSession) -> None:
     """Make any externally-provided SparkSession safe for this engine
-    (the driver constructs its own session — these are runtime-settable
-    SQL confs, unlike master/memory):
+    (the driver constructs its own session) by re-asserting
+    ``_RUNTIME_CONFS`` at their ``session.ENGINE_CONFS`` values:
 
     - UTC session timezone: parquet timestamps must mean the same
       instant as in the DuckDB oracle (naive-UTC), or every epoch
@@ -39,16 +51,13 @@ def ensure_engine_confs(spark: SparkSession) -> None:
       ``load_events`` takes its integral fast-path.  The current
       testdata is TIMESTAMP(MICROS, isAdjustedToUTC=false), on which
       this conf is a no-op.
+    - escapedStringLiterals off: the uuid fast path (functions/keys)
+      escapes string literals for the DEFAULT parser mode; under legacy
+      Hive-compat escapedStringLiterals=true the same fragment would
+      hash a different payload than the composed fallback.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # The uuid fast path (functions/keys) escapes string literals for
-    # the DEFAULT parser mode; under legacy Hive-compat
-    # escapedStringLiterals=true the same fragment would hash a
-    # different payload than the composed fallback — pin it off for
-    # any externally-provided session.
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+    for key in _RUNTIME_CONFS:
+        spark.conf.set(key, ENGINE_CONFS[key])
 
 
 # Session-scoped source-relation memo (r14-opt, guide §6 "file
@@ -141,10 +150,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with the timestamp canonicalized to exact BIGINT epoch
     nanoseconds (``ts_ns``), schema-adaptively — the driver's testdata
@@ -179,8 +184,3 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "props",
     )
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view (for spark.sql-based operators)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

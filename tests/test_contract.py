@@ -282,63 +282,43 @@ def test_tpch_arm_registry_matches_pack(spark):
     assert set(TPCH_ARMS) - kinds <= {"q7", "q11"}
 
 
-def test_pack_arms_individually_importable(spark):
-    """Registry-headroom contract (COVERAGE.md): every operator folded
-    into a pack stays a NAMED, importable, independently callable
-    function — the fold is a schema cast, not a merge — so any pack can
-    be unfolded back into standalone registrations without rewriting."""
-    from .conftest import SF_SMOKE
+def test_every_operator_builder_runs_in_a_query():
+    """An operator arm lives once, in the query that runs it: every
+    public top-level ``def f(spark, sf_dir, ...)`` in operators/*.py is
+    a registered query (a module's QUERIES), a TPCH_ARMS arm, or called
+    from other package code.  Private helpers are exempt
+    (``xml_ingest._subset_rows`` is the reference the ODM XML
+    differential test compares against)."""
+    import ast
+    import pathlib
 
-    ARM_FUNCS = {
-        "lens_sds_batch_spark.operators.relational": [
-            # joins_pack
-            "join_semi", "join_anti", "join_outer_counts", "join_full_outer",
-            "join_cross", "range_join",
-            # window_pack / agg_multi_pack / set_ops_pack
-            "window_running_sum", "window_funcs_pack", "window_range_frame",
-            "agg_distinct", "agg_cube", "agg_grouping_sets",
-            "set_intersect", "set_except", "set_except_all",
-            # row_funcs / scalar / percentile / reshape / tpch / time_aggs
-            "string_funcs2", "date_parts", "scalar_funcs", "array_funcs_pack",
-            "json_funcs_pack", "percentile_exact", "percentile_multi",
-            "pivot_status_priority", "unpivot_part",
-            "q4_order_priority", "q10_returned_items", "topk_global",
-            "q17_small_quantity_revenue", "q18_large_volume_customers",
-            "q21_sole_late_supplier", "q20_part_promotion_suppliers",
-            "q22_dormant_balance_customers",
-            "q2_min_cost_supplier", "q9_product_type_profit",
-            "q16_supplier_part_counts",
-            "events_sliding", "cohort_retention",
-            # r13 fold: both former registry packs stay callable arms
-            "agg_multi_pack", "percentile_pack",
-            # r14 fold: both former registry packs stay callable arms
-            "reshape_pack", "set_ops_pack",
-        ],
-        # r6 folds: dedup_basic_pack + knn_pack + textstats_pack arms
-        # stay independently callable
-        "lens_sds_batch_spark.operators.dedup": [
-            "ngram_jaccard_pairs", "dedup_exact", "dedup_fingerprint",
-        ],
-        "lens_sds_batch_spark.operators.textops": [
-            "text_quality", "token_counts", "rolling_hash", "pii_scrub",
-            # r11 fold: both former registry packs stay callable arms
-            "textstats_pack", "term_stats_pack",
-            # r12: corpus-unigram LM score joins doc_features_pack
-            "lm_score",
-        ],
-        "lens_sds_batch_spark.operators.similarity": [
-            "embedding_dup_pairs", "knn_bruteforce", "knn_lsh_bucketed",
-        ],
-    }
-    import importlib
+    import lens_sds_batch_spark
+    from lens_sds_batch_spark.operators import registry
+    from lens_sds_batch_spark.operators.relational import TPCH_ARMS
 
-    for mod_name, funcs in ARM_FUNCS.items():
-        mod = importlib.import_module(mod_name)
-        for fn_name in funcs:
-            fn = getattr(mod, fn_name)  # AttributeError = a fold lost its arm
-            df = fn(spark, SF_SMOKE)
-            assert df.columns, f"{fn_name} produced no schema"
-            df.explain(mode="simple")  # analyzes the plan without executing
+    root = pathlib.Path(lens_sds_batch_spark.__file__).parent
+    reached = {fn.__name__ for fn in TPCH_ARMS.values()}
+    for m in registry._modules():
+        reached |= {fn.__name__ for fn, _ in m.QUERIES.values()}
+    for path in root.rglob("*.py"):
+        for node in ast.parse(path.read_text()).body:
+            owner = getattr(node, "name", None)  # a function calling itself is no caller
+            for call in ast.walk(node):
+                if isinstance(call, ast.Call):
+                    f = call.func
+                    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                    if name != owner:
+                        reached.add(name)
+
+    orphans = []
+    for path in sorted((root / "operators").glob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
+                continue
+            params = [a.arg for a in node.args.args[:2]]
+            if params == ["spark", "sf_dir"] and node.name not in reached:
+                orphans.append(f"{path.stem}.{node.name}")
+    assert not orphans, f"operator builders no query, arm or package code runs: {orphans}"
 
 
 def test_probe_coverage_is_total_and_enforced(monkeypatch):

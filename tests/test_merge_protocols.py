@@ -87,7 +87,7 @@ def test_lease_refuses_second_writer_and_stale_takeover(spark, tmp_path):
 
     # a DEAD holder (mtime past the stale threshold): takeover succeeds
     os.utime(lease, (time.time() - 7200, time.time() - 7200))
-    res = _merge(spark, target, [("k2", 1, "b", False)], lease_stale_sec=3600)
+    res = _merge(spark, target, [("k2", 1, "b", False)])
     assert res["engine"] == "parquet-manifest"
     assert not os.path.exists(lease)
     assert _state(spark, target) == {"k1": (1, "a"), "k2": (1, "b")}

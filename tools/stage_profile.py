@@ -32,41 +32,21 @@ def main() -> None:
 
     os.environ.setdefault("SPARK_GRAFT_SF_DIR", args.sf_dir)
     # build the session OURSELVES with the UI on — session.get_spark
-    # disables it; everything else must match (we only read timings
-    # relative to each other, not against BASELINE.md)
+    # disables it; every other conf is get_spark's own (we only read
+    # timings relative to each other, not against BASELINE.md)
     from lens_sds_batch_spark import session as sess
-
-    orig = sess.get_spark
 
     def get_spark_ui(app_name="stage-profile", cpus=None):
         from pyspark.sql import SparkSession
 
         if SparkSession.getActiveSession():
             return SparkSession.getActiveSession()
-        builder = orig.__wrapped__ if hasattr(orig, "__wrapped__") else None
-        # replicate get_spark's config with the UI enabled
-        import os as _os
-
-        if cpus is None:
-            cpus = int(_os.environ.get("SPARK_GRAFT_CPUS", "0")) or (_os.cpu_count() or 4)
-        return (
-            SparkSession.builder.master(f"local[{cpus}]")
-            .appName(app_name)
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.shuffle.partitions", str(cpus))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-            .config("spark.sql.parser.escapedStringLiterals", "false")
-            .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-            .config("spark.sql.files.maxPartitionBytes", "134217728")
-            .config("spark.driver.memory", _os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-            .config("spark.ui.enabled", "true")
-            .config("spark.ui.port", str(args.port))
-            .getOrCreate()
-        )
+        confs = {
+            **sess.session_confs(cpus),
+            "spark.ui.enabled": "true",
+            "spark.ui.port": str(args.port),
+        }
+        return SparkSession.builder.appName(app_name).config(map=confs).getOrCreate()
 
     sess.get_spark = get_spark_ui
     spark = get_spark_ui()
