@@ -2605,9 +2605,8 @@ ORDER BY kind, key, attr
 
 
 # Single source of truth for the pack's arm inventory: tpch_pack's union
-# below, tools/tpch_arm_attribution.py, and the arm-completeness pytest all
-# consume THIS dict, so adding an arm in one place and forgetting another is
-# a test failure, not a silent attribution gap.
+# below and the arm-completeness pytest both consume THIS dict, so adding
+# an arm in one place and forgetting another is a test failure.
 TPCH_ARMS = {
     "q4": q4_order_priority,
     "q10": q10_returned_items,

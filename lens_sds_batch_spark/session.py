@@ -81,8 +81,7 @@ def _warm_session(spark: SparkSession) -> None:
         )
 
 
-# The engine's session confs, kept once: get_spark builds from them,
-# tools/stage_profile.py reuses them with the UI on, and
+# The engine's session confs, kept once: get_spark builds from them, and
 # sources.parquet.ensure_engine_confs re-asserts the runtime SQL subset
 # on sessions the engine did not build.
 ENGINE_CONFS = {
@@ -110,22 +109,21 @@ ENGINE_CONFS = {
 }
 
 
-def session_confs(cpus: int | None = None) -> dict[str, str]:
-    """ENGINE_CONFS plus the launch-sized ones for ``local[cpus]``
-    (default: $SPARK_GRAFT_CPUS, else every core): master, one shuffle
-    partition per core, driver memory from $SPARK_DRIVER_MEMORY."""
+def get_spark(app_name: str = "lens-sds-batch-spark", cpus: int | None = None) -> SparkSession:
+    """The engine's session: ENGINE_CONFS plus the launch-sized confs for
+    ``local[cpus]`` (default: $SPARK_GRAFT_CPUS, else every core):
+    master, one shuffle partition per core, driver memory from
+    $SPARK_DRIVER_MEMORY.  Launch-only confs (event log, extra Java
+    options) go in through ``PYSPARK_SUBMIT_ARGS``."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    return {
+    confs = {
         "spark.master": f"local[{cpus}]",
         "spark.sql.shuffle.partitions": str(cpus),
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         **ENGINE_CONFS,
     }
-
-
-def get_spark(app_name: str = "lens-sds-batch-spark", cpus: int | None = None) -> SparkSession:
-    spark = SparkSession.builder.appName(app_name).config(map=session_confs(cpus)).getOrCreate()
+    spark = SparkSession.builder.appName(app_name).config(map=confs).getOrCreate()
     _warm_session(spark)
     return spark
 

@@ -110,14 +110,14 @@ def read_event_stream(
         try:
             at_rest = spark.read.parquet(path).schema
         except AnalysisException as e:
-            import sys as _sys
+            from ..session import _warn_once
 
-            print(
-                f"read_event_stream: schema probe of {path!r} failed "
-                f"({type(e).__name__}: {str(e)[:120]}); falling back to the "
-                "pinned EVENTS_SCHEMA — ts-type drift is NOT protected for "
-                "this stream",
-                file=_sys.stderr,
+            _warn_once(
+                "read_event_stream",
+                "read_event_stream: schema probe of %r failed (%s); falling "
+                "back to the pinned EVENTS_SCHEMA — ts-type drift is NOT "
+                "protected for this stream",
+                path, type(e).__name__,
             )
             at_rest = EVENTS_SCHEMA
         # The requeue feedback edge (requeue_sink pointed at this
@@ -402,17 +402,17 @@ def _decanonicalize_requeue_ts(requeue: "DataFrame", requeue_dir: str, cache: di
     (instant-preserving under the UTC session), TIMESTAMP → no-op.  A
     missing/empty dir probes as None: the stream schema then came from
     the EVENTS_SCHEMA fallback (plain TIMESTAMP), which canonical rows
-    already match."""
+    already match.  Any other probe failure (a corrupt footer) raises."""
     if "ts" not in requeue.columns:
         return requeue
     if "type" not in cache:
-        from pyspark.sql import types as T
+        from pyspark.errors import AnalysisException
 
         try:
             at_rest = (
                 requeue.sparkSession.read.parquet(requeue_dir).schema["ts"].dataType
             )
-        except Exception:  # dir absent/empty: pinned schema was the fallback
+        except AnalysisException:  # dir absent/empty: pinned schema was the fallback
             at_rest = None
         cache["type"] = at_rest
     at_rest = cache["type"]

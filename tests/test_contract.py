@@ -170,6 +170,56 @@ def test_local_df_fallback_logged_once(spark, monkeypatch, caplog):
     assert "injected pandas failure" in warnings[0].getMessage()
 
 
+def test_stream_schema_probe_fallback_logged_once(spark, monkeypatch, caplog, tmp_path):
+    """read_event_stream's EVENTS_SCHEMA fallback is a degraded path (no
+    ts-type drift protection): two probes of a dir with nothing to read
+    log one warning per process.  A missing dir is still refused by
+    readStream itself; an empty one streams on the pinned schema."""
+    import logging
+
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from lens_sds_batch_spark import session as session_mod
+    from lens_sds_batch_spark.streaming.pipeline import EVENTS_SCHEMA, read_event_stream
+
+    monkeypatch.setattr(session_mod, "_WARNED", set())
+    caplog.set_level(logging.WARNING, logger=session_mod.__name__)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_event_stream(spark, str(tmp_path / "missing"), max_files_per_trigger=1)
+    (tmp_path / "empty").mkdir()
+    stream = read_event_stream(spark, str(tmp_path / "empty"), max_files_per_trigger=1)
+    assert stream.isStreaming
+    assert set(stream.columns) >= {c.split()[0] for c in EVENTS_SCHEMA.split(", ")}
+    warnings = [r for r in caplog.records if r.name == session_mod.__name__]
+    assert len(warnings) == 1
+    assert "EVENTS_SCHEMA" in warnings[0].getMessage()
+
+
+def test_tools_find_their_own_checkout():
+    """A tool that puts a literal path on sys.path imports THAT checkout's
+    package when run from another one (a parent copy for a plan dump or
+    an A/B), and tests import tools.drive_driver.  Every tool derives
+    its checkout from its own file instead."""
+    import ast
+    from pathlib import Path
+
+    tools = sorted((Path(__file__).resolve().parents[1] / "tools").glob("*.py"))
+    assert tools
+    bad = []
+    for path in tools:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("insert", "append")
+                and ast.unparse(node.func.value) == "sys.path"
+                and any(isinstance(a, ast.Constant) and isinstance(a.value, str) for a in node.args)
+            ):
+                bad.append(f"{path.name}:{node.lineno}: {ast.unparse(node)}")
+    assert not bad, bad
+
+
 def test_events_ts_physical_type(spark):
     """Loud canary for testdata drift: the driver's events.parquet `ts`
     physical type changed between rounds (TIMESTAMP(NANOS) r1-2 →
@@ -264,10 +314,10 @@ def test_load_events_integral_fastpath_equivalence(spark, tmp_path):
 
 
 def test_tpch_arm_registry_matches_pack(spark):
-    """TPCH_ARMS is the single source the attribution tool measures; a
-    pack arm missing from it would be silently invisible to the
-    super-linear-arm audit (and vice versa, a registry entry the pack
-    dropped would record a stale arm).  Pin kinds == registry keys."""
+    """TPCH_ARMS is the single source of tpch_pack's arm inventory; a
+    pack arm missing from it would be invisible to anything that walks
+    the arms (and vice versa, a registry entry the pack dropped would
+    name a stale arm).  Pin kinds == registry keys."""
     from lens_sds_batch_spark.operators.relational import TPCH_ARMS, tpch_pack
 
     from .conftest import SF_SMOKE

@@ -1589,6 +1589,24 @@ def test_requeue_feedback_preserves_at_rest_ts_type(spark, tmp_path, flavor):
         assert int(ts.timestamp() * 1_000_000) == base_us + eid * 1_000_000, (eid, ts)
 
 
+def test_requeue_ts_probe_refuses_corrupt_dir(spark, tmp_path):
+    """Only a missing/empty requeue dir means "the stream ran on the
+    pinned fallback schema".  A corrupt footer must not be read the
+    same way: redelivered rows would keep their canonical ts and land
+    1000x off (nanos seed) or fail the reader (NTZ seed)."""
+    from lens_sds_batch_spark.streaming.pipeline import _decanonicalize_requeue_ts
+
+    rows = spark.range(2).select(F.col("id").alias("event_id"), F.current_timestamp().alias("ts"))
+    assert _decanonicalize_requeue_ts(rows, str(tmp_path / "absent"), {}) is rows
+    bad = tmp_path / "corrupt"
+    bad.mkdir()
+    (bad / "part-0.parquet").write_text("not a parquet file")
+    cache: dict = {}
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER|not a Parquet file"):
+        _decanonicalize_requeue_ts(rows, str(bad), cache)
+    assert "type" not in cache
+
+
 def test_read_event_stream_accepts_bare_relative_file(spark, tmp_path, monkeypatch):
     """r11 review: a bare relative filename (dirname == '') used to
     glob-ify to the root-anchored '/{name}' — a silently EMPTY stream."""

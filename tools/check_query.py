@@ -11,8 +11,9 @@ value-level bugs that only appear 10x past the driver's gate
 overflow) show up here first.
 """
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb
 

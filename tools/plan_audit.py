@@ -20,8 +20,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, ".")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from lens_sds_batch_spark import session  # noqa: E402
 from lens_sds_batch_spark.session import get_spark  # noqa: E402
@@ -102,7 +104,7 @@ def main() -> None:
             f"| {r['name']} | {r['exchanges']} | {r['bhj']} | {r['smj']} | {r['arrow_udf']} | "
             f"{r['scans']} | {r['widest_scan_cols']} | {r['pushed']} | {r['ckpt_origins']} | {r['flags']} |"
         )
-    with open("PLANS.md", "w") as fh:
+    with open(ROOT / "PLANS.md", "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"PLANS.md written ({len(rows)} queries)")
     flagged = [r for r in rows if r["flags"] not in ("-",) and not str(r["flags"]).startswith("AUDIT")]

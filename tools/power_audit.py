@@ -24,8 +24,11 @@ the whitelist WITH a crafted test, or a calibration broke.
 Usage: python tools/power_audit.py [sf_dir]   (default sf0.01)
 """
 import sys
+from pathlib import Path
 
 import duckdb
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
@@ -78,7 +81,6 @@ def main():
               "orders", "lineitem", "events", "documents", "embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry
     from lens_sds_batch_spark.operators.registry import all_probes
 

@@ -1,55 +1,65 @@
-"""Per-stage empirical profile of contract queries (optimization r14).
+"""Per-stage profile of contract queries from Spark's event log.
 
-Guide §1.1 ("empirical: find where the time actually goes") without the
-interactive UI: runs named queries through the bench measurement window
-(build + noop-sink exec) in ONE session with the UI REST API enabled,
-then attributes wall-clock to stages — executor run time, shuffle
-read/write bytes, input bytes, task count — and maps stages back to the
-query via per-query job groups.
+Runs named queries through the bench measurement window (build +
+noop-sink exec) in ONE session, each under its own job group.  The
+event log is switched on through launch conf; after the session stops,
+``perfbench.spans.read_event_log`` (the benchmark's reader) turns it
+into per-stage figures: task count, executor run and CPU time, wall
+(first task launch to last task finish), shuffle-write, spill and
+output bytes, and the operator scope names of the stage.
 
 Usage: python tools/stage_profile.py [--sf-dir /root/testdata/sf0.1] q1 q2 ...
+The full report goes to /tmp/stage_profile.json.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+from perfbench.spans import read_event_log  # noqa: E402
+
+
+def _stage(sid: int, tasks: list, scopes: set[str]) -> dict:
+    return {
+        "stage": sid,
+        "scopes": ",".join(sorted(scopes)),
+        "tasks": len(tasks),
+        "run_s": round(sum(t.run_s for t in tasks), 2),
+        "cpu_s": round(sum(t.cpu_s for t in tasks), 2),
+        "wall_s": round(max(t.finish for t in tasks) - min(t.launch for t in tasks), 2),
+        "sh_w_mb": round(sum(t.shuffle_write for t in tasks) / 1e6, 1),
+        "spill_mb": round(sum(t.spill for t in tasks) / 1e6, 1),
+        "out_mb": round(sum(t.written for t in tasks) / 1e6, 1),
+    }
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--port", type=int, default=4049)
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    import os
-
     os.environ.setdefault("SPARK_GRAFT_SF_DIR", args.sf_dir)
-    # build the session OURSELVES with the UI on — session.get_spark
-    # disables it; every other conf is get_spark's own (we only read
-    # timings relative to each other, not against BASELINE.md)
-    from lens_sds_batch_spark import session as sess
+    # launch conf, read when get_spark starts the JVM (as perfbench/run.py
+    # does); read_event_log wants an uncompressed, non-rolling log
+    log_dir = tempfile.mkdtemp(prefix="stage-profile-")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.eventLog.enabled=true --conf spark.eventLog.dir={log_dir} "
+        "--conf spark.eventLog.compress=false --conf spark.eventLog.rolling.enabled=false "
+        "pyspark-shell"
+    )
+    from lens_sds_batch_spark.session import get_spark
 
-    def get_spark_ui(app_name="stage-profile", cpus=None):
-        from pyspark.sql import SparkSession
-
-        if SparkSession.getActiveSession():
-            return SparkSession.getActiveSession()
-        confs = {
-            **sess.session_confs(cpus),
-            "spark.ui.enabled": "true",
-            "spark.ui.port": str(args.port),
-        }
-        return SparkSession.builder.appName(app_name).config(map=confs).getOrCreate()
-
-    sess.get_spark = get_spark_ui
-    spark = get_spark_ui()
+    spark = get_spark("stage-profile")
     spark.sparkContext.setLogLevel("ERROR")
     from __spark_entry__ import queries
 
@@ -60,82 +70,50 @@ def main() -> None:
         "l_returnflag"
     ).count().write.format("noop").mode("overwrite").save()
 
-    base = f"http://localhost:{args.port}/api/v1/applications/{spark.sparkContext.applicationId}"
-
-    def api(path):
-        with urllib.request.urlopen(base + path) as r:
-            return json.load(r)
-
-    report = {}
+    sc = spark.sparkContext
+    timings = {}
     for name in args.queries:
-        sc = spark.sparkContext
         sc.setJobGroup(name, name)
         b0 = time.perf_counter()
         df = qs[name](spark, sf_dir)
         build = time.perf_counter() - b0
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
-        exec_s = time.perf_counter() - t0
+        timings[name] = (build, time.perf_counter() - t0)
         sc.setJobGroup(None, None)
-        jobs = [j for j in api("/jobs") if j.get("jobGroup") == name]
-        stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-        stages = []
-        for sid in stage_ids:
-            try:
-                for att in api(f"/stages/{sid}"):
-                    if att["status"] == "SKIPPED":
-                        continue
-                    stages.append(
-                        {
-                            "stage": sid,
-                            "name": att["name"].split("\n")[0][:90],
-                            "tasks": att["numCompleteTasks"],
-                            "run_s": round(att["executorRunTime"] / 1000.0, 2),
-                            "cpu_s": round(att.get("executorCpuTime", 0) / 1e9, 2),
-                            "in_mb": round(att["inputBytes"] / 1e6, 1),
-                            "sh_r_mb": round(att["shuffleReadBytes"] / 1e6, 1),
-                            "sh_w_mb": round(att["shuffleWriteBytes"] / 1e6, 1),
-                            "wall_s": round(
-                                (att.get("completionTime") is not None)
-                                and (
-                                    _ms(att["completionTime"]) - _ms(att["firstTaskLaunchedTime"])
-                                )
-                                / 1000.0
-                                or 0,
-                                2,
-                            ),
-                        }
-                    )
-            except Exception as e:  # noqa: BLE001
-                stages.append({"stage": sid, "err": str(e)[:80]})
-        stages.sort(key=lambda s: -(s.get("run_s") or 0))
+    spark.stop()
+    jobs, scopes = read_event_log(log_dir)
+    shutil.rmtree(log_dir)
+
+    report = {}
+    for name, (build, exec_s) in timings.items():
+        mine = [j for j in jobs if j.group == name]
+        by_stage: dict[int, list] = {}
+        for j in mine:
+            for t in j.tasks:
+                by_stage.setdefault(t.stage, []).append(t)
+        stages = [_stage(sid, ts, scopes.get(sid, set())) for sid, ts in by_stage.items()]
+        stages.sort(key=lambda s: -s["run_s"])
+        n_tasks = sum(s["tasks"] for s in stages)
         report[name] = {
             "build_s": round(build, 2),
             "exec_s": round(exec_s, 2),
-            "n_jobs": len(jobs),
+            "n_jobs": len(mine),
             "n_stages": len(stages),
+            "n_tasks": n_tasks,
             "stages": stages,
         }
         print(f"== {name}: build {build:.2f}s exec {exec_s:.2f}s, "
-              f"{len(jobs)} jobs / {len(stages)} stages", flush=True)
+              f"{len(mine)} jobs / {len(stages)} stages / {n_tasks} tasks", flush=True)
         for s in stages[:12]:
-            if "err" in s:
-                continue
             print(
                 f"   stage {s['stage']:>4} run {s['run_s']:>7.2f}s cpu {s['cpu_s']:>7.2f}s "
-                f"wall {s['wall_s']:>6.2f}s tasks {s['tasks']:>4} in {s['in_mb']:>7.1f}MB "
-                f"shR {s['sh_r_mb']:>6.1f}MB shW {s['sh_w_mb']:>6.1f}MB  {s['name']}",
+                f"wall {s['wall_s']:>6.2f}s tasks {s['tasks']:>4} shW {s['sh_w_mb']:>6.1f}MB "
+                f"spill {s['spill_mb']:>6.1f}MB out {s['out_mb']:>6.1f}MB  {s['scopes'][:90]}",
                 flush=True,
             )
     with open("/tmp/stage_profile.json", "w") as f:
         json.dump(report, f, indent=1)
-    spark.stop()
-
-
-def _ms(iso: str) -> float:
-    from datetime import datetime
-
-    return datetime.strptime(iso, "%Y-%m-%dT%H:%M:%S.%fGMT").timestamp() * 1000
 
 
 if __name__ == "__main__":
