@@ -14,10 +14,10 @@ merge of group-grain rows.  At 100 TB a refresh touches megabytes.
 
 Exactly-once contract: the source cursor (the last synced source seq)
 is committed ATOMICALLY inside the same manifest rename as the merged
-deltas (``merge_into(commit_meta=...)``) — unlike ``replicate_changes``
-(whose blind LWW re-upserts make replay idempotent, so a sidecar cursor
-suffices), delta APPLICATION is not idempotent: replaying a +3 onto an
-already-applied +3 double-counts.  With the cursor inside the commit
+deltas (``merge_into(commit_meta=...)``), the change-feed consumer
+protocol ``replicate_changes`` shares (``merge.feed_cursor``).  Delta
+APPLICATION is not idempotent: replaying a +3 onto an already-applied
++3 double-counts.  With the cursor inside the commit
 there is no crash point between data and cursor; a crash before the
 manifest rename leaves both untouched (replay recomputes the same
 deltas), a crash after leaves both advanced (replay is a no-op).
@@ -63,19 +63,21 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_ckpt, release_ckpt
 from .merge import (
     BUCKET_COL,
     CHANGE_TYPE_COL,
+    IVM_META_KEY,
     SRC_SEQ_COL,
-    _release_checkpoint,
-    list_snapshots,
+    empty_merged_table,
+    feed_cursor,
+    feed_status,
     lookup_merged_keys,
     merge_into,
     read_changes,
     read_merged_table,
 )
 
-IVM_META_KEY = "ivm"
 _COUNT_DTYPE = "bigint"
 # exact-arithmetic dtypes a maintained sum may range over; float/double
 # deltas drift (see module docstring), everything else can't sum at all
@@ -276,33 +278,10 @@ def refresh_aggregate(
     """
     src = source_path.rstrip("/")
     tgt = target_path.rstrip("/")
-    snaps = list_snapshots(spark, src)  # raises on a non-manifest source
-    latest = snaps[-1]["seq"]
-
-    # a missing manifest means bootstrap; a CORRUPT one must raise
-    # loudly here, not read as "fresh target" (that is _read_manifest's
-    # own refusal — do not catch it)
-    from .merge import APP_META_KEY, _read_manifest
-
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(tgt).getFileSystem(spark._jsc.hadoopConfiguration())
-    man = _read_manifest(spark, fs, jvm_path, tgt)
-    stored, dst_seq = None, None
-    if man is not None:
-        dst_seq, meta = man[0], (man[2].get(APP_META_KEY) or {})
-        stored = meta.get(IVM_META_KEY)
-        if stored is None:
-            raise ValueError(
-                f"refresh_aggregate: {tgt} is a merge target but carries "
-                "no IVM commit metadata — it was not built by "
-                "refresh_aggregate; bootstrap into a fresh path"
-            )
-        if stored["source"] != src:
-            raise ValueError(
-                f"refresh_aggregate: {tgt} maintains an aggregate of "
-                f"{stored['source']!r}, not {src!r} — one aggregate "
-                "follows one source; use a fresh target path"
-            )
+    # a missing manifest means bootstrap; a CORRUPT one raises loudly
+    # inside feed_cursor, never reading as "fresh target"
+    _, latest, dst_seq, stored = feed_cursor(spark, src, tgt, IVM_META_KEY)
+    if stored is not None:
         if group_keys is not None and list(group_keys) != list(
             stored["group_keys"]
         ):
@@ -333,7 +312,7 @@ def refresh_aggregate(
         state = read_merged_table(spark, src, as_of_seq=latest)
         if state is None:
             # empty-but-pinned source: type the empty state from the pin
-            state = _typed_empty_from_pin(spark, src)
+            state = empty_merged_table(spark, src)
         state = state.drop(BUCKET_COL) if BUCKET_COL in state.columns else state
         _validate_spec(group_keys, aggs, dict(state.dtypes))
         out = _full_aggregate(state, group_keys, aggs).withColumn(
@@ -365,14 +344,6 @@ def refresh_aggregate(
             "from_seq": cursor, "to_seq": latest, "bootstrap": False,
             "groups_changed": 0, "groups_deleted": 0, "dst_seq": dst_seq,
         }
-    if cursor < snaps[0]["seq"]:
-        raise ValueError(
-            f"refresh_aggregate: the cursor's src_seq={cursor} is below "
-            f"the source's retained horizon (oldest manifest seq "
-            f"{snaps[0]['seq']} at {src}) — the diff base was vacuumed; "
-            "rebuild the aggregate into a fresh path, and refresh more "
-            "often than the source's vacuum grace"
-        )
     feed = read_changes(spark, src, from_seq=cursor, to_seq=latest)
     cnt_col = next(
         n for n, (op, c) in aggs.items() if op == "count" and c == "*"
@@ -387,10 +358,10 @@ def refresh_aggregate(
     from pyspark.sql import Observation
 
     obs_d = Observation()
-    deltas = (
+    deltas = local_ckpt(
         _delta_aggregate(feed, group_keys, aggs)
-        .observe(obs_d, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .observe(obs_d, F.count(F.lit(1)).alias("n")),
+        eager=True,
     )
     n_deltas = int(obs_d.get["n"])
     try:
@@ -398,7 +369,7 @@ def refresh_aggregate(
             # metadata commits only (or all deltas netted to zero):
             # advance the cursor with a metadata-only commit — an empty
             # typed batch keeps one code path through merge_into
-            empty = _typed_empty_from_pin(spark, tgt)
+            empty = empty_merged_table(spark, tgt)
             res = merge_into(
                 spark, tgt, empty,
                 keys=group_keys, order_cols=[SRC_SEQ_COL],
@@ -446,7 +417,8 @@ def refresh_aggregate(
             F.count(F.lit(1)).alias("n"),
             F.min(F.col(cnt_col)).alias("min_cnt"),
             F.sum((F.col(cnt_col) == 0).cast("bigint")).alias("n_dead"),
-        ).localCheckpoint(eager=True)
+        )
+        updates = local_ckpt(updates, eager=True)
         try:
             stats = obs_u.get
             if stats["min_cnt"] is not None and stats["min_cnt"] < 0:
@@ -473,53 +445,27 @@ def refresh_aggregate(
                 expect_seq=dst_seq,
             )
         finally:
-            _release_checkpoint(updates)
+            release_ckpt(updates)
         return {
             "from_seq": cursor, "to_seq": latest, "bootstrap": False,
             "groups_changed": int(n_changed),
             "groups_deleted": int(n_deleted), "dst_seq": res["seq"],
         }
     finally:
-        _release_checkpoint(deltas)
+        release_ckpt(deltas)
 
 
 def ivm_status(spark, source_path: str, target_path: str) -> dict:
     """Operational snapshot of a maintained aggregate — the
     no-silent-state principle applied to IVM: ``src_seq`` (the cursor),
-    ``lag_commits`` (source commits not yet folded in), ``behind``
-    (bool), ``at_risk`` (the cursor already fell below the source's
-    vacuum horizon — the NEXT refresh will refuse; refresh more often
-    than the vacuum grace), plus the stored spec.  Read-only: takes no
-    lease, commits nothing."""
-    src = source_path.rstrip("/")
-    from .merge import APP_META_KEY, _read_manifest
-
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    man = _read_manifest(spark, fs, jvm_path, target_path.rstrip("/"))
-    if man is None:
-        raise ValueError(
-            f"ivm_status: {target_path} is not a manifest merge target"
-        )
-    stored = (man[2].get(APP_META_KEY) or {}).get(IVM_META_KEY)
-    if stored is None:
-        raise ValueError(
-            f"ivm_status: {target_path} carries no IVM commit metadata — "
-            "not a refresh_aggregate target"
-        )
-    if stored["source"] != src:
-        raise ValueError(
-            f"ivm_status: {target_path} maintains an aggregate of "
-            f"{stored['source']!r}, not {src!r}"
-        )
-    snaps = list_snapshots(spark, src)
-    cursor = int(stored["src_seq"])
+    ``latest_src_seq``, ``lag_commits`` (source commits not yet folded
+    in), ``behind`` (bool), ``at_risk`` (the cursor already fell below
+    the source's vacuum horizon — the NEXT refresh will refuse; refresh
+    more often than the vacuum grace), plus the stored spec.
+    Read-only: takes no lease, commits nothing."""
+    stored, status = feed_status(spark, source_path, target_path, IVM_META_KEY)
     return {
-        "src_seq": cursor,
-        "latest_src_seq": snaps[-1]["seq"],
-        "lag_commits": snaps[-1]["seq"] - cursor,
-        "behind": snaps[-1]["seq"] > cursor,
-        "at_risk": cursor < snaps[0]["seq"],
+        **status,
         "group_keys": list(stored["group_keys"]),
         "aggs": {n: tuple(v) for n, v in stored["aggs"].items()},
     }
@@ -532,24 +478,6 @@ def read_aggregate(spark, target_path: str) -> DataFrame:
     perfectly good zero-row answer."""
     df = read_merged_table(spark, target_path)
     if df is None:
-        return _typed_empty_from_pin(spark, target_path).drop(SRC_SEQ_COL)
+        return empty_merged_table(spark, target_path).drop(SRC_SEQ_COL)
     drop = [c for c in (BUCKET_COL, SRC_SEQ_COL) if c in df.columns]
     return df.drop(*drop)
-
-
-def _typed_empty_from_pin(spark, target_path: str) -> DataFrame:
-    """Zero-row frame typed from a manifest target's schema pin."""
-    from .merge import _read_manifest
-
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    man = _read_manifest(spark, fs, jvm_path, target_path.rstrip("/"))
-    if man is None:
-        raise ValueError(
-            f"refresh_aggregate: {target_path} holds no manifest table — "
-            "nothing to type the aggregate from; merge at least one "
-            "commit first"
-        )
-    return spark.range(0).select(
-        *[F.lit(None).cast(t).alias(c) for c, t in man[2]["columns"].items()]
-    )

@@ -18,6 +18,8 @@ import json
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_ckpt, release_ckpt
+
 # Manifest-commit layout — the one store behind merge_into.  Rows are
 # laid out by key hash as ``__bucket=K`` partition directories, and
 # live data is resolved through ONE small manifest file instead of
@@ -142,20 +144,6 @@ def _writer_lease(fs, jvm_path, target_path: str):
             fs.delete(lease, False)
 
     return _ctx()
-
-
-def _release_checkpoint(df) -> None:
-    """Best-effort release of an eager localCheckpoint's storage blocks
-    (ADVICE r11): ``DataFrame.unpersist()`` only uncaches
-    InMemoryRelation entries, NOT the checkpointed RDD behind the plan's
-    LogicalRDD, so a fast-trigger streaming sink would transiently
-    accumulate blocks until the ContextCleaner GCs the frame.  Reaching
-    the LogicalRDD's rdd is internal API (verified to free the blocks on
-    this Spark build) — guarded, with the ContextCleaner as fallback."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
 
 
 def bucket_expr(keys: list[str], num_buckets: int) -> Column:
@@ -362,9 +350,7 @@ def merge_into(
     # deterministic within-batch tiebreak (see TIE-BREAK CONTRACT above):
     # hash of the full payload row
     row_hash = F.xxhash64(*[F.col(c) for c in updates.columns])
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tgt = target_path.rstrip("/")
+    fs, jvm_path, tgt = _open_table(spark, target_path)
     with _writer_lease(fs, jvm_path, tgt):
         man = _read_manifest(spark, fs, jvm_path, tgt)
         if man is None:
@@ -493,12 +479,12 @@ def _ckpt_with_touched(
     from pyspark.sql import Observation
 
     obs = Observation()
-    upd_tagged = (
+    upd_tagged = local_ckpt(
         updates.withColumn(BUCKET_COL, bucket_expr(keys, n_buckets))
         .withColumn("__tgt_pri", F.lit(0))
         .withColumn("__del", F.coalesce(is_delete.cast("boolean"), F.lit(False)))
-        .observe(obs, F.collect_set(BUCKET_COL).alias("touched"))
-        .localCheckpoint(eager=True)
+        .observe(obs, F.collect_set(BUCKET_COL).alias("touched")),
+        eager=True,
     )
     return upd_tagged, sorted(obs.get["touched"])
 
@@ -522,6 +508,15 @@ def _ckpt_with_touched(
 # superseded generations and manifests are collected by
 # vacuum_merged_table.
 # ---------------------------------------------------------------------------
+
+
+def _open_table(spark, target_path: str) -> tuple:
+    """``(fs, Path, tgt)`` for a target path: its Hadoop filesystem, the
+    JVM ``Path`` class and the path without a trailing slash — the
+    leading arguments of every manifest helper below."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, jvm_path, target_path.rstrip("/")
 
 
 def _manifest_dir(tgt: str) -> str:
@@ -853,7 +848,7 @@ def _manifest_merge(
         result["touched_buckets"] = touched
         return result
     finally:
-        _release_checkpoint(upd_tagged)
+        release_ckpt(upd_tagged)
 
 
 def read_merged_table(
@@ -892,9 +887,7 @@ def read_merged_table(
     form).  Mutually exclusive with ``as_of_seq``.  Both forms RAISE
     beyond the newest commit (a future seq / instant), matching
     Delta's versionAsOf/timestampAsOf — never a silent clamp."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tgt = target_path.rstrip("/")
+    fs, jvm_path, tgt = _open_table(spark, target_path)
     if as_of_ms is not None:
         if as_of_seq is not None:
             raise ValueError(
@@ -955,9 +948,7 @@ def list_snapshots(spark, target_path: str) -> list[dict]:
     collects it (retention = the vacuum cadence and grace the operator
     chose; the protocol itself never deletes).  Pure filesystem stats,
     no Spark job.  Raises on a path that is not a merge target."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tgt = target_path.rstrip("/")
+    fs, jvm_path, tgt = _open_table(spark, target_path)
     ms = _list_manifests(fs, jvm_path, tgt)
     if not ms:
         raise ValueError(
@@ -983,10 +974,7 @@ def read_commit_meta(
     None when no commit ever carried one.  Raises on a path that is not
     a merge target, with the same seq-resolution refusals as
     :func:`read_merged_table`."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    man = _read_manifest(spark, fs, jvm_path, target_path.rstrip("/"),
-                         as_of_seq=as_of_seq)
+    man = _read_manifest(spark, *_open_table(spark, target_path), as_of_seq=as_of_seq)
     if man is None:
         raise ValueError(
             f"read_commit_meta: {target_path} is not a manifest-commit "
@@ -994,6 +982,27 @@ def read_commit_meta(
         )
     seq, _, m = man
     return seq, m.get(APP_META_KEY)
+
+
+def _empty_from_pin(spark, pin: dict) -> DataFrame:
+    """Zero-row frame typed from a schema pin ``{column: dtype}``."""
+    return spark.range(0).select(
+        *[F.lit(None).cast(t).alias(c) for c, t in pin.items()]
+    )
+
+
+def empty_merged_table(spark, target_path: str) -> DataFrame:
+    """Zero-row frame typed from the latest schema pin of the manifest
+    table at ``target_path`` (no ``__bucket``): the typed answer where
+    :func:`read_merged_table` returns None for a table with no live
+    bucket.  Raises when no manifest table is there."""
+    man = _read_manifest(spark, *_open_table(spark, target_path))
+    if man is None:
+        raise ValueError(
+            f"empty_merged_table: {target_path} holds no manifest table — "
+            "nothing to type the frame from; merge at least one commit first"
+        )
+    return _empty_from_pin(spark, man[2]["columns"])
 
 
 CHANGE_TYPE_COL = "_change_type"
@@ -1060,9 +1069,7 @@ def read_changes(
     ``_change_type``."""
     from functools import reduce as _reduce
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tgt = target_path.rstrip("/")
+    fs, jvm_path, tgt = _open_table(spark, target_path)
 
     def _resolve(seq, bound):
         # _read_manifest's seq-resolution refusals (beyond-newest,
@@ -1133,10 +1140,7 @@ def read_changes(
 
     a_state, b_state = _side(sel_a), _side(sel_b)
     if a_state is None and b_state is None:
-        return spark.range(0).select(
-            *[F.lit(None).cast(t).alias(c) for c, t in pin.items()],
-            F.lit(None).cast("string").alias(CHANGE_TYPE_COL),
-        )
+        return _empty_from_pin(spark, {**pin, CHANGE_TYPE_COL: "string"})
     if a_state is None:
         a_state = b_state.limit(0)
     elif b_state is None:
@@ -1225,9 +1229,7 @@ def lookup_merged_keys(spark, target_path: str, lookup: DataFrame) -> DataFrame:
     are small by use-case); for a probe too big to broadcast, use
     read_merged_table + a shuffle semi-join instead — at that size
     bucket pruning stops helping anyway."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tgt = target_path.rstrip("/")
+    fs, jvm_path, tgt = _open_table(spark, target_path)
 
     man = _read_manifest(spark, fs, jvm_path, tgt)
     if man is None:
@@ -1269,9 +1271,7 @@ def lookup_merged_keys(spark, target_path: str, lookup: DataFrame) -> DataFrame:
     if not hit:
         # no looked-up bucket is live: the result is definitionally
         # empty — type it from the pin
-        return spark.range(0).select(
-            *[F.lit(None).cast(t).alias(c) for c, t in pin.items()]
-        )
+        return _empty_from_pin(spark, pin)
     base = _pinned_read(spark, _gen_paths(tgt, hit), pin, base_path=tgt).drop(
         GEN_COL
     )
@@ -1286,9 +1286,104 @@ def lookup_merged_keys(spark, target_path: str, lookup: DataFrame) -> DataFrame:
     return base.join(F.broadcast(probe), cond, "left_semi")
 
 
+# ---------------------------------------------------------------------------
+# Change-feed consumers.  replicate_changes and plans/ivm.refresh_aggregate
+# apply a source's net feed onto their own manifest target and keep their
+# cursor (the source followed, the last source seq applied) in the
+# target's app_meta under their own key, committed in the same manifest
+# rename as the applied rows.  feed_cursor / feed_status read it.
+# ---------------------------------------------------------------------------
+
 REPL_META_KEY = "replicate"
+IVM_META_KEY = "ivm"
 SRC_SEQ_COL = "__src_seq"
 DELETED_COL = "__deleted"
+
+# app_meta key -> (the cursor's seq field, what the target holds, the
+# step and the status entry points, what a target they did not build
+# lacks)
+_FEED_CONSUMERS = {
+    REPL_META_KEY: ("last_seq", "replica", "replicate_changes", "replica_status",
+                    "replication cursor in its commit metadata"),
+    IVM_META_KEY: ("src_seq", "aggregate", "refresh_aggregate", "ivm_status",
+                   "IVM commit metadata"),
+}
+
+
+def _feed_position(spark, who, source_path, target_path, meta_key) -> tuple:
+    """``(oldest, latest, dst_seq, cursor)``: the source's oldest and
+    latest retained commit seqs, and the target's latest seq with the
+    cursor stored under ``meta_key`` — ``(None, None)`` when no table is
+    at the target.  Refuses a source that is not a manifest table, a
+    target table without that cursor (applying a feed onto a table the
+    consumer did not build corrupts it), and a cursor that follows
+    another source."""
+    _, noun, builder, _, lacks = _FEED_CONSUMERS[meta_key]
+    fs, jvm_path, src = _open_table(spark, source_path)
+    seqs = [seq for seq, _ in _list_manifests(fs, jvm_path, src)]
+    if not seqs:
+        raise ValueError(f"{who}: {src} is not a manifest-commit target")
+    fs, jvm_path, tgt = _open_table(spark, target_path)
+    man = _read_manifest(spark, fs, jvm_path, tgt)
+    if man is None:
+        return seqs[0], seqs[-1], None, None
+    cursor = (man[2].get(APP_META_KEY) or {}).get(meta_key)
+    if cursor is None:
+        raise ValueError(
+            f"{who}: {tgt} is a merge target but carries no {lacks} — it "
+            f"was not built by {builder}; use a fresh target path"
+        )
+    if cursor.get("source") != src:
+        raise ValueError(
+            f"{who}: the {noun} at {tgt} tracks source "
+            f"{cursor.get('source')!r}, not {src!r} — one {noun} follows "
+            "one source; use a fresh target path"
+        )
+    return seqs[0], seqs[-1], man[0], cursor
+
+
+def feed_cursor(spark, source_path: str, target_path: str, meta_key: str) -> tuple:
+    """The cursor step of the consumer keeping its cursor under
+    ``meta_key`` (``"replicate"`` or ``"ivm"``): ``(oldest, latest,
+    dst_seq, cursor)`` as :func:`_feed_position` reads and checks them
+    (``dst_seq`` and ``cursor`` None: bootstrap a fresh target).  Also
+    refuses a cursor below the source's retained horizon: the diff base
+    was vacuumed, like a Kafka offset out of range."""
+    seq_field, noun, builder, _, _ = _FEED_CONSUMERS[meta_key]
+    oldest, latest, dst_seq, cursor = _feed_position(
+        spark, builder, source_path, target_path, meta_key
+    )
+    if cursor is not None and int(cursor[seq_field]) < oldest:
+        raise ValueError(
+            f"{builder}: the cursor's {seq_field}={cursor[seq_field]} is "
+            f"below the source's retained horizon (oldest manifest seq "
+            f"{oldest} at {cursor['source']}) — the diff base was vacuumed; "
+            f"rebuild the {noun} into a fresh path, and run {builder} more "
+            "often than the source's vacuum grace"
+        )
+    return oldest, latest, dst_seq, cursor
+
+
+def feed_status(spark, source_path: str, target_path: str, meta_key: str) -> tuple:
+    """``(cursor, status)`` of a consumer's target, read-only (no lease,
+    no commit): ``status`` is ``{<cursor seq field>, "latest_src_seq",
+    "lag_commits", "behind", "at_risk"}``, where ``at_risk`` reports
+    what :func:`feed_cursor` would refuse — the cursor fell below the
+    source's vacuum horizon."""
+    seq_field, _, _, who, _ = _FEED_CONSUMERS[meta_key]
+    oldest, latest, _, cursor = _feed_position(
+        spark, who, source_path, target_path, meta_key
+    )
+    if cursor is None:
+        raise ValueError(f"{who}: {target_path} is not a manifest merge target")
+    last = int(cursor[seq_field])
+    return cursor, {
+        seq_field: last,
+        "latest_src_seq": latest,
+        "lag_commits": latest - last,
+        "behind": latest > last,
+        "at_risk": last < oldest,
+    }
 
 
 def replicate_changes(
@@ -1347,51 +1442,16 @@ def replicate_changes(
     Returns {"from_seq", "to_seq", "rows_applied", "bootstrap"};
     from_seq == to_seq means no new source commits (no-op, no merge).
     """
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    src = source_path.rstrip("/")
-    tgt = target_path.rstrip("/")
-
-    snaps = list_snapshots(spark, src)  # raises on a non-manifest source
-    latest = snaps[-1]["seq"]
-    dst_man = _read_manifest(spark, fs, jvm_path, tgt)
-    cursor, dst_seq = None, None
-    if dst_man is not None:
-        dst_seq = dst_man[0]
-        cursor = (dst_man[2].get(APP_META_KEY) or {}).get(REPL_META_KEY)
-        if cursor is None:
-            raise ValueError(
-                f"replicate_changes: {tgt} is a merge target but carries "
-                "no replication cursor in its commit metadata — it was "
-                "not built by replicate_changes; sync into a fresh path"
-            )
-        if cursor.get("source") != src:
-            raise ValueError(
-                f"replicate_changes: the replica at {tgt} tracks source "
-                f"{cursor.get('source')!r}, not {src!r} — one replica "
-                "follows one source; use a fresh target path"
-            )
-
-    bootstrap = False
-    if cursor is None:
-        from_seq = 0
-        oldest = snaps[0]["seq"]
-        if oldest > 0:
-            # vacuum already collected the early manifests: the feed
-            # cannot diff from the empty init — bootstrap from the full
-            # resolver read at the latest seq instead
-            bootstrap = True
-            from_seq = latest
-    else:
+    src, tgt = source_path.rstrip("/"), target_path.rstrip("/")
+    oldest, latest, dst_seq, cursor = feed_cursor(spark, src, tgt, REPL_META_KEY)
+    # a fresh replica against an already-vacuumed source cannot diff
+    # from the empty init: bootstrap from the full resolver read at the
+    # latest seq instead
+    bootstrap = cursor is None and oldest > 0
+    if cursor is not None:
         from_seq = int(cursor["last_seq"])
-        if from_seq < snaps[0]["seq"]:
-            raise ValueError(
-                f"replicate_changes: the cursor's last_seq={from_seq} is "
-                f"below the source's retained horizon (oldest manifest seq "
-                f"{snaps[0]['seq']} at {src}) — the diff base was vacuumed; "
-                "re-bootstrap into a fresh replica path, and sync more "
-                "often than the source's vacuum grace"
-            )
+    else:
+        from_seq = latest if bootstrap else 0
 
     if bootstrap:
         state = read_merged_table(spark, src, as_of_seq=latest)
@@ -1418,8 +1478,8 @@ def replicate_changes(
 
     rows_applied = 0
     if batch is not None:
-        src_man = _read_manifest(spark, fs, jvm_path, src)
-        first = dst_man is None
+        src_man = _read_manifest(spark, *_open_table(spark, src))
+        first = dst_seq is None
         res = merge_into(
             spark, tgt, batch,
             keys=list(src_man[2]["keys"]),
@@ -1444,41 +1504,14 @@ def replicate_changes(
 
 
 def replica_status(spark, source_path: str, target_path: str) -> dict:
-    """Operational snapshot of a replica — the ``ivm_status`` twin for
-    ``replicate_changes`` targets: ``last_seq`` (the committed cursor),
+    """Operational snapshot of a ``replicate_changes`` target:
+    ``last_seq`` (the committed cursor), ``latest_src_seq``,
     ``lag_commits`` (source commits not yet synced), ``behind``, and
     ``at_risk`` (the cursor already fell below the source's vacuum
     horizon — the NEXT sync will refuse; sync more often than the
     source's vacuum grace).  Read-only: takes no lease, commits
     nothing."""
-    src = source_path.rstrip("/")
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    man = _read_manifest(spark, fs, jvm_path, target_path.rstrip("/"))
-    if man is None:
-        raise ValueError(
-            f"replica_status: {target_path} is not a manifest merge target"
-        )
-    cursor = (man[2].get(APP_META_KEY) or {}).get(REPL_META_KEY)
-    if cursor is None:
-        raise ValueError(
-            f"replica_status: {target_path} carries no replication cursor "
-            "in its commit metadata — not a replicate_changes target"
-        )
-    if cursor.get("source") != src:
-        raise ValueError(
-            f"replica_status: the replica at {target_path} tracks source "
-            f"{cursor.get('source')!r}, not {src!r}"
-        )
-    snaps = list_snapshots(spark, src)
-    last = int(cursor["last_seq"])
-    return {
-        "last_seq": last,
-        "latest_src_seq": snaps[-1]["seq"],
-        "lag_commits": snaps[-1]["seq"] - last,
-        "behind": snaps[-1]["seq"] > last,
-        "at_risk": last < snaps[0]["seq"],
-    }
+    return feed_status(spark, source_path, target_path, REPL_META_KEY)[1]
 
 
 def vacuum_merged_table(
@@ -1500,9 +1533,7 @@ def vacuum_merged_table(
     target."""
     import time as _time
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tgt = target_path.rstrip("/")
+    fs, jvm_path, tgt = _open_table(spark, target_path)
     with _writer_lease(fs, jvm_path, tgt):
         man = _read_manifest(spark, fs, jvm_path, tgt)
         if man is None:
@@ -1611,9 +1642,7 @@ def compact_merged_table(
     generation already fits)."""
     import math
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tgt = target_path.rstrip("/")
+    fs, jvm_path, tgt = _open_table(spark, target_path)
     tmp = _tmp_dir(tgt)
     prefix = BUCKET_COL + "="
 
@@ -1689,9 +1718,7 @@ def rebucket(
         raise ValueError(
             f"rebucket: new_num_buckets must be >= 1, got {new_num_buckets}"
         )
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tgt = target_path.rstrip("/")
+    fs, jvm_path, tgt = _open_table(spark, target_path)
     with _writer_lease(fs, jvm_path, tgt):
         man = _read_manifest(spark, fs, jvm_path, tgt)
         if man is None:
@@ -1917,9 +1944,7 @@ def evolve_schema(
                     "spellings, e.g. 'string', 'bigint', 'decimal(12,2)'"
                 ) from e
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tgt = target_path.rstrip("/")
+    fs, jvm_path, tgt = _open_table(spark, target_path)
     with _writer_lease(fs, jvm_path, tgt):
         man = _read_manifest(spark, fs, jvm_path, tgt)
         if man is None:
@@ -1982,9 +2007,7 @@ def suggest_num_buckets(
     :func:`rebucket` in a maintenance window — it takes the writer
     lease, so in-flight merges and the migration refuse each other).
     """
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tgt = target_path.rstrip("/")
+    fs, jvm_path, tgt = _open_table(spark, target_path)
 
     def _du(path) -> int:
         total = 0

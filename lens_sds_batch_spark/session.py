@@ -170,15 +170,18 @@ def local_df(spark: SparkSession, rows, schema: str):
 # localCheckpoint truncates lineage, which is exactly right in production
 # (plan-dedupe for shared scans, bounded plans in iterative algorithms) but
 # blinds tools/plan_audit.py: a checkpointed frame reports 0 scans and 0
-# pushed filters precisely where the shared-scan optimizations live.  All
-# package call sites go through local_ckpt(); plan_audit flips audit mode on:
+# pushed filters precisely where the shared-scan optimizations live.  Every
+# package localCheckpoint goes through local_ckpt(), the merge store's and
+# the IVM refresh's included; plan_audit flips audit mode on:
 #
 # - lazy checkpoints (eager=False) are pure plan-caching — audit mode skips
 #   them so the final plan shows the real scans/pruning/pushdown;
 # - eager checkpoints materialize state the build depends on (convergence
-#   loops block on Observation.get; funnel stages feed counts) — audit mode
-#   keeps them but records the pre-checkpoint executed plan into a buffer
-#   that the audit folds into the query's counted plan text.
+#   loops block on Observation.get; funnel stages feed counts; a merge
+#   batch is pinned so its touched-bucket set and the LWW union read the
+#   same rows) — audit mode keeps them but records the pre-checkpoint
+#   executed plan into a buffer that the audit folds into the query's
+#   counted plan text.
 # ---------------------------------------------------------------------------
 
 _AUDIT_PLANS: list | None = None  # None = production mode
@@ -207,3 +210,17 @@ def local_ckpt(df, eager: bool = True):
         return df
     _AUDIT_PLANS.append(df._jdf.queryExecution().executedPlan().toString())
     return df.localCheckpoint(eager=True)
+
+
+def release_ckpt(df) -> None:
+    """Best-effort release of an eager local_ckpt's storage blocks
+    (ADVICE r11): ``DataFrame.unpersist()`` only uncaches
+    InMemoryRelation entries, NOT the checkpointed RDD behind the plan's
+    LogicalRDD, so a fast-trigger streaming sink would transiently
+    accumulate blocks until the ContextCleaner GCs the frame.  Reaching
+    the LogicalRDD's rdd is internal API (verified to free the blocks on
+    this Spark build) — guarded, with the ContextCleaner as fallback."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass

@@ -69,6 +69,8 @@ def read_event_stream(
     - ``source_format="files"`` (default): parquet-directory stream —
       the sandbox/test transport; ``maxFilesPerTrigger`` is the
       prefetch-analog backpressure knob (A25, reference ``:prefetch``).
+      The directory must exist; an empty one streams on the pinned
+      EVENTS_SCHEMA (logged once per process).
     - ``source_format="kafka"``: the prod transport the reference's
       AMQP exchange maps to (``broker.clj:157-170`` binds queues to the
       ``lens-sds.commands`` exchange; here the topic + consumer group
@@ -96,20 +98,41 @@ def read_event_stream(
                 "include_malformed is a kafka-source knob (parquet rows are "
                 "typed at rest — there is no malformed-value parse to surface)"
             )
+        # FileStreamSource pins basePath to the literal (non-glob) path,
+        # and basePath must be a DIRECTORY — so a single at-rest file
+        # (the driver's events.parquet) needs glob-ifying: `{name}` is a
+        # one-member glob, which keeps the override off and anchors the
+        # implied basePath at the parent directory instead.  Glob
+        # metachars in the basename are backslash-escaped first, or a
+        # name like ``events[v2].parquet`` silently becomes a character
+        # class matching nothing (an empty stream, no error).  The schema
+        # probe below reads the same resolved path.
+        if os.path.isfile(path):
+            # abspath FIRST (r11 review): a bare relative filename has
+            # dirname "" and the f-string would build "/{name}" — a
+            # root-anchored glob matching nothing, i.e. a silently
+            # EMPTY stream; the JVM would resolve it against its own cwd
+            path = os.path.abspath(path)
+            escaped = re.sub(r"([\\*?\[\]{},])", r"\\\1", os.path.basename(path))
+            path = f"{os.path.dirname(path)}/{{{escaped}}}"
         # Schema-ADAPTIVELY from the at-rest footers (cheap batch metadata
         # read), not a pinned DDL: the driver's events parquet has changed
         # ts physical type across rounds (NANOS -> NTZ), and a pinned
         # `ts timestamp` mis-declares NTZ data (the round-3 failure
-        # class).  Fall back to EVENTS_SCHEMA only for the
-        # directory-empty/missing case (a stream dir seeded later) — and
-        # LOUDLY: a broad silent except here would reinstate the exact
-        # drift class this probe exists to prevent (a corrupt footer or
-        # transient FS error would quietly re-pin the DDL schema).
+        # class).  The stream dir must exist (readStream refuses a
+        # missing one, so the probe re-raises PATH_NOT_FOUND without
+        # spending the warning below).  Fall back to EVENTS_SCHEMA only
+        # for an EMPTY dir (a stream dir seeded later) — and LOUDLY: a
+        # broad silent except here would reinstate the exact drift class
+        # this probe exists to prevent (a corrupt footer or transient FS
+        # error would quietly re-pin the DDL schema).
         from pyspark.errors import AnalysisException
 
         try:
             at_rest = spark.read.parquet(path).schema
         except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                raise
             from ..session import _warn_once
 
             _warn_once(
@@ -133,7 +156,7 @@ def read_event_stream(
         from pyspark.sql.types import IntegerType, StructField, StructType
 
         if isinstance(at_rest, str):
-            # The schema-probe fallback leaves a DDL STRING (empty/missing
+            # The schema-probe fallback leaves a DDL STRING (an empty
             # dir — the 'seeded later' case, which is exactly the natural
             # requeue-loop setup).  An isinstance(StructType) guard alone
             # would skip the injection there and reinstate the livelock
@@ -147,23 +170,6 @@ def read_event_stream(
         reader = spark.readStream.schema(at_rest).option(
             "maxFilesPerTrigger", 1 if max_files_per_trigger is None else max_files_per_trigger
         )
-        # FileStreamSource pins basePath to the literal (non-glob) path,
-        # and basePath must be a DIRECTORY — so a single at-rest file
-        # (the driver's events.parquet) needs glob-ifying: `{name}` is a
-        # one-member glob, which keeps the override off and anchors the
-        # implied basePath at the parent directory instead.  Glob
-        # metachars in the basename are backslash-escaped first, or a
-        # name like ``events[v2].parquet`` silently becomes a character
-        # class matching nothing (an empty stream, no error).
-        if os.path.isfile(path):
-            # abspath FIRST (r11 review): a bare relative filename has
-            # dirname "" and the f-string would build "/{name}" — a
-            # root-anchored glob matching nothing, i.e. a silently
-            # EMPTY stream (the schema probe above already resolved the
-            # relative path, so readStream starts without error)
-            path = os.path.abspath(path)
-            escaped = re.sub(r"([\\*?\[\]{},])", r"\\\1", os.path.basename(path))
-            path = f"{os.path.dirname(path)}/{{{escaped}}}"
         return _canonicalize_event_ts(reader.parquet(path))
     if source_format == "kafka":
         if path is not None:
@@ -432,7 +438,6 @@ def requeue_sink(
     is_ok,
     is_retryable,
     max_attempts: int = 3,
-    requeue_writer_partitions: int = 1,
     metrics: dict | None = None,
     ok_drop_cols: tuple = (),
 ):
@@ -460,12 +465,6 @@ def requeue_sink(
     (routing totality pinned by test_requeue_null_routing_total).
     Deterministic ids keep redelivery idempotent downstream, the same
     argument the reference makes for its at-least-once delivery.
-
-    ``requeue_writer_partitions`` sizes the requeue append: 1 (default)
-    writes a single file per trigger, which keeps the sandbox file-
-    source feedback loop tidy but is a single-writer bottleneck; at
-    cluster scale (or a real Kafka requeue topic) raise it so each
-    trigger's retry volume is written in parallel.
 
     ``ok_drop_cols``: columns stripped from the SUCCESS output only —
     routing bookkeeping (e.g. the kafka seam's ``_raw_value`` /
@@ -550,9 +549,9 @@ def requeue_sink(
             if ok_nonempty:
                 okdf.write.mode("append").parquet(out_dir)
             if req_nonempty:
-                _decanonicalize_requeue_ts(requeue, requeue_dir, ts_cache).coalesce(
-                    requeue_writer_partitions
-                ).write.mode("append").parquet(requeue_dir)
+                # one file per trigger keeps the feedback dir tidy
+                requeued = _decanonicalize_requeue_ts(requeue, requeue_dir, ts_cache)
+                requeued.coalesce(1).write.mode("append").parquet(requeue_dir)
             if dead_nonempty:
                 dead.write.mode("append").parquet(dead_dir)
             if counting:

@@ -172,9 +172,9 @@ def test_local_df_fallback_logged_once(spark, monkeypatch, caplog):
 
 def test_stream_schema_probe_fallback_logged_once(spark, monkeypatch, caplog, tmp_path):
     """read_event_stream's EVENTS_SCHEMA fallback is a degraded path (no
-    ts-type drift protection): two probes of a dir with nothing to read
-    log one warning per process.  A missing dir is still refused by
-    readStream itself; an empty one streams on the pinned schema."""
+    ts-type drift protection) and logs once per process.  A missing dir
+    is refused before the fallback, so the one warning is left for, and
+    names, the empty dir that streams on the pinned schema."""
     import logging
 
     import pytest
@@ -194,6 +194,66 @@ def test_stream_schema_probe_fallback_logged_once(spark, monkeypatch, caplog, tm
     warnings = [r for r in caplog.records if r.name == session_mod.__name__]
     assert len(warnings) == 1
     assert "EVENTS_SCHEMA" in warnings[0].getMessage()
+    assert str(tmp_path / "empty") in warnings[0].getMessage()
+
+
+def test_store_checkpoints_are_audit_visible(spark, tmp_path):
+    """The merge store's and the IVM refresh's eager checkpoints go
+    through local_ckpt, so the plan audit records them like every other
+    package checkpoint."""
+    from pyspark.sql import functions as F
+
+    from lens_sds_batch_spark import session as session_mod
+    from lens_sds_batch_spark.plans.ivm import refresh_aggregate
+    from lens_sds_batch_spark.plans.merge import merge_into
+
+    src, agg = str(tmp_path / "src"), str(tmp_path / "agg")
+
+    def merge(rows):
+        batch = spark.createDataFrame(rows, "k string, g string, pri int, dead boolean")
+        merge_into(spark, src, batch, keys=["k"], order_cols=["pri"], is_delete=F.col("dead"))
+
+    session_mod.audit_checkpoints(True)
+    try:
+        merge([("k1", "a", 1, False)])
+        merged = session_mod.drain_audit_plans()
+        refresh_aggregate(spark, src, agg, group_keys=["g"], aggs={"n": ("count", "*")})
+        merge([("k2", "b", 1, False)])
+        session_mod.drain_audit_plans()
+        refresh_aggregate(spark, src, agg)
+        refreshed = session_mod.drain_audit_plans()
+    finally:
+        session_mod.audit_checkpoints(False)
+    assert merged
+    # the deltas, the updates and merge_into's own batch checkpoint
+    assert len(refreshed) >= 3
+
+
+def test_manifest_format_stays_in_merge():
+    """plans/merge.py owns the on-disk manifest format: no other package
+    module imports its private helpers or its app_meta key."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "lens_sds_batch_spark"
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        parts = list(path.relative_to(pkg.parent).with_suffix("").parts)
+        if parts == ["lens_sds_batch_spark", "plans", "merge"]:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            base = parts[: len(parts) - node.level] if node.level else []
+            module = ".".join(base + ([node.module] if node.module else []))
+            if module != "lens_sds_batch_spark.plans.merge":
+                continue
+            bad += [
+                f"{path.relative_to(pkg.parent)}:{node.lineno}: {a.name}"
+                for a in node.names
+                if a.name.startswith("_") or a.name == "APP_META_KEY"
+            ]
+    assert not bad, bad
 
 
 def test_tools_find_their_own_checkout():
