@@ -29,6 +29,10 @@ whole-stage-codegen friendly — NO Python UDF in the hot path):
 (A18) are these same builders applied to a hash payload built by
 ``plans/commands._payload``.
 
+Both flavors build ONE composed-Column tree in ``_uuid_col``
+(namespace → payload → guard → hash → format); a flavor supplies only
+its encoders, hash, guard cast and version nibble.
+
 Name-byte encoding (mirrors clj-uuid + the reference's extension):
 keywords encode as their ``str`` form *including the leading colon*;
 sequences concatenate element encodings; strings are UTF-8 bytes.
@@ -36,6 +40,7 @@ sequences concatenate element encodings; strings are UTF-8 bytes.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import uuid
 from collections.abc import Iterable
@@ -120,10 +125,30 @@ class UuidBytes:
 # Column expressions (the engine hot path)
 # ---------------------------------------------------------------------------
 
-def _fmt_uuid_sql(h: str, version: str) -> str:
-    """32-hex-char digest (as a Spark-SQL fragment) -> RFC-4122
-    formatted uuid string with the given version nibble and a forced
-    RFC variant nibble.
+# Constant operands every builder call repeats, built once per process
+# (see ``_fmt_uuid`` on build cost): a Column is an immutable tree any
+# number of plans can share, PySpark keeps one JVM gateway per process,
+# and both caches are keyed by module constants only.
+
+@functools.cache
+def _lit(value: str) -> Column:
+    return F.lit(value)
+
+
+@functools.cache
+def _null_payload_error(fn: str, cast_type: str) -> Column:
+    """A builder's own :func:`guard_payload` error branch."""
+    msg = (
+        f"{fn}: NULL id payload (NULL part or namespace) would collapse "
+        "distinct ids to one degenerate value; fix the source or waive "
+        "with on_null=empty"
+    )
+    return F.raise_error(F.lit(msg)).cast(cast_type)
+
+
+def _fmt_uuid(h: Column, version: str) -> Column:
+    """32-hex-char digest -> RFC-4122 formatted uuid string with the
+    given version nibble and a forced RFC variant nibble.
 
     NULLABILITY CONTRACT (measured, r5): the output is NON-nullable —
     ``concat_ws`` SKIPS null args, so a NULL digest (NULL payload)
@@ -137,24 +162,30 @@ def _fmt_uuid_sql(h: str, version: str) -> str:
     expr>)`` filter below the projection, re-evaluating the md5 per
     row with no CSE across the Filter/Project boundary (correlate
     4.7s → 6.9s).  Callers that must DETECT a null-payload state guard
-    the PAYLOAD, not the formatted uuid — since r7 the public
-    formatters do this BY DEFAULT (``on_null="error"`` →
-    :func:`guard_payload`); ``on_null="empty"`` restores the raw
-    empty-string collapse for callers that pre-guard contextually.
+    the PAYLOAD, not the formatted uuid — the public builders do this
+    BY DEFAULT (``on_null="error"`` → :func:`guard_payload`);
+    ``on_null="empty"`` restores the raw empty-string collapse for
+    callers that pre-guard contextually.
 
-    BUILD-TIME form (r6): the formatters now assemble ONE Spark-SQL
-    string and parse it with a single ``F.expr`` call instead of
-    composing ~20 ``Column`` operations — measured 50 builder calls:
-    1.50s composed vs 0.03s parsed (each ``F.xxx`` is a Py4J round
-    trip; the flagship build makes hundreds of them).  The resulting
-    expression TREE is identical, so runtime plans, CSE behavior, and
-    the golden uuid bytes are unchanged (pinned by tests/test_keys.py).
-    """
-    return (
-        f"concat_ws('-', substring({h},1,8), substring({h},9,4), "
-        f"concat('{version}', substring({h},14,3)), "
-        f"concat(translate(substring({h},17,1), '{_HEX}', '{_VARIANT_MAP}'), "
-        f"substring({h},18,3)), substring({h},21,12))"
+    BUILD TIME is Py4J round trips: one per Column method, three per
+    ``F`` call (varargs: four more, plus one per argument), so the
+    slices use ``Column.substr`` (``F.substring`` adds two ``lit``
+    calls for its int arguments) — the same ``Substring`` expression,
+    printed ``substr`` in plans.  A format is 39 round trips (90 with
+    ``F.substring``); a builder call is 55-68, where the deleted
+    SQL-string path took 7-11 and its composed twin 122-132.  Measured
+    per build on a 4-vCPU host (median of 7 warm builds, median of 5
+    alternating process pairs): ``generate_commands(PER_FILE)`` md5
+    2,437 → 2,265 round trips, 602 → 578 ms; ``fused_commands`` sha1
+    4,948 → 4,575, 734 → 682 ms."""
+    variant = F.translate(h.substr(17, 1), _HEX, _VARIANT_MAP)
+    return F.concat_ws(
+        "-",
+        h.substr(1, 8),
+        h.substr(9, 4),
+        F.concat(_lit(version), h.substr(14, 3)),
+        F.concat(variant, h.substr(18, 3)),
+        h.substr(21, 12),
     )
 
 
@@ -176,63 +207,18 @@ def guard_payload(payload: Column, msg: Column, cast_type: str = "string") -> Co
     return F.coalesce(payload, F.raise_error(msg).cast(cast_type))
 
 
-import re as _re
-
-_BARE_COL_RE = _re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def _esc(s: str) -> str:
-    """Escape a Python string into a Spark-SQL single-quoted literal
-    body (Spark's parser treats backslash as an escape by default)."""
-    return s.replace("\\", "\\\\").replace("'", "\\'")
-
-
-def _bare_col_sql(c: Column) -> str | None:
-    """SQL text of a Column IF it is a bare attribute reference, else
-    None.  ``Column.toString`` is only trusted for this one shape: for
-    operator nodes it emits function-call forms (``%(a, 3)``,
-    ``=(rtx, 'u')``) whose parse/resolution is not guaranteed, and a
-    binary literal stringifies as the Java array reference.  Anything
-    non-bare routes to the composed-Column slow path.
-
-    The accepted name is BACKTICK-QUOTED into the fragment: unquoted, a
-    column literally named ``current_date`` would parse as the zero-arg
-    function (stable-looking but wrong ids that change daily) and a
-    reserved word like ``order`` would be a ParseException the
-    composed path never had.
-
-    The node-class gate (r6 review) rejects everything that merely
-    STRINGIFIES like an identifier: ``F.lit(True)`` prints ``true``,
-    ``F.lit(None)`` prints ``NULL``, ``F.lit(inf)`` prints
-    ``Infinity`` — re-parsing those as column refs would resolve a
-    phantom column or crash; and a DATAFRAME-BOUND column (``df['v']``,
-    an ExpressionColumnNode) must not degrade to name resolution,
-    which is ambiguous after a join where the free-name form would
-    silently pick a side.  Only a genuinely unresolved attribute is
-    safe to re-emit by name."""
-    try:
-        node_cls = c._jc.node().getClass().getName()
-    except Exception:
-        return None
-    if node_cls != "org.apache.spark.sql.internal.UnresolvedAttribute":
-        return None
-    s = c._jc.toString()
-    return f"`{s}`" if _BARE_COL_RE.match(s) else None
-
-
-def _fmt_uuid(h: Column, version: str) -> Column:
-    """Composed-Column twin of :func:`_fmt_uuid_sql` (the fallback path
-    for complex payload trees); same expression shape, same
-    nullability contract."""
-    variant = F.translate(F.substring(h, 17, 1), _HEX, _VARIANT_MAP)
-    return F.concat_ws(
-        "-",
-        F.substring(h, 1, 8),
-        F.substring(h, 9, 4),
-        F.concat(F.lit(version), F.substring(h, 14, 3)),
-        F.concat(variant, F.substring(h, 18, 3)),
-        F.substring(h, 21, 12),
-    )
+def literal_ns_hex(fn: str, ns: str) -> str:
+    """The 32 lower-case hex digits of a literal namespace uuid string,
+    refused at the call site of ``fn`` otherwise: sha1 would unhex any
+    other text to a NULL namespace (one degenerate id for the whole
+    batch), and md5 would hash text that :func:`uuid3_str_py` refuses."""
+    h = ns.replace("-", "").lower()
+    if len(h) != 32 or not set(h) <= set(_HEX):
+        raise ValueError(
+            f"{fn}: literal namespace {ns!r} is not uuid hex text (32 hex "
+            "digits once dashes are removed), e.g. 6ba7b810-9dad-11d1-80b4-00c04fd430c8"
+        )
+    return h
 
 
 def _to_bytes(part) -> Column:
@@ -254,143 +240,66 @@ def _to_str(part) -> Column:
     return F.lit(str(part))
 
 
-def _to_bytes_sql(part) -> str | None:
-    """Binary Spark-SQL fragment for one name part, or None when the
-    part needs the composed-Column path (non-bare Column)."""
-    if isinstance(part, Kw):
-        return "X'" + (":" + part.name).encode("utf-8").hex() + "'"
-    if isinstance(part, UuidBytes):
-        # _esc'd like every string literal: an unescaped quote-bearing
-        # value would parse as SQL concat (different payload than the
-        # composed fallback, which unhex-NULLs the non-hex string)
-        return f"unhex('{_esc(part.value.replace('-', ''))}')"
-    if isinstance(part, Column):
-        bare = _bare_col_sql(part)
-        return None if bare is None else f"CAST({bare} AS BINARY)"
-    if isinstance(part, bytes):
-        return "X'" + part.hex() + "'"
-    return f"CAST('{_esc(str(part))}' AS BINARY)"
+def _uuid_col(
+    fn: str, ns: Column | str, parts: list, on_null: str, *,
+    encode, ns_lit, ns_col, digest, cast_type: str, version: str,
+) -> Column:
+    """The one body of both builders: namespace → payload → guard →
+    hash → format.  A flavor supplies its part ``encode``r, namespace
+    encoders (``ns_lit`` of the checked hex digits, ``ns_col`` of a
+    dash-stripped Column), ``digest``, guard ``cast_type`` and version.
 
-
-def _to_str_sql(part) -> str | None:
-    if isinstance(part, Column):
-        bare = _bare_col_sql(part)
-        return None if bare is None else f"CAST({bare} AS STRING)"
-    return f"'{_esc(str(part))}'"
-
-
-def _guard_msg(fn: str) -> str:
-    # The fast path splices this into a single-quoted SQL literal via
-    # _esc(), so apostrophes are safe — but keep the text quote-free
-    # anyway for readability of the generated SQL.
-    return (
-        f"{fn}: NULL id payload (NULL part or namespace) would collapse "
-        "distinct ids to one degenerate value; fix the source or waive "
-        "with on_null=empty"
-    )
-
-
-def _check_on_null(fn: str, on_null: str) -> None:
+    A literal namespace is checked and encoded in Python (r15): a folded
+    ``lower('<literal>')`` paid the one-time ICU collation class-init
+    (~1.5 s) inside the optimizer."""
     if on_null not in ("error", "empty"):
         raise ValueError(f"{fn}: on_null must be 'error' or 'empty', got {on_null!r}")
+    if isinstance(ns, str):
+        ns_part = ns_lit(literal_ns_hex(fn, ns))
+    else:
+        ns_part = ns_col(F.regexp_replace(ns, _lit("-"), _lit("")))
+    payload = F.concat(ns_part, *[encode(p) for p in parts])
+    if on_null == "error":
+        payload = F.coalesce(payload, _null_payload_error(fn, cast_type))
+    return _fmt_uuid(digest(payload), version)
 
 
 def uuid5_col(ns: Column | str, parts: list, on_null: str = "error") -> Column:
     """UUIDv5 (sha1, byte-exact with the reference) as a column expr.
 
     ``ns`` is a uuid-string column/literal; ``parts`` a list of Columns /
-    strings / Kw / UuidBytes, concatenated clj-uuid-style.  Fast path
-    (bare-column/literal parts — the common engine shape) assembles ONE
-    parsed SQL string; complex Column parts fall back to composed
-    Columns.  See ``_fmt_uuid_sql`` for why and the measurements.
+    strings / Kw / UuidBytes, concatenated clj-uuid-style.  A literal
+    ``ns`` must be uuid hex text (:func:`literal_ns_hex` raises
+    ``ValueError`` here otherwise); a Column ``ns`` is the caller's to
+    keep well-formed — a malformed value unhexes to a NULL payload.
 
-    ``on_null`` (r7, VERDICT r6 #5 — guard_payload is now the DEFAULT
-    path): ``"error"`` wraps the payload in :func:`guard_payload`, so a
-    NULL part/namespace RAISES at execution instead of silently
-    formatting the empty-string degenerate id; well-formed rows pay one
-    short-circuited null check.  The guard sits INSIDE the hash
-    argument, so the formatted uuid stays non-nullable (concat_ws) and
-    hash CSE is unchanged — the plan-poisoning modes measured in
-    ``_fmt_uuid_sql``'s docstring do not apply.  Pass ``"empty"`` to
-    waive (callers that pre-guard with a contextual message, or whose
-    NULL-collapse is deliberate).
+    ``on_null`` (r7): ``"error"`` (default) wraps the payload in the
+    :func:`guard_payload` coalesce, so a NULL part/namespace RAISES at
+    execution instead of formatting the empty-string degenerate id; the
+    guard sits inside the hash argument, so the uuid stays non-nullable
+    (see ``_fmt_uuid``).  ``"empty"`` waives it, for callers that
+    pre-guard with a contextual message.
     """
-    _check_on_null("uuid5_col", on_null)
-    if isinstance(ns, str):
-        ns_sql = f"unhex('{_esc(ns.replace('-', ''))}')"
-    else:
-        bare = _bare_col_sql(ns)
-        ns_sql = None if bare is None else f"unhex(regexp_replace({bare}, '-', ''))"
-    part_sqls = [_to_bytes_sql(p) for p in parts]
-    if ns_sql is not None and all(p is not None for p in part_sqls):
-        payload = "concat(" + ", ".join([ns_sql] + part_sqls) + ")"
-        if on_null == "error":
-            payload = (
-                f"coalesce({payload}, "
-                f"CAST(raise_error('{_esc(_guard_msg('uuid5_col'))}') AS BINARY))"
-            )
-        return F.expr(_fmt_uuid_sql(f"sha1({payload})", "5"))
-    # string namespaces are canonicalized in PYTHON (r15): emitting
-    # unhex(regexp_replace('<literal>')) makes ConstantFolding evaluate
-    # it at planning — harmless per se, but the sibling md5 flavor's
-    # literal lower() was measured triggering the one-time ICU collation
-    # class-init (~1.5 s in CollationAwareUTF8String.<clinit>) inside
-    # the optimizer; pre-encoding keeps literal namespaces out of the
-    # expression tree entirely.  Byte-identical: same hex decode.
-    if isinstance(ns, str):
-        try:
-            ns_bytes = F.lit(bytes.fromhex(ns.replace("-", "")))
-        except ValueError as e:
-            # the fast path unhexes the same text to a NULL namespace,
-            # which its guard refuses at execution; say so at the call
-            # site instead of surfacing a bare fromhex error
-            raise ValueError(
-                f"uuid5_col: literal namespace {ns!r} is not uuid hex text "
-                f"({e}); it would hash as a NULL namespace and collapse "
-                "distinct ids to one degenerate value — pass the "
-                "namespace uuid, e.g. 6ba7b810-9dad-11d1-80b4-00c04fd430c8"
-            ) from e
-    else:
-        ns_bytes = F.unhex(F.regexp_replace(ns, "-", ""))
-    payload = F.concat(ns_bytes, *[_to_bytes(p) for p in parts])
-    if on_null == "error":
-        payload = guard_payload(payload, F.lit(_guard_msg("uuid5_col")), cast_type="binary")
-    return _fmt_uuid(F.sha1(payload), "5")
+    return _uuid_col(
+        "uuid5_col", ns, parts, on_null,
+        encode=_to_bytes,
+        ns_lit=lambda h: F.lit(bytes.fromhex(h)),
+        ns_col=F.unhex,
+        digest=F.sha1, cast_type="binary", version="5",
+    )
 
 
 def uuid3_str_col(ns: Column | str, parts: list, on_null: str = "error") -> Column:
     """md5 string-payload deterministic uuid (oracle-checkable flavor).
-    Same fast-path/fallback split — and the same default NULL-payload
-    guard (``on_null``) — as :func:`uuid5_col`."""
-    _check_on_null("uuid3_str_col", on_null)
-    if isinstance(ns, str):
-        ns_sql = f"'{_esc(ns.replace('-', '').lower())}'"
-    else:
-        bare = _bare_col_sql(ns)
-        ns_sql = None if bare is None else f"lower(regexp_replace({bare}, '-', ''))"
-    part_sqls = [_to_str_sql(p) for p in parts]
-    if ns_sql is not None and all(p is not None for p in part_sqls):
-        payload = "concat(" + ", ".join([ns_sql] + part_sqls) + ")"
-        if on_null == "error":
-            payload = (
-                f"coalesce({payload}, "
-                f"CAST(raise_error('{_esc(_guard_msg('uuid3_str_col'))}') AS STRING))"
-            )
-        return F.expr(_fmt_uuid_sql(f"md5(CAST({payload} AS BINARY))", "3"))
-    # literal namespaces lower()ed in Python, not in the plan (r15):
-    # the folded lower('<literal>') was the first collation-aware
-    # expression the optimizer evaluated in a bench run, paying the
-    # one-time ICU CollationAwareUTF8String.<clinit> (~1.5 s) inside
-    # ConstantFolding on the flagship's critical path.  Python str.lower
-    # equals SQL lower on hex/dash uuid text — byte-identical payload.
-    if isinstance(ns, str):
-        ns_hex = F.lit(ns.replace("-", "").lower())
-    else:
-        ns_hex = F.lower(F.regexp_replace(ns, "-", ""))
-    payload = F.concat(ns_hex, *[_to_str(p) for p in parts])
-    if on_null == "error":
-        payload = guard_payload(payload, F.lit(_guard_msg("uuid3_str_col")), cast_type="string")
-    return _fmt_uuid(F.md5(payload.cast("binary")), "3")
+    Same namespace rules and the same default NULL-payload guard
+    (``on_null``) as :func:`uuid5_col`."""
+    return _uuid_col(
+        "uuid3_str_col", ns, parts, on_null,
+        encode=_to_str,
+        ns_lit=F.lit,
+        ns_col=F.lower,
+        digest=lambda p: F.md5(p.cast("binary")), cast_type="string", version="3",
+    )
 
 
 def keyfn(flavor: str):

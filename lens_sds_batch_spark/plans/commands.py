@@ -25,12 +25,12 @@ a params struct so the DuckDB oracle can hash-compare it directly.
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import cache, reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.keys import NIL_UUID, guard_payload, keyfn
+from ..functions.keys import NIL_UUID, guard_payload, keyfn, literal_ns_hex
 from ..session import local_ckpt
 from .odm import IG_OID, OdmTables
 
@@ -56,9 +56,13 @@ def batch_cmd_id_map(meta: dict[str, str]) -> Column:
     silently NULLs: ``element_at`` returns NULL for a missing key, that
     NULL would flow into every cmd_id of the whole file, and nothing
     downstream consumes NULL ids — a stale queue-metadata map would
-    lose the file's commands without a trace (ADVICE r4)."""
+    lose the file's commands without a trace (ADVICE r4).  Each id must
+    be uuid text (:func:`functions.keys.literal_ns_hex`): a malformed
+    one is refused here, at the call site, instead of hashing every
+    command of its file into a degenerate namespace."""
     pairs: list[Column] = []
     for k in sorted(meta):
+        literal_ns_hex("batch_cmd_id_map", meta[k])
         pairs.append(F.lit(k))
         pairs.append(F.lit(meta[k]))
     return F.coalesce(
@@ -147,13 +151,15 @@ def _col_or_lit(v: str | Column) -> Column:
     return v if isinstance(v, Column) else F.lit(v)
 
 
-def _namespace(batch_cmd_id: str | Column, flavor: str) -> Column:
-    """The cmd-id namespace column of a ``batch_cmd_id`` argument (see
-    :func:`generate_commands`); :data:`PER_FILE` resolves here, once,
-    with the command-hash flavor."""
+def _namespace(batch_cmd_id: str | Column, flavor: str) -> str | Column:
+    """The cmd-id namespace of a ``batch_cmd_id`` argument (see
+    :func:`generate_commands`): :data:`PER_FILE` resolves here, once,
+    with the command-hash flavor; a literal uuid string goes to the
+    uuid builder as it is, which refuses a malformed one at the call
+    site."""
     if isinstance(batch_cmd_id, str) and batch_cmd_id == PER_FILE:
         return per_file_batch_cmd_id(flavor)
-    return _col_or_lit(batch_cmd_id)
+    return batch_cmd_id
 
 
 # params whose values are entity uuids — clj-uuid encodes these as their
@@ -251,7 +257,7 @@ def _item_rule(name, rtx, flavor, item_group_id, item_oid, data_type, value, ite
     return payload, out
 
 
-def _cmd_id(payload: Column, ns: Column, flavor: str, entity: str | None = None) -> Column:
+def _cmd_id(payload: Column, ns: str | Column, flavor: str, entity: str | None = None) -> Column:
     """The command id (A18): ``payload`` hashed into the namespace
     ``ns`` with the flavor's uuid builder.
 
@@ -262,20 +268,30 @@ def _cmd_id(payload: Column, ns: Column, flavor: str, entity: str | None = None)
     raises with the level (when known) and file_oid; see
     functions/keys.guard_payload for the payload-not-uuid placement
     rationale.  ``on_null="empty"`` because this contextual guard makes
-    the formatter's generic one redundant."""
-    at = f" at {entity} level" if entity else ""
+    the formatter's generic one redundant for the payload; a literal
+    namespace is checked when the builder is called, a Column one is
+    the caller's (:func:`generate_commands`)."""
     guarded = guard_payload(
-        payload,
-        F.concat(
-            F.lit(f"generate_commands: NULL cmd-id payload{at} (malformed uuid param?) file_oid="),
-            F.coalesce(F.col("file_oid"), F.lit("<NULL>")),
-        ),
-        cast_type="binary" if flavor == "sha1" else "string",
+        payload, _null_cmd_id_msg(entity), cast_type="binary" if flavor == "sha1" else "string"
     )
     return keyfn(flavor)(ns, [guarded], on_null="empty")
 
 
-def _level_commands(df: DataFrame, level: str, ns: Column, sub: Column, flavor: str) -> DataFrame:
+@cache
+def _null_cmd_id_msg(entity: str | None) -> Column:
+    """:func:`_cmd_id`'s guard message, built once per process: it is a
+    constant expression, and each ``F`` call is three Py4J round trips
+    at plan build (see ``functions/keys``)."""
+    at = f" at {entity} level" if entity else ""
+    return F.concat(
+        F.lit(f"generate_commands: NULL cmd-id payload{at} (malformed uuid param?) file_oid="),
+        F.coalesce(F.col("file_oid"), F.lit("<NULL>")),
+    )
+
+
+def _level_commands(
+    df: DataFrame, level: str, ns: str | Column, sub: Column, flavor: str
+) -> DataFrame:
     """ONE projection per hierarchy level: the verb is resolved per-row
     (CASE on rtx) instead of fanning out per-verb branches — a single
     scan of the level instead of three, which is what survives a 100x
@@ -350,6 +366,9 @@ def generate_commands(
     each row's namespace derives from its ``file_oid``, same flavor as
     the command hashing), or an explicit Column expression (e.g.
     :func:`batch_cmd_id_map` for externally-assigned per-file ids).
+    A scalar string that is not uuid text raises ``ValueError`` here;
+    an arbitrary caller-supplied Column is the caller's to keep
+    well-formed (a malformed value hashes a NULL or garbage namespace).
     ``sub`` likewise accepts a Column for per-file submitters.
 
     ``persist`` caches each resolved level before fan-out — the level

@@ -97,9 +97,6 @@ ENGINE_CONFS = {
     # JVM context. Production-off is the documented intent of the
     # knob.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
-    # uuid fast-path literal escaping assumes the default parser
-    # mode (see sources/parquet.ensure_engine_confs)
-    "spark.sql.parser.escapedStringLiterals": "false",
     # defensive: if events.parquet ever carries TIMESTAMP(NANOS)
     # again (r1-2 testdata), read it as int64 instead of erroring;
     # no-op on the current TIMESTAMP(MICROS) files

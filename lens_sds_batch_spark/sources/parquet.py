@@ -33,7 +33,6 @@ _RUNTIME_CONFS = (
     "spark.sql.session.timeZone",
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.adaptive.enabled",
-    "spark.sql.parser.escapedStringLiterals",
 )
 
 
@@ -51,10 +50,6 @@ def ensure_engine_confs(spark: SparkSession) -> None:
       ``load_events`` takes its integral fast-path.  The current
       testdata is TIMESTAMP(MICROS, isAdjustedToUTC=false), on which
       this conf is a no-op.
-    - escapedStringLiterals off: the uuid fast path (functions/keys)
-      escapes string literals for the DEFAULT parser mode; under legacy
-      Hive-compat escapedStringLiterals=true the same fragment would
-      hash a different payload than the composed fallback.
     """
     for key in _RUNTIME_CONFS:
         spark.conf.set(key, ENGINE_CONFS[key])

@@ -256,6 +256,27 @@ def test_manifest_format_stays_in_merge():
     assert not bad, bad
 
 
+def test_uuid_builders_parse_no_sql():
+    """functions/keys builds each id flavor as one composed-Column tree:
+    a SQL-string twin parsed by F.expr would need its own literal
+    escaping, a parser-mode conf and a node-class gate to pick between
+    the two, and could drift from the composed tree unseen."""
+    import ast
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "lens_sds_batch_spark" / "functions" / "keys.py"
+    calls = [
+        f"keys.py:{node.lineno}: {ast.unparse(node.func)}"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and (
+            (isinstance(node.func, ast.Attribute) and node.func.attr == "expr")
+            or (isinstance(node.func, ast.Name) and node.func.id == "expr")
+        )
+    ]
+    assert not calls, calls
+
+
 def test_tools_find_their_own_checkout():
     """A tool that puts a literal path on sys.path imports THAT checkout's
     package when run from another one (a parent copy for a plan dump or

@@ -18,6 +18,7 @@ from lens_sds_batch_spark.functions import keys
 from lens_sds_batch_spark.functions.keys import (
     NIL_UUID,
     Kw,
+    UuidBytes,
     java_uuid_from_string,
     uuid3_str_col,
     uuid3_str_py,
@@ -156,140 +157,90 @@ def test_uuid_columns_are_non_nullable(spark):
     assert not df.schema["u5"].nullable, "uuid5_col became nullable (plan-poisoning)"
 
 
-def test_fast_path_equals_python_and_fallback_adversarial(spark):
-    """r6 guard for the single-parse SQL fast path: over adversarial
-    literal strings (quotes, backslashes, newlines, unicode, SQL-ish
-    fragments), the fast path (str parts / bare-column parts) must
-    equal BOTH the Python golden implementation and the composed-Column
-    fallback (forced via a non-bare Column part).  An escaping bug in
-    _esc / _to_str_sql shows up here before it can corrupt ids."""
-    adversarial = [
-        "plain",
-        "",
-        "it's",
-        'a"b',
-        "back\\slash",
-        "semi;colon--comment",
-        "line\nbreak",
-        "unié中",
-        "' OR 1=1 --",
-        ":kw/with-colons",
-        "  spaces  ",
-    ]
-    df = spark.createDataFrame([(s,) for s in adversarial], "v string")
-    out = df.select(
-        "v",
-        # fast path: literal str part
-        *[
-            uuid3_str_col(NIL_UUID, [s]).alias(f"lit3_{i}")
-            for i, s in enumerate(adversarial)
-        ],
-        # fast path: bare column part
-        uuid3_str_col(NIL_UUID, [F.col("v")]).alias("col3"),
-        # forced fallback: non-bare column part (concat breaks bareness)
-        uuid3_str_col(NIL_UUID, [F.concat(F.col("v"), F.lit(""))]).alias("fb3"),
-        uuid5_col(NIL_UUID, [F.col("v").cast("binary")]).alias("col5"),
-        uuid5_col(NIL_UUID, [F.concat(F.col("v"), F.lit("")).cast("binary")]).alias("fb5"),
-    ).collect()
-    by_v = {r["v"]: r for r in out}
-    for i, s in enumerate(adversarial):
-        py3 = uuid3_str_py(NIL_UUID, [s])
-        py5 = uuid5_py(NIL_UUID, [s])
-        r = by_v[s]
-        # literal fast path == python golden (same value in every row)
-        assert out[0][f"lit3_{i}"] == py3, f"literal fast path broke on {s!r}"
-        # column fast path == python golden == forced fallback
-        assert r["col3"] == py3 == r["fb3"], f"column path broke on {s!r}"
-        assert r["col5"] == py5 == r["fb5"], f"uuid5 path broke on {s!r}"
+ADVERSARIAL = [
+    "plain",
+    "",
+    "it's",
+    'a"b',
+    "back\\slash",
+    "semi;colon--comment",
+    "line\nbreak",
+    "unié中",
+    "' OR 1=1 --",
+    ":kw/with-colons",
+    "  spaces  ",
+]
 
 
-def test_fast_path_keyword_and_reserved_column_names(spark):
-    """r6 review: a column literally named current_date must hash the
-    COLUMN (backtick-quoted), not resolve to the zero-arg function —
-    and a reserved word like `order` must not ParseException."""
-    df = spark.createDataFrame(
-        [("a", "b")], "current_date string, order string"
-    )
-    row = df.select(
-        uuid3_str_col(NIL_UUID, [F.col("current_date")]).alias("u1"),
-        uuid3_str_col(NIL_UUID, [F.col("order")]).alias("u2"),
-    ).first()
-    assert row["u1"] == uuid3_str_py(NIL_UUID, ["a"])
-    assert row["u2"] == uuid3_str_py(NIL_UUID, ["b"])
-
-
-def test_fast_path_literal_columns_and_bound_columns(spark):
-    """r6 high-effort review: Column literals that STRINGIFY like
-    identifiers (lit(True) -> 'true', lit(None) -> 'NULL') must route
-    to the composed fallback, and a dataframe-BOUND column (a['v']
-    after a join with an ambiguous free name) must keep its binding
-    instead of degrading to name resolution."""
-    # boolean literal: composed path hashes the string 'true'
-    row = spark.range(1).select(
-        uuid3_str_col(NIL_UUID, [F.lit(True)]).alias("u"),
-    ).first()
-    assert row["u"] == uuid3_str_py(NIL_UUID, ["true"])
-
-    # bound column through an ambiguous join: must hash side a's value
-    a = spark.createDataFrame([(1, "va")], "k int, v string")
-    b = spark.createDataFrame([(1, "vb")], "k int, v string")
+def test_builders_equal_python_golden_over_part_shapes(spark):
+    """Both builders equal their Python goldens (uuid3_str_py /
+    uuid5_py) over adversarial strings (quotes, backslashes, newlines,
+    unicode, SQL-ish fragments) in every part shape the engine passes:
+    literal str, bare column, columns named like a zero-arg function
+    (``current_date``) or a reserved word (``order``), a
+    DataFrame-bound column after a join that makes its free name
+    ambiguous, and a non-bare expression.  md5 also takes a boolean
+    literal (hashed as its string 'true'; sha1 hashes bytes and a
+    boolean has no binary cast); sha1 also takes Kw and UuidBytes
+    parts (md5's payload is a string: its keyword spelling is the
+    caller's ``":" + name``)."""
+    rows = [(i, s, s, s) for i, s in enumerate(ADVERSARIAL)]
+    a = spark.createDataFrame(rows, "k int, v string, current_date string, order string")
+    b = spark.createDataFrame([(i, "other") for i in range(len(ADVERSARIAL))], "k int, v string")
     j = a.join(b, "k")
-    got = j.select(uuid3_str_col(NIL_UUID, [a["v"]]).alias("u")).first()["u"]
-    assert got == uuid3_str_py(NIL_UUID, ["va"])
+    shapes = {
+        "col": F.col("current_date"),
+        "kwname": F.col("order"),
+        "bound": a["v"],
+        "expr": F.concat(a["v"], F.lit("")),
+    }
+    cols = []
+    for name, c in shapes.items():
+        cols.append(uuid3_str_col(NIL_UUID, [c]).alias(f"u3_{name}"))
+        cols.append(uuid5_col(NIL_UUID, [c]).alias(f"u5_{name}"))
+    for i, s in enumerate(ADVERSARIAL):
+        cols.append(uuid3_str_col(NIL_UUID, [s]).alias(f"u3_lit{i}"))
+        cols.append(uuid5_col(NIL_UUID, [s]).alias(f"u5_lit{i}"))
+        cols.append(uuid5_col(NIL_UUID, [Kw(s), F.col("order")]).alias(f"u5_kw{i}"))
+    out = {r["k"]: r for r in j.select("k", *cols).collect()}
+    for i, s in enumerate(ADVERSARIAL):
+        r = out[i]
+        py3, py5 = uuid3_str_py(NIL_UUID, [s]), uuid5_py(NIL_UUID, [s])
+        for name in shapes:
+            assert r[f"u3_{name}"] == py3, f"md5 {name} part broke on {s!r}"
+            assert r[f"u5_{name}"] == py5, f"sha1 {name} part broke on {s!r}"
+        # literal parts: the same value in every row
+        assert out[0][f"u3_lit{i}"] == py3, f"md5 literal part broke on {s!r}"
+        assert out[0][f"u5_lit{i}"] == py5, f"sha1 literal part broke on {s!r}"
+        assert r[f"u5_kw{i}"] == uuid5_py(NIL_UUID, [Kw(s), s]), f"Kw part broke on {s!r}"
 
+    row = spark.range(1).select(
+        uuid3_str_col(NIL_UUID, [F.lit(True)]).alias("u3_bool"),
+        uuid5_col(NIL_UUID, [UuidBytes(NIL_UUID), "x"]).alias("u5_uuid"),
+    ).first()
+    assert row["u3_bool"] == uuid3_str_py(NIL_UUID, ["true"])
+    assert row["u5_uuid"] == uuid5_py(NIL_UUID, [UuidBytes(NIL_UUID), "x"])
 
-def test_uuid_ns_string_is_escaped_in_fast_path(spark):
-    """A quote-bearing ns string must hash the literal characters, not
-    parse as SQL concat — fast path and Python golden must agree."""
-    ns = "a'||'b"
-    got = spark.range(1).select(
-        uuid3_str_col(ns, ["x"]).alias("u")
-    ).first()["u"]
-    # the engine lowercases + strips dashes from ns before hashing
-    import hashlib
-
-    payload = ns.replace("-", "").lower() + "x"
-    h = hashlib.md5(payload.encode()).hexdigest()
-    from lens_sds_batch_spark.functions.keys import _VARIANT_MAP
-
-    expect = f"{h[0:8]}-{h[8:12]}-3{h[13:16]}-{_VARIANT_MAP[int(h[16],16)]}{h[17:20]}-{h[20:32]}"
-    assert got == expect
-
-
-def test_uuid5_uuidbytes_quote_value_fast_equals_fallback(spark):
-    """r6 review: a quote-bearing UuidBytes value must not parse as SQL
-    concat in the fast path — both paths unhex the non-hex literal to a
-    NULL payload, which since r7 RAISES under the default guard
-    (escaping bug would instead silently produce a VALID-looking id);
-    under the explicit waiver both paths format the identical
-    empty-string degenerate."""
-    from lens_sds_batch_spark.functions.keys import UuidBytes
-
+    # a non-hex UuidBytes value unhexes to a NULL payload: the default
+    # guard raises, the waiver formats the empty-string degenerate id
     bad = UuidBytes("a'||'b")
-    for ns in (NIL_UUID, F.concat(F.lit(NIL_UUID), F.lit(""))):  # fast, fallback
+    for ns in (NIL_UUID, F.lit(NIL_UUID)):
         with pytest.raises(Exception, match="NULL id payload"):
             spark.range(1).select(uuid5_col(ns, [bad]).alias("u")).first()
-    row = spark.range(1).select(
-        uuid5_col(NIL_UUID, [bad], on_null="empty").alias("fast"),
-        # force the composed fallback with a bound-expression ns
-        uuid5_col(
-            F.concat(F.lit(NIL_UUID), F.lit("")), [bad], on_null="empty"
-        ).alias("fb"),
-    ).first()
-    assert row["fast"] == row["fb"] == ""
+        waived = spark.range(1).select(uuid5_col(ns, [bad], on_null="empty").alias("u"))
+        assert waived.first()["u"] == ""
 
 
 def test_null_payload_raises_by_default_and_waives_explicitly(spark):
     """VERDICT r6 #5: guard_payload is the DEFAULT formatter path — a
-    NULL part must RAISE at execution (both fast-SQL and composed
-    fallback), never silently collapse to the empty-string degenerate
+    NULL part must RAISE at execution (column and expression parts
+    alike), never silently collapse to the empty-string degenerate
     id; on_null="empty" is the explicit waiver that restores the old
     behavior for pre-guarded callers."""
     df = spark.createDataFrame([("x",), (None,)], "v string")
 
     for mk in (
         lambda d: d.select(uuid3_str_col(NIL_UUID, [F.col("v")]).alias("u")),
-        # non-bare part forces the composed-Column fallback path
         lambda d: d.select(
             uuid3_str_col(NIL_UUID, [F.upper(F.col("v"))]).alias("u")
         ),
@@ -335,15 +286,35 @@ def test_null_guard_does_not_change_nullability_or_goldens(spark):
     [
         "0000000g-0000-0000-0000-000000000000",  # non-hex digit
         "000-0000-0000-0000-000000000000",  # odd hex length
+        "not-a-uuid",
+        "a'||'b",  # quote-bearing text
+        "2a302e1b-3cb4-425e-bca9-db7831d81e69d",  # 33 digits: Java-lenient only
     ],
 )
 def test_uuid5_malformed_literal_namespace_refused_at_call_site(spark, bad_ns):
-    """A malformed literal namespace on the composed-Column path is
-    refused where uuid5_col is called, naming the function and the bad
-    value — not as a bare bytes.fromhex error."""
-    part = F.concat(F.lit("x"), F.lit(""))  # non-bare part: composed path
-    with pytest.raises(ValueError, match="uuid5_col: literal namespace") as ei:
-        uuid5_col(bad_ns, [part])
+    """A literal namespace that is not 32 hex digits once the dashes
+    are removed is refused where the builder is called, naming the
+    function and the bad value, for every part shape and both flavors,
+    through ``generate_commands`` (scalar ``batch_cmd_id``) and through
+    ``batch_cmd_id_map``.  Unchecked, sha1 unhexes it to a NULL
+    namespace (every id of the batch collapsing to one degenerate
+    value) and md5 hashes the raw text."""
+    from lens_sds_batch_spark.plans.commands import batch_cmd_id_map, generate_commands
+    from lens_sds_batch_spark.plans.odm import derive_odm_from_tpch
+
+    from .conftest import SF_SMOKE
+
+    bare, expr = F.col("x"), F.concat(F.lit("x"), F.lit(""))
+    for fn, name in ((uuid5_col, "uuid5_col"), (uuid3_str_col, "uuid3_str_col")):
+        for parts in ([bare], [expr], ["x"]):
+            with pytest.raises(ValueError, match=f"{name}: literal namespace") as ei:
+                fn(bad_ns, parts)
+            assert repr(bad_ns) in str(ei.value)
+            fn(NIL_UUID, parts)  # a well-formed namespace still builds
+    odm = derive_odm_from_tpch(spark, SF_SMOKE)
+    for flavor, name in (("sha1", "uuid5_col"), ("md5", "uuid3_str_col")):
+        with pytest.raises(ValueError, match=f"{name}: literal namespace"):
+            generate_commands(odm, bad_ns, "sub", persist=False, flavor=flavor)
+    with pytest.raises(ValueError, match="batch_cmd_id_map: literal namespace") as ei:
+        batch_cmd_id_map({"F-1": NIL_UUID, "F-2": bad_ns})
     assert repr(bad_ns) in str(ei.value)
-    # a well-formed namespace on the same path still builds
-    uuid5_col(NIL_UUID, [part])
