@@ -172,28 +172,16 @@ ADVERSARIAL = [
 ]
 
 
-def test_builders_equal_python_golden_over_part_shapes(spark):
+def test_fast_path_equals_python_and_fallback_adversarial(spark):
     """Both builders equal their Python goldens (uuid3_str_py /
     uuid5_py) over adversarial strings (quotes, backslashes, newlines,
-    unicode, SQL-ish fragments) in every part shape the engine passes:
-    literal str, bare column, columns named like a zero-arg function
-    (``current_date``) or a reserved word (``order``), a
-    DataFrame-bound column after a join that makes its free name
-    ambiguous, and a non-bare expression.  md5 also takes a boolean
-    literal (hashed as its string 'true'; sha1 hashes bytes and a
-    boolean has no binary cast); sha1 also takes Kw and UuidBytes
-    parts (md5's payload is a string: its keyword spelling is the
-    caller's ``":" + name``)."""
-    rows = [(i, s, s, s) for i, s in enumerate(ADVERSARIAL)]
-    a = spark.createDataFrame(rows, "k int, v string, current_date string, order string")
-    b = spark.createDataFrame([(i, "other") for i in range(len(ADVERSARIAL))], "k int, v string")
-    j = a.join(b, "k")
-    shapes = {
-        "col": F.col("current_date"),
-        "kwname": F.col("order"),
-        "bound": a["v"],
-        "expr": F.concat(a["v"], F.lit("")),
-    }
+    unicode, SQL-ish fragments) as a literal str part, a bare column
+    part and a non-bare expression part.  The name is that of the
+    SQL-string fast path the builders once had beside the composed
+    path; each flavor now builds one composed tree, and every part
+    shape must still agree with the golden."""
+    df = spark.createDataFrame([(s,) for s in ADVERSARIAL], "v string")
+    shapes = {"col": F.col("v"), "expr": F.concat(F.col("v"), F.lit(""))}
     cols = []
     for name, c in shapes.items():
         cols.append(uuid3_str_col(NIL_UUID, [c]).alias(f"u3_{name}"))
@@ -201,10 +189,10 @@ def test_builders_equal_python_golden_over_part_shapes(spark):
     for i, s in enumerate(ADVERSARIAL):
         cols.append(uuid3_str_col(NIL_UUID, [s]).alias(f"u3_lit{i}"))
         cols.append(uuid5_col(NIL_UUID, [s]).alias(f"u5_lit{i}"))
-        cols.append(uuid5_col(NIL_UUID, [Kw(s), F.col("order")]).alias(f"u5_kw{i}"))
-    out = {r["k"]: r for r in j.select("k", *cols).collect()}
+    out = df.select("v", *cols).collect()
+    by_v = {r["v"]: r for r in out}
     for i, s in enumerate(ADVERSARIAL):
-        r = out[i]
+        r = by_v[s]
         py3, py5 = uuid3_str_py(NIL_UUID, [s]), uuid5_py(NIL_UUID, [s])
         for name in shapes:
             assert r[f"u3_{name}"] == py3, f"md5 {name} part broke on {s!r}"
@@ -212,8 +200,37 @@ def test_builders_equal_python_golden_over_part_shapes(spark):
         # literal parts: the same value in every row
         assert out[0][f"u3_lit{i}"] == py3, f"md5 literal part broke on {s!r}"
         assert out[0][f"u5_lit{i}"] == py5, f"sha1 literal part broke on {s!r}"
-        assert r[f"u5_kw{i}"] == uuid5_py(NIL_UUID, [Kw(s), s]), f"Kw part broke on {s!r}"
 
+
+def test_fast_path_keyword_and_reserved_column_names(spark):
+    """A column named like a zero-arg function (``current_date``) hashes
+    the column's value, not the function's, and a column named like a
+    reserved word (``order``) builds without a parse error, in both
+    flavors; a Kw part beside such a column hashes like the golden."""
+    rows = [(s, s) for s in ADVERSARIAL]
+    df = spark.createDataFrame(rows, "current_date string, order string")
+    out = df.select(
+        "order",
+        uuid3_str_col(NIL_UUID, [F.col("current_date")]).alias("u3_fn"),
+        uuid5_col(NIL_UUID, [F.col("current_date")]).alias("u5_fn"),
+        uuid3_str_col(NIL_UUID, [F.col("order")]).alias("u3_kw"),
+        uuid5_col(NIL_UUID, [F.col("order")]).alias("u5_kw"),
+        uuid5_col(NIL_UUID, [Kw("k"), F.col("order")]).alias("u5_kwpart"),
+    ).collect()
+    for r in out:
+        s = r["order"]
+        py3, py5 = uuid3_str_py(NIL_UUID, [s]), uuid5_py(NIL_UUID, [s])
+        assert r["u3_fn"] == r["u3_kw"] == py3, f"md5 named column broke on {s!r}"
+        assert r["u5_fn"] == r["u5_kw"] == py5, f"sha1 named column broke on {s!r}"
+        assert r["u5_kwpart"] == uuid5_py(NIL_UUID, [Kw("k"), s]), f"Kw part broke on {s!r}"
+
+
+def test_fast_path_literal_columns_and_bound_columns(spark):
+    """Column literals hash their value: md5 hashes F.lit(True) as the
+    string 'true' (sha1 hashes bytes, and a boolean has no binary
+    cast), and sha1 takes a UuidBytes part as the namespace's bytes.  A
+    DataFrame-bound column (a['v'] after a join that makes the free
+    name ``v`` ambiguous) keeps its binding in both flavors."""
     row = spark.range(1).select(
         uuid3_str_col(NIL_UUID, [F.lit(True)]).alias("u3_bool"),
         uuid5_col(NIL_UUID, [UuidBytes(NIL_UUID), "x"]).alias("u5_uuid"),
@@ -221,8 +238,23 @@ def test_builders_equal_python_golden_over_part_shapes(spark):
     assert row["u3_bool"] == uuid3_str_py(NIL_UUID, ["true"])
     assert row["u5_uuid"] == uuid5_py(NIL_UUID, [UuidBytes(NIL_UUID), "x"])
 
-    # a non-hex UuidBytes value unhexes to a NULL payload: the default
-    # guard raises, the waiver formats the empty-string degenerate id
+    a = spark.createDataFrame([(1, "va")], "k int, v string")
+    b = spark.createDataFrame([(1, "vb")], "k int, v string")
+    j = a.join(b, "k")
+    got = j.select(
+        uuid3_str_col(NIL_UUID, [a["v"]]).alias("u3"),
+        uuid5_col(NIL_UUID, [a["v"]]).alias("u5"),
+    ).first()
+    assert got["u3"] == uuid3_str_py(NIL_UUID, ["va"])
+    assert got["u5"] == uuid5_py(NIL_UUID, ["va"])
+
+
+def test_uuid5_uuidbytes_quote_value_fast_equals_fallback(spark):
+    """A quote-bearing UuidBytes value is hashed as data, never parsed:
+    its non-hex text unhexes to a NULL payload, which RAISES under the
+    default guard (an escaping bug would instead give a valid-looking
+    id), and under the explicit waiver formats the empty-string
+    degenerate id, alike for a literal and a Column namespace."""
     bad = UuidBytes("a'||'b")
     for ns in (NIL_UUID, F.lit(NIL_UUID)):
         with pytest.raises(Exception, match="NULL id payload"):
