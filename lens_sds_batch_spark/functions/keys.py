@@ -100,10 +100,24 @@ def uuid5_py(ns: str, parts: Iterable) -> str:
 def uuid3_str_py(ns: str, parts: Iterable[str]) -> str:
     """md5 string-payload flavor — must match :func:`uuid3_str_col` and
     the oracle's ``duck_uuid3`` exactly."""
-    payload = uuid.UUID(ns).hex + "".join(str(p) for p in parts)
+    payload = uuid.UUID(ns).hex + "".join(_str_part("uuid3_str_py", p) for p in parts)
     h = hashlib.md5(payload.encode("utf-8")).hexdigest()
     variant = _VARIANT_MAP[int(h[16], 16)]
     return f"{h[0:8]}-{h[8:12]}-3{h[13:16]}-{variant}{h[17:20]}-{h[20:32]}"
+
+
+def _str_part(fn: str, part) -> str:
+    """An md5-flavor name part as the text it hashes.  A :class:`Kw` or
+    :class:`UuidBytes` part is refused: md5 hashes text, and their
+    ``str`` is the object repr, which names a memory address — an id
+    that would change from process to process."""
+    if isinstance(part, (Kw, UuidBytes)):
+        raise ValueError(
+            f"{fn}: a {type(part).__name__} part has no md5 text form (it "
+            "would hash its object repr); pass the text to hash, or use "
+            "the sha1 flavor, which encodes it clj-uuid-style"
+        )
+    return str(part)
 
 
 class Kw:
@@ -237,7 +251,7 @@ def _to_bytes(part) -> Column:
 def _to_str(part) -> Column:
     if isinstance(part, Column):
         return part.cast("string")
-    return F.lit(str(part))
+    return F.lit(_str_part("uuid3_str_col", part))
 
 
 def _uuid_col(

@@ -156,8 +156,20 @@ def _namespace(batch_cmd_id: str | Column, flavor: str) -> str | Column:
     :func:`generate_commands`): :data:`PER_FILE` resolves here, once,
     with the command-hash flavor; a literal uuid string goes to the
     uuid builder as it is, which refuses a malformed one at the call
-    site."""
-    if isinstance(batch_cmd_id, str) and batch_cmd_id == PER_FILE:
+    site.  A caller's Column is guarded per row: :func:`_cmd_id` waives
+    the builder's NULL guard for its own contextual one, which covers
+    the payload only, so a NULL namespace (for sha1, also one that does
+    not unhex) would format every cmd id of its rows as ``""``."""
+    if isinstance(batch_cmd_id, Column):
+        enc = batch_cmd_id if flavor == "md5" else F.unhex(
+            F.regexp_replace(batch_cmd_id, "-", "")
+        )
+        return F.when(enc.isNull(), F.raise_error(F.concat(
+            F.lit("generate_commands: batch_cmd_id namespace is NULL (sha1: or "
+                  "not uuid hex); every cmd id would collapse to one value; file_oid="),
+            F.coalesce(F.col("file_oid"), F.lit("<NULL>")),
+        ))).otherwise(batch_cmd_id)
+    if batch_cmd_id == PER_FILE:
         return per_file_batch_cmd_id(flavor)
     return batch_cmd_id
 
@@ -269,8 +281,8 @@ def _cmd_id(payload: Column, ns: str | Column, flavor: str, entity: str | None =
     functions/keys.guard_payload for the payload-not-uuid placement
     rationale.  ``on_null="empty"`` because this contextual guard makes
     the formatter's generic one redundant for the payload; a literal
-    namespace is checked when the builder is called, a Column one is
-    the caller's (:func:`generate_commands`)."""
+    namespace is checked when the builder is called, a Column one by
+    :func:`_namespace`."""
     guarded = guard_payload(
         payload, _null_cmd_id_msg(entity), cast_type="binary" if flavor == "sha1" else "string"
     )
@@ -366,9 +378,11 @@ def generate_commands(
     each row's namespace derives from its ``file_oid``, same flavor as
     the command hashing), or an explicit Column expression (e.g.
     :func:`batch_cmd_id_map` for externally-assigned per-file ids).
-    A scalar string that is not uuid text raises ``ValueError`` here;
-    an arbitrary caller-supplied Column is the caller's to keep
-    well-formed (a malformed value hashes a NULL or garbage namespace).
+    A scalar string that is not uuid text raises ``ValueError`` here.
+    A Column namespace that is NULL on a row (for sha1, also one that
+    does not unhex) fails the job, naming the row's ``file_oid``; any
+    other malformed Column value is the caller's to avoid (md5 hashes
+    its text as it is).
     ``sub`` likewise accepts a Column for per-file submitters.
 
     ``persist`` caches each resolved level before fan-out — the level

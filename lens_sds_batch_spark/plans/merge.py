@@ -13,6 +13,7 @@ queries want), map-side combinable, AQE-skew-safe.
 
 from __future__ import annotations
 
+import contextlib
 import json
 
 from pyspark.sql import Column, DataFrame, Window
@@ -52,13 +53,16 @@ LEASE_SUFFIX = ".__lease"
 LEASE_STALE_SEC = 3600.0
 
 
-def _writer_lease(fs, jvm_path, target_path: str):
-    """Context manager acquiring the single-writer lease for a merge
-    target (see LEASE_SUFFIX above).  Raises IOError when another
-    writer holds a non-stale lease; takes over a stale one (best-effort:
-    two simultaneous takeovers can still race — the loser of the
-    re-create dies loudly).  Released on success AND on exception (a
-    failed merge must be REPLAYED, not resumed, so holding the lease
+@contextlib.contextmanager
+def _writer_lease(spark, target_path: str, who: str, missing_ok: bool = False):
+    """Hold the single-writer lease of a merge target (see LEASE_SUFFIX
+    above) and yield the table's :func:`_resolve` read under it — the
+    one way the writers (merge_into, vacuum, compaction, rebucket,
+    evolve_schema) open a table.  Raises IOError, naming ``who``, when
+    another writer holds a non-stale lease; takes over a stale one
+    (best-effort: two simultaneous takeovers can still race — the loser
+    of the re-create dies loudly).  Released on success AND on exception
+    (a failed merge must be REPLAYED, not resumed, so holding the lease
     past the failure would only block the replay); only process death
     leaves it for age-based takeover.
 
@@ -69,81 +73,75 @@ def _writer_lease(fs, jvm_path, target_path: str):
     hold the lease and wipe each other's staged tmp; ``file://``
     targets now acquire via POSIX ``O_CREAT|O_EXCL`` instead, which is
     atomic across threads AND processes."""
-    import contextlib
     import os
     import socket
     import time as _time
 
-    @contextlib.contextmanager
-    def _ctx():
-        lease_str = target_path.rstrip("/") + LEASE_SUFFIX
-        lease = jvm_path(lease_str)
-        payload = json.dumps(
-            {
-                "pid": os.getpid(),
-                "host": socket.gethostname(),
-                "acquired_unix_ms": int(_time.time() * 1000),
-            }
-        ).encode("utf-8")
-        local = fs.getUri().getScheme() == "file"
+    fs, jvm_path, tgt = _open_table(spark, target_path)
+    lease_str = tgt + LEASE_SUFFIX
+    lease = jvm_path(lease_str)
+    payload = json.dumps(
+        {
+            "pid": os.getpid(),
+            "host": socket.gethostname(),
+            "acquired_unix_ms": int(_time.time() * 1000),
+        }
+    ).encode("utf-8")
+    local = fs.getUri().getScheme() == "file"
 
-        def _try_create():
-            if local:  # POSIX O_EXCL: the only atomic exclusive-create here
-                path = lease_str[len("file:"):] if lease_str.startswith(
-                    "file:"
-                ) else lease_str
-                # First merge into a target whose PARENT does not exist
-                # yet (ADVICE r12): the Hadoop fs.create this replaced
-                # made parent dirs implicitly; os.open does not, and the
-                # FileNotFoundError would be swallowed by the broad
-                # except below and mis-reported as lease contention.
-                parent = os.path.dirname(path)
-                if parent:
-                    os.makedirs(parent, exist_ok=True)
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                try:
-                    os.write(fd, payload)
-                finally:
-                    os.close(fd)
-                return
-            out = fs.create(lease, False)  # overwrite=False: create-exclusive
+    def _try_create():
+        if local:  # POSIX O_EXCL: the only atomic exclusive-create here
+            path = lease_str[len("file:"):] if lease_str.startswith(
+                "file:"
+            ) else lease_str
+            # First merge into a target whose PARENT does not exist
+            # yet (ADVICE r12): the Hadoop fs.create this replaced
+            # made parent dirs implicitly; os.open does not, and the
+            # FileNotFoundError would be swallowed by the broad
+            # except below and mis-reported as lease contention.
+            parent = os.path.dirname(path)
+            if parent:
+                os.makedirs(parent, exist_ok=True)
+            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
             try:
-                out.write(bytearray(payload))
+                os.write(fd, payload)
             finally:
-                out.close()
+                os.close(fd)
+            return
+        out = fs.create(lease, False)  # overwrite=False: create-exclusive
+        try:
+            out.write(bytearray(payload))
+        finally:
+            out.close()
 
+    try:
+        _try_create()
+    except Exception:
+        age = None
+        try:
+            st = fs.getFileStatus(lease)
+            age = _time.time() - st.getModificationTime() / 1000.0
+        except Exception:  # holder released between create-fail and stat
+            pass
+        if age is not None and age <= LEASE_STALE_SEC:
+            raise IOError(
+                f"{who}: another writer holds the lease at {lease_str} (age "
+                f"{age:.0f}s <= stale threshold {LEASE_STALE_SEC:.0f}s); "
+                "concurrent writes into one merge target take turns — wait "
+                "for the holder and retry"
+            )
+        fs.delete(lease, False)  # stale (holder died) or vanished
         try:
             _try_create()
-        except Exception:
-            age = None
-            try:
-                st = fs.getFileStatus(lease)
-                age = _time.time() - st.getModificationTime() / 1000.0
-            except Exception:  # holder released between create-fail and stat
-                pass
-            if age is not None and age <= LEASE_STALE_SEC:
-                raise IOError(
-                    f"merge_into: another writer holds the lease at "
-                    f"{target_path.rstrip('/') + LEASE_SUFFIX} (age {age:.0f}s "
-                    f"<= stale threshold {LEASE_STALE_SEC:.0f}s); concurrent writes "
-                    "into one merge target take turns — wait for the holder "
-                    "and retry"
-                )
-            fs.delete(lease, False)  # stale (holder died) or vanished
-            try:
-                _try_create()
-            except Exception as e:
-                raise IOError(
-                    f"merge_into: lease contention at "
-                    f"{target_path.rstrip('/') + LEASE_SUFFIX} — a second "
-                    "writer re-created the lease during stale takeover"
-                ) from e
-        try:
-            yield
-        finally:
-            fs.delete(lease, False)
-
-    return _ctx()
+        except Exception as e:
+            raise IOError(
+                f"{who}: lease contention at {lease_str} — a second writer "
+                "re-created the lease during stale takeover"
+            ) from e
+    try:
+        yield _resolve(spark, tgt, who, missing_ok=missing_ok)
+    finally:
+        fs.delete(lease, False)
 
 
 def bucket_expr(keys: list[str], num_buckets: int) -> Column:
@@ -350,9 +348,9 @@ def merge_into(
     # deterministic within-batch tiebreak (see TIE-BREAK CONTRACT above):
     # hash of the full payload row
     row_hash = F.xxhash64(*[F.col(c) for c in updates.columns])
-    fs, jvm_path, tgt = _open_table(spark, target_path)
-    with _writer_lease(fs, jvm_path, tgt):
-        man = _read_manifest(spark, fs, jvm_path, tgt)
+    with _writer_lease(spark, target_path, "merge_into", missing_ok=True) as (
+        fs, jvm_path, tgt, man,
+    ):
         if man is None:
             man = _init_manifest_table(
                 fs, jvm_path, tgt, keys, num_buckets or 1, dict(updates.dtypes)
@@ -410,28 +408,33 @@ def _gen_paths(tgt: str, live: dict) -> list[str]:
     ]
 
 
-def _pinned_read(spark, paths: list, pinned, base_path: str | None = None):
-    """Read live generation dirs under the layout's schema pin WITHOUT
-    schema inference (r14-opt, guide §6 metadata-driven reads):
-    ``mergeSchema=true`` runs a distributed footer-union job on every
-    call — at 100 TB that is a pass over every touched file's footer
-    per merge/read, and at the gate scale it is a fixed extra job per
-    protocol phase (measured: the three footer jobs of a 2-generation
-    read vanish under an explicit schema).  When the layout carries a
-    pin, the pin IS the schema: live generations always match it
-    exactly except for columns a METADATA-ONLY add left behind, which
-    the parquet reader null-fills — byte-identical to the previous
-    ``mergeSchema`` + conform-to-pin pair (probe: same schema
-    incl. the appended partition columns, same rows).  Sites that can
-    legitimately see mixed-width files (the widen rewrite's own
-    pre-widen read, read_changes' FROM side) keep ``mergeSchema``."""
-    r = spark.read
-    if base_path is not None:
-        r = r.option("basePath", base_path)
+def _pinned_read(spark, tgt: str, live: dict, pinned: dict) -> DataFrame:
+    """The rows of the ``{bucket: gen}`` generations ``live`` of table
+    ``tgt``, read under the schema pin ``pinned`` of the manifest that
+    lists them — ``__bucket`` exposed, ``__gen`` resolved away.  The one
+    way every store read opens generation directories.
+
+    No schema inference (r14-opt, guide §6 metadata-driven reads):
+    inference runs a distributed footer job on every call, and
+    ``mergeSchema`` a footer union — at 100 TB a pass over every touched
+    file's footer per merge/read, at the gate scale a fixed extra job
+    per protocol phase (measured: the three footer jobs of a
+    2-generation read vanish under an explicit schema, and the change
+    feed lost one per side).  The pin IS the schema: a committed
+    manifest's live generations always match it exactly except for
+    columns a METADATA-ONLY add left out of older files, which the
+    parquet reader null-fills, and a widen rewrites every live bucket
+    before its manifest names the wider type (probe: same schema incl.
+    the appended partition columns, same rows).  A reader that compares
+    two manifests (the change feed) reads each side under its own pin
+    and casts to the newer one."""
     ddl = ", ".join(
         "`" + c.replace("`", "``") + "` " + t for c, t in pinned.items()
     )
-    return r.schema(ddl).parquet(*paths)
+    return (
+        spark.read.option("basePath", tgt).schema(ddl)
+        .parquet(*_gen_paths(tgt, live)).drop(GEN_COL)
+    )
 
 
 def _check_schema_pin(target_path, pinned, upd_types) -> None:
@@ -545,37 +548,17 @@ def _list_manifests(fs, jvm_path, tgt: str) -> list:
     return sorted(out)
 
 
-def _refuse_foreign(fs, jvm_path, tgt: str, who: str) -> None:
-    """Raise when ``tgt`` (which has no committed manifest) holds
-    anything besides an uncommitted ``_manifest`` dir — data this store
-    did not write: a plain parquet table, or a layout from an older
-    build.  Guessing would either hide that data or overwrite it; the
-    migration is an explicit read + merge into a new path."""
-    if not fs.exists(jvm_path(tgt)):
-        return
-    foreign = sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(jvm_path(tgt))
-        if st.getPath().getName() != MANIFEST_DIR
-    )
-    if foreign:
-        raise ValueError(
-            f"{who}: {tgt} is not a manifest-commit target (it holds "
-            f"{foreign[:5]}) — merge_into stores only the manifest layout "
-            "and needs a fresh target or one it wrote itself; read the "
-            "existing data and merge it into a new path (no in-place "
-            "migration)"
-        )
-
-
-def _read_manifest(spark, fs, jvm_path, target_path: str, as_of_seq: int | None = None):
+def _read_manifest(
+    spark, fs, jvm_path, tgt: str, who: str, as_of_seq: int | None = None
+):
     """Return (seq, filename, manifest_dict) for the LATEST committed
     manifest, or None when the target carries no manifest layout.  An
     existing-but-unreadable latest manifest raises loudly: guessing
     would either read stale generations or route keys into the wrong
     bucket space.  So does a manifest without the ``columns`` schema
     pin: every commit since r12 carries it, and no reader or writer
-    has a pin-less path.
+    has a pin-less path.  Every refusal is prefixed with ``who``, the
+    entry point the caller named.
 
     ``as_of_seq`` (r12 snapshot reads) selects the latest manifest with
     ``seq <= as_of_seq`` instead — Delta ``versionAsOf`` semantics.  A
@@ -586,26 +569,25 @@ def _read_manifest(spark, fs, jvm_path, target_path: str, as_of_seq: int | None 
     (ADVICE r12, matching Delta's versionAsOf on a nonexistent future
     version): a typo'd or wrong-table seq must not silently read the
     latest state as if it were the requested snapshot."""
-    ms = _list_manifests(fs, jvm_path, target_path.rstrip("/"))
+    ms = _list_manifests(fs, jvm_path, tgt)
     if not ms:
         return None
     if as_of_seq is not None:
         if as_of_seq > ms[-1][0]:
             raise ValueError(
-                f"read_merged_table: as_of_seq={as_of_seq} is beyond the "
-                f"latest commit (seq {ms[-1][0]}) of {target_path} — like "
-                "Delta versionAsOf, a nonexistent future version is an "
-                "error, not the latest state; drop as_of_seq to read latest"
+                f"{who}: seq {as_of_seq} is beyond the latest commit (seq "
+                f"{ms[-1][0]}) of {tgt} — like Delta versionAsOf, a "
+                "nonexistent future version is an error, not the latest state"
             )
         ms = [m for m in ms if m[0] <= as_of_seq]
         if not ms:
             raise ValueError(
-                f"read_merged_table: no manifest at or below seq {as_of_seq} "
-                f"for {target_path} — the snapshot predates the table or was "
-                "vacuumed; list_snapshots() shows what is retained"
+                f"{who}: no manifest at or below seq {as_of_seq} for {tgt} — "
+                "the snapshot predates the table or was vacuumed; "
+                "list_snapshots() shows what is retained"
             )
     seq, name = ms[-1]
-    path = _manifest_dir(target_path) + "/" + name
+    path = _manifest_dir(tgt) + "/" + name
     try:
         stm = fs.open(jvm_path(path))
         try:
@@ -618,18 +600,54 @@ def _read_manifest(spark, fs, jvm_path, target_path: str, as_of_seq: int | None 
                 raise KeyError(field)
     except Exception as e:
         raise ValueError(
-            f"merge_into: unreadable/corrupt manifest at {path} ({e!r}); "
+            f"{who}: unreadable/corrupt manifest at {path} ({e!r}); "
             "refusing to guess the table state — repair or remove the table"
         ) from e
     if "columns" not in man:
         raise ValueError(
-            f"merge_into: manifest {path} carries no schema pin "
+            f"{who}: manifest {path} carries no schema pin "
             "('columns'): the table predates the schema pin, which every "
             "reader and writer requires — read its live generation "
             "directories with spark.read.parquet and re-merge the rows "
             "into a new path"
         )
     return seq, name, man
+
+
+def _resolve(
+    spark, target_path: str, who: str, as_of_seq: int | None = None,
+    missing_ok: bool = False,
+) -> tuple:
+    """``(fs, Path, tgt, man)``: :func:`_open_table` plus the table's
+    ``(seq, name, manifest)`` as :func:`_read_manifest` resolves it —
+    the one way every store entry point opens a manifest table.
+
+    A path with no committed manifest raises THE "no table here"
+    refusal, prefixed with ``who``.  Data this store did not write (a
+    plain parquet table, or a layout from an older build) is never
+    guessed at: a guess would either hide that data or overwrite it,
+    so the migration is an explicit read + merge into a new path.
+    ``missing_ok`` (the tolerant readers, and merge_into's first
+    commit) yields ``man=None`` instead for a missing or empty path —
+    one holding at most the uncommitted ``_manifest`` dir a crash
+    mid-init leaves."""
+    fs, jvm_path, tgt = _open_table(spark, target_path)
+    man = _read_manifest(spark, fs, jvm_path, tgt, who, as_of_seq)
+    if man is None:
+        held = sorted(
+            st.getPath().getName()
+            for st in fs.listStatus(jvm_path(tgt))
+            if st.getPath().getName() != MANIFEST_DIR
+        ) if fs.exists(jvm_path(tgt)) else []
+        if held or not missing_ok:
+            raise ValueError(
+                f"{who}: no table at {tgt} — it is not a manifest-commit "
+                f"target (no bucketed layout; it holds {held[:5] or 'nothing'}). "
+                "merge_into lays a table out on a fresh target; read other "
+                "data with spark.read and merge it into a new path (no "
+                "in-place migration)"
+            )
+    return fs, jvm_path, tgt, man
 
 
 def _commit_manifest(fs, jvm_path, tgt: str, seq: int, gen: str, man: dict) -> None:
@@ -761,8 +779,7 @@ def _init_manifest_table(
     ordinary manifest merge against empty state — one code path for
     first and every later batch.  Idempotent across a crash mid-init:
     re-init is allowed while the target holds nothing but an
-    uncommitted _manifest dir; anything else is refused."""
-    _refuse_foreign(fs, jvm_path, tgt, "merge_into")
+    uncommitted _manifest dir; :func:`_resolve` refused anything else."""
     layout = {
         "num_buckets": int(num_buckets),
         "keys": list(keys),
@@ -830,14 +847,7 @@ def _manifest_merge(
         existing = {str(b): live[str(b)] for b in touched if str(b) in live}
         current = None
         if existing:
-            # pinned read (r14-opt; was mergeSchema + conform, r13): a
-            # metadata-only evolve_schema(add=...) leaves older live
-            # generations without the added column — the reader
-            # null-fills from the pin, no footer-union job
-            current = _pinned_read(
-                spark, _gen_paths(tgt, existing), man["columns"],
-                base_path=tgt,
-            ).drop(GEN_COL)
+            current = _pinned_read(spark, tgt, existing, man["columns"])
         merged = _lww_union(current, upd_tagged, keys, order_exprs, row_hash)
         obs = Observation()
         merged = merged.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -887,58 +897,40 @@ def read_merged_table(
     form).  Mutually exclusive with ``as_of_seq``.  Both forms RAISE
     beyond the newest commit (a future seq / instant), matching
     Delta's versionAsOf/timestampAsOf — never a silent clamp."""
-    fs, jvm_path, tgt = _open_table(spark, target_path)
+    if as_of_ms is not None and as_of_seq is not None:
+        raise ValueError(
+            "read_merged_table: pass as_of_seq OR as_of_ms, not both"
+        )
+    who = "read_merged_table"
     if as_of_ms is not None:
-        if as_of_seq is not None:
-            raise ValueError(
-                "read_merged_table: pass as_of_seq OR as_of_ms, not both"
-            )
-        try:
-            snaps = list_snapshots(spark, tgt)
-        except ValueError as e:
-            # same user mistake as as_of_seq on a non-manifest target —
-            # surface the same read_merged_table-prefixed explanation
-            # instead of list_snapshots' internal message (ADVICE r12)
-            raise ValueError(
-                f"read_merged_table: as_of_ms={as_of_ms} requested but {tgt} "
-                "is not a manifest-commit target"
-            ) from e
+        who += f": as_of_ms={as_of_ms}"
+    fs, jvm_path, tgt, man = _resolve(
+        spark, target_path, who, as_of_seq,
+        missing_ok=as_of_seq is None and as_of_ms is None,
+    )
+    if as_of_ms is not None:
+        snaps = list_snapshots(spark, tgt)
         latest_ms = max(s["committed_ms"] for s in snaps)
         if as_of_ms > latest_ms:
             raise ValueError(
-                f"read_merged_table: as_of_ms={as_of_ms} is after the latest "
-                f"commit instant ({latest_ms}) of {tgt} — like Delta "
-                "timestampAsOf, an instant beyond the newest commit is an "
-                "error, not the latest state; drop as_of_ms to read latest"
+                f"{who} is after the latest commit instant ({latest_ms}) of "
+                f"{tgt} — like Delta timestampAsOf, an instant beyond the "
+                "newest commit is an error, not the latest state; drop "
+                "as_of_ms to read latest"
             )
         eligible = [s["seq"] for s in snaps if s["committed_ms"] <= as_of_ms]
         if not eligible:
             raise ValueError(
-                f"read_merged_table: no manifest committed at or before "
-                f"epoch-ms {as_of_ms} for {tgt} — the instant predates the "
-                "table or the snapshot was vacuumed; list_snapshots() shows "
-                "what is retained"
+                f"{who}: no manifest committed at or before that instant for "
+                f"{tgt} — the instant predates the table or the snapshot was "
+                "vacuumed; list_snapshots() shows what is retained"
             )
-        as_of_seq = max(eligible)
-    man = _read_manifest(spark, fs, jvm_path, tgt, as_of_seq=as_of_seq)
-    if man is None:
-        _refuse_foreign(fs, jvm_path, tgt, "read_merged_table")
-        if as_of_seq is not None:
-            raise ValueError(
-                f"read_merged_table: as_of_seq={as_of_seq} requested but "
-                f"{tgt} is not a manifest-commit target"
-            )
-        return None
-    _, _, m = man
-    if not m["buckets"]:
+        man = _read_manifest(spark, fs, jvm_path, tgt, who, max(eligible))
+    if man is None or not man[2]["buckets"]:
         return None
     # a listed-but-missing generation is corruption (vacuum bug /
     # tampering): spark.read raises PATH_NOT_FOUND loudly — correct.
-    # pinned read (r14-opt): the manifest's own columns pin is the
-    # schema of its live generations.
-    return _pinned_read(
-        spark, _gen_paths(tgt, m["buckets"]), m["columns"], base_path=tgt
-    ).drop(GEN_COL)
+    return _pinned_read(spark, tgt, man[2]["buckets"], man[2]["columns"])
 
 
 def list_snapshots(spark, target_path: str) -> list[dict]:
@@ -948,12 +940,8 @@ def list_snapshots(spark, target_path: str) -> list[dict]:
     collects it (retention = the vacuum cadence and grace the operator
     chose; the protocol itself never deletes).  Pure filesystem stats,
     no Spark job.  Raises on a path that is not a merge target."""
-    fs, jvm_path, tgt = _open_table(spark, target_path)
+    fs, jvm_path, tgt, _ = _resolve(spark, target_path, "list_snapshots")
     ms = _list_manifests(fs, jvm_path, tgt)
-    if not ms:
-        raise ValueError(
-            f"list_snapshots: {tgt} is not a manifest-commit target"
-        )
     mdir = _manifest_dir(tgt)
     return [
         {
@@ -974,13 +962,7 @@ def read_commit_meta(
     None when no commit ever carried one.  Raises on a path that is not
     a merge target, with the same seq-resolution refusals as
     :func:`read_merged_table`."""
-    man = _read_manifest(spark, *_open_table(spark, target_path), as_of_seq=as_of_seq)
-    if man is None:
-        raise ValueError(
-            f"read_commit_meta: {target_path} is not a manifest-commit "
-            "merge target"
-        )
-    seq, _, m = man
+    seq, _, m = _resolve(spark, target_path, "read_commit_meta", as_of_seq)[3]
     return seq, m.get(APP_META_KEY)
 
 
@@ -996,12 +978,7 @@ def empty_merged_table(spark, target_path: str) -> DataFrame:
     table at ``target_path`` (no ``__bucket``): the typed answer where
     :func:`read_merged_table` returns None for a table with no live
     bucket.  Raises when no manifest table is there."""
-    man = _read_manifest(spark, *_open_table(spark, target_path))
-    if man is None:
-        raise ValueError(
-            f"empty_merged_table: {target_path} holds no manifest table — "
-            "nothing to type the frame from; merge at least one commit first"
-        )
+    man = _resolve(spark, target_path, "empty_merged_table")[3]
     return _empty_from_pin(spark, man[2]["columns"])
 
 
@@ -1069,27 +1046,10 @@ def read_changes(
     ``_change_type``."""
     from functools import reduce as _reduce
 
-    fs, jvm_path, tgt = _open_table(spark, target_path)
-
-    def _resolve(seq, bound):
-        # _read_manifest's seq-resolution refusals (beyond-newest,
-        # vacuumed) speak as read_merged_table; re-prefix so the caller
-        # sees which read_changes BOUND was bad (ADVICE-r12 convention)
-        try:
-            return _read_manifest(spark, fs, jvm_path, tgt, as_of_seq=seq)
-        except ValueError as e:
-            raise ValueError(
-                f"read_changes: {bound}={seq} — "
-                + str(e).replace("read_merged_table: ", "", 1)
-            ) from e
-
-    man_a = _resolve(from_seq, "from_seq")
-    if man_a is None:
-        raise ValueError(
-            f"read_changes: {tgt} is not a manifest-commit target"
-        )
-    seq_a, _, m_a = man_a
-    seq_b, _, m_b = _resolve(to_seq, "to_seq")
+    fs, jvm_path, tgt, (seq_a, _, m_a) = _resolve(
+        spark, target_path, "read_changes", from_seq
+    )
+    seq_b, _, m_b = _read_manifest(spark, fs, jvm_path, tgt, "read_changes", to_seq)
     if seq_a > seq_b:
         raise ValueError(
             f"read_changes: from_seq resolved to {seq_a}, after to_seq's "
@@ -1119,26 +1079,20 @@ def read_changes(
     else:
         sel_a, sel_b = live_a, live_b
 
-    def _side(sel: dict):
+    def _side(sel: dict, side_pin: dict):
         if not sel:
             return None
-        df = (
-            spark.read.option("basePath", tgt)
-            .option("mergeSchema", "true")
-            .parquet(*_gen_paths(tgt, sel))
-        )
-        have = set(df.columns)
-        # project to the pin (r13, mixed-width reads across an
-        # evolution): a column a METADATA-ONLY add left out of older
-        # files reads as a typed NULL, and pre-widen FROM-side files
-        # carry the narrow type — the widen lattice is lossless-only,
-        # so casting up is exact
-        return df.select(*[
-            (F.col(c) if c in have else F.lit(None)).cast(t).alias(c)
+        # each side reads under its OWN manifest's pin, then projects to
+        # the TO pin (r13, mixed-width reads across an evolution): a
+        # column added after the FROM commit reads as a typed NULL, and
+        # a FROM-side column the range widened carries the narrow type —
+        # the widen lattice is lossless-only, so casting up is exact
+        return _pinned_read(spark, tgt, sel, side_pin).select(*[
+            (F.col(c) if c in side_pin else F.lit(None)).cast(t).alias(c)
             for c, t in pin.items()
         ])
 
-    a_state, b_state = _side(sel_a), _side(sel_b)
+    a_state, b_state = _side(sel_a, m_a["columns"]), _side(sel_b, pin)
     if a_state is None and b_state is None:
         return _empty_from_pin(spark, {**pin, CHANGE_TYPE_COL: "string"})
     if a_state is None:
@@ -1229,13 +1183,12 @@ def lookup_merged_keys(spark, target_path: str, lookup: DataFrame) -> DataFrame:
     are small by use-case); for a probe too big to broadcast, use
     read_merged_table + a shuffle semi-join instead — at that size
     bucket pruning stops helping anyway."""
-    fs, jvm_path, tgt = _open_table(spark, target_path)
-
-    man = _read_manifest(spark, fs, jvm_path, tgt)
+    _, _, tgt, man = _resolve(
+        spark, target_path, "lookup_merged_keys", missing_ok=True
+    )
     if man is None:
-        _refuse_foreign(fs, jvm_path, tgt, "lookup_merged_keys")
         return None
-    _, _, m = man
+    m = man[2]
     keys, key_types = list(m["keys"]), dict(m["key_types"])
     n_buckets, pin = int(m["num_buckets"]), m["columns"]
     if list(lookup.columns) != list(keys) and sorted(
@@ -1272,9 +1225,7 @@ def lookup_merged_keys(spark, target_path: str, lookup: DataFrame) -> DataFrame:
         # no looked-up bucket is live: the result is definitionally
         # empty — type it from the pin
         return _empty_from_pin(spark, pin)
-    base = _pinned_read(spark, _gen_paths(tgt, hit), pin, base_path=tgt).drop(
-        GEN_COL
-    )
+    base = _pinned_read(spark, tgt, hit, pin)
     probe = lookup.select(
         *[F.col(k).alias(f"__lk{i}") for i, k in enumerate(lookup.columns)]
     ).dropDuplicates()
@@ -1310,21 +1261,20 @@ _FEED_CONSUMERS = {
 }
 
 
-def _feed_position(spark, who, source_path, target_path, meta_key) -> tuple:
+def _feed_position(
+    spark, who, source_path, target_path, meta_key, missing_ok
+) -> tuple:
     """``(oldest, latest, dst_seq, cursor)``: the source's oldest and
     latest retained commit seqs, and the target's latest seq with the
     cursor stored under ``meta_key`` — ``(None, None)`` when no table is
-    at the target.  Refuses a source that is not a manifest table, a
-    target table without that cursor (applying a feed onto a table the
-    consumer did not build corrupts it), and a cursor that follows
-    another source."""
+    at the target and ``missing_ok``.  Refuses a source that is not a
+    manifest table, a target table without that cursor (applying a feed
+    onto a table the consumer did not build corrupts it), and a cursor
+    that follows another source."""
     _, noun, builder, _, lacks = _FEED_CONSUMERS[meta_key]
-    fs, jvm_path, src = _open_table(spark, source_path)
+    fs, jvm_path, src, _ = _resolve(spark, source_path, who)
     seqs = [seq for seq, _ in _list_manifests(fs, jvm_path, src)]
-    if not seqs:
-        raise ValueError(f"{who}: {src} is not a manifest-commit target")
-    fs, jvm_path, tgt = _open_table(spark, target_path)
-    man = _read_manifest(spark, fs, jvm_path, tgt)
+    _, _, tgt, man = _resolve(spark, target_path, who, missing_ok=missing_ok)
     if man is None:
         return seqs[0], seqs[-1], None, None
     cursor = (man[2].get(APP_META_KEY) or {}).get(meta_key)
@@ -1351,7 +1301,7 @@ def feed_cursor(spark, source_path: str, target_path: str, meta_key: str) -> tup
     was vacuumed, like a Kafka offset out of range."""
     seq_field, noun, builder, _, _ = _FEED_CONSUMERS[meta_key]
     oldest, latest, dst_seq, cursor = _feed_position(
-        spark, builder, source_path, target_path, meta_key
+        spark, builder, source_path, target_path, meta_key, missing_ok=True
     )
     if cursor is not None and int(cursor[seq_field]) < oldest:
         raise ValueError(
@@ -1372,10 +1322,8 @@ def feed_status(spark, source_path: str, target_path: str, meta_key: str) -> tup
     source's vacuum horizon."""
     seq_field, _, _, who, _ = _FEED_CONSUMERS[meta_key]
     oldest, latest, _, cursor = _feed_position(
-        spark, who, source_path, target_path, meta_key
+        spark, who, source_path, target_path, meta_key, missing_ok=False
     )
-    if cursor is None:
-        raise ValueError(f"{who}: {target_path} is not a manifest merge target")
     last = int(cursor[seq_field])
     return cursor, {
         seq_field: last,
@@ -1478,7 +1426,7 @@ def replicate_changes(
 
     rows_applied = 0
     if batch is not None:
-        src_man = _read_manifest(spark, *_open_table(spark, src))
+        src_man = _resolve(spark, src, "replicate_changes")[3]
         first = dst_seq is None
         res = merge_into(
             spark, tgt, batch,
@@ -1533,14 +1481,9 @@ def vacuum_merged_table(
     target."""
     import time as _time
 
-    fs, jvm_path, tgt = _open_table(spark, target_path)
-    with _writer_lease(fs, jvm_path, tgt):
-        man = _read_manifest(spark, fs, jvm_path, tgt)
-        if man is None:
-            raise ValueError(
-                f"vacuum_merged_table: {tgt} is not a manifest-commit target"
-            )
-        seq, latest_name, m = man
+    with _writer_lease(spark, target_path, "vacuum_merged_table") as (
+        fs, jvm_path, tgt, (seq, latest_name, m),
+    ):
         live = {
             (f"{BUCKET_COL}={b}", f"{GEN_COL}={g}")
             for b, g in m["buckets"].items()
@@ -1605,6 +1548,7 @@ def maintain_merged_table(
     call costs a few filesystem listings and no Spark job.  Returns
     ``{"rebucket": ..., "compact": ..., "vacuum": ...}`` (the three
     steps' own result dicts)."""
+    _resolve(spark, target_path, "maintain_merged_table")  # refuse as this entry point
     return {
         "rebucket": maybe_rebucket(spark, target_path, target_bucket_bytes),
         "compact": compact_merged_table(spark, target_path, target_file_bytes),
@@ -1629,9 +1573,11 @@ def compact_merged_table(
     then flips ALL compacted buckets in ONE manifest commit — the same
     atomic crash contract as a merge: pre-compaction until the rename
     lands, post- after; a crash strands only unreferenced generations
-    (vacuum fodder).  State is byte-unchanged by construction (read →
-    coalesce → write, no projection).  Holds the writer lease, so a
-    concurrent merge and a compaction refuse each other.
+    (vacuum fodder).  State is unchanged by construction (pinned read →
+    coalesce → write; a column a metadata-only add left out of the old
+    files is written as the NULLs it already read as).  Holds the
+    writer lease, so a concurrent merge and a compaction refuse each
+    other.
 
     One small Spark job per fat bucket (bounded by the touched set —
     this is a maintenance-window op like vacuum/rebucket; run it on the
@@ -1642,8 +1588,6 @@ def compact_merged_table(
     generation already fits)."""
     import math
 
-    fs, jvm_path, tgt = _open_table(spark, target_path)
-    tmp = _tmp_dir(tgt)
     prefix = BUCKET_COL + "="
 
     def _data_files(path):
@@ -1653,22 +1597,18 @@ def compact_merged_table(
             if not st.getPath().getName().startswith(("_", "."))
         ]
 
-    with _writer_lease(fs, jvm_path, tgt):
-        man = _read_manifest(spark, fs, jvm_path, tgt)
-        if man is None:
-            raise ValueError(
-                f"compact_merged_table: {tgt} is not a manifest-commit target"
-            )
-        seq, _, m = man
-        todo = []  # (bucket, gen_dir_path, n_target)
+    with _writer_lease(spark, target_path, "compact_merged_table") as (
+        fs, jvm_path, tgt, (seq, _, m),
+    ):
+        tmp = _tmp_dir(tgt)
+        todo = []  # (bucket, n_target)
         files_before = files_after = 0
         for b, g in sorted(m["buckets"].items(), key=lambda kv: int(kv[0])):
-            gdir = f"{tgt}/{prefix}{b}/{GEN_COL}={g}"
-            sizes = _data_files(gdir)
+            sizes = _data_files(f"{tgt}/{prefix}{b}/{GEN_COL}={g}")
             n_target = max(1, math.ceil(sum(sizes) / float(target_file_bytes)))
             files_before += len(sizes)
             if len(sizes) > n_target:
-                todo.append((b, gdir, n_target))
+                todo.append((b, n_target))
             else:
                 files_after += len(sizes)
         if not todo:
@@ -1678,19 +1618,16 @@ def compact_merged_table(
                 "files_after": files_before,
             }
         fs.delete(jvm_path(tmp), True)
-        for b, gdir, n_target in todo:
-            # a direct leaf read (no basePath) yields data columns only
-            # — no partition-column inference, so the rewrite is
-            # byte-faithful to the generation's own schema
+        for b, n_target in todo:
             staged = f"{tmp}/{prefix}{b}"
-            spark.read.parquet(gdir).coalesce(n_target).write.mode(
-                "overwrite"
-            ).parquet(staged)
+            _pinned_read(spark, tgt, {b: m["buckets"][b]}, m["columns"]).drop(
+                BUCKET_COL
+            ).coalesce(n_target).write.mode("overwrite").parquet(staged)
             files_after += len(_data_files(staged))
-        seq = _commit_next(fs, jvm_path, tgt, seq, m, [b for b, _, _ in todo])
+        seq = _commit_next(fs, jvm_path, tgt, seq, m, [b for b, _ in todo])
         return {
             "engine": "parquet-manifest", "seq": seq,
-            "compacted_buckets": [b for b, _, _ in todo],
+            "compacted_buckets": [b for b, _ in todo],
             "files_before": files_before, "files_after": files_after,
         }
 
@@ -1718,15 +1655,9 @@ def rebucket(
         raise ValueError(
             f"rebucket: new_num_buckets must be >= 1, got {new_num_buckets}"
         )
-    fs, jvm_path, tgt = _open_table(spark, target_path)
-    with _writer_lease(fs, jvm_path, tgt):
-        man = _read_manifest(spark, fs, jvm_path, tgt)
-        if man is None:
-            raise ValueError(
-                f"rebucket: {tgt} has no bucketed layout (not a "
-                "manifest-commit target) — lay one out first via merge_into"
-            )
-        seq, _, m = man
+    with _writer_lease(spark, target_path, "rebucket") as (
+        fs, jvm_path, tgt, (seq, _, m),
+    ):
         layout = {"num_buckets": int(new_num_buckets)}
         if not m["buckets"]:  # empty table: the layout move is pure metadata
             # the commit carries the schema pin (r14: the read_changes
@@ -1736,13 +1667,7 @@ def rebucket(
             seq = _commit_next(fs, jvm_path, tgt, seq, m, [], **layout)
             return {"engine": "parquet-manifest", "rows": 0,
                     "num_buckets": new_num_buckets, "seq": seq}
-        cur = (
-            _pinned_read(
-                spark, _gen_paths(tgt, m["buckets"]), m["columns"],
-                base_path=tgt,
-            )
-            .drop(GEN_COL).drop(BUCKET_COL)
-        )
+        cur = _pinned_read(spark, tgt, m["buckets"], m["columns"]).drop(BUCKET_COL)
         rehashed = cur.withColumn(
             BUCKET_COL, bucket_expr(list(m["keys"]), new_num_buckets)
         )
@@ -1944,17 +1869,9 @@ def evolve_schema(
                     "spellings, e.g. 'string', 'bigint', 'decimal(12,2)'"
                 ) from e
 
-    fs, jvm_path, tgt = _open_table(spark, target_path)
-    with _writer_lease(fs, jvm_path, tgt):
-        man = _read_manifest(spark, fs, jvm_path, tgt)
-        if man is None:
-            _refuse_foreign(fs, jvm_path, tgt, "evolve_schema")
-            raise ValueError(
-                f"evolve_schema: no table at {tgt} — the first merge "
-                "materializes the schema; evolution applies to existing "
-                "targets"
-            )
-        man_seq, _, m = man
+    with _writer_lease(spark, target_path, "evolve_schema") as (
+        fs, jvm_path, tgt, (man_seq, _, m),
+    ):
         live = m["buckets"]
         pinned = m["columns"]
         _validate_evolution(tgt, pinned, list(m["keys"]), add, widen)
@@ -1970,9 +1887,7 @@ def evolve_schema(
             return out
         # widen: full rewrite — fresh generation for every live
         # bucket, then one commit (rebucket's protocol, same N)
-        cur = _pinned_read(
-            spark, _gen_paths(tgt, live), pinned, base_path=tgt
-        ).drop(GEN_COL)
+        cur = _pinned_read(spark, tgt, live, pinned)
         obs = Observation()
         data = _evolve_transform(cur, pinned, add, widen).observe(
             obs, F.count(F.lit(1)).alias("n")
@@ -2007,7 +1922,9 @@ def suggest_num_buckets(
     :func:`rebucket` in a maintenance window — it takes the writer
     lease, so in-flight merges and the migration refuse each other).
     """
-    fs, jvm_path, tgt = _open_table(spark, target_path)
+    fs, jvm_path, tgt, (_, _, m) = _resolve(
+        spark, target_path, "suggest_num_buckets"
+    )
 
     def _du(path) -> int:
         total = 0
@@ -2020,13 +1937,6 @@ def suggest_num_buckets(
                     total += st.getLen()
         return total
 
-    man = _read_manifest(spark, fs, jvm_path, tgt)
-    if man is None:
-        raise ValueError(
-            f"suggest_num_buckets: {tgt} has no bucketed layout (not a "
-            "manifest-commit target)"
-        )
-    _, _, m = man
     cur_n = int(m["num_buckets"])
     live = sum(
         _du(jvm_path(p))
@@ -2058,6 +1968,7 @@ def maybe_rebucket(
     metrics under ``"migration"`` when one ran).  The migration takes
     the writer lease, so a concurrent merge and this refuse each other
     rather than interleave."""
+    _resolve(spark, target_path, "maybe_rebucket")  # refuse as this entry point
     advice = suggest_num_buckets(spark, target_path, target_bucket_bytes)
     if not advice["rebucket_recommended"]:
         return {**advice, "rebucketed": False}

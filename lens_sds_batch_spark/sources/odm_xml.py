@@ -4,8 +4,10 @@ The reference pulls one ODM XML blob from Redis and lazily parses it
 (``file_storage.clj:12-17``, ``import_clinical_data.clj:303-310`` via
 the external lens-odm-parser).  Our engine reads *many* ODM files as a
 distributed binaryFile scan and parses each executor-side with stdlib
-``xml.etree`` inside ``mapInPandas`` (no spark-xml package in this
-environment; the interface is identical if it's swapped in).
+``xml.etree`` inside ``mapInPandas``.  Spark's built-in ``from_xml``
+could parse in the JVM instead; this Python kernel stays until a
+differential test shows that parse equal to it, rows and dead-letter
+class (ROADMAP direction 2).
 
 Output is the normalized long `items`-level table (one row per
 ItemData with the full OID path + per-level tx_types), from which

@@ -277,6 +277,28 @@ def test_uuid_builders_parse_no_sql():
     assert not calls, calls
 
 
+def test_no_package_read_merges_parquet_schemas():
+    """Every store read opens its generations under the manifest's
+    schema pin (plans/merge._pinned_read).  ``mergeSchema`` would run a
+    footer-union job per read instead, and a second way to type the
+    same files could drift from the pin unseen.  Docstrings and
+    comments may name it; no option, keyword or conf key may set it."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "lens_sds_batch_spark"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = (
+                node.value if isinstance(node, ast.Constant) and isinstance(node.value, str)
+                else node.arg if isinstance(node, ast.keyword) else None
+            )
+            if name and name.rsplit(".", 1)[-1].lower() == "mergeschema":
+                found.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not found, found
+
+
 def test_tools_find_their_own_checkout():
     """A tool that puts a literal path on sys.path imports THAT checkout's
     package when run from another one (a parent copy for a plan dump or

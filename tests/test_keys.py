@@ -230,7 +230,9 @@ def test_fast_path_literal_columns_and_bound_columns(spark):
     string 'true' (sha1 hashes bytes, and a boolean has no binary
     cast), and sha1 takes a UuidBytes part as the namespace's bytes.  A
     DataFrame-bound column (a['v'] after a join that makes the free
-    name ``v`` ambiguous) keeps its binding in both flavors."""
+    name ``v`` ambiguous) keeps its binding in both flavors.  md5
+    refuses a Kw or UuidBytes part where it is called: its text would
+    be the object repr, an id that changes from process to process."""
     row = spark.range(1).select(
         uuid3_str_col(NIL_UUID, [F.lit(True)]).alias("u3_bool"),
         uuid5_col(NIL_UUID, [UuidBytes(NIL_UUID), "x"]).alias("u5_uuid"),
@@ -247,6 +249,13 @@ def test_fast_path_literal_columns_and_bound_columns(spark):
     ).first()
     assert got["u3"] == uuid3_str_py(NIL_UUID, ["va"])
     assert got["u5"] == uuid5_py(NIL_UUID, ["va"])
+
+    for part in (Kw("k"), UuidBytes(NIL_UUID)):
+        for fn in (uuid3_str_col, uuid3_str_py):
+            with pytest.raises(
+                ValueError, match=f"{fn.__name__}: a {type(part).__name__} part"
+            ):
+                fn(NIL_UUID, [part, "x"])
 
 
 def test_uuid5_uuidbytes_quote_value_fast_equals_fallback(spark):
@@ -350,3 +359,27 @@ def test_uuid5_malformed_literal_namespace_refused_at_call_site(spark, bad_ns):
     with pytest.raises(ValueError, match="batch_cmd_id_map: literal namespace") as ei:
         batch_cmd_id_map({"F-1": NIL_UUID, "F-2": bad_ns})
     assert repr(bad_ns) in str(ei.value)
+
+
+def test_column_namespace_null_or_unhexable_fails_the_job(spark):
+    """A Column ``batch_cmd_id`` that is NULL on a row (for sha1, also
+    one that does not unhex) fails the job naming the row's file_oid,
+    in both flavors; unguarded, every cmd id of those rows formats as
+    the one degenerate id ``""``.  PER_FILE and literal namespaces are
+    known well-formed and their plans carry no such guard."""
+    from lens_sds_batch_spark.plans.commands import PER_FILE, generate_commands
+    from lens_sds_batch_spark.plans.odm import SUB, derive_odm_from_tpch
+
+    from .conftest import SF_SMOKE
+
+    odm = derive_odm_from_tpch(spark, SF_SMOKE)
+    bad = [("md5", F.lit(None).cast("string")), ("sha1", F.lit(None).cast("string")),
+           ("sha1", F.lit("not-a-uuid"))]
+    for flavor, ns in bad:
+        cmds = generate_commands(odm, ns, SUB, persist=False, flavor=flavor)
+        with pytest.raises(Exception, match="batch_cmd_id namespace is NULL.*file_oid=F-"):
+            cmds.select("cmd_id").collect()
+    for flavor in ("md5", "sha1"):
+        for ns in (PER_FILE, NIL_UUID):
+            plan = generate_commands(odm, ns, SUB, persist=False, flavor=flavor)._jdf
+            assert "batch_cmd_id namespace" not in plan.queryExecution().optimizedPlan().toString()

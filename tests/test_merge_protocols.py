@@ -19,10 +19,13 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from lens_sds_batch_spark.plans import ivm
+from lens_sds_batch_spark.plans import merge as mg
 from lens_sds_batch_spark.plans.merge import (
     BUCKET_COL,
     GEN_COL,
     MANIFEST_DIR,
+    lookup_merged_keys,
     merge_into,
     read_merged_table,
     rebucket,
@@ -382,11 +385,13 @@ def test_rebucket_empty_tables(spark, tmp_path):
 
 def test_read_merged_table_all_layouts(spark, tmp_path):
     """The resolver over every path shape it can meet: missing and
-    empty paths read as None; a directory that is not a manifest table
-    (a plain parquet write, or bucket dirs without a manifest) is
-    refused loudly by the resolver and by merge_into alike, never read
-    or overwritten as if it were merged state."""
+    empty paths read as None (a point lookup too); a directory that is
+    not a manifest table (a plain parquet write, or bucket dirs without
+    a manifest) is refused loudly by the resolver and by merge_into
+    alike, never read or overwritten as if it were merged state."""
     assert read_merged_table(spark, str(tmp_path / "missing")) is None
+    probe = spark.createDataFrame([("k1",)], "k string")
+    assert lookup_merged_keys(spark, str(tmp_path / "missing"), probe) is None
     os.makedirs(str(tmp_path / "empty"))
     assert read_merged_table(spark, str(tmp_path / "empty")) is None
 
@@ -1266,3 +1271,95 @@ def test_ckpt_with_touched_observation(spark):
     t2.join(timeout=120)
     assert not t2.is_alive()
     assert result["empty"] == []
+
+
+# ---------------------------------------------------------------------------
+# One refusal for every store entry point
+# ---------------------------------------------------------------------------
+
+
+# every public entry point that opens a manifest table: name -> call(spark,
+# path, spare), ``spare`` a fresh path for a feed consumer's other side.
+# ivm.read_aggregate is left out: it composes read_merged_table and
+# empty_merged_table, and refuses in their names.
+_ENTRY_CALLS = {
+    "read_merged_table": lambda s, p, o: mg.read_merged_table(s, p),
+    "lookup_merged_keys": lambda s, p, o: mg.lookup_merged_keys(
+        s, p, s.createDataFrame([("a",)], "k string")
+    ),
+    "list_snapshots": lambda s, p, o: mg.list_snapshots(s, p),
+    "read_commit_meta": lambda s, p, o: mg.read_commit_meta(s, p),
+    "empty_merged_table": lambda s, p, o: mg.empty_merged_table(s, p),
+    "read_changes": lambda s, p, o: mg.read_changes(s, p, from_seq=0),
+    "replicate_changes": lambda s, p, o: mg.replicate_changes(s, p, o),
+    "replica_status": lambda s, p, o: mg.replica_status(s, p, o),
+    "refresh_aggregate": lambda s, p, o: ivm.refresh_aggregate(
+        s, p, o, group_keys=["v"], aggs={"n": ("count", "*")}
+    ),
+    "ivm_status": lambda s, p, o: ivm.ivm_status(s, p, o),
+    "merge_into": lambda s, p, o: _merge(s, p, [("a", 1, "x", False)]),
+    "vacuum_merged_table": lambda s, p, o: mg.vacuum_merged_table(s, p),
+    "compact_merged_table": lambda s, p, o: mg.compact_merged_table(s, p),
+    "rebucket": lambda s, p, o: mg.rebucket(s, p, 2),
+    "evolve_schema": lambda s, p, o: mg.evolve_schema(s, p, add={"z": "string"}),
+    "maintain_merged_table": lambda s, p, o: mg.maintain_merged_table(s, p),
+    "suggest_num_buckets": lambda s, p, o: mg.suggest_num_buckets(s, p),
+    "maybe_rebucket": lambda s, p, o: mg.maybe_rebucket(s, p),
+}
+# the entry points that take a seq, asked for one beyond the newest commit
+_AS_OF_CALLS = {
+    "read_merged_table": lambda s, p: mg.read_merged_table(s, p, as_of_seq=99),
+    "read_commit_meta": lambda s, p: mg.read_commit_meta(s, p, as_of_seq=99),
+    "read_changes": lambda s, p: mg.read_changes(s, p, from_seq=99),
+}
+# a missing path is an empty table to these: None, or merge_into's first commit
+_MISSING_TOLERANT = {"read_merged_table", "lookup_merged_keys", "merge_into"}
+_REFUSALS = {
+    "missing": "no table at .* not a manifest-commit target",
+    "plain": "no table at .* not a manifest-commit target",
+    "corrupt": "unreadable/corrupt manifest",
+    "as_of": "seq 99 is beyond the latest commit",
+}
+
+
+@pytest.fixture(scope="module")
+def refusal_paths(spark, tmp_path_factory):
+    """A missing path, a plain parquet dir, a manifest table whose
+    latest manifest is corrupt, and a good one-commit table."""
+    d = tmp_path_factory.mktemp("refusals")
+    plain, corrupt, good = str(d / "plain"), str(d / "corrupt"), str(d / "good")
+    _df(spark, [("a", 1, "x", False)]).write.parquet(plain)
+    for t in (corrupt, good):
+        _merge(spark, t, [("a", 1, "x", False)])
+    with open(os.path.join(corrupt, MANIFEST_DIR, _manifests(corrupt)[-1]), "w") as f:
+        f.write("{not json")
+    return {"missing": str(d / "missing"), "plain": plain, "corrupt": corrupt,
+            "as_of": good, "spare": str(d / "spare")}
+
+
+@pytest.mark.parametrize(
+    "case,name",
+    [
+        (case, name)
+        for case in ("missing", "plain", "corrupt")
+        for name in _ENTRY_CALLS
+        if not (case == "missing" and name in _MISSING_TOLERANT)
+    ]
+    + [("as_of", name) for name in _AS_OF_CALLS],
+)
+def test_every_entry_point_refuses_a_non_table_in_its_own_name(
+    spark, refusal_paths, case, name
+):
+    """Every entry point opens the table through one resolver: a path
+    that holds no manifest table (missing, or plain parquet), a corrupt
+    latest manifest and a seq beyond the newest commit are refused with
+    the one shared message, prefixed with the entry point's own name —
+    never another entry point's."""
+    path, spare = refusal_paths[case], refusal_paths["spare"]
+    with pytest.raises(ValueError, match=f"^{name}: {_REFUSALS[case]}"):
+        if case == "as_of":
+            _AS_OF_CALLS[name](spark, path)
+        else:
+            _ENTRY_CALLS[name](spark, path, spare)
+    assert not os.path.exists(spare)
+
