@@ -16,6 +16,7 @@ from __future__ import annotations
 import contextlib
 import json
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -42,11 +43,9 @@ GEN_COL = "__gen"
 # Writer fence (r11 verdict #2): merges, maintenance and evolution of
 # one target take turns; the lease turns a second concurrent writer
 # into a loud refusal instead of two writers staging into one tmp dir.
-# The lease is a sibling FILE (<target>.__lease) created with
-# overwrite=False — atomic create-exclusive on HDFS (check-then-create
-# on the local RawLocalFileSystem, good enough to catch operational
-# mistakes; it is NOT a Byzantine-proof lock).  A holder that dies
-# leaves the lease behind; a later writer takes over once it is older
+# The lease is a sibling FILE (<target>.__lease) made by the seam's
+# atomic exclusive create (NOT a Byzantine-proof lock).  A holder that
+# dies leaves the lease behind; a later writer takes over once it is older
 # than ``LEASE_STALE_SEC`` — size that above the longest expected
 # merge, or a slow merge can be taken over mid-flight.
 LEASE_SUFFIX = ".__lease"
@@ -64,22 +63,14 @@ def _writer_lease(spark, target_path: str, who: str, missing_ok: bool = False):
     of the re-create dies loudly).  Released on success AND on exception
     (a failed merge must be REPLAYED, not resumed, so holding the lease
     past the failure would only block the replay); only process death
-    leaves it for age-based takeover.
-
-    Acquisition is ATOMIC on both realistic filesystems (r12 — the
-    thread-concurrency stress test caught the gap): Hadoop's
-    ``create(overwrite=false)`` is atomic on HDFS but CHECK-THEN-CREATE
-    on RawLocalFileSystem, so two same-host writers could briefly both
-    hold the lease and wipe each other's staged tmp; ``file://``
-    targets now acquire via POSIX ``O_CREAT|O_EXCL`` instead, which is
-    atomic across threads AND processes."""
+    leaves it for age-based takeover.  Acquisition is the seam's atomic
+    exclusive create (:meth:`_Store.create_exclusive`)."""
     import os
     import socket
     import time as _time
 
-    fs, jvm_path, tgt = _open_table(spark, target_path)
-    lease_str = tgt + LEASE_SUFFIX
-    lease = jvm_path(lease_str)
+    store = _open_table(spark, target_path)
+    lease = store.tgt + LEASE_SUFFIX
     payload = json.dumps(
         {
             "pid": os.getpid(),
@@ -87,61 +78,32 @@ def _writer_lease(spark, target_path: str, who: str, missing_ok: bool = False):
             "acquired_unix_ms": int(_time.time() * 1000),
         }
     ).encode("utf-8")
-    local = fs.getUri().getScheme() == "file"
-
-    def _try_create():
-        if local:  # POSIX O_EXCL: the only atomic exclusive-create here
-            path = lease_str[len("file:"):] if lease_str.startswith(
-                "file:"
-            ) else lease_str
-            # First merge into a target whose PARENT does not exist
-            # yet (ADVICE r12): the Hadoop fs.create this replaced
-            # made parent dirs implicitly; os.open does not, and the
-            # FileNotFoundError would be swallowed by the broad
-            # except below and mis-reported as lease contention.
-            parent = os.path.dirname(path)
-            if parent:
-                os.makedirs(parent, exist_ok=True)
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            try:
-                os.write(fd, payload)
-            finally:
-                os.close(fd)
-            return
-        out = fs.create(lease, False)  # overwrite=False: create-exclusive
-        try:
-            out.write(bytearray(payload))
-        finally:
-            out.close()
-
     try:
-        _try_create()
+        store.create_exclusive(lease, payload)
     except Exception:
-        age = None
-        try:
-            st = fs.getFileStatus(lease)
-            age = _time.time() - st.getModificationTime() / 1000.0
-        except Exception:  # holder released between create-fail and stat
-            pass
+        # a file lists as itself; [] when the holder released between
+        # the failed create and this listing
+        held = store.list(lease)
+        age = _time.time() - held[0].mtime / 1000.0 if held else None
         if age is not None and age <= LEASE_STALE_SEC:
             raise IOError(
-                f"{who}: another writer holds the lease at {lease_str} (age "
+                f"{who}: another writer holds the lease at {lease} (age "
                 f"{age:.0f}s <= stale threshold {LEASE_STALE_SEC:.0f}s); "
                 "concurrent writes into one merge target take turns — wait "
                 "for the holder and retry"
             )
-        fs.delete(lease, False)  # stale (holder died) or vanished
+        store.delete(lease)  # stale (holder died) or vanished
         try:
-            _try_create()
+            store.create_exclusive(lease, payload)
         except Exception as e:
             raise IOError(
-                f"{who}: lease contention at {lease_str} — a second writer "
+                f"{who}: lease contention at {lease} — a second writer "
                 "re-created the lease during stale takeover"
             ) from e
     try:
-        yield _resolve(spark, tgt, who, missing_ok=missing_ok)
+        yield store, _read_manifest(store, who, missing_ok=missing_ok)
     finally:
-        fs.delete(lease, False)
+        store.delete(lease)
 
 
 def bucket_expr(keys: list[str], num_buckets: int) -> Column:
@@ -349,19 +311,19 @@ def merge_into(
     # hash of the full payload row
     row_hash = F.xxhash64(*[F.col(c) for c in updates.columns])
     with _writer_lease(spark, target_path, "merge_into", missing_ok=True) as (
-        fs, jvm_path, tgt, man,
+        store, man,
     ):
         if man is None:
             man = _init_manifest_table(
-                fs, jvm_path, tgt, keys, num_buckets or 1, dict(updates.dtypes)
+                store, keys, num_buckets or 1, dict(updates.dtypes)
             )
         man_seq, _, m = man
         _check_layout_compat(
-            tgt, keys, updates, m["keys"], m["key_types"],
+            store.tgt, keys, updates, m["keys"], m["key_types"],
             num_buckets, int(m["num_buckets"]), spec_columns=m["columns"],
         )
         return _manifest_merge(
-            spark, fs, jvm_path, tgt, updates, keys,
+            spark, store, updates, keys,
             order_exprs, row_hash, is_delete, man_seq, m,
             commit_meta=commit_meta, expect_seq=expect_seq,
         )
@@ -513,13 +475,101 @@ def _ckpt_with_touched(
 # ---------------------------------------------------------------------------
 
 
-def _open_table(spark, target_path: str) -> tuple:
-    """``(fs, Path, tgt)`` for a target path: its Hadoop filesystem, the
-    JVM ``Path`` class and the path without a trailing slash — the
-    leading arguments of every manifest helper below."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jvm_path, target_path.rstrip("/")
+class _Store:
+    """The one filesystem seam of a manifest table: every filesystem op
+    of this module goes through one of these methods, on string paths,
+    and no other line builds a Hadoop path or opens a file.  Holds the
+    table path ``tgt`` (no trailing slash) and its Hadoop filesystem.
+    Tests substitute a fake by patching :func:`_open_table`."""
+
+    class Entry:
+        """A listed entry: its name, and status fields that cost one JVM
+        round trip each, read on use (``mtime`` in epoch millis)."""
+
+        def __init__(self, st):
+            self._st, self.name = st, st.getPath().getName()
+
+        is_dir = property(lambda self: bool(self._st.isDirectory()))
+        length = property(lambda self: int(self._st.getLen()))
+        mtime = property(lambda self: int(self._st.getModificationTime()))
+
+    def __init__(self, spark, target_path: str):
+        self._spark = spark
+        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self._fs = self._path(target_path).getFileSystem(
+            spark._jsc.hadoopConfiguration()
+        )
+        self.tgt = target_path.rstrip("/")
+
+    def exists(self, path: str) -> bool:
+        return bool(self._fs.exists(self._path(path)))
+
+    def list(self, path: str) -> list:
+        """The :class:`Entry` rows of directory ``path``; ``[]`` when it
+        is missing, and a file lists as itself."""
+        try:
+            sts = self._fs.listStatus(self._path(path))
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getName() != "java.io.FileNotFoundException":
+                raise
+            return []
+        return [self.Entry(st) for st in sts]
+
+    def mkdirs(self, path: str) -> None:
+        self._fs.mkdirs(self._path(path))
+
+    def rename(self, src: str, dst: str) -> bool:
+        return bool(self._fs.rename(self._path(src), self._path(dst)))
+
+    def delete(self, path: str) -> None:
+        """Delete a file, or a directory with its contents; a missing
+        path is a no-op."""
+        self._fs.delete(self._path(path), True)
+
+    def read_bytes(self, path: str) -> bytes:
+        stm = self._fs.open(self._path(path))
+        try:
+            return bytes(
+                self._spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stm)
+            )
+        finally:
+            stm.close()
+
+    def write_bytes(self, path: str, data: bytes, overwrite: bool = True) -> None:
+        out = self._fs.create(self._path(path), overwrite)
+        try:
+            out.write(bytearray(data))
+        finally:
+            out.close()
+
+    def create_exclusive(self, path: str, data: bytes) -> None:
+        """Create ``path`` holding ``data``; raise when it exists.  On
+        ``file://``: POSIX ``O_CREAT|O_EXCL`` after making the parent dirs
+        (r12: Hadoop's ``create(overwrite=false)`` is check-then-create on
+        RawLocalFileSystem, so two same-host writers could both hold the
+        lease; ADVICE r12: a missing parent must not read as contention)."""
+        if self._fs.getUri().getScheme() != "file":
+            return self.write_bytes(path, data, overwrite=False)
+        import os
+
+        local = path[len("file:"):] if path.startswith("file:") else path
+        if os.path.dirname(local):
+            os.makedirs(os.path.dirname(local), exist_ok=True)
+        fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        try:
+            os.write(fd, data)
+        finally:
+            os.close(fd)
+
+    def write_parquet(self, df: DataFrame, path: str, partition_by=()) -> None:
+        """The staging write: ``df`` as parquet at ``path``, replacing
+        what is there."""
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+
+
+def _open_table(spark, target_path: str) -> _Store:
+    """The filesystem seam of the table at ``target_path``."""
+    return _Store(spark, target_path)
 
 
 def _manifest_dir(tgt: str) -> str:
@@ -530,35 +580,46 @@ def _tmp_dir(tgt: str) -> str:
     return tgt.rstrip("/") + ".__tmp"
 
 
-def _list_manifests(fs, jvm_path, tgt: str) -> list:
-    """Sorted [(seq, filename)] of committed manifests; [] when none.
+def _manifest_seq(name: str) -> int | None:
+    """The seq of a committed manifest's file name, else None.
     Committed names are the bare zero-padded seq (``<seq:020d>.json``);
     a ``-suffix`` after the seq is tolerated for forward compat."""
-    mdir = _manifest_dir(tgt)
-    if not fs.exists(jvm_path(mdir)):
-        return []
-    out = []
-    for st in fs.listStatus(jvm_path(mdir)):
-        name = st.getPath().getName()
-        if name.startswith(".") or not name.endswith(".json"):
-            continue
-        head = name[: -len(".json")].split("-", 1)[0]
-        if head.isdigit():
-            out.append((int(head), name))
-    return sorted(out)
+    if name.startswith(".") or not name.endswith(".json"):
+        return None
+    head = name[: -len(".json")].split("-", 1)[0]
+    return int(head) if head.isdigit() else None
+
+
+def _list_manifests(store) -> list:
+    """Sorted ``[(seq, filename, entry)]`` of committed manifests (one
+    listing); [] when none.  The commit rename is a manifest's last
+    write, so the entry's mtime is the commit instant."""
+    es = store.list(_manifest_dir(store.tgt))
+    return sorted(((_manifest_seq(e.name), e.name, e) for e in es
+                   if _manifest_seq(e.name) is not None), key=lambda m: m[:2])
 
 
 def _read_manifest(
-    spark, fs, jvm_path, tgt: str, who: str, as_of_seq: int | None = None
+    store, who: str, as_of_seq: int | None = None, missing_ok: bool = False,
+    ms: list | None = None,
 ):
     """Return (seq, filename, manifest_dict) for the LATEST committed
-    manifest, or None when the target carries no manifest layout.  An
-    existing-but-unreadable latest manifest raises loudly: guessing
-    would either read stale generations or route keys into the wrong
-    bucket space.  So does a manifest without the ``columns`` schema
-    pin: every commit since r12 carries it, and no reader or writer
-    has a pin-less path.  Every refusal is prefixed with ``who``, the
-    entry point the caller named.
+    manifest of ``store`` (from the listing ``ms``, taken here when not
+    given).  An existing-but-unreadable latest manifest raises loudly:
+    guessing would either read stale generations or route keys into the
+    wrong bucket space.  So does a manifest without the ``columns``
+    schema pin: every commit since r12 carries it, and no reader or
+    writer has a pin-less path.  Every refusal is prefixed with ``who``,
+    the entry point the caller named.
+
+    A path with no committed manifest raises THE "no table here"
+    refusal.  Data this store did not write (a plain parquet table, or a
+    layout from an older build) is never guessed at: a guess would
+    either hide that data or overwrite it, so the migration is an
+    explicit read + merge into a new path.  ``missing_ok`` (the tolerant
+    readers, and merge_into's first commit) returns None instead for a
+    missing or empty path — one holding at most the uncommitted
+    ``_manifest`` dir a crash mid-init leaves.
 
     ``as_of_seq`` (r12 snapshot reads) selects the latest manifest with
     ``seq <= as_of_seq`` instead — Delta ``versionAsOf`` semantics.  A
@@ -569,8 +630,19 @@ def _read_manifest(
     (ADVICE r12, matching Delta's versionAsOf on a nonexistent future
     version): a typo'd or wrong-table seq must not silently read the
     latest state as if it were the requested snapshot."""
-    ms = _list_manifests(fs, jvm_path, tgt)
+    tgt = store.tgt
+    if ms is None:
+        ms = _list_manifests(store)
     if not ms:
+        held = sorted(e.name for e in store.list(tgt) if e.name != MANIFEST_DIR)
+        if held or not missing_ok:
+            raise ValueError(
+                f"{who}: no table at {tgt} — it is not a manifest-commit "
+                f"target (no bucketed layout; it holds {held[:5] or 'nothing'}). "
+                "merge_into lays a table out on a fresh target; read other "
+                "data with spark.read and merge it into a new path (no "
+                "in-place migration)"
+            )
         return None
     if as_of_seq is not None:
         if as_of_seq > ms[-1][0]:
@@ -586,15 +658,10 @@ def _read_manifest(
                 "the snapshot predates the table or was vacuumed; "
                 "list_snapshots() shows what is retained"
             )
-    seq, name = ms[-1]
+    seq, name, _ = ms[-1]
     path = _manifest_dir(tgt) + "/" + name
     try:
-        stm = fs.open(jvm_path(path))
-        try:
-            raw = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stm))
-        finally:
-            stm.close()
-        man = json.loads(raw)
+        man = json.loads(store.read_bytes(path))
         for field in ("num_buckets", "keys", "key_types", "buckets"):
             if field not in man:
                 raise KeyError(field)
@@ -614,43 +681,14 @@ def _read_manifest(
     return seq, name, man
 
 
-def _resolve(
-    spark, target_path: str, who: str, as_of_seq: int | None = None,
-    missing_ok: bool = False,
-) -> tuple:
-    """``(fs, Path, tgt, man)``: :func:`_open_table` plus the table's
-    ``(seq, name, manifest)`` as :func:`_read_manifest` resolves it —
-    the one way every store entry point opens a manifest table.
-
-    A path with no committed manifest raises THE "no table here"
-    refusal, prefixed with ``who``.  Data this store did not write (a
-    plain parquet table, or a layout from an older build) is never
-    guessed at: a guess would either hide that data or overwrite it,
-    so the migration is an explicit read + merge into a new path.
-    ``missing_ok`` (the tolerant readers, and merge_into's first
-    commit) yields ``man=None`` instead for a missing or empty path —
-    one holding at most the uncommitted ``_manifest`` dir a crash
-    mid-init leaves."""
-    fs, jvm_path, tgt = _open_table(spark, target_path)
-    man = _read_manifest(spark, fs, jvm_path, tgt, who, as_of_seq)
-    if man is None:
-        held = sorted(
-            st.getPath().getName()
-            for st in fs.listStatus(jvm_path(tgt))
-            if st.getPath().getName() != MANIFEST_DIR
-        ) if fs.exists(jvm_path(tgt)) else []
-        if held or not missing_ok:
-            raise ValueError(
-                f"{who}: no table at {tgt} — it is not a manifest-commit "
-                f"target (no bucketed layout; it holds {held[:5] or 'nothing'}). "
-                "merge_into lays a table out on a fresh target; read other "
-                "data with spark.read and merge it into a new path (no "
-                "in-place migration)"
-            )
-    return fs, jvm_path, tgt, man
+def _resolve(spark, target_path: str, who: str, as_of_seq=None, missing_ok=False):
+    """``(store, man)``: :func:`_open_table` plus the table's ``(seq,
+    name, manifest)`` as :func:`_read_manifest` resolves it."""
+    store = _open_table(spark, target_path)
+    return store, _read_manifest(store, who, as_of_seq, missing_ok)
 
 
-def _commit_manifest(fs, jvm_path, tgt: str, seq: int, gen: str, man: dict) -> None:
+def _commit_manifest(store, seq: int, gen: str, man: dict) -> None:
     """Atomically commit a manifest: write to a dot-prefixed tmp file,
     then ONE file rename to the seq-ordered final name.  The rename is
     the commit point; a crash on either side leaves the previous
@@ -665,18 +703,12 @@ def _commit_manifest(fs, jvm_path, tgt: str, seq: int, gen: str, man: dict) -> N
     With the bare-seq name the straggler's rename fails (dest exists /
     rename returns false) and it dies loudly instead; its staged
     generations are vacuum fodder and its batch gets replayed."""
-    mdir = _manifest_dir(tgt)
-    fs.mkdirs(jvm_path(mdir))
-    payload = json.dumps(man).encode("utf-8")
-    tmp_p = jvm_path(mdir + f"/.tmp-{gen}.json")
-    out = fs.create(tmp_p, True)
-    try:
-        out.write(bytearray(payload))
-    finally:
-        out.close()
-    final = jvm_path(mdir + f"/{seq:020d}.json")
-    if fs.exists(final) or not fs.rename(tmp_p, final):
-        fs.delete(tmp_p, False)
+    mdir = _manifest_dir(store.tgt)
+    store.mkdirs(mdir)
+    tmp_p, final = mdir + f"/.tmp-{gen}.json", mdir + f"/{seq:020d}.json"
+    store.write_bytes(tmp_p, json.dumps(man).encode("utf-8"))
+    if store.exists(final) or not store.rename(tmp_p, final):
+        store.delete(tmp_p)
         raise IOError(
             f"merge_into: manifest commit {mdir}/{seq:020d}.json failed — "
             "seq already claimed (a concurrent writer committed past this "
@@ -696,10 +728,7 @@ def _new_gen() -> str:
     return "g" + uuid.uuid4().hex[:12]
 
 
-def _commit_next(
-    fs, jvm_path, tgt: str, man_seq: int, man: dict, buckets, data=None,
-    **fields,
-) -> int:
+def _commit_next(store, man_seq: int, man: dict, buckets, data=None, **fields) -> int:
     """THE commit protocol — every writer of a manifest table commits
     through here; returns the committed seq (``man_seq + 1``).
 
@@ -728,27 +757,24 @@ def _commit_next(
        a double-apply.
     4. Drop the staging dir (a lost cleanup is the next writer's stale
        leftover, deleted in step 1)."""
-    tmp = _tmp_dir(tgt)
+    tgt, tmp = store.tgt, _tmp_dir(store.tgt)
     prefix = BUCKET_COL + "="
     if data is not None:
-        fs.delete(jvm_path(tmp), True)
-        data.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
+        store.delete(tmp)
+        store.write_parquet(data, tmp, partition_by=[BUCKET_COL])
+    staged = {  # one listing; a metadata-only commit stages nothing
+        e.name[len(prefix):] for e in store.list(tmp) if e.name.startswith(prefix)
+    } if buckets != [] else set()
     if buckets is None:
-        live = {}
-        buckets = [
-            st.getPath().getName()[len(prefix):]
-            for st in fs.listStatus(jvm_path(tmp))
-            if st.getPath().getName().startswith(prefix)
-        ]
+        live, buckets = {}, sorted(staged)
     else:
         live = dict(man["buckets"])
     gen = _new_gen()
     for b in buckets:
         name = f"{prefix}{b}"
-        staged = jvm_path(f"{tmp}/{name}")
-        if fs.exists(staged):
-            fs.mkdirs(jvm_path(f"{tgt}/{name}"))
-            if not fs.rename(staged, jvm_path(f"{tgt}/{name}/{GEN_COL}={gen}")):
+        if str(b) in staged:
+            store.mkdirs(f"{tgt}/{name}")
+            if not store.rename(f"{tmp}/{name}", f"{tgt}/{name}/{GEN_COL}={gen}"):
                 raise IOError(
                     f"merge_into: could not stage generation "
                     f"{tgt}/{name}/{GEN_COL}={gen}"
@@ -763,17 +789,15 @@ def _commit_next(
         if k in man
     }
     _commit_manifest(
-        fs, jvm_path, tgt, seq, gen,
+        store, seq, gen,
         {**carried, **fields, "buckets": live, "seq": seq, "gen": gen},
     )
     if data is not None or buckets:
-        fs.delete(jvm_path(tmp), True)
+        store.delete(tmp)
     return seq
 
 
-def _init_manifest_table(
-    fs, jvm_path, tgt: str, keys, num_buckets: int, columns: dict
-) -> tuple:
+def _init_manifest_table(store, keys, num_buckets: int, columns: dict) -> tuple:
     """Materialize an EMPTY manifest table (seq 0, no live buckets) and
     return its ``(seq, name, manifest)``; the first batch is then an
     ordinary manifest merge against empty state — one code path for
@@ -787,13 +811,13 @@ def _init_manifest_table(
         "columns": dict(columns),
         "buckets": {},
     }
-    seq = _commit_next(fs, jvm_path, tgt, -1, layout, [])
+    seq = _commit_next(store, -1, layout, [])
     return seq, f"{seq:020d}.json", {**layout, "seq": seq}
 
 
 def _manifest_merge(
-    spark, fs, jvm_path, tgt: str, updates, keys,
-    order_exprs, row_hash, is_delete, man_seq: int, man: dict,
+    spark, store, updates, keys, order_exprs, row_hash, is_delete,
+    man_seq: int, man: dict,
     commit_meta: dict | None = None, expect_seq: int | None = None,
 ) -> dict:
     """Incremental merge: read ONLY the touched buckets' live
@@ -805,6 +829,7 @@ def _manifest_merge(
     replay converges (LWW idempotence), with no recovery pass needed."""
     from pyspark.sql import Observation
 
+    tgt = store.tgt
     if expect_seq is not None and man_seq != expect_seq:
         # optimistic CAS (r14): a read-modify-write planner (e.g. the
         # IVM refresh, which adds deltas onto values it looked up at
@@ -840,9 +865,7 @@ def _manifest_merge(
                 # rows: a METADATA-ONLY commit (live map unchanged) lets
                 # an exactly-once consumer advance its cursor past a
                 # range that netted out to nothing
-                result["seq"] = _commit_next(
-                    fs, jvm_path, tgt, man_seq, man, [], **meta
-                )
+                result["seq"] = _commit_next(store, man_seq, man, [], **meta)
             return result
         existing = {str(b): live[str(b)] for b in touched if str(b) in live}
         current = None
@@ -852,7 +875,7 @@ def _manifest_merge(
         obs = Observation()
         merged = merged.observe(obs, F.count(F.lit(1)).alias("n"))
         result["seq"] = _commit_next(
-            fs, jvm_path, tgt, man_seq, man, touched, data=merged, **meta
+            store, man_seq, man, touched, data=merged, **meta
         )
         result["touched_rows"] = obs.get["n"]
         result["touched_buckets"] = touched
@@ -904,13 +927,11 @@ def read_merged_table(
     who = "read_merged_table"
     if as_of_ms is not None:
         who += f": as_of_ms={as_of_ms}"
-    fs, jvm_path, tgt, man = _resolve(
-        spark, target_path, who, as_of_seq,
-        missing_ok=as_of_seq is None and as_of_ms is None,
-    )
-    if as_of_ms is not None:
-        snaps = list_snapshots(spark, tgt)
-        latest_ms = max(s["committed_ms"] for s in snaps)
+    store = _open_table(spark, target_path)
+    tgt, ms = store.tgt, _list_manifests(store)
+    if as_of_ms is not None and ms:
+        committed = [(seq, e.mtime) for seq, _, e in ms]
+        latest_ms = max(t for _, t in committed)
         if as_of_ms > latest_ms:
             raise ValueError(
                 f"{who} is after the latest commit instant ({latest_ms}) of "
@@ -918,14 +939,18 @@ def read_merged_table(
                 "newest commit is an error, not the latest state; drop "
                 "as_of_ms to read latest"
             )
-        eligible = [s["seq"] for s in snaps if s["committed_ms"] <= as_of_ms]
+        eligible = [seq for seq, t in committed if t <= as_of_ms]
         if not eligible:
             raise ValueError(
                 f"{who}: no manifest committed at or before that instant for "
                 f"{tgt} — the instant predates the table or the snapshot was "
                 "vacuumed; list_snapshots() shows what is retained"
             )
-        man = _read_manifest(spark, fs, jvm_path, tgt, who, max(eligible))
+        as_of_seq = max(eligible)
+    man = _read_manifest(
+        store, who, as_of_seq, missing_ok=as_of_seq is None and as_of_ms is None,
+        ms=ms,
+    )
     if man is None or not man[2]["buckets"]:
         return None
     # a listed-but-missing generation is corruption (vacuum bug /
@@ -939,19 +964,12 @@ def list_snapshots(spark, target_path: str) -> list[dict]:
     for ``read_merged_table(..., as_of_seq=seq)`` until a vacuum
     collects it (retention = the vacuum cadence and grace the operator
     chose; the protocol itself never deletes).  Pure filesystem stats,
-    no Spark job.  Raises on a path that is not a merge target."""
-    fs, jvm_path, tgt, _ = _resolve(spark, target_path, "list_snapshots")
-    ms = _list_manifests(fs, jvm_path, tgt)
-    mdir = _manifest_dir(tgt)
-    return [
-        {
-            "seq": seq,
-            "committed_ms": fs.getFileStatus(
-                jvm_path(mdir + "/" + name)
-            ).getModificationTime(),
-        }
-        for seq, name in ms
-    ]
+    no Spark job: one listing, and a read of the latest manifest.
+    Raises on a path that is not a merge target."""
+    store = _open_table(spark, target_path)
+    ms = _list_manifests(store)
+    _read_manifest(store, "list_snapshots", ms=ms)  # refuses a non-table
+    return [{"seq": seq, "committed_ms": e.mtime} for seq, _, e in ms]
 
 
 def read_commit_meta(
@@ -962,7 +980,7 @@ def read_commit_meta(
     None when no commit ever carried one.  Raises on a path that is not
     a merge target, with the same seq-resolution refusals as
     :func:`read_merged_table`."""
-    seq, _, m = _resolve(spark, target_path, "read_commit_meta", as_of_seq)[3]
+    seq, _, m = _resolve(spark, target_path, "read_commit_meta", as_of_seq)[1]
     return seq, m.get(APP_META_KEY)
 
 
@@ -978,7 +996,7 @@ def empty_merged_table(spark, target_path: str) -> DataFrame:
     table at ``target_path`` (no ``__bucket``): the typed answer where
     :func:`read_merged_table` returns None for a table with no live
     bucket.  Raises when no manifest table is there."""
-    man = _resolve(spark, target_path, "empty_merged_table")[3]
+    man = _resolve(spark, target_path, "empty_merged_table")[1]
     return _empty_from_pin(spark, man[2]["columns"])
 
 
@@ -1046,10 +1064,10 @@ def read_changes(
     ``_change_type``."""
     from functools import reduce as _reduce
 
-    fs, jvm_path, tgt, (seq_a, _, m_a) = _resolve(
-        spark, target_path, "read_changes", from_seq
-    )
-    seq_b, _, m_b = _read_manifest(spark, fs, jvm_path, tgt, "read_changes", to_seq)
+    store = _open_table(spark, target_path)
+    tgt, ms = store.tgt, _list_manifests(store)
+    seq_a, _, m_a = _read_manifest(store, "read_changes", from_seq, ms=ms)
+    seq_b, _, m_b = _read_manifest(store, "read_changes", to_seq, ms=ms)
     if seq_a > seq_b:
         raise ValueError(
             f"read_changes: from_seq resolved to {seq_a}, after to_seq's "
@@ -1183,11 +1201,10 @@ def lookup_merged_keys(spark, target_path: str, lookup: DataFrame) -> DataFrame:
     are small by use-case); for a probe too big to broadcast, use
     read_merged_table + a shuffle semi-join instead — at that size
     bucket pruning stops helping anyway."""
-    _, _, tgt, man = _resolve(
-        spark, target_path, "lookup_merged_keys", missing_ok=True
-    )
+    store, man = _resolve(spark, target_path, "lookup_merged_keys", missing_ok=True)
     if man is None:
         return None
+    tgt = store.tgt
     m = man[2]
     keys, key_types = list(m["keys"]), dict(m["key_types"])
     n_buckets, pin = int(m["num_buckets"]), m["columns"]
@@ -1272,9 +1289,12 @@ def _feed_position(
     onto a table the consumer did not build corrupts it), and a cursor
     that follows another source."""
     _, noun, builder, _, lacks = _FEED_CONSUMERS[meta_key]
-    fs, jvm_path, src, _ = _resolve(spark, source_path, who)
-    seqs = [seq for seq, _ in _list_manifests(fs, jvm_path, src)]
-    _, _, tgt, man = _resolve(spark, target_path, who, missing_ok=missing_ok)
+    source = _open_table(spark, source_path)
+    src, ms = source.tgt, _list_manifests(source)
+    _read_manifest(source, who, ms=ms)  # refuses a source that is no table
+    seqs = [seq for seq, _, _ in ms]
+    store, man = _resolve(spark, target_path, who, missing_ok=missing_ok)
+    tgt = store.tgt
     if man is None:
         return seqs[0], seqs[-1], None, None
     cursor = (man[2].get(APP_META_KEY) or {}).get(meta_key)
@@ -1426,7 +1446,7 @@ def replicate_changes(
 
     rows_applied = 0
     if batch is not None:
-        src_man = _resolve(spark, src, "replicate_changes")[3]
+        src_man = _resolve(spark, src, "replicate_changes")[1]
         first = dst_seq is None
         res = merge_into(
             spark, tgt, batch,
@@ -1482,45 +1502,37 @@ def vacuum_merged_table(
     import time as _time
 
     with _writer_lease(spark, target_path, "vacuum_merged_table") as (
-        fs, jvm_path, tgt, (seq, latest_name, m),
+        store, (seq, latest_name, m),
     ):
+        tgt = store.tgt
         live = {
             (f"{BUCKET_COL}={b}", f"{GEN_COL}={g}")
             for b, g in m["buckets"].items()
         }
         cutoff_ms = (_time.time() - grace_sec) * 1000.0
         gens_deleted = manifests_deleted = 0
-        for st in fs.listStatus(jvm_path(tgt)):
-            bname = st.getPath().getName()
+        for bucket in store.list(tgt):
+            bname, bdir = bucket.name, f"{tgt}/{bucket.name}"
             if not bname.startswith(BUCKET_COL + "="):
                 continue
-            for g in fs.listStatus(st.getPath()):
-                gname = g.getPath().getName()
-                if (bname, gname) in live or not gname.startswith(GEN_COL + "="):
+            for g in store.list(bdir):
+                if (bname, g.name) in live or not g.name.startswith(GEN_COL + "="):
                     continue  # live, or a foreign entry we refuse to touch
-                if g.getModificationTime() <= cutoff_ms:
-                    fs.delete(g.getPath(), True)
+                if g.mtime <= cutoff_ms:
+                    store.delete(f"{bdir}/{g.name}")
                     gens_deleted += 1
             # an empty bucket dir with no live generation left is clutter
-            if bname.split("=", 1)[1] not in m["buckets"] and not list(
-                fs.listStatus(st.getPath())
-            ):
-                fs.delete(st.getPath(), True)
+            if bname.split("=", 1)[1] not in m["buckets"] and not store.list(bdir):
+                store.delete(bdir)
         mdir = _manifest_dir(tgt)
-        for st in fs.listStatus(jvm_path(mdir)):
-            name = st.getPath().getName()
-            head = name[: -len(".json")].split("-", 1)[0] if name.endswith(
-                ".json"
-            ) else ""
+        for e in store.list(mdir):
+            e_seq = _manifest_seq(e.name)
             stale_commit = (
-                not name.startswith(".")
-                and name != latest_name
-                and head.isdigit()
-                and int(head) < seq
+                e.name != latest_name and e_seq is not None and e_seq < seq
             )
-            stale_tmp = name.startswith(".tmp-")
-            if (stale_commit or stale_tmp) and st.getModificationTime() <= cutoff_ms:
-                fs.delete(st.getPath(), False)
+            stale_tmp = e.name.startswith(".tmp-")
+            if (stale_commit or stale_tmp) and e.mtime <= cutoff_ms:
+                store.delete(f"{mdir}/{e.name}")
                 manifests_deleted += 1
         return {
             "gens_deleted": gens_deleted,
@@ -1592,14 +1604,13 @@ def compact_merged_table(
 
     def _data_files(path):
         return [
-            st.getLen()
-            for st in fs.listStatus(jvm_path(path))
-            if not st.getPath().getName().startswith(("_", "."))
+            e.length for e in store.list(path) if not e.name.startswith(("_", "."))
         ]
 
     with _writer_lease(spark, target_path, "compact_merged_table") as (
-        fs, jvm_path, tgt, (seq, _, m),
+        store, (seq, _, m),
     ):
+        tgt = store.tgt
         tmp = _tmp_dir(tgt)
         todo = []  # (bucket, n_target)
         files_before = files_after = 0
@@ -1617,14 +1628,16 @@ def compact_merged_table(
                 "compacted_buckets": [], "files_before": files_before,
                 "files_after": files_before,
             }
-        fs.delete(jvm_path(tmp), True)
+        store.delete(tmp)
         for b, n_target in todo:
             staged = f"{tmp}/{prefix}{b}"
-            _pinned_read(spark, tgt, {b: m["buckets"][b]}, m["columns"]).drop(
-                BUCKET_COL
-            ).coalesce(n_target).write.mode("overwrite").parquet(staged)
+            store.write_parquet(
+                _pinned_read(spark, tgt, {b: m["buckets"][b]}, m["columns"])
+                .drop(BUCKET_COL).coalesce(n_target),
+                staged,
+            )
             files_after += len(_data_files(staged))
-        seq = _commit_next(fs, jvm_path, tgt, seq, m, [b for b, _ in todo])
+        seq = _commit_next(store, seq, m, [b for b, _ in todo])
         return {
             "engine": "parquet-manifest", "seq": seq,
             "compacted_buckets": [b for b, _ in todo],
@@ -1655,25 +1668,25 @@ def rebucket(
         raise ValueError(
             f"rebucket: new_num_buckets must be >= 1, got {new_num_buckets}"
         )
-    with _writer_lease(spark, target_path, "rebucket") as (
-        fs, jvm_path, tgt, (seq, _, m),
-    ):
+    with _writer_lease(spark, target_path, "rebucket") as (store, (seq, _, m)):
         layout = {"num_buckets": int(new_num_buckets)}
         if not m["buckets"]:  # empty table: the layout move is pure metadata
             # the commit carries the schema pin (r14: the read_changes
             # lifecycle property caught an earlier form DROPPING it —
             # losing the pin silently disarms _check_schema_pin for
             # every later batch and un-types empty reads)
-            seq = _commit_next(fs, jvm_path, tgt, seq, m, [], **layout)
+            seq = _commit_next(store, seq, m, [], **layout)
             return {"engine": "parquet-manifest", "rows": 0,
                     "num_buckets": new_num_buckets, "seq": seq}
-        cur = _pinned_read(spark, tgt, m["buckets"], m["columns"]).drop(BUCKET_COL)
+        cur = _pinned_read(spark, store.tgt, m["buckets"], m["columns"]).drop(
+            BUCKET_COL
+        )
         rehashed = cur.withColumn(
             BUCKET_COL, bucket_expr(list(m["keys"]), new_num_buckets)
         )
         obs = Observation()
         rehashed = rehashed.observe(obs, F.count(F.lit(1)).alias("n"))
-        seq = _commit_next(fs, jvm_path, tgt, seq, m, None, data=rehashed, **layout)
+        seq = _commit_next(store, seq, m, None, data=rehashed, **layout)
         return {"engine": "parquet-manifest", "rows": obs.get["n"],
                 "num_buckets": new_num_buckets, "seq": seq}
 
@@ -1870,8 +1883,9 @@ def evolve_schema(
                 ) from e
 
     with _writer_lease(spark, target_path, "evolve_schema") as (
-        fs, jvm_path, tgt, (man_seq, _, m),
+        store, (man_seq, _, m),
     ):
+        tgt = store.tgt
         live = m["buckets"]
         pinned = m["columns"]
         _validate_evolution(tgt, pinned, list(m["keys"]), add, widen)
@@ -1883,7 +1897,7 @@ def evolve_schema(
         if not widen or not live:
             # metadata-only: ONE atomic manifest commit (live
             # generations untouched; readers conform to the pin)
-            out["seq"] = _commit_next(fs, jvm_path, tgt, man_seq, m, [], **new_pin)
+            out["seq"] = _commit_next(store, man_seq, m, [], **new_pin)
             return out
         # widen: full rewrite — fresh generation for every live
         # bucket, then one commit (rebucket's protocol, same N)
@@ -1892,9 +1906,7 @@ def evolve_schema(
         data = _evolve_transform(cur, pinned, add, widen).observe(
             obs, F.count(F.lit(1)).alias("n")
         )
-        out["seq"] = _commit_next(
-            fs, jvm_path, tgt, man_seq, m, None, data=data, **new_pin
-        )
+        out["seq"] = _commit_next(store, man_seq, m, None, data=data, **new_pin)
         out.update(rewritten=True, rows=obs.get["n"])
         return out
 
@@ -1922,26 +1934,14 @@ def suggest_num_buckets(
     :func:`rebucket` in a maintenance window — it takes the writer
     lease, so in-flight merges and the migration refuse each other).
     """
-    fs, jvm_path, tgt, (_, _, m) = _resolve(
-        spark, target_path, "suggest_num_buckets"
-    )
-
-    def _du(path) -> int:
-        total = 0
-        stack = [path]
-        while stack:
-            for st in fs.listStatus(stack.pop()):
-                if st.isDirectory():
-                    stack.append(st.getPath())
-                else:
-                    total += st.getLen()
-        return total
-
+    store, (_, _, m) = _resolve(spark, target_path, "suggest_num_buckets")
     cur_n = int(m["num_buckets"])
+    # a generation dir holds its part files flat: one listing each
     live = sum(
-        _du(jvm_path(p))
-        for p in _gen_paths(tgt, m["buckets"])
-        if fs.exists(jvm_path(p))
+        e.length
+        for p in _gen_paths(store.tgt, m["buckets"])
+        for e in store.list(p)
+        if not e.is_dir
     )
     raw = max(1.0, live / float(target_bucket_bytes))
     suggested = 1 << max(0, round(__import__("math").log2(raw)))

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import logging
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -37,7 +38,7 @@ def _warn_once(path: str, msg: str, *args) -> None:
     if path in _WARNED:
         return
     _WARNED.add(path)
-    _log.warning(msg, *args, exc_info=True)
+    _log.warning(msg, *args, exc_info=sys.exc_info()[0] is not None)
 
 
 def _warm_session(spark: SparkSession) -> None:
@@ -56,6 +57,13 @@ def _warm_session(spark: SparkSession) -> None:
       1.95 s task run, 0.29 s CPU).  A trivial mapInPandas over
       defaultParallelism partitions preforks the reused workers
       (spark.python.worker.reuse is on by default).
+
+    The prefork also reports which package the workers import: they
+    import it from their working directory, which need not be the
+    checkout the driver imported (a tool started outside its checkout's
+    root would run driver code from one package and UDF code from
+    another).  A worker that imports another copy, or none, is logged
+    once; session construction goes on either way.
     """
     app_id = spark.sparkContext.applicationId
     if app_id in _WARMED:
@@ -64,9 +72,25 @@ def _warm_session(spark: SparkSession) -> None:
     try:
         spark.sql("select lower('Warm')").collect()  # folds at planning -> ICU init
         n = spark.sparkContext.defaultParallelism
-        spark.range(n, numPartitions=n).mapInPandas(
-            lambda batches: batches, "id long"
-        ).write.format("noop").mode("overwrite").save()
+
+        def worker_package(batches):
+            import pandas as pd
+
+            try:
+                import lens_sds_batch_spark as pkg
+
+                where = os.path.realpath(pkg.__file__)
+            except Exception as e:
+                where = f"no importable package ({type(e).__name__}: {e})"
+            for _ in batches:
+                pass
+            yield pd.DataFrame({"where": [where]})
+
+        # one row per worker partition
+        seen = {
+            r[0] for r in spark.range(n, numPartitions=n)
+            .mapInPandas(worker_package, "where string").collect()
+        }
     except Exception as e:
         # warm-up must never break session construction (e.g. a
         # pandas-less environment); the costs just land where they did.
@@ -78,6 +102,16 @@ def _warm_session(spark: SparkSession) -> None:
             "session warm-up failed (%s: %s); the one-time ICU and "
             "Python-worker costs land on the first query that needs them",
             type(e).__name__, e,
+        )
+        return
+    here = os.path.realpath(sys.modules[__package__].__file__)
+    if seen != {here}:
+        _warn_once(
+            "worker_package",
+            "Spark's Python workers import %s, not the driver's %s: they "
+            "import the package from their working directory; start the "
+            "process from the root of the checkout it should run",
+            ", ".join(sorted(seen)), here,
         )
 
 

@@ -140,6 +140,38 @@ def test_failed_warm_up_is_not_retried(spark, monkeypatch, caplog):
     assert "injected warm-up failure" in warnings[0].getMessage()
 
 
+def test_workers_importing_another_package_are_logged(tmp_path):
+    """Spark's Python workers import the package from their working
+    directory, not from the checkout the driver imported: a process
+    whose cwd holds a decoy copy of the package builds its session, and
+    the warm-up logs both paths once."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    decoy = tmp_path / "lens_sds_batch_spark"
+    decoy.mkdir()
+    (decoy / "__init__.py").write_text("")
+    code = (
+        "import logging, sys\n"
+        "sys.path.insert(0, sys.argv[1])\n"
+        "logging.basicConfig()\n"
+        "from lens_sds_batch_spark.session import get_spark\n"
+        "get_spark('decoy-probe', cpus=1).stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(repo)], cwd=tmp_path,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    warned = [ln for ln in out.stderr.splitlines() if "not the driver's" in ln]
+    assert len(warned) == 1, out.stderr[-3000:]
+    assert os.path.realpath(decoy / "__init__.py") in warned[0]
+    assert os.path.realpath(repo / "lens_sds_batch_spark" / "__init__.py") in warned[0]
+
+
 def test_local_df_fallback_logged_once(spark, monkeypatch, caplog):
     """local_df's pandas→pickled-rows fallback is a degraded path: it
     logs one warning per process, however often it fires, and still
@@ -254,6 +286,45 @@ def test_manifest_format_stays_in_merge():
                 if a.name.startswith("_") or a.name == "APP_META_KEY"
             ]
     assert not bad, bad
+
+
+def test_only_the_store_seam_touches_the_filesystem():
+    """plans/merge._Store is the manifest store's one filesystem seam:
+    outside it no module under plans/ reaches the JVM gateway (``_jvm``,
+    ``_jsc``), names ``org.apache.hadoop``, builds a JVM ``Path``, calls
+    a Hadoop ``FileSystem``/``FileStatus`` method or calls ``os.open`` —
+    so a test that substitutes the seam sees every filesystem op."""
+    import ast
+    from pathlib import Path
+
+    hadoop = {"getFileSystem", "listStatus", "getFileStatus", "globStatus",
+              "getModificationTime", "getLen", "isDirectory", "getPath",
+              "getUri", "hadoopConfiguration", "_jvm", "_jsc"}
+    plans = Path(__file__).resolve().parents[1] / "lens_sds_batch_spark" / "plans"
+    bad = set()
+    for path in sorted(plans.glob("*.py")):
+        src = path.read_text()
+        tree = ast.parse(src)
+        seam = {
+            id(n) for c in ast.walk(tree)
+            if isinstance(c, ast.ClassDef) and c.name == "_Store"
+            and path.name == "merge.py"
+            for n in ast.walk(c)
+        }
+        for node in ast.walk(tree):
+            if id(node) in seam:
+                continue
+            call = ast.unparse(node.func) if isinstance(node, ast.Call) else ""
+            if (
+                (isinstance(node, ast.Attribute) and node.attr in hadoop)
+                or (isinstance(node, ast.Constant) and "org.apache.hadoop" in str(node.value))
+                or call in ("os.open", "jvm_path")
+                or (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and ast.unparse(node.func.value) == "fs")
+            ):
+                line = src.splitlines()[node.lineno - 1].strip()
+                bad.add(f"plans/{path.name}:{node.lineno}: {line}")
+    assert not bad, "\n".join(sorted(bad, key=lambda b: (b.split(":")[0], int(b.split(":")[1]))))
 
 
 def test_uuid_builders_parse_no_sql():

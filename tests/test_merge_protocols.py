@@ -4,7 +4,8 @@ reads as exactly pre- or post-merge at every write step; it is the only
 merge_into store), stale-generation vacuum, and the rebucket migration
 op (r11 verdict #3).
 
-Crash states are constructed by hand with direct filesystem moves.
+The crash states here are a few hand-built ones; every crash point of
+every writer is enumerated in tests/test_store_crash_points.py.
 Reference semantics anchor: import_clinical_data.clj:239-263 (the store
 the commands mutate must never half-apply a batch).
 """
@@ -434,19 +435,17 @@ def test_manifest_seq_claim_refuses_double_commit(spark, tmp_path):
     resuming after a stale-lease takeover must FAIL its commit (seq
     already claimed) instead of landing a second same-seq manifest
     under a different name that could silently shadow the other batch."""
-    from lens_sds_batch_spark.plans.merge import _commit_manifest
+    from lens_sds_batch_spark.plans.merge import _commit_manifest, _open_table
 
     target = str(tmp_path / "t")
     _merge(spark, target, [("k1", 1, "a", False)], num_buckets=2,
            protocol="manifest")
     pre = _state(spark, target)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(target).getFileSystem(spark._jsc.hadoopConfiguration())
     seq = int(_manifests(target)[-1][: -len(".json")].split("-", 1)[0])
     man = {"num_buckets": 2, "keys": ["k"], "key_types": {"k": "string"},
            "buckets": {}, "seq": seq, "gen": "gstraggler"}
     with pytest.raises(IOError, match="seq already claimed"):
-        _commit_manifest(fs, jvm_path, target, seq, "gstraggler", man)
+        _commit_manifest(_open_table(spark, target), seq, "gstraggler", man)
     assert _state(spark, target) == pre  # the claimed manifest stands
 
 
